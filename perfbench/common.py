@@ -205,6 +205,21 @@ def _tree_pids() -> list[int]:
     return out
 
 
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process, the driver JVM and the
+    Python workers, reaped ones included (through their parents' child
+    times). CPU time a hypervisor steals from the VM is not in it."""
+    ticks = 0
+    for pid in _tree_pids():
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                raw = f.read()
+        except OSError:
+            continue
+        ticks += sum(int(x) for x in raw[raw.rfind(")") + 2:].split()[11:15])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def tree_rss_mb() -> float:
     """Resident memory of this process, the driver JVM and the Python
     workers (everything below this process)."""
