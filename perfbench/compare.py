@@ -83,7 +83,8 @@ def main(argv: list[str]) -> int:
         for workload, recs in sorted(load(argv[1]).items()):
             cells = []
             for m in metrics:
-                vals = [r["metrics"][m["name"]]["value"] for r in recs]
+                vals = [r["metrics"][m["name"]]["value"] for r in recs
+                        if m["name"] in r["metrics"]]
                 cells.append(f"{m['name']}={spread(vals):.3f} (bound {m['bound']})")
             print(f"{workload} n={len(recs)}: " + "  ".join(cells))
         return 0
