@@ -28,6 +28,24 @@ def expected_rows():
     return [FX.make_row(i, CFG, plan) for i in range(CFG.n)]
 
 
+# Stub P5/P7 streams: (part, row count) per pass, emitted with the passes'
+# own keywords and paths so the verdict must count every row of the pass.
+STUB_STREAMS = {
+    "fidelity": {1: [("fidelity", "/bytes")] * 2 + [("fidelity", "/caption")],
+                 5: [("fidelity", "/image_id")]},
+    "headers": {2: [("header-magic", "/bytes"), ("header-fmt", "/fmt")],
+                5: [("header-len", "/bytes")] * 3},
+}
+
+
+def stub_stream(spark, pass_id: str):
+    rows = [(part, f"{pass_id}-{part}-{i}", kw, path, "stub")
+            for part, viols in STUB_STREAMS[pass_id].items()
+            for i, (kw, path) in enumerate(viols)]
+    return spark.createDataFrame(
+        rows, "part_id int, row_key string, keyword string, path string, value string")
+
+
 def row_to_doc(row: dict) -> dict:
     doc = {}
     for k, v in row.items():
@@ -54,6 +72,8 @@ def result(spark):
               "dim_license": FX.dim_license_df(spark, CFG)},
         baseline=baseline_profile(clean, FX.drift_columns()),
         drift_columns=FX.drift_columns(),
+        fidelity_fn=lambda _: stub_stream(spark, "fidelity"),
+        headers_fn=lambda _: stub_stream(spark, "headers"),
     )
     return res
 
@@ -126,19 +146,54 @@ def test_drift_flags_only_the_drifted_partition(result):
 
 def test_verdict_matrix_consistency(result, spark_violations):
     """Every failed verdict's count equals the violation rows for that check;
-    passed verdicts have zero violations."""
-    counts = Counter((kw, p) for _, kw, p in spark_violations)
+    passed verdicts have zero violations. Each single-check pass has exactly
+    one verdict row per (partition, check), counting that pass's stream rows
+    in the partition; every partition P6 did not flag gets one passing
+    ``anomaly@`` row."""
+    parts = set(range(CFG.n_parts))
     by_part = Counter()
+    by_pass = Counter()
     for r in result.violations.collect():
         by_part[(r.part_id, r.keyword, r.path)] += 1
-    for v in result.verdicts.collect():
+        by_pass[(r.pass_id, r.part_id)] += 1
+    verdicts = result.verdicts.collect()
+    for v in verdicts:
         if v.keyword in ("drift", "anomaly", "quantile", "distinct", "null-rate"):
             # partition/table-level checks: verdicts exist, row violations
             # don't (null-rate's n_violations is the null COUNT, not rows)
             continue
-        n = by_part.get((v.part_id, v.keyword, v.path), 0)
+        if v.pass_id in ("fidelity", "headers"):
+            # one check per pass: it counts every row its pass emitted
+            n = by_pass.get((v.pass_id, v.part_id), 0)
+        else:
+            n = by_part.get((v.part_id, v.keyword, v.path), 0)
         assert v.n_violations == n, (v.check_id, v.part_id, v.n_violations, n)
         assert v.passed == (n == 0)
+
+    grid = Counter((v.pass_id, v.check_id, v.part_id) for v in verdicts
+                   if v.pass_id in ("unique", "refs", "fidelity", "headers"))
+    checks = {
+        "unique": {"uniqueItems@/image_id", "uniqueItems@/phash"},
+        "refs": {"references@/fmt->dim_fmt.fmt",
+                 "references@/image_id->dim_license.image_id"},
+        "fidelity": {"fidelity@/"},
+        "headers": {"headers@/bytes"},
+    }
+    want = {(pid, cid, p) for pid, cids in checks.items() for cid in cids for p in parts}
+    assert set(grid) == want
+    assert set(grid.values()) == {1}
+    for pass_id, per_part in STUB_STREAMS.items():
+        for p, viols in per_part.items():
+            assert by_pass[(pass_id, p)] == len(viols)
+
+    flagged = {v.part_id for v in verdicts
+               if v.pass_id == "anomaly" and not v.passed}
+    healthy = Counter(v.part_id for v in verdicts if v.check_id == "anomaly@")
+    assert healthy == Counter(parts - flagged)
+    for v in verdicts:
+        if v.check_id == "anomaly@":
+            assert (v.keyword, v.path, v.passed, v.n_violations) == ("anomaly", "/", True, 0)
+    assert healthy, "no healthy partition to pin"
 
 
 def test_salted_equals_plain_uniqueness(spark):
