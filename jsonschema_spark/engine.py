@@ -19,6 +19,7 @@ sink (B3) or aggregate.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -180,6 +181,16 @@ def rollup_verdicts(verdicts: DataFrame) -> DataFrame:
     )
 
 
+def _referenced_columns(expr: str, columns: list[str]) -> set[str]:
+    """The columns an SQL expression (a drift or anomaly column) may
+    reference: each one that appears in ``expr`` as an identifier token or
+    as a whole word. Keeping a column too many costs cache space; dropping
+    a referenced one fails analysis on the fused projection."""
+    tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", expr))
+    return {c for c in columns
+            if c in tokens or re.search(rf"\b{re.escape(c)}\b", expr)}
+
+
 def _fused_projection(
     fact: DataFrame,
     compiled: CompiledTableSpec,
@@ -200,22 +211,50 @@ def _fused_projection(
         needed.update(key_cols)
     for ref in spec.table_checks.references:
         needed.add(ref["column"])
+    exprs = [dc.expr for dc in drift_columns or []]
     if spec.table_checks.anomaly is not None:
-        import re as _re
-        for expr in spec.table_checks.anomaly["columns"]:
-            tokens = set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", expr))
-            needed.update(f.name for f in fact.schema.fields if f.name in tokens)
-    if drift_columns:
-        import re
-
-        for dc in drift_columns:
-            for f in fact.columns:
-                if re.search(rf"\b{re.escape(f)}\b", dc.expr):
-                    needed.add(f)
+        exprs += spec.table_checks.anomaly["columns"]
+    for expr in exprs:
+        needed.update(_referenced_columns(expr, fact.columns))
     fields = {f.name: f.dataType for f in fact.schema.fields}
     keep = [c for c in fact.columns
             if c in needed and fields[c].typeName() != "binary"]
     return fact.select(*keep, compiled.violations_array().alias("__viols"))
+
+
+def _single_check_verdicts(
+    stream: DataFrame, parts: DataFrame, check_id: str, keyword: str, path: str,
+) -> DataFrame:
+    """Per-partition verdicts of a pass judged as ONE check: every row of
+    its violation stream counts toward ``check_id``."""
+    relabelled = stream.select(
+        "part_id", F.lit(keyword).alias("keyword"), F.lit(path).alias("path"))
+    return P1.verdicts_from_violations(relabelled, parts, [(check_id, keyword, path)])
+
+
+def _bound_verdicts(
+    bounds: DataFrame, values: DataFrame, on: list[str], value: str,
+    keyword: str, check_id: Any,
+) -> tuple[DataFrame, DataFrame]:
+    """Table-wide lo/hi bound checks (quantile and distinct families):
+    ``bounds`` rows (column, ..., lo, hi) joined to the merged ``values``;
+    a missing value, or one outside a given bound, fails. Returns the
+    judged rows and their table-wide verdict rows (part_id NULL)."""
+    v = F.col(value)
+    judged = bounds.join(values, on, "left").withColumn(
+        "passed",
+        v.isNotNull()
+        & (F.col("lo").isNull() | (v >= F.col("lo")))
+        & (F.col("hi").isNull() | (v <= F.col("hi"))))
+    verdicts = judged.select(
+        F.lit(None).cast("int").alias("part_id"),
+        check_id.alias("check_id"),
+        F.lit(keyword).alias("keyword"),
+        F.concat(F.lit("/"), "column").alias("path"),
+        "passed",
+        (~F.col("passed")).cast("long").alias("n_violations"),
+    )
+    return judged, verdicts
 
 
 def validate_table(
@@ -226,11 +265,8 @@ def validate_table(
     key_col: str = "image_id",
     part_col: str = "part_id",
     top_k: int | None = None,
-    with_stats: bool = True,
     drift_columns: list[P4.DriftColumn] | None = None,
     uniqueness_scope: DataFrame | None = None,
-    cache_violations: bool = True,
-    fuse_scan: bool = True,
     fuse_scratch: str | None = None,
     fidelity_fn: Any | None = None,
     headers_fn: Any | None = None,
@@ -239,14 +275,13 @@ def validate_table(
 ) -> ValidationResult:
     """Run the validation suite over ``fact``.
 
-    ``fuse_scan`` (SURVEY §4 pass fusion): with True, the fact table is
-    scanned ONCE into a persisted narrow projection (spec'd non-binary
-    columns + the precomputed row-violations array); the row pass, stats,
-    uniqueness, referential, and drift histograms all consume that cache
-    instead of re-scanning parquet. The cache is bounded by the narrow
-    column set × row count (binary columns never enter it) and spills to
-    disk. For tables where even the narrow projection exceeds cluster
-    storage, pass False to fall back to per-pass column-pruned scans.
+    Pass fusion (SURVEY §4): the fact table is scanned ONCE into a
+    persisted narrow projection (spec'd non-binary columns + the
+    precomputed row-violations array); the row pass, stats, uniqueness,
+    referential, drift histograms and the anomaly profile all consume that
+    cache instead of re-scanning parquet. The cache is bounded by the
+    narrow column set × row count (binary columns never enter it) and
+    spills to disk.
 
     ``fuse_scratch``: materialize the fused projection as a PARQUET scratch
     table at this path instead of the SQL columnar cache. One clean write
@@ -283,10 +318,11 @@ def validate_table(
     "refs" | "fidelity" | "headers") so sinks can partition by (pass_id, part_id) and a
     resumed pass dynamically overwrites exactly its own cells (B4).
 
-    ``cache_violations``: each pass's violation stream feeds BOTH the sink
-    and the verdict counts; persisting it (MEMORY_AND_DISK) executes each
-    stream once instead of once per consumer. Violations are bounded
-    (≪ fact rows by construction), so this holds at 10^12-row scale.
+    Each pass's violation stream feeds BOTH the sink and the verdict
+    counts, so it is persisted (MEMORY_AND_DISK) and executes once instead
+    of once per consumer. Violations are bounded (≪ fact rows by
+    construction), so this holds at 10^12-row scale. Every verdict row is
+    zero-filled by ``passes.stats.verdicts_from_violations`` (B18).
 
     Call ``result.cleanup()`` after sinking to unpersist all caches.
     """
@@ -303,20 +339,14 @@ def validate_table(
         cached.append(df)
         return df
 
-    def _cache(df: DataFrame) -> DataFrame:
-        return _persist(df) if cache_violations else df
-
     # THE fact scan (SURVEY §4): all passes below read `base`, so parquet
     # is hit exactly once for the suite (assert_single_scan test pins this).
-    if fuse_scan:
-        narrow = _fused_projection(fact, compiled, spec, key_col, part_col, drift_columns)
-        if fuse_scratch is not None:
-            narrow.write.mode("overwrite").parquet(fuse_scratch)
-            base = fact.sparkSession.read.parquet(fuse_scratch)
-        else:
-            base = _persist(narrow)
+    narrow = _fused_projection(fact, compiled, spec, key_col, part_col, drift_columns)
+    if fuse_scratch is not None:
+        narrow.write.mode("overwrite").parquet(fuse_scratch)
+        base = fact.sparkSession.read.parquet(fuse_scratch)
     else:
-        base = fact
+        base = _persist(narrow)
 
     # tiny (one row per partition) but consumed by every verdict stream
     all_parts = base.select(F.col(part_col).alias("part_id")).distinct()
@@ -331,21 +361,17 @@ def validate_table(
     streams: list[DataFrame] = []
     verdict_streams: list[DataFrame] = []
 
-    # P1 — row predicates (precomputed array when fused)
-    if fuse_scan:
-        viol1 = (
-            base.where(F.size("__viols") > 0)
-            .select(F.col(part_col).alias("part_id"),
-                    F.col(key_col).cast("string").alias("row_key"),
-                    F.explode("__viols").alias("v"))
-            .select("part_id", "row_key", "v.keyword", "v.path", "v.value")
-        )
-    else:
-        viol1 = P1.row_violations(fact, compiled, key_col=key_col, part_col=part_col)
-    viol1 = _cache(viol1)
-    counts1 = P1.violation_counts(viol1)
+    # P1 — row predicates (the array precomputed by the fused projection)
+    viol1 = _persist(
+        base.where(F.size("__viols") > 0)
+        .select(F.col(part_col).alias("part_id"),
+                F.col(key_col).cast("string").alias("row_key"),
+                F.explode("__viols").alias("v"))
+        .select("part_id", "row_key", "v.keyword", "v.path", "v.value")
+    )
+    checks1 = [(cid, *cid.split("@", 1)) for cid in compiled.check_ids()]
     verdict_streams.append(
-        P1.verdicts_from_violations(counts1, all_parts, compiled.check_ids())
+        P1.verdicts_from_violations(viol1, all_parts, checks1)
         .withColumn("pass_id", F.lit("rows"))
     )
     sink1 = viol1 if top_k is None else P1.bound_top_k(viol1, top_k)
@@ -353,10 +379,11 @@ def validate_table(
 
     # P2 — uniqueness (always over the full scope, see docstring)
     for key_cols in spec.table_checks.unique:
-        v = _cache(P2.uniqueness_violations(scope, list(key_cols), key_col=key_col, part_col=part_col))
+        v = _persist(P2.uniqueness_violations(scope, list(key_cols), key_col=key_col, part_col=part_col))
         streams.append(v.withColumn("pass_id", F.lit("unique")))
+        path = "/" + ",".join(key_cols)
         verdict_streams.append(
-            P2.uniqueness_verdicts(v, scope_parts, list(key_cols))
+            _single_check_verdicts(v, scope_parts, f"uniqueItems@{path}", "uniqueItems", path)
             .withColumn("pass_id", F.lit("unique"))
         )
 
@@ -365,25 +392,15 @@ def validate_table(
         dim_name = ref["dim"]
         if dim_name not in dims:
             raise KeyError(f"referential check needs dim table {dim_name!r}")
-        v = _cache(P3.referential_violations(
+        v = _persist(P3.referential_violations(
             base, dims[dim_name], fact_key=ref["column"], dim_key=ref["key"],
             key_col=key_col, part_col=part_col,
             strategy=ref.get("strategy", "broadcast"), dim_name=dim_name,
         ))
         streams.append(v.withColumn("pass_id", F.lit("refs")))
-        cnt = v.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_violations"))
         path = f"/{ref['column']}->{dim_name}.{ref['key']}"
         verdict_streams.append(
-            all_parts.join(cnt, "part_id", "left")
-            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-            .select(
-                "part_id",
-                F.lit(f"references@{path}").alias("check_id"),
-                F.lit("references").alias("keyword"),
-                F.lit(path).alias("path"),
-                (F.col("n_violations") == 0).alias("passed"),
-                "n_violations",
-            )
+            _single_check_verdicts(v, all_parts, f"references@{path}", "references", path)
             .withColumn("pass_id", F.lit("refs"))
         )
 
@@ -419,42 +436,16 @@ def validate_table(
         a_cols = [c for c in acfg["columns"]
                   if c not in fields or fields[c].typeName() != "binary"]
 
-    # P5 — sampled fidelity (B28): own scan, the only pass touching `bytes`
-    if fidelity_fn is not None:
-        vf = _cache(fidelity_fn(fact))
-        streams.append(vf.withColumn("pass_id", F.lit("fidelity")))
-        fcnt = vf.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_violations"))
-        verdict_streams.append(
-            all_parts.join(fcnt, "part_id", "left")
-            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-            .select(
-                "part_id",
-                F.lit("fidelity@/").alias("check_id"),
-                F.lit("fidelity").alias("keyword"),
-                F.lit("/").alias("path"),
-                (F.col("n_violations") == 0).alias("passed"),
-                "n_violations",
-            )
-            .withColumn("pass_id", F.lit("fidelity"))
-        )
-
+    # P5 — sampled fidelity (B28): own scan, the only pass touching `bytes`;
     # P7 — container-header sniff (B53): header fields only, no decode
-    if headers_fn is not None:
-        vh = _cache(headers_fn(fact))
-        streams.append(vh.withColumn("pass_id", F.lit("headers")))
-        hcnt = vh.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_violations"))
+    for pass_id, fn, path in (("fidelity", fidelity_fn, "/"), ("headers", headers_fn, "/bytes")):
+        if fn is None:
+            continue
+        v = _persist(fn(fact))
+        streams.append(v.withColumn("pass_id", F.lit(pass_id)))
         verdict_streams.append(
-            all_parts.join(hcnt, "part_id", "left")
-            .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-            .select(
-                "part_id",
-                F.lit("headers@/bytes").alias("check_id"),
-                F.lit("headers").alias("keyword"),
-                F.lit("/bytes").alias("path"),
-                (F.col("n_violations") == 0).alias("passed"),
-                "n_violations",
-            )
-            .withColumn("pass_id", F.lit("headers"))
+            _single_check_verdicts(v, all_parts, f"{pass_id}@{path}", pass_id, path)
+            .withColumn("pass_id", F.lit(pass_id))
         )
 
     # fused stats (B14/B15) — from the same cached scan, never `bytes`
@@ -463,94 +454,76 @@ def validate_table(
     nrchecks = spec.table_checks.null_rates
     if qchecks:
         with_quantiles = True  # the checks need the sketches
-    if (qchecks or dchecks or nrchecks) and not with_stats:
-        # a declared check that silently emits no verdicts would let a
-        # summary's table_passed read true on an unchecked spec — fail fast
-        declared = [k for k, c in (("quantiles", qchecks), ("distinct", dchecks),
-                                   ("null-rates", nrchecks)) if c]
-        raise ValueError(
-            f"x-table-checks/{'+'.join(declared)} declared but with_stats=False "
-            "— these check families are judged from the fused stats scan; "
-            "call validate_table(..., with_stats=True)")
     if (qchecks or dchecks or nrchecks) and not compiled.columns:
         raise ValueError(
             "x-table-checks/quantiles|distinct|null-rates declared but the spec "
             "has no properties — the stats scan has no columns to judge from")
+    stat_cols = [c for c in compiled.columns
+                 if fact.schema[c].dataType.typeName() != "binary"]
+    for kind, checks in (("quantiles", qchecks), ("distinct", dchecks),
+                         ("null-rates", nrchecks)):
+        missing = [c["column"] for c in checks if c["column"] not in stat_cols]
+        if missing:
+            raise ValueError(
+                f"x-table-checks/{kind} references non-spec'd columns {missing} "
+                "— these checks run on the fused stats scan, so the column "
+                "must appear in the spec's properties")
+    from .passes.stats import _NUMERIC_TYPENAMES
+    bad_q = [c["column"] for c in qchecks
+             if not fact.schema[c["column"]].dataType.typeName()
+             .startswith(_NUMERIC_TYPENAMES)]
+    if bad_q:
+        # a quantile bound on a non-numeric column gets no KLL sketch and
+        # would surface as a data failure instead of a config error
+        raise ValueError(
+            f"x-table-checks/quantiles on non-numeric columns {bad_q} — "
+            "quantile sketches exist only for numeric columns")
+    if (qchecks or dchecks or nrchecks) and not stat_cols:
+        raise ValueError(
+            "x-table-checks/quantiles|distinct|null-rates declared but the "
+            "spec has no non-binary stats columns to judge them from")
     stats_df = None
-    if with_stats and compiled.columns:
-        stat_cols = [c for c in compiled.columns
-                     if fact.schema[c].dataType.typeName() != "binary"]
-        for kind, checks in (("quantiles", qchecks), ("distinct", dchecks),
-                             ("null-rates", nrchecks)):
-            missing = [c["column"] for c in checks if c["column"] not in stat_cols]
-            if missing:
-                raise ValueError(
-                    f"x-table-checks/{kind} references non-spec'd columns {missing} "
-                    "— these checks run on the fused stats scan, so the column "
-                    "must appear in the spec's properties")
-        from .passes.stats import _NUMERIC_TYPENAMES
-        bad_q = [c["column"] for c in qchecks
-                 if not fact.schema[c["column"]].dataType.typeName()
-                 .startswith(_NUMERIC_TYPENAMES)]
-        if bad_q:
-            # a quantile bound on a non-numeric column gets no KLL sketch and
-            # would surface as a data failure instead of a config error
-            raise ValueError(
-                f"x-table-checks/quantiles on non-numeric columns {bad_q} — "
-                "quantile sketches exist only for numeric columns")
-        if (qchecks or dchecks or nrchecks) and not stat_cols:
-            raise ValueError(
-                "x-table-checks/quantiles|distinct|null-rates declared but the "
-                "spec has no non-binary stats columns to judge them from")
-        if stat_cols:
-            from .passes.stats import numeric_columns, partition_wide_agg, stats_long
+    wide_agg = None
+    if stat_cols or acfg is not None:
+        from .passes.stats import numeric_columns, partition_wide_agg, stats_long
 
-            # ONE aggregation over `base` for the stats sink, the quantile/
-            # distinct/null-rate verdict branches AND the P6 profile; the
-            # result is partitions-scale, so persist it — without this the
-            # concurrent sink jobs re-ran the 10^12-row aggregation once per
-            # consumer (measured: three ~300-600 task-second
-            # ObjectHashAggregate stages per suite run at 32M rows, each
-            # re-shuffling ~277 MB of partial sketch state).
-            wide_agg = _persist(partition_wide_agg(
-                base, stat_cols, part_col=part_col,
-                with_quantiles=with_quantiles, kll_k=kll_k,
-                anomaly_exprs=tuple(a_cols)))
+        # ONE aggregation over `base` for the stats sink, the quantile/
+        # distinct/null-rate verdict branches AND the P6 profile; the
+        # result is partitions-scale, so persist it — without this the
+        # concurrent sink jobs re-ran the 10^12-row aggregation once per
+        # consumer (measured: three ~300-600 task-second
+        # ObjectHashAggregate stages per suite run at 32M rows, each
+        # re-shuffling ~277 MB of partial sketch state).
+        wide_agg = _persist(partition_wide_agg(
+            base, stat_cols, part_col=part_col,
+            with_quantiles=with_quantiles, kll_k=kll_k,
+            anomaly_exprs=tuple(a_cols)))
+        if stat_cols:
             stats_df = stats_long(wide_agg, stat_cols,
                                   numeric_columns(base, stat_cols),
                                   with_quantiles=with_quantiles)
 
-    # P6 assembly — from the fused wide agg when stats ran, else its own
-    # standalone aggregation (stats disabled / no spec'd columns)
+    # P6 assembly — from the fused wide agg
     if acfg is not None:
         from jsonschema_spark.passes import anomaly as P6
 
-        if stats_df is not None:
-            prof = P6.profile_from_wide(wide_agg, a_cols)
-        else:
-            prof = P6.partition_profile(base, a_cols, part_col=part_col)
+        prof = P6.profile_from_wide(wide_agg, a_cols)
         anomaly_df = P6.anomaly_flags(prof, z_max=acfg.get("z_max", 3.5))
         flagged = P6.anomaly_verdicts(anomaly_df).withColumn("pass_id", F.lit("anomaly"))
         # healthy partitions still get explicit pass rows (per-partition
-        # pass/fail contract): anti-join flagged parts against all parts
+        # pass/fail contract): the passed rows of the one-check grid
         healthy = (
-            all_parts.join(flagged.select("part_id").distinct(), "part_id", "left_anti")
-            .select(
-                "part_id",
-                F.lit("anomaly@").alias("check_id"),
-                F.lit("anomaly").alias("keyword"),
-                F.lit("/").alias("path"),
-                F.lit(True).alias("passed"),
-                F.lit(0).cast("long").alias("n_violations"),
-            )
+            _single_check_verdicts(flagged, all_parts, "anomaly@", "anomaly", "/")
+            .where(F.col("passed"))
             .withColumn("pass_id", F.lit("anomaly"))
         )
         verdict_streams.append(flagged.unionByName(healthy))
 
     # quantile-bound verdicts (B42 as a CHECK TYPE): the merged table-wide
     # sketch value against the spec'd bound — metadata-scale joins only
+    spark = fact.sparkSession
     quantile_verdicts = None
-    if qchecks and stats_df is not None:
+    if qchecks:
         from .passes.stats import merge_quantiles
 
         qs = tuple(sorted({float(q["q"]) for q in qchecks}))
@@ -564,60 +537,34 @@ def validate_table(
             f"stack({len(qs)}, "
             + ", ".join(f"'{_qname(q)}', {_qname(q)}" for q in qs)
             + ") as (qname, value)")
-        spark = fact.sparkSession
-        checks_rows = [(q["column"], float(q["q"]), _qname(float(q["q"])),
-                        float(q["min"]) if "min" in q else None,
-                        float(q["max"]) if "max" in q else None)
-                       for q in qchecks]
         checks_df = spark.createDataFrame(
-            checks_rows, "column string, q double, qname string, lo double, hi double")
-        quantile_verdicts = (
-            checks_df.join(melted, ["column", "qname"], "left")
-            .withColumn("passed",
-                        F.col("value").isNotNull()
-                        & (F.col("lo").isNull() | (F.col("value") >= F.col("lo")))
-                        & (F.col("hi").isNull() | (F.col("value") <= F.col("hi"))))
-            .select("column", "q", "value", "lo", "hi", "passed")
-        )
-        verdict_streams.append(quantile_verdicts.select(
-            F.lit(None).cast("int").alias("part_id"),  # table-wide verdict
-            F.concat(F.lit("quantile@/"), "column",
-                     F.lit("@q"), F.col("q").cast("string")).alias("check_id"),
-            F.lit("quantile").alias("keyword"),
-            F.concat(F.lit("/"), "column").alias("path"),
-            "passed",
-            (~F.col("passed")).cast("long").alias("n_violations"),
-        ).withColumn("pass_id", F.lit("quantiles")))
+            [(q["column"], float(q["q"]), _qname(float(q["q"])),
+              float(q["min"]) if "min" in q else None,
+              float(q["max"]) if "max" in q else None)
+             for q in qchecks],
+            "column string, q double, qname string, lo double, hi double")
+        judged, qv = _bound_verdicts(
+            checks_df, melted, ["column", "qname"], "value", "quantile",
+            F.concat(F.lit("quantile@/"), "column", F.lit("@q"), F.col("q").cast("string")))
+        quantile_verdicts = judged.select("column", "q", "value", "lo", "hi", "passed")
+        verdict_streams.append(qv.withColumn("pass_id", F.lit("quantiles")))
 
     # distinct-cardinality bounds (B15 as a CHECK TYPE): merged HLL estimate
     # vs the spec'd bound — table-wide, metadata-scale join
-    if dchecks and stats_df is not None:
-        merged_d = P1.merge_sketches(stats_df)
-        spark = fact.sparkSession
-        d_rows = [(d["column"],
-                   int(d["min"]) if "min" in d else None,
-                   int(d["max"]) if "max" in d else None) for d in dchecks]
-        d_df = spark.createDataFrame(d_rows, "column string, lo long, hi long")
-        dv = (
-            d_df.join(merged_d, "column", "left")
-            .withColumn("passed",
-                        F.col("n_distinct_merged").isNotNull()
-                        & (F.col("lo").isNull() | (F.col("n_distinct_merged") >= F.col("lo")))
-                        & (F.col("hi").isNull() | (F.col("n_distinct_merged") <= F.col("hi"))))
-        )
-        verdict_streams.append(dv.select(
-            F.lit(None).cast("int").alias("part_id"),
-            F.concat(F.lit("distinct@/"), "column").alias("check_id"),
-            F.lit("distinct").alias("keyword"),
-            F.concat(F.lit("/"), "column").alias("path"),
-            "passed",
-            (~F.col("passed")).cast("long").alias("n_violations"),
-        ).withColumn("pass_id", F.lit("distinct")))
+    if dchecks:
+        d_df = spark.createDataFrame(
+            [(d["column"],
+              int(d["min"]) if "min" in d else None,
+              int(d["max"]) if "max" in d else None) for d in dchecks],
+            "column string, lo long, hi long")
+        _, dv = _bound_verdicts(
+            d_df, P1.merge_sketches(stats_df), ["column"], "n_distinct_merged",
+            "distinct", F.concat(F.lit("distinct@/"), "column"))
+        verdict_streams.append(dv.withColumn("pass_id", F.lit("distinct")))
 
     # null-rate bounds: per-partition AND table-wide, both straight off the
     # stats rows (no extra scan); n_violations carries the null count
-    if nrchecks and stats_df is not None:
-        spark = fact.sparkSession
+    if nrchecks:
         nr_df = spark.createDataFrame(
             [(n["column"], float(n["max_rate"])) for n in nrchecks],
             "column string, max_rate double")

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..compile_spark import CompiledTableSpec
 
@@ -240,30 +239,33 @@ def merge_sketches(stats: DataFrame) -> DataFrame:
 
 
 def verdicts_from_violations(
-    counts: DataFrame,
+    violations: DataFrame,
     all_part_ids: DataFrame,
-    check_ids: list[str],
+    checks: list[tuple[str, str, str]],
 ) -> DataFrame:
-    """B18: fold violation counts into a dense per-(partition, check) verdict
-    matrix — parts×checks with zero violations must appear as passed=true.
+    """B18: fold a violation stream into a dense per-(partition, check)
+    verdict matrix — parts×checks with zero violations must appear as
+    passed=true. The one place the engine zero-fills verdict rows.
 
+    ``violations``: rows with part_id, keyword, path; a row counts toward
+    the check with the same keyword and path (exact counts: pass the
+    stream before top-k bounding).
     ``all_part_ids``: DataFrame with a single ``part_id`` column (distinct).
+    ``checks``: (check_id, keyword, path) triples.
     """
-    spark = counts.sparkSession
-    checks = spark.createDataFrame(
-        [(cid.split("@", 1)[0], cid.split("@", 1)[1]) for cid in check_ids],
-        T.StructType([
-            T.StructField("keyword", T.StringType()),
-            T.StructField("path", T.StringType()),
-        ]),
-    )
-    # parts × checks grid: both sides are tiny (metadata-scale) — cross join +
-    # broadcast is safe and never touches fact-table data.
-    grid = all_part_ids.crossJoin(F.broadcast(checks))
+    entries = [F.struct(F.lit(cid).alias("check_id"), F.lit(kw).alias("keyword"),
+                        F.lit(path).alias("path"))
+               for cid, kw, path in checks]
+    # parts × checks grid as a literal array per part: metadata-scale, no
+    # join and no fact-table data
+    grid = all_part_ids.select(
+        "part_id",
+        F.explode(F.array(*entries).cast(
+            "array<struct<check_id:string,keyword:string,path:string>>")).alias("c"),
+    ).select("part_id", "c.*")
     return (
-        grid.join(counts, ["part_id", "keyword", "path"], "left")
+        grid.join(violation_counts(violations), ["part_id", "keyword", "path"], "left")
         .withColumn("n_violations", F.coalesce(F.col("n_violations"), F.lit(0)))
         .withColumn("passed", F.col("n_violations") == 0)
-        .withColumn("check_id", F.concat_ws("@", "keyword", "path"))
         .select("part_id", "check_id", "keyword", "path", "passed", "n_violations")
     )

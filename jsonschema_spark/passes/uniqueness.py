@@ -87,25 +87,3 @@ def uniqueness_violations(
         F.concat_ws("|", *[F.col(k).cast("string") for k in key_cols]).alias("value"),
     )
 
-
-def uniqueness_verdicts(
-    violations: DataFrame,
-    all_part_ids: DataFrame,
-    key_cols: list[str],
-) -> DataFrame:
-    path = "/" + ",".join(key_cols)
-    counts = violations.where(F.col("path") == path).groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("n_violations")
-    )
-    return (
-        all_part_ids.join(counts, "part_id", "left")
-        .withColumn("n_violations", F.coalesce("n_violations", F.lit(0)))
-        .select(
-            "part_id",
-            F.lit(f"uniqueItems@{path}").alias("check_id"),
-            F.lit("uniqueItems").alias("keyword"),
-            F.lit(path).alias("path"),
-            (F.col("n_violations") == 0).alias("passed"),
-            "n_violations",
-        )
-    )

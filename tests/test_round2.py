@@ -59,23 +59,6 @@ def test_fuse_scratch_matches_cache(spark, tmp_path):
     scratch.cleanup()
 
 
-def test_fuse_scan_off_matches_fused(spark):
-    cfg = FX.FixtureConfig(n=400, n_parts=4, with_bytes=False)
-    fact = FX.generate_images_df(spark, cfg)
-    kw = dict(
-        dims={"dim_fmt": FX.dim_fmt_df(spark),
-              "dim_license": FX.dim_license_df(spark, cfg)},
-    )
-    fused = validate_table(fact, FX.SPEC_IMAGES, **kw)
-    plain = validate_table(fact, FX.SPEC_IMAGES, fuse_scan=False, **kw)
-    cols = ["part_id", "row_key", "keyword", "path"]
-    a = sorted(tuple(r) for r in fused.violations.select(*cols).collect())
-    b = sorted(tuple(r) for r in plain.violations.select(*cols).collect())
-    assert a == b and len(a) > 0
-    fused.cleanup()
-    plain.cleanup()
-
-
 # --------------------------------------------------- CLI drift + fidelity path
 
 def _write_job_inputs(spark, tmp_path, with_bytes=False, plants=True, n=2000):

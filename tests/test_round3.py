@@ -835,7 +835,7 @@ def test_validate_table_anomaly_pass_integration(spark):
     # block does, so this also pins the fused-scan column retention
     spec = {"properties": {"image_id": {"type": "string"}},
             "x-table-checks": {"anomaly": {"columns": ["score"]}}}
-    res = validate_table(df, spec, with_stats=False)
+    res = validate_table(df, spec)
     av = [r for r in res.verdicts.collect()
           if r["check_id"].startswith("anomaly")]
     res.cleanup()
@@ -944,7 +944,7 @@ def test_anomaly_profile_accepts_sql_expressions(spark):
     df = spark.createDataFrame(rows, "image_id string, part_id string, caption string")
     spec = {"properties": {"image_id": {"type": "string"}},
             "x-table-checks": {"anomaly": {"columns": ["length(caption)"]}}}
-    res = validate_table(df, spec, with_stats=False)
+    res = validate_table(df, spec)
     flagged = {r["part_id"] for r in res.verdicts.collect()
                if r["keyword"] == "anomaly" and r["part_id"] is not None
                and not r["passed"]}

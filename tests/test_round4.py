@@ -52,14 +52,6 @@ def test_pack_sequences_explicit_part_col_unchanged(spark):
 
 # ------------------------------------- stats-check family guards (ADVICE #2)
 
-def test_stats_checks_require_with_stats(spark):
-    df = spark.createDataFrame([(1, "a")], "id int, s string")
-    spec = {"properties": {"id": {}},
-            "x-table-checks": {"distinct": [{"column": "id", "min": 1}]}}
-    with pytest.raises(ValueError, match="with_stats"):
-        validate_table(df, spec, key_col="id", part_col="s", with_stats=False)
-
-
 def test_stats_checks_require_spec_columns(spark):
     df = spark.createDataFrame([(1, "a")], "id int, s string")
     spec = {"x-table-checks": {"null-rates": [{"column": "id", "max_rate": 0.1}]}}
