@@ -313,14 +313,6 @@ def q_referential_customer_nation(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_REFERENTIAL_CUSTOMER_NATION = """
-SELECT c.c_custkey, c.c_nationkey
-FROM customer c LEFT JOIN (SELECT n_nationkey FROM nation WHERE n_nationkey < 20) n
-  ON c.c_nationkey = n.n_nationkey
-WHERE n.n_nationkey IS NULL AND c.c_nationkey IS NOT NULL
-"""
-
-
 def q_referential_lineitem_orders(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem")
     od = _t(spark, sf, "orders").where(F.col("o_orderkey") % 10 != 7)
@@ -329,15 +321,6 @@ def q_referential_lineitem_orders(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(F.count(F.lit(1)).alias("n_orphan_lines"))
     )
-
-
-SQL_REFERENTIAL_LINEITEM_ORDERS = """
-SELECT l.l_orderkey, count(*) AS n_orphan_lines
-FROM lineitem l LEFT JOIN (SELECT o_orderkey FROM orders WHERE o_orderkey % 10 <> 7) o
-  ON l.l_orderkey = o.o_orderkey
-WHERE o.o_orderkey IS NULL AND l.l_orderkey IS NOT NULL
-GROUP BY 1
-"""
 
 
 # ------------------------------------------------------------------ P4 drift (B16/B19/B20)
@@ -359,21 +342,6 @@ SQL_HIST_EVENTS = f"""
 SELECT event_type, {_WB} AS bucket, count(*) AS n
 FROM events GROUP BY 1, 2
 """
-
-
-def q_psi_ks_events(spark: SparkSession, sf: str) -> DataFrame:
-    ev = _t(spark, sf, "events")
-    obs = observed_histograms(ev, _EVENTS_DC, part_col="event_type")
-    # self-drift: baseline = table-wide distribution, derived from the tiny
-    # observed-histogram table (one fact scan, not two; identical values)
-    base = baseline_from_observed(obs)
-    m = drift_metrics(obs, base)
-    return m.select(
-        F.col("part_id").alias("event_type"),
-        F.round("psi", 6).alias("psi"),
-        F.round("ks_d", 6).alias("ks_d"),
-        F.col("n"),
-    )
 
 
 SQL_PSI_KS_EVENTS = f"""
@@ -747,50 +715,6 @@ _DOCS_DC = [DriftColumn("n_chars", "n_chars", "numeric", 0.0, 1024.0, 32)]
 _WB_DOCS = "CAST(CASE WHEN n_chars < 0.0 THEN 0 WHEN n_chars >= 1024.0 THEN 33 ELSE CAST(FLOOR(n_chars / 1024.0 * 32) AS INT) + 1 END AS VARCHAR)"
 
 
-def q_ks_documents(spark: SparkSession, sf: str) -> DataFrame:
-    docs = _t(spark, sf, "documents")
-    obs = observed_histograms(docs, _DOCS_DC, part_col="lang")
-    base = baseline_from_observed(obs)
-    return drift_metrics(obs, base).select(
-        F.col("part_id").alias("lang"), F.round("ks_d", 6).alias("ks_d"), F.col("n")
-    )
-
-
-SQL_KS_DOCUMENTS = f"""
-WITH obs AS (
-  SELECT lang, {_WB_DOCS} AS bucket, count(*) AS n FROM documents GROUP BY 1, 2
-),
-base AS (
-  SELECT {_WB_DOCS} AS bucket, count(*) / (SELECT count(*) FROM documents) AS p_expected
-  FROM documents GROUP BY 1
-),
-grid AS (
-  SELECT p.lang, b.bucket FROM (SELECT DISTINCT lang FROM obs) p
-  CROSS JOIN (SELECT bucket FROM obs UNION SELECT bucket FROM base) b
-),
-j AS (
-  SELECT g.lang, g.bucket, COALESCE(o.n,0) AS n, COALESCE(base.p_expected,0.0) AS p_expected
-  FROM grid g LEFT JOIN obs o ON g.lang=o.lang AND g.bucket=o.bucket
-  LEFT JOIN base ON g.bucket=base.bucket
-),
-t AS (
-  SELECT *, SUM(n) OVER (PARTITION BY lang) AS n_tot,
-    n*1.0/GREATEST(SUM(n) OVER (PARTITION BY lang),1) AS p_obs,
-    p_expected/GREATEST(SUM(p_expected) OVER (PARTITION BY lang),1e-6) AS p_exp_n
-  FROM j
-),
-c AS (
-  SELECT *, SUM(p_obs) OVER (PARTITION BY lang
-      ORDER BY COALESCE(TRY_CAST(bucket AS DOUBLE),1e308), bucket ROWS UNBOUNDED PRECEDING) AS cdf_obs,
-    SUM(p_exp_n) OVER (PARTITION BY lang
-      ORDER BY COALESCE(TRY_CAST(bucket AS DOUBLE),1e308), bucket ROWS UNBOUNDED PRECEDING) AS cdf_exp
-  FROM t
-)
-SELECT lang, ROUND(MAX(ABS(cdf_obs - cdf_exp)), 6) AS ks_d, CAST(MAX(n_tot) AS BIGINT) AS n
-FROM c GROUP BY 1
-"""
-
-
 # ------------------------------------------------------------------ arrays & JSON
 
 def q_array_embeddings(spark: SparkSession, sf: str) -> DataFrame:
@@ -864,12 +788,6 @@ WITH base AS ({SQL_ENUM_PATTERN_ORDERS}),
 v AS (SELECT CAST(o_orderkey % 8 AS INT) AS part, keyword FROM base)
 SELECT part, keyword, count(*) AS n
 FROM v GROUP BY GROUPING SETS ((part, keyword), (keyword))
-"""
-
-
-SQL_JSON_EVENTS = """
-SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
-FROM events WHERE CAST(json_extract_string(props, '$.k') AS INT) < 30
 """
 
 
@@ -963,15 +881,6 @@ WHERE doc_id NOT IN (SELECT id_b FROM pairs)
 """
 
 
-def q_minhash_candidates_documents(spark: SparkSession, sf: str) -> DataFrame:
-    # xxhash64-based — no DuckDB twin; driver records rows-only (weaker) check
-    return dedup.minhash_lsh_candidates(_t(spark, sf, "documents"), num_hashes=64, bands=16)
-
-
-def q_simhash_documents(spark: SparkSession, sf: str) -> DataFrame:
-    return dedup.simhash_signatures(_t(spark, sf, "documents"))
-
-
 def q_embedding_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     """LSH-bucketed near-dup detection (the wired scale path) verified
     against DuckDB's brute-force all-pairs oracle. The synthetic embeddings
@@ -1045,60 +954,6 @@ FROM documents d LEFT JOIN cc USING (doc_id)
 """
 
 
-def q_hash_sample_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic content-hash sampling: keep ~25% of docs by an
-    md5-prefix threshold — stable across reruns/repartitioning (df.sample is
-    neither), scan-side filter, no shuffle. Oracle: DuckDB computes the
-    identical md5-hex predicate."""
-    docs = _t(spark, sf, "documents")
-    return sampling.hash_sample(docs, 0.25).select("doc_id", "lang")
-
-
-SQL_HASH_SAMPLE_DOCUMENTS = """
-SELECT doc_id, lang FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR) || ''), 1, 12) < '400000000000'
-"""
-
-
-def q_stratified_sample_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic sampleBy: rebalance a language-skewed corpus with
-    per-stratum keep fractions compiled into one CASE filter (single scan,
-    no join)."""
-    docs = _t(spark, sf, "documents")
-    return sampling.stratified_hash_sample(
-        docs, {"en": 0.5, "de": 1.0, "fr": 0.25}, strata_col="lang"
-    ).select("doc_id", "lang")
-
-
-SQL_STRATIFIED_SAMPLE_DOCUMENTS = """
-SELECT doc_id, lang FROM documents
-WHERE substr(md5(CAST(doc_id AS VARCHAR) || ''), 1, 12) <
-  CASE lang WHEN 'de' THEN 'g'
-            WHEN 'en' THEN '800000000000'
-            WHEN 'fr' THEN '400000000000'
-            ELSE '000000000000' END
-"""
-
-
-def q_splits_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic train/val/test assignment by cumulative hash-slot
-    intervals — a row's split never changes when the corpus grows (prevents
-    eval-set contamination across dataset versions)."""
-    docs = _t(spark, sf, "documents")
-    return sampling.assign_splits(
-        docs, {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).select("doc_id", "lang", "split")
-
-
-SQL_SPLITS_DOCUMENTS = """
-SELECT doc_id, lang,
-  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR) || ''), 1, 12) < '19999999999a' THEN 'test'
-       WHEN substr(md5(CAST(doc_id AS VARCHAR) || ''), 1, 12) < 'e66666666666' THEN 'train'
-       ELSE 'val' END AS split
-FROM documents
-"""
-
-
 def _plant_pii(docs: DataFrame, out_col: str = "text") -> DataFrame:
     """Append deterministic doc_id-derived PII to a subset of docs (the
     synthetic corpus is word soup with no natural PII — the detectors need
@@ -1146,39 +1001,6 @@ _SQL_PII_RX = {
     "ssn": "\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b",
     "phone": "\\+[0-9][0-9()\\- ]{7,14}[0-9]\\b",
 }
-
-
-def q_pii_counts_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-document PII detector counts over planted-PII docs. Pure
-    regexp_extract_all Column exprs (codegen, single scan); detectors stay
-    in the Java-regex ∩ RE2 subset so DuckDB computes the identical counts."""
-    docs = _plant_pii(_t(spark, sf, "documents").select("doc_id", "text"))
-    return pii.pii_counts(docs)
-
-
-SQL_PII_COUNTS_DOCUMENTS = f"""
-WITH planted AS ({_SQL_PLANT_PII}),
-c AS (
-  SELECT doc_id,
-    len(regexp_extract_all(text, '{_SQL_PII_RX["email"]}')) AS n_email,
-    len(regexp_extract_all(text, '{_SQL_PII_RX["uuid"]}')) AS n_uuid,
-    len(regexp_extract_all(text, '{_SQL_PII_RX["ipv4"]}')) AS n_ipv4,
-    len(regexp_extract_all(text, '{_SQL_PII_RX["ssn"]}')) AS n_ssn,
-    len(regexp_extract_all(text, '{_SQL_PII_RX["phone"]}')) AS n_phone
-  FROM planted
-)
-SELECT doc_id, n_email, n_uuid, n_ipv4, n_ssn, n_phone,
-       n_email + n_uuid + n_ipv4 + n_ssn + n_phone AS n_pii_total
-FROM c WHERE n_email + n_uuid + n_ipv4 + n_ssn + n_phone > 0
-"""
-
-
-def q_pii_findings_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Exploded (doc_id, kind, match) findings — the violations-row shape;
-    one scan of the text column, single explode of a stacked per-detector
-    array."""
-    docs = _plant_pii(_t(spark, sf, "documents").select("doc_id", "text"))
-    return pii.pii_findings(docs)
 
 
 SQL_PII_FINDINGS_DOCUMENTS = f"""
@@ -1241,17 +1063,6 @@ WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.8
 """
 
 
-def q_simhash_near_dups_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """SimHash block-rotation near-dup pairs over documents ∪ planted copies
-    (identical text ⇒ Hamming 0). xxhash64-based → rows-only + pytest."""
-    docs = _t(spark, sf, "documents").select("doc_id", "text")
-    copies = (
-        docs.orderBy("doc_id").limit(50)
-        .select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    )
-    return dedup.simhash_near_duplicates(docs.unionByName(copies), max_hamming=3)
-
-
 def q_hamming_pairs_documents(spark: SparkSession, sf: str) -> DataFrame:
     """ORACLE-BACKED evidence that the block-rotation Hamming join is
     exhaustive: signatures are md5-derived 60-bit hashes (SQL-expressible on
@@ -1286,20 +1097,6 @@ WHERE bit_count(xor(a.h, b.h)) <= 2
 """
 
 
-def q_simhash_md5_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """ORACLE-BACKED proof of the SimHash signature computation (VERDICT r2
-    #6): the SAME per-bit-weighted-sum aggregation plan as the production
-    simhash_signatures, driven by an md5-derived 60-bit token hash instead
-    of xxhash64 (which has no DuckDB twin). DuckDB recomputes every
-    signature bit-for-bit from the same tokens — a value match proves the
-    bit-sum/sign/pack pipeline end-to-end; the production path differs only
-    in the hash primitive."""
-    md5h = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
-    return dedup.simhash_signatures(
-        _t(spark, sf, "documents"), bits=60, hash_fn=md5h
-    )
-
-
 SQL_SIMHASH_MD5_DOCUMENTS = """
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS wl FROM documents
@@ -1321,25 +1118,6 @@ SELECT doc_id AS id,
                      ELSE 0 END) AS BIGINT) AS simhash
 FROM bit_sums GROUP BY 1
 """
-
-
-def q_simhash_near_dups_md5_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """ORACLE-BACKED proof of the FULL simhash_near_duplicates composition
-    (signature aggregation -> block-rotation pigeonhole pair search): the
-    identical Spark pipeline driven by the md5-derived 60-bit token hash,
-    while DuckDB recomputes every signature AND brute-forces all pairs at
-    Hamming <= 3. A value match proves the pigeonhole equi-join finds
-    exactly the brute-force pair set; production differs only in the hash
-    primitive (xxhash64). 50 planted exact copies make it non-vacuous."""
-    md5h = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
-    docs = _t(spark, sf, "documents").select("doc_id", "text")
-    copies = (
-        docs.orderBy("doc_id").limit(50)
-        .select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    )
-    return dedup.simhash_near_duplicates(
-        docs.unionByName(copies), max_hamming=3, bits=60, hash_fn=md5h
-    )
 
 
 SQL_SIMHASH_NEAR_DUPS_MD5_DOCUMENTS = """
@@ -1479,18 +1257,6 @@ FROM bands a JOIN bands b
 """
 
 
-def q_ivf_topk_embeddings(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF coarse-quantized ANN: deterministic centroid training (ordered
-    sample), nprobe=4 of 8 clusters. Approximate by design → rows-only +
-    pytest recall check vs exact top-k."""
-    emb = _t(spark, sf, "embeddings")
-    cent = similarity.train_centroids(emb, c=8, iters=5)
-    queries = emb.where(F.col("vec_id") < 5)
-    return similarity.ivf_topk(emb, queries, cent, k=5, nprobe=4).select(
-        "query_id", "rank", "neighbor_id"
-    )
-
-
 # ------------------------------------------------------------------ similarity search
 
 def q_cosine_topk_embeddings(spark: SparkSession, sf: str) -> DataFrame:
@@ -1513,17 +1279,6 @@ SELECT query_id,
        neighbor_id
 FROM j QUALIFY rank <= 5
 """
-
-
-def q_lsh_topk_embeddings(spark: SparkSession, sf: str) -> DataFrame:
-    # approximate path over ARBITRARY queries — rows-only here; the
-    # oracle-backed recall gate is q_lsh_recall_embeddings below.
-    # 4 planes x 16 tables: random gaussian corpora are LSH's worst case
-    # (neighbors sit at wide angles); measured recall@5 ≈ 0.88 at this
-    # config vs 0.04 at the old 8x4 (which existed only for near-dups).
-    emb = _t(spark, sf, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5)
-    return similarity.cosine_lsh_topk(emb, queries, k=5, planes=4, tables=16)
 
 
 def _planted_queries(emb: DataFrame, n: int = 20) -> DataFrame:
@@ -1553,187 +1308,16 @@ WHERE rk = 1
 """
 
 
-def q_lsh_recall_embeddings(spark: SparkSession, sf: str) -> DataFrame:
-    """VERDICT r2 #7 — quantified recall gate for the LSH ANN path, ORACLE-
-    BACKED: 20 planted near-dup queries, LSH top-1 joined against the exact
-    top-1 (both computed in Spark); the DuckDB twin is the exact top-1 with
-    recall 1.0, so the row hashes match iff LSH retrieves the true nearest
-    neighbor for EVERY query (recall@1 = 1.0 — miss probability per planted
-    pair at 8 planes x 4 tables is ~1.5e-6, and seeded planes make the
-    result deterministic)."""
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    q = _planted_queries(emb)
-    approx = similarity.cosine_lsh_topk(emb, q, k=1, planes=8, tables=4).select(
-        "query_id", F.col("neighbor_id").alias("lsh_neighbor"))
-    exact = similarity.cosine_topk(emb, q, k=1).select(
-        "query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    return approx.join(exact, "query_id", "full").select(
-        "query_id", "lsh_neighbor",
-        F.coalesce(
-            (F.col("lsh_neighbor") == F.col("exact_neighbor")).cast("int"),
-            F.lit(0),
-        ).alias("recall_at_1"),
-    )
-
-
-SQL_LSH_RECALL_EMBEDDINGS = SQL_EXACT_TOP1_PLANTED.format(alias="lsh_neighbor")
-
-
-def q_ivf_recall_embeddings(spark: SparkSession, sf: str) -> DataFrame:
-    """Recall gate for the IVF ANN path (same construction as
-    q_lsh_recall_embeddings): IVF top-1 with nprobe=4 of 8 clusters must
-    equal the exact top-1 on every planted near-dup query — the copy's
-    nearest centroid is the original's, so the original's cluster is
-    always probed."""
-    emb = _t(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    cent = similarity.train_centroids(emb, c=8, iters=5)
-    q = _planted_queries(emb)
-    approx = similarity.ivf_topk(emb, q, cent, k=1, nprobe=4).select(
-        "query_id", F.col("neighbor_id").alias("ivf_neighbor"))
-    exact = similarity.cosine_topk(emb, q, k=1).select(
-        "query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    return approx.join(exact, "query_id", "full").select(
-        "query_id", "ivf_neighbor",
-        F.coalesce(
-            (F.col("ivf_neighbor") == F.col("exact_neighbor")).cast("int"),
-            F.lit(0),
-        ).alias("recall_at_1"),
-    )
-
-
-SQL_IVF_RECALL_EMBEDDINGS = SQL_EXACT_TOP1_PLANTED.format(alias="ivf_neighbor")
-
-
 # ------------------------------------------------------------------ text analysis
-
-def q_langid_documents(spark: SparkSession, sf: str) -> DataFrame:
-    docs = _t(spark, sf, "documents")
-    pred = T.language_id(docs)
-    return (
-        docs.select("doc_id", "lang").join(pred, "doc_id")
-        .groupBy("lang", "predicted_lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 _LANG_SCORE = {
     lang: "len(list_intersect(wl, [" + ",".join(f"'{m}'" for m in marks) + "]))"
     for lang, marks in T.LANG_MARKERS.items()
 }
-SQL_LANGID_DOCUMENTS = f"""
-WITH w AS (
-  SELECT doc_id, lang, regexp_split_to_array(trim(text), '\\s+') AS wl FROM documents
-),
-s AS (
-  SELECT doc_id, lang,
-    {_LANG_SCORE['de']} AS s_de, {_LANG_SCORE['en']} AS s_en, {_LANG_SCORE['es']} AS s_es,
-    {_LANG_SCORE['fr']} AS s_fr, {_LANG_SCORE['zh']} AS s_zh
-  FROM w
-),
-p AS (
-  SELECT doc_id, lang,
-    CASE WHEN GREATEST(s_de,s_en,s_es,s_fr,s_zh) = 0 THEN 'unknown'
-         WHEN s_de = GREATEST(s_de,s_en,s_es,s_fr,s_zh) THEN 'de'
-         WHEN s_en = GREATEST(s_de,s_en,s_es,s_fr,s_zh) THEN 'en'
-         WHEN s_es = GREATEST(s_de,s_en,s_es,s_fr,s_zh) THEN 'es'
-         WHEN s_fr = GREATEST(s_de,s_en,s_es,s_fr,s_zh) THEN 'fr'
-         ELSE 'zh' END AS predicted_lang
-  FROM s
-)
-SELECT lang, predicted_lang, count(*) AS n FROM p GROUP BY 1, 2
-"""
-
-
-def q_quality_documents(spark: SparkSession, sf: str) -> DataFrame:
-    return T.quality_scores(_t(spark, sf, "documents"))
 
 
 _EN = "[" + ",".join(f"'{m}'" for m in T.LANG_MARKERS["en"]) + "]"
-SQL_QUALITY_DOCUMENTS = f"""
-WITH w AS (
-  SELECT doc_id, text, regexp_split_to_array(trim(text), '\\s+') AS wl,
-         length(text) AS n_chars,
-         len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS punct,
-         len(list_intersect(regexp_split_to_array(trim(text), '\\s+'), {_EN})) AS stop
-  FROM documents
-)
-SELECT doc_id, len(wl) AS n_tokens, n_chars,
-       ROUND(n_chars * 1.0 / GREATEST(len(wl), 1), 4) AS avg_token_len,
-       ROUND(punct * 1.0 / GREATEST(n_chars, 1), 6) AS punct_ratio,
-       ROUND(stop * 1.0 / GREATEST(len(wl), 1), 6) AS stopword_ratio,
-       (len(wl) >= 5 AND n_chars >= 20 AND punct * 1.0 / GREATEST(n_chars, 1) < 0.3)
-         AS passes_quality
-FROM w
-"""
-
-
-def q_token_counts_documents(spark: SparkSession, sf: str) -> DataFrame:
-    return T.token_counts(_t(spark, sf, "documents"))
-
-
-SQL_TOKEN_COUNTS_DOCUMENTS = f"""
-SELECT doc_id,
-       len(regexp_split_to_array(trim(text), '\\s+')) AS ws_tokens,
-       len(regexp_extract_all(text, '{T.TOKEN_RE}')) AS re_tokens
-FROM documents
-"""
-
-
-def q_repetition_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher-style intra-doc repetition filters (duplicate-line and
-    duplicate-word fractions), pure scan-side Column exprs — no shuffle.
-    The synthetic corpus has no newlines, so ' table ' serves as the line
-    separator to make line metrics non-vacuous."""
-    return T.repetition_metrics(_t(spark, sf, "documents"), line_sep=" table ")
-
-
-SQL_REPETITION_DOCUMENTS = """
-WITH s AS (
-  SELECT doc_id,
-         string_split(text, ' table ') AS lines,
-         regexp_split_to_array(trim(text), '\\s+') AS ws
-  FROM documents WHERE text IS NOT NULL
-)
-SELECT doc_id,
-       len(lines) AS n_lines,
-       ROUND(1.0 - len(list_distinct(lines)) * 1.0 / len(lines), 6) AS dup_line_frac,
-       len(ws) AS n_words,
-       ROUND(1.0 - len(list_distinct(ws)) * 1.0 / len(ws), 6) AS dup_word_frac
-FROM s
-"""
-
-
-def q_top2gram_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Top word-2-gram character fraction (the Gopher repetition filter):
-    explode 2-grams (non-distinct), hash-agg per (doc, gram), per-doc window
-    max with a deterministic (count desc, gram asc) tie-break."""
-    return T.top_ngram_fraction(_t(spark, sf, "documents"), n=2)
-
-
-SQL_TOP2GRAM_DOCUMENTS = """
-WITH w AS (
-  SELECT doc_id, len(text) AS n_chars,
-         regexp_split_to_array(trim(text), '\\s+') AS wl
-  FROM documents WHERE text IS NOT NULL
-),
-g AS (
-  SELECT doc_id, n_chars, wl[i] || ' ' || wl[i+1] AS gram
-  FROM w, UNNEST(range(1, len(wl))) AS t(i)
-),
-c AS (
-  SELECT doc_id, n_chars, gram, count(*) AS cnt FROM g GROUP BY 1, 2, 3
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-                               ORDER BY cnt DESC, gram ASC) AS rn
-  FROM c
-)
-SELECT doc_id, gram AS top_gram, cnt AS top_gram_count,
-       ROUND(cnt * len(gram) * 1.0 / n_chars, 6) AS top_gram_char_frac
-FROM r WHERE rn = 1
-"""
 
 
 def q_decontam_documents(spark: SparkSession, sf: str) -> DataFrame:
@@ -2012,18 +1596,6 @@ p AS (
 SELECT part, doc_id, n_tokens, pack_id,
        CAST(row_number() OVER (PARTITION BY part, pack_id ORDER BY doc_id) AS INT) AS pack_pos
 FROM p
-"""
-
-
-def q_fingerprints_documents(spark: SparkSession, sf: str) -> DataFrame:
-    return T.fingerprints(_t(spark, sf, "documents"))
-
-
-SQL_FINGERPRINTS_DOCUMENTS = """
-SELECT doc_id,
-  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', '', 'g'),
-                          '\\s+', ' ', 'g'))) AS fingerprint
-FROM documents
 """
 
 
@@ -2388,114 +1960,6 @@ UNION ALL
 SELECT doc_id, 'changed' FROM documents WHERE doc_id % 97 <> 0 AND doc_id % 13 = 0
 UNION ALL
 SELECT doc_id + 100000, 'added' FROM documents WHERE doc_id % 41 = 0
-"""
-
-
-def q_quantile_verdicts_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Quantile-bound checks as a first-class verdict type
-    (x-table-checks/quantiles, B42): spec'd p50/p99 bounds on n_chars judged
-    against the MERGED table-wide KLL sketch — one bound passes, one fails,
-    by construction. kll_k above the row count keeps the sketch exact so
-    DuckDB's quantile_disc is the oracle."""
-    from jsonschema_spark.engine import validate_table
-
-    docs = _t(spark, sf, "documents").withColumn("grp", F.col("doc_id") % 4)
-    spec = {"properties": {"n_chars": {"minimum": 0}},
-            "x-table-checks": {"quantiles": [
-                {"column": "n_chars", "q": 0.99, "max": 100000},
-                {"column": "n_chars", "q": 0.5, "min": 100000}]}}
-    res = validate_table(docs, spec, key_col="doc_id", part_col="grp",
-                         kll_k=8192)
-    return res.quantile_verdicts
-
-
-SQL_QUANTILE_VERDICTS_DOCUMENTS = """
-WITH s AS (
-  SELECT n_chars, row_number() OVER (ORDER BY n_chars) rn, count(*) OVER () n
-  FROM documents WHERE n_chars IS NOT NULL
-),
-qv AS (
-  SELECT (SELECT CAST(min(n_chars) AS DOUBLE) FROM s WHERE rn >= ceil(0.5*n)) AS q50,
-         (SELECT CAST(min(n_chars) AS DOUBLE) FROM s WHERE rn >= ceil(0.99*n)) AS q99
-)
-SELECT 'n_chars' AS column, CAST(0.99 AS DOUBLE) AS q, q99 AS value,
-       CAST(NULL AS DOUBLE) AS lo, CAST(100000 AS DOUBLE) AS hi,
-       q99 <= 100000 AS passed FROM qv
-UNION ALL
-SELECT 'n_chars', CAST(0.5 AS DOUBLE), q50, CAST(100000 AS DOUBLE), CAST(NULL AS DOUBLE),
-       q50 >= 100000 FROM qv
-"""
-
-
-def q_distinct_verdicts_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """Distinct-cardinality bounds as verdicts (x-table-checks/distinct):
-    merged-HLL estimates vs spec'd bounds — lang (5 distinct) passes its
-    window, source (20) fails a min-100 bound. HLL is exact at these
-    cardinalities (DataSketches list mode), so DuckDB count(DISTINCT) is
-    the oracle."""
-    from jsonschema_spark.engine import validate_table
-
-    docs = _t(spark, sf, "documents").withColumn("grp", F.col("doc_id") % 4)
-    spec = {"properties": {"lang": {}, "source": {}},
-            "x-table-checks": {"distinct": [
-                {"column": "lang", "min": 2, "max": 50},
-                {"column": "source", "min": 100}]}}
-    res = validate_table(docs, spec, key_col="doc_id", part_col="grp")
-    return res.verdicts.where(F.col("pass_id") == "distinct") \
-        .select("check_id", "passed")
-
-
-SQL_DISTINCT_VERDICTS_DOCUMENTS = """
-SELECT 'distinct@/lang' AS check_id,
-       (SELECT count(DISTINCT lang) FROM documents) BETWEEN 2 AND 50 AS passed
-UNION ALL
-SELECT 'distinct@/source',
-       (SELECT count(DISTINCT source) FROM documents) >= 100
-"""
-
-
-def q_nullrate_verdicts_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Null-rate bounds as verdicts (x-table-checks/null-rates): value is
-    deterministically nulled on event_id%10 rows, so its 10%% rate fails a
-    5%% bound per partition and table-wide while event_type's 0%% passes;
-    n_violations carries the null count."""
-    from jsonschema_spark.engine import validate_table
-
-    ev = (_t(spark, sf, "events")
-          .withColumn("grp", F.col("event_id") % 4)
-          .withColumn("v", F.when(F.col("event_id") % 10 == 0, None)
-                      .otherwise(F.col("value"))))
-    spec = {"properties": {"v": {}, "event_type": {}},
-            "x-table-checks": {"null-rates": [
-                {"column": "v", "max_rate": 0.05},
-                {"column": "event_type", "max_rate": 0.0}]}}
-    res = validate_table(ev, spec, key_col="event_id", part_col="grp")
-    return res.verdicts.where(F.col("pass_id") == "null_rate") \
-        .select("part_id", "check_id", "passed", "n_violations")
-
-
-SQL_NULLRATE_VERDICTS_EVENTS = """
-WITH t AS (
-  SELECT CAST(event_id % 4 AS INT) AS part_id,
-         CASE WHEN event_id % 10 = 0 THEN 1 ELSE 0 END AS v_null
-  FROM events
-),
-p AS (
-  SELECT part_id, count(*) AS n_rows, sum(v_null) AS v_nulls FROM t GROUP BY 1
-),
-tw AS (
-  SELECT count(*) AS n_rows, sum(v_null) AS v_nulls FROM t
-)
-SELECT part_id, 'null-rate@/v' AS check_id,
-       v_nulls * 1.0 / n_rows <= 0.05 AS passed,
-       CAST(v_nulls AS BIGINT) AS n_violations FROM p
-UNION ALL
-SELECT CAST(NULL AS INT), 'null-rate@/v', v_nulls * 1.0 / n_rows <= 0.05,
-       CAST(v_nulls AS BIGINT) FROM tw
-UNION ALL
-SELECT part_id, 'null-rate@/event_type', TRUE, CAST(0 AS BIGINT) FROM p
-UNION ALL
-SELECT CAST(NULL AS INT), 'null-rate@/event_type', TRUE, CAST(0 AS BIGINT) FROM tw
 """
 
 
