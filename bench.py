@@ -76,9 +76,10 @@ PER_REP: dict[str, list[float]] = {}
 # pytest run) and neighbor DRAM contention — the r4 flagship number could
 # not be adjudicated against the builder's quiet-host run because the
 # driver artifact carried only the steal figure. Import is best-effort so
-# bench.py still runs standalone if tools/ is absent.
+# bench.py still runs standalone if tools/ is absent. tools/ goes at the END
+# of sys.path so its modules cannot shadow the package's or the stdlib's.
 try:
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+    sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
     from scaling_bench import MemProbe, other_load_pct, read_load
     _PROBE = MemProbe()
 except Exception:  # pragma: no cover - instrumentation is optional
