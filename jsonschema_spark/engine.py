@@ -23,7 +23,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .compile_spark import CompiledTableSpec, compile_table
@@ -234,7 +234,7 @@ def _single_check_verdicts(
 
 def _bound_verdicts(
     bounds: DataFrame, values: DataFrame, on: list[str], value: str,
-    keyword: str, check_id: Any,
+    keyword: str, check_id: Column,
 ) -> tuple[DataFrame, DataFrame]:
     """Table-wide lo/hi bound checks (quantile and distinct families):
     ``bounds`` rows (column, ..., lo, hi) joined to the merged ``values``;
@@ -321,8 +321,9 @@ def validate_table(
     Each pass's violation stream feeds BOTH the sink and the verdict
     counts, so it is persisted (MEMORY_AND_DISK) and executes once instead
     of once per consumer. Violations are bounded (≪ fact rows by
-    construction), so this holds at 10^12-row scale. Every verdict row is
-    zero-filled by ``passes.stats.verdicts_from_violations`` (B18).
+    construction), so this holds at 10^12-row scale. Every zero-filled
+    per-partition verdict grid comes from
+    ``passes.stats.verdicts_from_violations`` (B18).
 
     Call ``result.cleanup()`` after sinking to unpersist all caches.
     """
