@@ -257,7 +257,7 @@ def verdicts_from_violations(
                         F.lit(path).alias("path"))
                for cid, kw, path in checks]
     # parts × checks grid as a literal array per part: metadata-scale, no
-    # join and no fact-table data
+    # join, no fact-table data (the cast types an empty check list)
     grid = all_part_ids.select(
         "part_id",
         F.explode(F.array(*entries).cast(
