@@ -28,8 +28,9 @@ def expected_rows():
     return [FX.make_row(i, CFG, plan) for i in range(CFG.n)]
 
 
-# Stub P5/P7 streams: (part, row count) per pass, emitted with the passes'
-# own keywords and paths so the verdict must count every row of the pass.
+# Stub P5/P7 streams: per pass, partition -> (keyword, path) of each row it
+# emits. The rows use the passes' own keywords and paths, which differ from
+# the pass's one check, so its verdict must count every row of the pass.
 STUB_STREAMS = {
     "fidelity": {1: [("fidelity", "/bytes")] * 2 + [("fidelity", "/caption")],
                  5: [("fidelity", "/image_id")]},
