@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1637,6 +1638,43 @@ def test_content_schema_base64_json(spark):
 
 
 # -------------------------------------------- incremental dedup (LSH index)
+
+_HASH_JOIN_KEYS = re.compile(
+    r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[([^\]]*)\], \[([^\]]*)\]")
+
+
+def _hash_join_keys(plan: str) -> list[tuple[list[str], list[str]]]:
+    """Per hash/sort-merge join in ``plan``: its left and right key names,
+    expression ids stripped (``blk#17`` -> ``blk``)."""
+    def names(keys: str) -> list[str]:
+        return [re.sub(r"#\d+L?$", "", k.strip()) for k in keys.split(",")]
+
+    return [(names(a), names(b)) for a, b in _HASH_JOIN_KEYS.findall(plan)]
+
+
+def test_pair_join_plans_are_bucket_equi_joins(spark):
+    """The one-shot pair searches of all three near-duplicate families pair
+    rows with ONE equi-join on the family's bucket keys — never a cartesian
+    or nested-loop product over the corpus."""
+    from jsonschema_spark.operators import dedup as D
+
+    sig = spark.createDataFrame([(i, i * 7919) for i in range(6)],
+                                "id long, simhash long")
+    docs = spark.createDataFrame([(i, f"a b c d e f{i % 2}") for i in range(4)],
+                                 "doc_id long, text string")
+    emb = spark.createDataFrame([(i, [1.0, float(i), 0.5]) for i in range(4)],
+                                "vec_id long, embedding array<double>")
+    families = [
+        (D.hamming_near_duplicates(sig), ["blk", "key"]),
+        (D.minhash_lsh_candidates(docs, 8, 4), ["band", "bucket"]),
+        (D.embedding_near_duplicates(emb, 0.9), ["tbl", "bkt"]),
+    ]
+    for df, keys in families:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert _hash_join_keys(plan) == [(keys, keys)], plan
+
 
 def test_minhash_incremental_matches_full_corpus(spark):
     """Completeness invariant of the incremental path: (batch vs stored
