@@ -1,17 +1,24 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash-groupBy), n-gram Jaccard, MinHash+LSH, SimHash, and
-embedding-cosine near-dup — each expressed Spark-first:
+Exact (hash-groupBy), n-gram Jaccard, MinHash+LSH, SimHash/phash Hamming,
+embedding-cosine near-dup and exact substring spans — each Spark-first:
 
 - exact/ngram: pure DataFrame ops (codegen, map-side partial aggs).
-- MinHash: per-shingle hashes via ``xxhash64`` (JVM), min-reduced per band
-  with ``F.min`` aggregations; banding turns O(n²) pair search into an
-  equi-join on (band, signature) — the standard LSH shuffle shape that
-  scales linearly with corpus size instead of quadratically.
+- MinHash: per-shingle hashes via ``xxhash64`` (JVM), min-reduced in ONE
+  aggregation; each band of the signature becomes a (band, bucket) row.
 - SimHash: 64 per-bit weighted sums in ONE aggregation (64 agg columns,
-  still a single shuffle), then Hamming-adjacent bucketing.
+  still a single shuffle); a 64-bit signature splits into pigeonhole
+  (blk, key) rows.
+- Embeddings: random-hyperplane LSH gives one (tbl, bkt) row per table.
 
-At 10^12 docs the quadratic verify step only ever runs inside LSH buckets;
+Those rows are the storable index of each near-duplicate family, and every
+family pairs them the same way (``_bucket_pairs``): an equi-join on the
+bucket keys — linear shuffle in corpus size, never an all-pairs product —
+then the family's exact verify. Incremental ingestion (B48) is the same
+join twice (``_incremental_pairs``): the new batch's rows against the
+persisted corpus index, and the batch against itself.
+
+At 10^12 docs the quadratic verify step only ever runs inside buckets;
 bucket skew (a shingle shared by millions of docs) is handled by dropping
 top-frequency shingles (stopword-shingle cut) before the join.
 """
@@ -66,9 +73,7 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: i
 DEFAULT_MAX_SHINGLE_FREQ = 1000
 
 
-def _cut_hot_shingles(
-    sh: DataFrame, max_shingle_freq: int | None, lazy: bool = False
-) -> DataFrame:
+def _cut_hot_shingles(sh: DataFrame, max_shingle_freq: int | None) -> DataFrame:
     """Drop shingles shared by more than ``max_shingle_freq`` docs (the
     default-on scale guard: a stop-shingle shared by 10^6 docs makes a
     10^12-pair join bucket). The cut is results-changing — Jaccard biases
@@ -77,16 +82,10 @@ def _cut_hot_shingles(
     ≤ total-occurrences/max_freq keys) and a warning with the cut count is
     logged whenever the cut actually removed anything. The anti-join
     against the materialized hot set costs the same shingle-table scans as
-    the previous inline semi-join. ``lazy=True`` skips the eager count
-    (and the warning) for callers that must not trigger a job at
-    plan-construction time."""
+    an inline semi-join."""
     if max_shingle_freq is None:
         return sh
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-    if lazy:
-        return sh.join(
-            freq.where(F.col("_f") <= max_shingle_freq), "shingle", "left_semi"
-        )
     hot = freq.where(F.col("_f") > max_shingle_freq).select("shingle").persist()
     n_hot = hot.count()
     if n_hot > 0:
@@ -148,50 +147,75 @@ def minhash_signatures(
     text_col: str = "text",
     n: int = 3,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
-    hash_fn=None,
     prehash_fn=None,
     mix_fn=None,
 ) -> DataFrame:
     """(id, sig: array<long>) — MinHash signature per doc. Each hash h_k is
-    min over shingles of hash_fn(shingle, k) (default ``xxhash64``, JVM
-    codegen); all ``num_hashes`` minima are computed in ONE aggregation over
-    the exploded shingle table. Hot shingles above ``max_shingle_freq`` are
-    cut (same default + rationale as ngram_jaccard_pairs — they dominate
-    every doc's minima while carrying no discriminative signal).
+    min over shingles of mix_fn(prehash_fn(shingle), k) (defaults: the
+    identity and ``xxhash64(h, k)``, JVM codegen); all ``num_hashes``
+    minima are computed in ONE aggregation over the exploded shingle table.
+    Hot shingles above ``max_shingle_freq`` are cut (same default +
+    rationale as ngram_jaccard_pairs — they dominate every doc's minima
+    while carrying no discriminative signal).
 
-    ``hash_fn(col, k) -> Column`` exists so an SQL-expressible hash (e.g.
-    md5-derived) can drive the SAME aggregation/banding plan for
-    oracle-backed verification — xxhash64 has no DuckDB twin.
-
-    ``prehash_fn(col) -> Column`` + ``mix_fn(h, k) -> Column`` is the
-    two-stage form of the same hook: one (possibly expensive, e.g. md5)
-    base hash is projected ONCE per shingle row, and the ``num_hashes``
-    per-k hashes are cheap arithmetic mixes of it — 64 md5 calls per
-    shingle become 1, with identical SQL expressibility. Mutually
-    exclusive with ``hash_fn``."""
-    if prehash_fn is not None or mix_fn is not None:
-        if hash_fn is not None:
-            raise ValueError("pass either hash_fn or (prehash_fn, mix_fn), not both")
-        if prehash_fn is None or mix_fn is None:
-            raise ValueError("prehash_fn and mix_fn must be given together")
-        sh = _cut_hot_shingles(shingles(df, id_col, text_col, n), max_shingle_freq)
-        sh = sh.withColumn("_ph", prehash_fn(F.col("shingle")))
-        aggs = [
-            F.min(mix_fn(F.col("_ph"), k)).alias(f"h{k}")
-            for k in range(num_hashes)
-        ]
-        sig = sh.groupBy("id").agg(*aggs)
-        return sig.select(
-            "id", F.array(*[f"h{k}" for k in range(num_hashes)]).alias("sig"))
-    if hash_fn is None:
-        hash_fn = lambda c, k: F.xxhash64(c, F.lit(k))  # noqa: E731
+    ``prehash_fn(col) -> Column`` + ``mix_fn(h, k) -> Column`` exist so an
+    SQL-expressible hash (e.g. md5-derived) can drive the SAME
+    aggregation/banding plan for oracle-backed verification — xxhash64 has
+    no DuckDB twin. The base hash is projected ONCE per shingle row and the
+    ``num_hashes`` per-k hashes are cheap arithmetic mixes of it — 64 md5
+    calls per shingle become 1."""
+    if prehash_fn is None:
+        prehash_fn = lambda c: c  # noqa: E731
+    if mix_fn is None:
+        mix_fn = lambda h, k: F.xxhash64(h, F.lit(k))  # noqa: E731
     sh = _cut_hot_shingles(shingles(df, id_col, text_col, n), max_shingle_freq)
-    aggs = [
-        F.min(hash_fn(F.col("shingle"), k)).alias(f"h{k}")
-        for k in range(num_hashes)
-    ]
+    sh = sh.withColumn("_ph", prehash_fn(F.col("shingle")))
+    aggs = [F.min(mix_fn(F.col("_ph"), k)).alias(f"h{k}") for k in range(num_hashes)]
     sig = sh.groupBy("id").agg(*aggs)
     return sig.select("id", F.array(*[f"h{k}" for k in range(num_hashes)]).alias("sig"))
+
+
+def _bucket_pairs(
+    index: DataFrame,
+    other: DataFrame | None = None,
+    keys: tuple[str, ...] = (),
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Distinct (id_a, id_b, <c>_a, <c>_b for c in carry) pairs of index
+    rows equal on every bucket key. Without ``other``: a self-join of
+    ``index`` with id_a < id_b (each unordered pair once). With ``other``:
+    ``index`` rows (a side) against ``other`` rows (b side), id_a != id_b.
+    A pair sharing several buckets is reported once; with no keys every
+    row shares the one bucket (the brute-force product)."""
+    a = index.alias("a")
+    b = (index if other is None else other).alias("b")
+    cond = F.col("a.id") < F.col("b.id") if other is None else F.col("a.id") != F.col("b.id")
+    for k in reversed(keys):
+        cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
+    return a.join(b, cond).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    ).distinct()
+
+
+def _incremental_pairs(
+    batch: DataFrame,
+    corpus: DataFrame,
+    keys: tuple[str, ...],
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Batch-vs-corpus pairs (origin 'corpus') ∪ within-batch pairs (origin
+    'batch') as (id_new, id_other, <carry pairs>, origin). Only the batch's
+    index rows are computed; the corpus side is its persisted index.
+    Completeness invariant (test-pinned per family): the union equals the
+    one-shot pair set over corpus ∪ batch restricted to pairs touching the
+    batch."""
+    return (
+        _bucket_pairs(batch, corpus, keys, carry).withColumn("origin", F.lit("corpus"))
+        .unionByName(
+            _bucket_pairs(batch, None, keys, carry).withColumn("origin", F.lit("batch")))
+        .withColumnsRenamed({"id_a": "id_new", "id_b": "id_other"})
+    )
 
 
 def minhash_band_buckets(
@@ -227,28 +251,17 @@ def minhash_lsh_candidates(
     text_col: str = "text",
     n: int = 3,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
-    hash_fn=None,
     prehash_fn=None,
     mix_fn=None,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding: docs sharing ANY band
     signature. (id_a, id_b) distinct pairs. bands must divide num_hashes.
-    ``hash_fn`` / (``prehash_fn``, ``mix_fn``) thread through to
-    minhash_signatures (oracle variants)."""
+    ``prehash_fn``/``mix_fn`` thread through to minhash_signatures (oracle
+    variants)."""
     sig = minhash_signatures(df, num_hashes, id_col, text_col, n,
-                             max_shingle_freq, hash_fn, prehash_fn, mix_fn)
-    buckets = minhash_band_buckets(sig, num_hashes, bands)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+                             max_shingle_freq, prehash_fn, mix_fn)
+    return _bucket_pairs(minhash_band_buckets(sig, num_hashes, bands),
+                         keys=("band", "bucket"))
 
 
 def minhash_incremental_candidates(
@@ -260,7 +273,6 @@ def minhash_incremental_candidates(
     text_col: str = "text",
     n: int = 3,
     max_shingle_freq: int | None = DEFAULT_MAX_SHINGLE_FREQ,
-    hash_fn=None,
     prehash_fn=None,
     mix_fn=None,
 ) -> DataFrame:
@@ -276,27 +288,9 @@ def minhash_incremental_candidates(
     equals the full-corpus candidate set restricted to pairs touching the
     batch."""
     sig = minhash_signatures(new_df, num_hashes, id_col, text_col, n,
-                             max_shingle_freq, hash_fn, prehash_fn, mix_fn)
-    nb = minhash_band_buckets(sig, num_hashes, bands)
-    a, c = nb.alias("a"), corpus_buckets.alias("c")
-    vs_corpus = (
-        a.join(c, (F.col("a.band") == F.col("c.band"))
-               & (F.col("a.bucket") == F.col("c.bucket"))
-               & (F.col("a.id") != F.col("c.id")))
-        .select(F.col("a.id").alias("id_new"), F.col("c.id").alias("id_other"),
-                F.lit("corpus").alias("origin"))
-        .distinct()
-    )
-    x, y = nb.alias("x"), nb.alias("y")
-    within = (
-        x.join(y, (F.col("x.band") == F.col("y.band"))
-               & (F.col("x.bucket") == F.col("y.bucket"))
-               & (F.col("x.id") < F.col("y.id")))
-        .select(F.col("x.id").alias("id_new"), F.col("y.id").alias("id_other"),
-                F.lit("batch").alias("origin"))
-        .distinct()
-    )
-    return vs_corpus.unionByName(within)
+                             max_shingle_freq, prehash_fn, mix_fn)
+    return _incremental_pairs(minhash_band_buckets(sig, num_hashes, bands),
+                              corpus_buckets, ("band", "bucket"))
 
 
 def minhash_dedup(
@@ -377,56 +371,6 @@ def simhash_signatures(
     return agg.select("id", sim.alias("simhash"))
 
 
-def hamming_near_duplicates(
-    sig: DataFrame,
-    max_hamming: int = 3,
-    sig_col: str = "simhash",
-) -> DataFrame:
-    """Pairs of rows in ``sig`` (columns: id, <sig_col>:long) whose 64-bit
-    signatures are within ``max_hamming``, via the block-rotation trick:
-    split 64 bits into (max_hamming+1) blocks; any pair within distance d
-    shares ≥1 exact block (pigeonhole, EXHAUSTIVE — equals brute force) —
-    so candidates come from equi-joins on block values, never a cross join.
-    Returns (id_a, id_b, hamming)."""
-    blocks = max_hamming + 1
-    width = 64 // blocks
-    sig = sig.select("id", F.col(sig_col).alias("simhash"))
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("blk"),
-                F.shiftright(F.col("simhash"), k * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("key"),
-            )
-            for k in range(blocks)
-        ]
-    )
-    bk = sig.select("id", "simhash", F.explode(entries).alias("e")).select(
-        "id", "simhash", "e.blk", "e.key"
-    )
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.withColumn("hamming", ham).where(F.col("hamming") <= max_hamming).select(
-        "id_a", "id_b", "hamming"
-    )
-
-
 def hamming_block_index(
     sig: DataFrame, max_hamming: int = 3, sig_col: str = "simhash"
 ) -> DataFrame:
@@ -453,6 +397,29 @@ def hamming_block_index(
     )
 
 
+def _within_hamming(pairs: DataFrame, max_hamming: int) -> DataFrame:
+    """Exact verify of block-sharing candidates: ``hamming`` =
+    popcount(simhash_a XOR simhash_b), kept when ≤ ``max_hamming``."""
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return pairs.withColumn("hamming", ham).where(F.col("hamming") <= max_hamming)
+
+
+def hamming_near_duplicates(
+    sig: DataFrame,
+    max_hamming: int = 3,
+    sig_col: str = "simhash",
+) -> DataFrame:
+    """Pairs of rows in ``sig`` (columns: id, <sig_col>:long) whose 64-bit
+    signatures are within ``max_hamming``, via the block-rotation trick:
+    split 64 bits into (max_hamming+1) blocks; any pair within distance d
+    shares ≥1 exact block (pigeonhole, EXHAUSTIVE — equals brute force) —
+    so candidates come from equi-joins on block values, never a cross join.
+    Returns (id_a, id_b, hamming)."""
+    pairs = _bucket_pairs(hamming_block_index(sig, max_hamming, sig_col),
+                          keys=("blk", "key"), carry=("simhash",))
+    return _within_hamming(pairs, max_hamming).select("id_a", "id_b", "hamming")
+
+
 def hamming_incremental_candidates(
     new_sig: DataFrame,
     corpus_index: DataFrame,
@@ -466,51 +433,71 @@ def hamming_incremental_candidates(
     stream, so (batch-vs-corpus ∪ within-batch) equals the full-corpus pair
     set restricted to pairs touching the batch (test-pinned).
     Output: (id_new, id_other, hamming, origin)."""
-    nb = hamming_block_index(new_sig, max_hamming, sig_col)
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    a, c = nb.alias("a"), corpus_index.alias("c")
-    vs_corpus = (
-        a.join(c, (F.col("a.blk") == F.col("c.blk"))
-               & (F.col("a.key") == F.col("c.key"))
-               & (F.col("a.id") != F.col("c.id")))
-        .select(F.col("a.id").alias("id_new"), F.col("c.id").alias("id_other"),
-                F.col("a.simhash").alias("sh_a"), F.col("c.simhash").alias("sh_b"),
-                F.lit("corpus").alias("origin"))
-        .distinct()
-    )
-    x, y = nb.alias("x"), nb.alias("y")
-    within = (
-        x.join(y, (F.col("x.blk") == F.col("y.blk"))
-               & (F.col("x.key") == F.col("y.key"))
-               & (F.col("x.id") < F.col("y.id")))
-        .select(F.col("x.id").alias("id_new"), F.col("y.id").alias("id_other"),
-                F.col("x.simhash").alias("sh_a"), F.col("y.simhash").alias("sh_b"),
-                F.lit("batch").alias("origin"))
-        .distinct()
-    )
-    return (
-        vs_corpus.unionByName(within)
-        .withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_new", "id_other", "hamming", "origin")
-    )
+    pairs = _incremental_pairs(hamming_block_index(new_sig, max_hamming, sig_col),
+                               corpus_index, ("blk", "key"), ("simhash",))
+    return _within_hamming(pairs, max_hamming).select(
+        "id_new", "id_other", "hamming", "origin")
 
 
 def simhash_near_duplicates(
     df: DataFrame, max_hamming: int = 3, id_col: str = "doc_id", text_col: str = "text",
-    bits: int = 64, hash_fn=None, signatures: DataFrame | None = None,
+    bits: int = 64, hash_fn=None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(SimHash) ≤ max_hamming — SimHash
     signatures fed through the exhaustive block-rotation pair search.
     ``bits``/``hash_fn`` thread to simhash_signatures so an md5-derived
     hash can drive the identical composition for oracle verification.
-    Pass a precomputed ``signatures`` (id, simhash) table to reuse one
-    signature pass across several consumers (e.g. a signature report AND
-    the pair search) — Spark does not CSE across plan branches, so without
-    it each consumer re-aggregates the token table."""
-    sig = signatures if signatures is not None else simhash_signatures(
-        df, id_col, text_col, bits, hash_fn)
+    A caller that already holds an (id, simhash) table calls
+    :func:`hamming_near_duplicates` on it directly."""
+    sig = simhash_signatures(df, id_col, text_col, bits, hash_fn)
     return hamming_near_duplicates(sig, max_hamming, "simhash")
+
+
+def _embedding_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v: array<double>, nrm) — each vector with its L2 norm."""
+    from .similarity import _norm
+
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    ).withColumn("nrm", _norm(F.col("v")))
+
+
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Exact cosine verify of candidates carrying (v, nrm): the threshold
+    applies to the RAW cosine and ``cos`` is rounded to 6 places only in
+    the output, so a pair just below the threshold is dropped on every
+    path (rounding first would keep cosines in [t - 5e-7, t))."""
+    from .similarity import _dot
+
+    cos = _dot(F.col("v_a"), F.col("v_b")) / (F.col("nrm_a") * F.col("nrm_b"))
+    return (
+        pairs.withColumn("cos", cos)
+        .where(F.col("cos") >= threshold)
+        .withColumn("cos", F.round("cos", 6))
+    )
+
+
+def embedding_bucket_index(
+    df: DataFrame,
+    planes: int = 8,
+    tables: int = 6,
+    dim: int | None = None,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, v, nrm, tbl, bkt) — the storable LSH index rows for a corpus
+    embedding table (hyperplanes are deterministic in (dim, planes, seed),
+    so batches indexed later land in the SAME buckets). The vector and its
+    norm ride along because the verify stage needs them; at north scale the
+    index is bucketed storage on (tbl, bkt)."""
+    from .similarity import _hyperplanes, lsh_buckets_all, resolve_dim
+
+    dim = resolve_dim(df, vec_col, dim)
+    all_planes = [_hyperplanes(dim, planes, seed + t) for t in range(tables)]
+    return _embedding_rows(df, id_col, vec_col).select(
+        "id", "v", "nrm", F.explode(lsh_buckets_all("v", all_planes)).alias("e")
+    ).select("id", "v", "nrm", "e.tbl", "e.bkt")
 
 
 def embedding_near_duplicates(
@@ -545,84 +532,13 @@ def embedding_near_duplicates(
     ``method="exact"``: the brute-force O(n²) theta-join — correctness
     oracle for tests and small inputs ONLY (10^9 vectors → 10^18 pairs).
     """
-    from .similarity import _norm, _dot, _hyperplanes, lsh_buckets_all, resolve_dim
-
-    v = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
-    if method != "exact":
-        dim = resolve_dim(df, vec_col, dim)
-
     if method == "exact":
-        a, b = v.alias("a"), v.alias("b")
-        cos = _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
-        return (
-            a.join(b, F.col("a.id") < F.col("b.id"))
-            .withColumn("cos", cos)
-            .where(F.col("cos") >= threshold)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                    F.round("cos", 6).alias("cos"))
-        )
-
-    all_planes = [_hyperplanes(dim, planes, seed + t) for t in range(tables)]
-    bk = v.select("id", "v", "nrm",
-                  F.explode(lsh_buckets_all("v", all_planes)).alias("e")).select(
-        "id", "v", "nrm", "e.tbl", "e.bkt"
-    )
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("a.v").alias("va"),
-                F.col("a.nrm").alias("na"),
-                F.col("b.id").alias("id_b"), F.col("b.v").alias("vb"),
-                F.col("b.nrm").alias("nb"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.withColumn("cos", cos)
-        .where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-    )
-
-
-def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Drop the higher-id member of every duplicate pair (canonical keep-first
-    policy). At scale this is a left_anti join against the (small) drop-list."""
-    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(drop, id_col, "left_anti")
-
-
-def embedding_bucket_index(
-    df: DataFrame,
-    planes: int = 8,
-    tables: int = 6,
-    dim: int | None = None,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, v, nrm, tbl, bkt) — the storable LSH index rows for a corpus
-    embedding table (hyperplanes are deterministic in (dim, planes, seed),
-    so batches indexed later land in the SAME buckets). The vector and its
-    norm ride along because the verify stage needs them; at north scale the
-    index is bucketed storage on (tbl, bkt)."""
-    from .similarity import _norm, _hyperplanes, lsh_buckets_all, resolve_dim
-
-    dim = resolve_dim(df, vec_col, dim)
-    all_planes = [_hyperplanes(dim, planes, seed + t) for t in range(tables)]
-    v = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
-    return v.select("id", "v", "nrm",
-                    F.explode(lsh_buckets_all("v", all_planes)).alias("e")).select(
-        "id", "v", "nrm", "e.tbl", "e.bkt"
-    )
+        pairs = _bucket_pairs(_embedding_rows(df, id_col, vec_col), carry=("v", "nrm"))
+    else:
+        pairs = _bucket_pairs(
+            embedding_bucket_index(df, planes, tables, dim, seed, id_col, vec_col),
+            keys=("tbl", "bkt"), carry=("v", "nrm"))
+    return _cosine_at_least(pairs, threshold).select("id_a", "id_b", "cos")
 
 
 def embedding_incremental_near_duplicates(
@@ -643,38 +559,16 @@ def embedding_incremental_near_duplicates(
     characteristics are identical to the one-shot path because the bucket
     values are deterministic. Output: (id_new, id_other, cos, origin);
     completeness-vs-one-shot invariant test-pinned."""
-    from .similarity import _dot
-
     nb = embedding_bucket_index(new_df, planes, tables, dim, seed, id_col, vec_col)
-    a, c = nb.alias("a"), corpus_index.alias("c")
-    vs_corpus = (
-        a.join(c, (F.col("a.tbl") == F.col("c.tbl"))
-               & (F.col("a.bkt") == F.col("c.bkt"))
-               & (F.col("a.id") != F.col("c.id")))
-        .select(F.col("a.id").alias("id_new"), F.col("c.id").alias("id_other"),
-                F.col("a.v").alias("va"), F.col("c.v").alias("vb"),
-                F.col("a.nrm").alias("na"), F.col("c.nrm").alias("nb_"),
-                F.lit("corpus").alias("origin"))
-        .distinct()
-    )
-    x, y = nb.alias("x"), nb.alias("y")
-    within = (
-        x.join(y, (F.col("x.tbl") == F.col("y.tbl"))
-               & (F.col("x.bkt") == F.col("y.bkt"))
-               & (F.col("x.id") < F.col("y.id")))
-        .select(F.col("x.id").alias("id_new"), F.col("y.id").alias("id_other"),
-                F.col("x.v").alias("va"), F.col("y.v").alias("vb"),
-                F.col("x.nrm").alias("na"), F.col("y.nrm").alias("nb_"),
-                F.lit("batch").alias("origin"))
-        .distinct()
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb_"))
-    return (
-        vs_corpus.unionByName(within)
-        .withColumn("cos", F.round(cos, 6))
-        .where(F.col("cos") >= threshold)
-        .select("id_new", "id_other", "cos", "origin")
-    )
+    pairs = _incremental_pairs(nb, corpus_index, ("tbl", "bkt"), ("v", "nrm"))
+    return _cosine_at_least(pairs, threshold).select("id_new", "id_other", "cos", "origin")
+
+
+def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Drop the higher-id member of every duplicate pair (canonical keep-first
+    policy). At scale this is a left_anti join against the (small) drop-list."""
+    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return df.join(drop, id_col, "left_anti")
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import logging
+import math
 import os
 import re
 
@@ -112,17 +113,23 @@ def test_shingle_cut_silent_when_nothing_cut(spark, caplog):
 
 
 def test_shingle_cut_anti_join_matches_semi_join_semantics(spark):
-    """The materialized-hot-set anti-join must keep exactly the shingles the
-    previous inline semi-join kept."""
+    """The materialized-hot-set anti-join must keep exactly the shingles
+    shared by at most max_shingle_freq docs."""
+    from collections import Counter
+
     hot = "the quick fox"
     rows = [(i, f"{hot} doc{i} unique{i} tail{i} end{i}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = dedup.shingles(df)
-    eager = dedup._cut_hot_shingles(sh, 10)
-    lazy = dedup._cut_hot_shingles(sh, 10, lazy=True)
-    a = sorted((r.id, r.shingle) for r in eager.collect())
-    b = sorted((r.id, r.shingle) for r in lazy.collect())
-    assert a == b and len(a) > 0
+    cut = dedup._cut_hot_shingles(dedup.shingles(df), 10)
+    got = sorted((r.id, r.shingle) for r in cut.collect())
+
+    def grams(text):
+        w = text.split()
+        return {" ".join(w[j:j + 3]) for j in range(len(w) - 2)}
+
+    freq = Counter(g for _, t in rows for g in grams(t))
+    expected = sorted((i, g) for i, t in rows for g in grams(t) if freq[g] <= 10)
+    assert freq[hot] == 30 and got == expected and len(got) > 0
 
 
 # ----------------------------------------- pathological uniqueness (VERDICT 5)
@@ -440,7 +447,7 @@ def test_minhash_md5_oracle_on_pathological_texts(spark):
         r["id"]: r["sig"]
         for r in dedup.minhash_signatures(
             _pathological_df(spark), num_hashes=8,
-            max_shingle_freq=None, hash_fn=md5h,
+            max_shingle_freq=None, mix_fn=md5h,
         ).collect()
     }
     con = duckdb.connect()
@@ -1818,11 +1825,23 @@ def test_embedding_incremental_matches_full_corpus(spark):
     for i, v in enumerate(base):
         rows.append((i, [float(x) for x in v]))
         rows.append((1000 + i, [float(x) for x in v + rng.randn(16) * 1e-3]))
+    # Threshold edge pair: cosine 0.95 - 2.5e-7 is below the threshold but
+    # rounds to 0.95 at 6 places, so both paths must filter on the raw
+    # cosine. e0 and (c, s, 0, ...) share a bucket in 3 of the 6 seed-42
+    # tables, so the pair is a candidate on both paths; 500 lands in the
+    # corpus and 501 in the batch.
+    c = 0.95 - 2.5e-7
+    rows.append((500, [1.0] + [0.0] * 15))
+    rows.append((501, [c, math.sqrt(1.0 - c * c)] + [0.0] * 14))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     old = df.where(F.col("vec_id") % 2 == 0)
     new = df.where(F.col("vec_id") % 2 == 1)
 
     idx = D.embedding_bucket_index(old, planes=8, tables=6, seed=42)
+    edge_buckets = [{(r.tbl, r.bkt) for r in D.embedding_bucket_index(
+        df.where(F.col("vec_id") == i), planes=8, tables=6, seed=42).collect()}
+        for i in (500, 501)]
+    assert edge_buckets[0] & edge_buckets[1]  # the edge pair is a candidate
     inc = D.embedding_incremental_near_duplicates(
         new, idx, threshold=0.95, planes=8, tables=6, seed=42).collect()
     got = {(min(r.id_new, r.id_other), max(r.id_new, r.id_other), r.cos)
@@ -1834,6 +1853,7 @@ def test_embedding_incremental_matches_full_corpus(spark):
     expected = {(r.id_a, r.id_b, r.cos) for r in full
                 if r.id_a in new_ids or r.id_b in new_ids}
     assert got == expected and len(expected) > 0
+    assert not any(a == 500 for a, _, _ in got)
 
 
 def test_curate_images_validation_gated(spark):
