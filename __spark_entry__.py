@@ -828,7 +828,14 @@ FROM orders WHERE CAST(o_orderkey % 8 AS INT) NOT IN (0,1,2,3) GROUP BY 1
 # ------------------------------------------------------------------ dedup operators
 
 def q_dedup_exact_documents(spark: SparkSession, sf: str) -> DataFrame:
-    d = dedup.exact_duplicates(_t(spark, sf, "documents"))
+    """Exact content-hash dedup over documents plus 20 planted exact copies
+    (doc_id < 20 re-keyed to doc_id + 100000): the sf0.01 table alone holds
+    no duplicate text, so without the copies both engines agree on 0 rows
+    and the gate could not fail."""
+    docs = _t(spark, sf, "documents").select("doc_id", "text")
+    copies = docs.where(F.col("doc_id") < 20).select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text")
+    d = dedup.exact_duplicates(docs.unionByName(copies))
     return d.select(
         "content_md5", "n_dups",
         F.element_at("doc_ids", 1).alias("min_doc"),
@@ -837,9 +844,14 @@ def q_dedup_exact_documents(spark: SparkSession, sf: str) -> DataFrame:
 
 
 SQL_DEDUP_EXACT_DOCUMENTS = """
+WITH docs AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 100000, text FROM documents WHERE doc_id < 20
+)
 SELECT md5(text) AS content_md5, count(*) AS n_dups,
        min(doc_id) AS min_doc, max(doc_id) AS max_doc
-FROM documents GROUP BY 1 HAVING count(*) > 1
+FROM docs GROUP BY 1 HAVING count(*) > 1
 """
 
 
@@ -2526,8 +2538,8 @@ def q_simhash_md5_full_documents(spark: SparkSession, sf: str) -> DataFrame:
     )
     # (measured: sharing one localCheckpointed signature pass across both
     # legs is ~30% SLOWER here — the checkpoint barrier costs more than the
-    # second codegen aggregation at this scale; dedup.simhash_near_duplicates
-    # keeps its `signatures` hook for genuinely large reuse)
+    # second codegen aggregation at this scale; for genuinely large reuse,
+    # pass one signature table to dedup.hamming_near_duplicates)
     pairs = dedup.simhash_near_duplicates(
         docs.unionByName(copies), max_hamming=3, bits=60, hash_fn=md5h)
     return sig.select(
