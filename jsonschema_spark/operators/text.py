@@ -279,22 +279,18 @@ def remove_boilerplate(
     id_col: str = "doc_id",
     text_col: str = "text",
     group_col: str | None = None,
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """Scrub the ``boiler`` line set (from :func:`boilerplate_lines`) out of
     every document, preserving line order. Every input doc survives — a doc
     whose lines are ALL boilerplate comes back with empty ``text_clean``.
 
-    Shape at scale: posexplode(lines) → left join against the boilerplate
-    set (``strategy='broadcast'`` by default — the set is the head of the
-    line-frequency distribution, inherently small; ``'shuffle'`` for an
-    adversarially large set) → reassembly is ONE hash aggregation keyed by
-    the document id (collect (pos, line) structs, array_sort restores
-    order). Per-doc keys: no hot keys, payload bounded by doc length.
+    Shape at scale: posexplode(lines) → left join against the broadcast
+    boilerplate set (the head of the line-frequency distribution,
+    inherently small) → reassembly is ONE hash aggregation keyed by the
+    document id (collect (pos, line) structs, array_sort restores order).
+    Per-doc keys: no hot keys, payload bounded by doc length.
     Output: (id_col, text_clean, n_lines_kept, n_lines_removed).
     """
-    if strategy not in ("broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     gcols = [group_col] if group_col else []
     ex = (
         df.where(F.col(text_col).isNotNull())
@@ -303,9 +299,7 @@ def remove_boilerplate(
                 .alias("pos", "line"))
     )
     bset = boiler.select(*gcols, "line", F.lit(True).alias("_bp")).distinct()
-    if strategy == "broadcast":
-        bset = F.broadcast(bset)
-    j = ex.join(bset, [*gcols, "line"], "left")
+    j = ex.join(F.broadcast(bset), [*gcols, "line"], "left")
     kept = F.when(F.col("_bp").isNull(), F.struct("pos", "line"))
     return j.groupBy(id_col).agg(
         F.array_join(

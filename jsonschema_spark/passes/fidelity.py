@@ -207,7 +207,6 @@ def fidelity_violations_ref(
     part_col: str = "part_id",
     key_col: str = "image_id",
     parts_fraction: float | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Reference-TABLE fidelity (the BASELINE.json per-row invariant run
     against stored ground truth): for a sampled slice, decode the fact
@@ -216,21 +215,10 @@ def fidelity_violations_ref(
 
     ``ref`` has the same shape as the fact table (image_id, bytes, fmt, w,
     h, caption). Scale shape: the SAMPLE is taken first, so the join ships
-    only fraction x |fact| rows against the reference. Join-strategy
-    selection mirrors passes/referential.py (the 100 TB lever):
-
-    - ``strategy="auto"`` (default): plain equi-join, AQE decides — at a
-      fact-scale reference table neither side broadcasts, and AQE's
-      runtime stats pick shuffle-hash vs sort-merge and split skewed key
-      ranges. This is the right default because the SAMPLE side's size is
-      fraction-dependent and unknowable at plan time.
-    - ``strategy="broadcast_sample"``: force-broadcast the sampled slice
-      (correct when fraction x |fact| rows of bytes fit in the driver's
-      broadcast budget — sampled BYTES are heavy, so only for tiny
-      fractions); the reference table then never shuffles.
-    - ``strategy="shuffle_hash"``: hint shuffle-hash on the reference side
-      — avoids sorting both sides when the optimizer would otherwise pick
-      sort-merge and the sample is too big to broadcast.
+    only fraction x |fact| rows against the reference. The join is a plain
+    equi-join and AQE picks its physical strategy from runtime sizes (the
+    sample side's size is fraction-dependent and unknowable at plan time):
+    shuffle-hash vs sort-merge, with skewed key ranges split.
 
     Rows with no reference row are unverifiable -> violations."""
     sampled = sampled_slice(
@@ -242,14 +230,7 @@ def fidelity_violations_ref(
         F.col("fmt").alias("r_fmt"), F.col("w").alias("r_w"),
         F.col("h").alias("r_h"), F.col("caption").alias("r_caption"),
     )
-    if strategy == "broadcast_sample":
-        joined = F.broadcast(sampled).join(
-            r, sampled[key_col] == r["r_key"], "left")
-    elif strategy == "shuffle_hash":
-        joined = sampled.join(
-            r.hint("shuffle_hash"), sampled[key_col] == r["r_key"], "left")
-    else:  # auto — AQE decides from runtime sizes
-        joined = sampled.join(r, sampled[key_col] == r["r_key"], "left")
+    joined = sampled.join(r, sampled[key_col] == r["r_key"], "left")
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
