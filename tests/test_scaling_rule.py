@@ -114,9 +114,9 @@ def test_run_level_once_single_call_on_success(monkeypatch):
     assert len(calls) == 1
 
 
-# --- rule v3: region wall-time anomaly ------------------------------------
+# --- rule v4: region wall-time anomaly, min anchor ------------------------
 
-from run_scaling import _apply_time_rule  # noqa: E402
+from run_scaling import _apply_time_rule_v4  # noqa: E402
 
 
 def _tround(n, clean_cpu, small_sec, large_sec, **extra):
@@ -128,73 +128,32 @@ def _tround(n, clean_cpu, small_sec, large_sec, **extra):
 
 def test_time_rule_flags_cpu_quiet_slow_region():
     # Identical work per region: a CPU-clean round whose 8c suite ran 2.15x
-    # the CPU-clean median (fresh2 round 6: 181s vs ~84-98s norm) is stalled
-    # by contention no CPU gauge saw. Median over r1/r2/r3 small = 85.
+    # the CPU-clean minimum (fresh2 round 6: 181s vs ~84-98s norm) is
+    # stalled by contention no CPU gauge saw. Min over r1-r4 small = 84.
     rounds = [_tround(1, True, 84.0, 44.0),
               _tround(2, True, 85.0, 45.0),
               _tround(3, True, 86.0, 44.5),
               _tround(4, True, 181.0, 44.0)]
-    _apply_time_rule(rounds, headroom=1.3)
+    _apply_time_rule_v4(rounds, headroom=1.3)
     assert all(r["time_clean"] for r in rounds[:3])
     assert all(r["clean"] for r in rounds[:3])
     assert not rounds[3]["time_clean"] and not rounds[3]["clean"]
-
-
-def test_time_rule_reference_is_median_not_max():
-    # v2's failure mode: one outlier round captured the per-region
-    # reference and declassified everyone else. A MEDIAN reference over
-    # CPU-clean rounds is not capturable by a single round: the fast
-    # outlier neither declassifies the normal rounds nor is itself flagged
-    # (fast is never contamination).
-    rounds = [_tround(1, True, 84.0, 44.0),
-              _tround(2, True, 86.0, 45.0),
-              _tround(3, True, 40.0, 20.0)]  # anomalously FAST outlier
-    _apply_time_rule(rounds, headroom=1.3)
-    assert all(r["time_clean"] and r["clean"] for r in rounds)
 
 
 def test_time_rule_exclusion_is_direction_blind():
     # A slow CONTROL region excludes the round exactly like a slow suite
     # region, even though a slow control (denominator) would have
     # FLATTERED the gate ratio (fresh2 round 3: mix-32c 78.7s vs ~21s
-    # median inflated its normalized ratio to 3.252).
+    # norm inflated its normalized ratio to 3.252).
     rounds = [_tround(1, True, 84.0, 44.0, mix_small_sec=38.0,
                       mix_large_sec=21.0),
               _tround(2, True, 85.0, 45.0, mix_small_sec=39.0,
                       mix_large_sec=20.5),
               _tround(3, True, 84.5, 44.5, mix_small_sec=38.5,
                       mix_large_sec=78.7)]
-    _apply_time_rule(rounds, headroom=1.3)
+    _apply_time_rule_v4(rounds, headroom=1.3)
     assert rounds[0]["clean"] and rounds[1]["clean"]
     assert not rounds[2]["time_clean"] and not rounds[2]["clean"]
-
-
-def test_time_rule_cpu_dirty_rounds_do_not_set_reference():
-    # A CPU-contaminated round's slow regions must not drag the reference
-    # median up: with it in the pool the 120s round would pass at
-    # headroom 1.3 (median 120 -> cap 156); against the CPU-clean median
-    # (85) it is correctly flagged.
-    rounds = [_tround(1, True, 84.0, 44.0),
-              _tround(2, True, 86.0, 45.0),
-              _tround(3, False, 170.0, 80.0),
-              _tround(4, False, 165.0, 85.0),
-              _tround(5, True, 120.0, 44.0)]
-    _apply_time_rule(rounds, headroom=1.3)
-    assert rounds[0]["clean"] and rounds[1]["clean"]
-    assert not rounds[4]["time_clean"]
-
-
-def test_time_rule_single_cpu_clean_round_falls_back_to_all_rounds():
-    # With < 2 CPU-clean rounds the CPU-clean reference is
-    # self-referential; fall back to the all-rounds median (the gate
-    # needs >= 3 clean rounds regardless, so nothing can PASS off the
-    # vacuous case).
-    rounds = [_tround(1, True, 84.0, 44.0),
-              _tround(2, False, 90.0, 46.0),
-              _tround(3, False, 86.0, 45.0)]
-    _apply_time_rule(rounds, headroom=1.3)
-    assert rounds[0]["time_clean"] and rounds[0]["clean"]
-    assert not rounds[1]["clean"]  # clean_cpu False dominates
 
 
 def test_time_rule_skips_regions_a_round_does_not_carry():
@@ -203,13 +162,32 @@ def test_time_rule_skips_regions_a_round_does_not_carry():
     rounds = [_tround(1, True, 84.0, 44.0, agg_small_sec=20.0),
               _tround(2, True, 85.0, 45.0, agg_small_sec=21.0),
               _tround(3, True, 84.5, 44.5)]  # no agg region
-    _apply_time_rule(rounds, headroom=1.3)
+    _apply_time_rule_v4(rounds, headroom=1.3)
     assert all(r["time_clean"] for r in rounds)
 
 
-# ----------------------------------------------------------- rule v4 (r5)
+def test_time_rule_v4_single_cpu_clean_round_anchors_on_it():
+    # One CPU-clean round is still the only valid anchor: the CPU-dirty
+    # rounds must not set the reference, not even when fewer than two
+    # clean rounds exist. Anchored on all rounds, the dirty 60s round
+    # would cap the clean round at 78s and declassify it.
+    rounds = [_tround(1, True, 84.0, 44.0),
+              _tround(2, False, 60.0, 30.0),
+              _tround(3, False, 200.0, 100.0)]
+    _apply_time_rule_v4(rounds, headroom=1.3)
+    assert rounds[0]["time_clean"] and rounds[0]["clean"]
+    assert rounds[1]["time_clean"] and not rounds[1]["clean"]
+    assert rounds[2]["time_clean"] is False and not rounds[2]["clean"]
 
-from run_scaling import _apply_time_rule_v4  # noqa: E402
+
+def test_time_rule_v4_no_cpu_clean_round_records_none():
+    # No CPU-clean round: there is no reference, so the time check is not
+    # evaluated (None, not a pass) and no round is clean.
+    rounds = [_tround(1, False, 84.0, 44.0),
+              _tround(2, False, 90.0, 46.0)]
+    _apply_time_rule_v4(rounds, headroom=1.3)
+    assert all(r["time_clean"] is None for r in rounds)
+    assert not any(r["clean"] for r in rounds)
 
 
 def test_time_rule_v4_catches_contaminated_majority():
@@ -222,8 +200,6 @@ def test_time_rule_v4_catches_contaminated_majority():
               _tround(2, True, 168.0, 88.0),
               _tround(3, True, 170.0, 87.0),
               _tround(4, True, 169.0, 89.0)]
-    _apply_time_rule(rounds, headroom=1.3)
-    assert all(r["time_clean"] for r in rounds)  # v3's documented blind spot
     _apply_time_rule_v4(rounds, headroom=1.3)
     assert rounds[0]["time_clean"] and rounds[0]["clean"]
     assert not any(r["time_clean"] for r in rounds[1:])

@@ -131,72 +131,46 @@ _TIME_KEYS = ("small_sec", "large_sec", "calib_small_sec", "calib_large_sec",
               "mix_large_sec")
 
 
-def _apply_time_rule(rounds: list[dict], headroom: float = 1.3) -> None:
-    """Cleanliness rule v3 (registered 2026-08-20, SCALING_NOTES_r04 §11):
-    set time_clean + final clean on every round. Each region runs IDENTICAL
-    work in every round, so for a CPU-quiet round the region's wall time is
-    itself the most direct contamination detector: a region running >
-    ``headroom`` x its cross-round reference, with every CPU gauge quiet, is
-    stalled by something the CPU gauges cannot see (the §1 neighbor-memory
-    signature — fresh2 exhibits it at 1.4–2.2x with steal 0.0%). Unlike the
-    v2 DRAM-probe floor, the time reference does not depend on which
-    benchmark phase the probe samples happened to overlap, and a MEDIAN
-    (not max) reference cannot be captured by a single outlier round —
-    the two constructions that made v2 an AND of eight near-unsatisfiable
-    floors (fresh2: 8 CPU-clean rounds, 0 passed all floors; per-region
-    CPU-clean probe spread up to 3.6x).
-
-    Reference: per-region MEDIAN over CPU-clean rounds; with < 2 CPU-clean
-    rounds it falls back to the all-rounds median (self-referential, like
-    v2's guard — the gate needs >= 3 clean rounds regardless). A round is
-    time_clean iff EVERY region it carries is within headroom of its
-    reference; final clean = clean_cpu AND time_clean. The exclusion is
-    direction-blind: a slow region anywhere (either suite level OR any
-    control region) excludes the round, whichever way that region would
-    have pushed the gate ratio. On fresh2 this rule excludes the two
-    MOST-flattering rounds on file (mix-normalized 3.252 and 1.615) along
-    with the three contaminated-control rounds, and keeps the three
-    internally-consistent ones (1.028 / 0.844 / 1.116). The DRAM probe
-    stays recorded in every round as corroborating diagnostics (fresh2:
-    every v3-excluded round also shows a depressed probe reading in its
-    slow region)."""
-    _apply_time_anchor_rule(rounds, headroom=headroom, anchor="median")
-
-
 def _apply_time_rule_v4(rounds: list[dict], headroom: float = 1.3) -> None:
     """Cleanliness rule v4 (registered 2026-08-21, BEFORE any round-5
-    protocol run; ADVICE r4 #1): identical to v3 except the per-region
-    reference is the MIN over CPU-clean rounds, not the median.
+    protocol run; ADVICE r4 #1): set time_clean + final clean on every
+    round. Each region runs IDENTICAL work in every round, so a CPU-quiet
+    region running > ``headroom`` x its reference wall time is stalled by
+    something the CPU gauges cannot see (the §1 neighbor-memory signature).
+    The per-region reference is the MIN over CPU-clean rounds.
 
-    Why: contamination is strictly one-sided slow (each region runs
-    identical work, so the fastest CPU-clean observation IS the quiet-host
-    truth), and a median reference is captured whenever half or more of
-    the CPU-clean rounds are stalled — verified on r4 data: 3 of 4 rounds
-    at ~2x quiet time all classified time_clean at headroom 1.3, because
-    the median sat at the stalled value. A min reference cannot be
-    captured by any number of slow rounds; the cost is a tighter effective
-    headroom when quiet-round variance is high, which the recorded
-    headroom (1.3) covers (observed quiet-round spread on this host is
-    well under 15%). A wall-time region cannot be anomalously FAST — there
-    is no mechanism that makes identical work finish early — so the min is
-    not glitch-sensitive the way a min over gauge readings would be."""
-    _apply_time_anchor_rule(rounds, headroom=headroom, anchor="min")
+    Why the min: contamination is strictly one-sided slow (the fastest
+    CPU-clean observation IS the quiet-host truth), and a median reference
+    (the retired rule v3) is captured whenever half or more of the
+    CPU-clean rounds are stalled — verified on r4 data: 3 of 4 rounds at
+    ~2x quiet time all classified time_clean at headroom 1.3, because the
+    median sat at the stalled value. A min reference cannot be captured by
+    any number of slow rounds; the cost is a tighter effective headroom
+    when quiet-round variance is high, which the recorded headroom (1.3)
+    covers (observed quiet-round spread on this host is well under 15%). A
+    wall-time region cannot be anomalously FAST — there is no mechanism
+    that makes identical work finish early — so the min is not
+    glitch-sensitive the way a min over gauge readings would be.
 
-
-def _apply_time_anchor_rule(rounds: list[dict], headroom: float,
-                            anchor: str) -> None:
+    The anchor pool is CPU-clean rounds only, however few: a CPU-dirty
+    round's regions are contaminated by definition and must never set the
+    reference. With ONE CPU-clean round the reference is that round itself
+    (it passes trivially; the gate needs >= 3 clean rounds regardless).
+    With NONE there is no reference at all: every round records
+    ``time_clean=None`` (not evaluated) and final clean False. A round is
+    time_clean iff EVERY region it carries is within headroom of its
+    reference (regions a round does not carry are skipped); final clean =
+    clean_cpu AND time_clean. The exclusion is direction-blind: a slow
+    control region excludes the round exactly like a slow suite region."""
     ref_rounds = [r for r in rounds if r.get("clean_cpu", False)]
-    if len(ref_rounds) < 2:
-        ref_rounds = rounds
-    anchor_fn = min if anchor == "min" else statistics.median
     ref = {}
     for k in _TIME_KEYS:
         vals = [r[k] for r in ref_rounds if r.get(k, 0.0) > 0.0]
-        ref[k] = anchor_fn(vals) if vals else 0.0
+        ref[k] = min(vals) if vals else 0.0
     for r in rounds:
-        r["time_clean"] = all(
+        r["time_clean"] = (all(
             ref[k] <= 0.0 or r.get(k, 0.0) <= headroom * ref[k]
-            for k in _TIME_KEYS if r.get(k, 0.0) > 0.0)
+            for k in _TIME_KEYS if r.get(k, 0.0) > 0.0) if ref_rounds else None)
         r["clean"] = bool(r.get("clean_cpu", r.get("clean", False))
                           and r["time_clean"])
 
@@ -222,22 +196,19 @@ def main() -> None:
     ap.add_argument("--n-images", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES",
                                                "32000000")))
-    ap.add_argument("--clean-rule", choices=("v2", "v3", "v4"), default="v4",
+    ap.add_argument("--clean-rule", choices=("v2", "v4"), default="v4",
                     help="third cleanliness check: 'v2' = DRAM-probe "
                          "floor (>= --mem-frac x per-region best among "
-                         "CPU-clean rounds), 'v3' (registered 2026-08-20 "
-                         "after fresh2 starved v2 — see SCALING_NOTES_r04 "
+                         "CPU-clean rounds), 'v4' (default; registered "
+                         "2026-08-21 per ADVICE r4, see SCALING_NOTES_r04 "
                          "§11) = region wall time <= --time-headroom x "
-                         "per-region MEDIAN among CPU-clean rounds, 'v4' "
-                         "(default; registered 2026-08-21 per ADVICE r4: "
-                         "the median reference is captured when >=half the "
-                         "CPU-clean rounds are stalled) = same but the "
-                         "reference is the per-region MIN. All flags are "
-                         "recorded per round; only the selected rule binds.")
+                         "per-region MIN among CPU-clean rounds. All flags "
+                         "are recorded per round; only the selected rule "
+                         "binds.")
     ap.add_argument("--time-headroom", type=float, default=1.3,
-                    help="v3/v4: a region running above this multiple of "
-                         "its cross-round CPU-clean reference wall time "
-                         "(v3 median, v4 min) marks the round contaminated")
+                    help="v4: a region running above this multiple of "
+                         "its cross-round CPU-clean minimum wall time "
+                         "marks the round contaminated")
     ap.add_argument("--gate-estimator", choices=("scan", "agg", "mix"),
                     default="mix",
                     help="calibration denominator for the gate figure: "
@@ -267,9 +238,7 @@ def main() -> None:
                     n_clean += bool(rd["clean"])
         _apply_mem_rule(rounds, frac=args.mem_frac,
                         steal_cut=args.steal_cut)
-        if args.clean_rule == "v3":
-            _apply_time_rule(rounds, headroom=args.time_headroom)
-        elif args.clean_rule == "v4":
+        if args.clean_rule == "v4":
             _apply_time_rule_v4(rounds, headroom=args.time_headroom)
         n_clean = sum(bool(r["clean"]) for r in rounds)
         print(f"[run_scaling] resumed {len(rounds)} rounds "
@@ -379,9 +348,7 @@ def main() -> None:
         # reference max (see _apply_mem_rule docstring).
         _apply_mem_rule(rounds, frac=args.mem_frac,
                         steal_cut=args.steal_cut)
-        if args.clean_rule == "v3":
-            _apply_time_rule(rounds, headroom=args.time_headroom)
-        elif args.clean_rule == "v4":
+        if args.clean_rule == "v4":
             _apply_time_rule_v4(rounds, headroom=args.time_headroom)
         rd_now = rounds[-1]
         print(f"[run_scaling] round {i + 1}: {rd_now}", flush=True)
@@ -437,13 +404,12 @@ def main() -> None:
                     f"< {args.steal_cut}% (own-load instrument: host busy "
                     "ticks minus benchmark-tree ticks) AND "
                     + (f"wall time <= {args.time_headroom}x the per-region "
-                       f"{'MIN' if args.clean_rule == 'v4' else 'MEDIAN'} "
-                       f"over CPU-clean rounds (rule {args.clean_rule} — "
+                       f"MIN over CPU-clean rounds (rule {args.clean_rule} — "
                        "identical work per region, so a CPU-quiet region "
                        "running slower is stalled by contention invisible "
                        "to the CPU gauges; the in-region DRAM probe is "
                        "recorded as corroborating diagnostics)"
-                       if args.clean_rule in ("v3", "v4") else
+                       if args.clean_rule == "v4" else
                        f"in-region DRAM bandwidth >= {args.mem_frac}x the "
                        "cross-round best for that region type among "
                        "CPU-clean rounds only — a reading from a round "
@@ -469,12 +435,11 @@ def main() -> None:
                     f"are invalid references"
                     + (f" — RECORDED ONLY under clean-rule "
                        f"{args.clean_rule}, not binding"
-                       if args.clean_rule in ("v3", "v4") else ""),
+                       if args.clean_rule == "v4" else ""),
         "clean_rule": args.clean_rule,
         "time_rule": (f"{args.clean_rule} time-anomaly: every region's "
                       f"wall time <= {args.time_headroom}x the per-region "
-                      f"{'MIN' if args.clean_rule == 'v4' else 'MEDIAN'} "
-                      f"over CPU-clean rounds (identical work per region; "
+                      f"MIN over CPU-clean rounds (identical work per region; "
                       f"a CPU-quiet region running slower than that is "
                       f"stalled by contention no CPU gauge can see — "
                       f"SCALING_NOTES_r04 §11; v4 min-anchor per ADVICE "
@@ -484,12 +449,11 @@ def main() -> None:
                       f"wall-time distribution), not an independent "
                       f"instrument like the two CPU gauges; it "
                       f"discriminates once >=2 CPU-clean reference rounds "
-                      f"exist (v3 needs >=3 — with 2 the median is their "
-                      f"mean and a round ~{2 * args.time_headroom - 1:.2f}x "
-                      f"slower than its pair still passes)"
-                      if args.clean_rule in ("v3", "v4") else None),
+                      f"exist (with one, that round is its own reference; "
+                      f"with none, time_clean is recorded as None)"
+                      if args.clean_rule == "v4" else None),
         "time_headroom": (args.time_headroom
-                          if args.clean_rule in ("v3", "v4") else None),
+                          if args.clean_rule == "v4" else None),
         "rounds": rounds,
         "n_rounds": len(rounds),
         "n_clean_rounds": len(clean),
@@ -571,13 +535,12 @@ def main() -> None:
     rule3_desc = (
         f"region wall-time anomaly (rule {args.clean_rule}): every timed "
         f"region's wall time must be <= {args.time_headroom}x the "
-        f"per-region "
-        f"{'MIN' if args.clean_rule == 'v4' else 'MEDIAN'} over CPU-clean "
+        f"per-region MIN over CPU-clean "
         f"rounds — each region runs identical work every round, so a "
         f"CPU-quiet region running slower than that is stalled by "
         f"contention the CPU gauges cannot see; the concurrent DRAM "
         f"probe's per-region readings are recorded as corroboration."
-        if args.clean_rule in ("v3", "v4") else
+        if args.clean_rule == "v4" else
         f"in-region DRAM bandwidth (a concurrent single-thread "
         f"streaming-read probe, ~30 ms sample every 400 ms, median per "
         f"region, round clean iff every region >= {args.mem_frac}x that "
