@@ -1683,6 +1683,67 @@ def test_pair_join_plans_are_bucket_equi_joins(spark):
         assert _hash_join_keys(plan) == [(keys, keys)], plan
 
 
+def test_bucket_pairs_matches_brute_force(spark):
+    """The shared pair join equals a Python pairing of index rows on the
+    bucket keys: the self-join reports each unordered pair once (id_a <
+    id_b), the join against a second index every ordered cross pair with
+    id_a != id_b, a pair sharing several buckets once, and no keys pairs
+    every row with every other."""
+    from jsonschema_spark.operators import dedup as D
+
+    rows = [(1, 0, 7, "p"), (2, 0, 7, "q"), (3, 0, 8, "r"), (3, 1, 5, "r"),
+            (4, 1, 5, "s"), (4, 0, 7, "s"), (1, 1, 5, "p"), (5, 2, 9, "t")]
+    other_rows = [(6, 0, 8, "u"), (2, 1, 5, "q"), (7, 2, 3, "v")]
+    schema = "id long, band int, bucket long, tag string"
+    idx = spark.createDataFrame(rows, schema)
+    other = spark.createDataFrame(other_rows, schema)
+
+    def brute(a_rows, b_rows, keys, ordered):
+        return {(a[0], b[0], a[3], b[3]) for a in a_rows for b in b_rows
+                if all(a[k] == b[k] for k in keys)
+                and (a[0] != b[0] if ordered else a[0] < b[0])}
+
+    def got(df):
+        out = df.collect()
+        assert len(out) == len({tuple(r) for r in out})  # distinct
+        return {(r.id_a, r.id_b, r.tag_a, r.tag_b) for r in out}
+
+    keys = ("band", "bucket")
+    self_pairs = got(D._bucket_pairs(idx, None, keys, ("tag",)))
+    assert self_pairs == brute(rows, rows, (1, 2), ordered=False)
+    assert (1, 4, "p", "s") in self_pairs     # shares two buckets, once
+    cross = got(D._bucket_pairs(idx, other, keys, ("tag",)))
+    assert cross == brute(rows, other_rows, (1, 2), ordered=True)
+    assert {(a, b) for a, b, _, _ in cross} == {(3, 6), (1, 2), (3, 2), (4, 2)}
+    everyone = got(D._bucket_pairs(idx, None, (), ("tag",)))
+    assert everyone == brute(rows, rows, (), ordered=False)
+    assert len(everyone) == 10                # C(5, 2) distinct ids
+
+
+def test_dedup_exact_documents_matches_twin_on_planted_copies(spark, sf_small):
+    """The driver's exact-dedup query and its DuckDB twin both see the
+    planted copies (doc_id < 20 re-keyed to doc_id + 100000), so the gate
+    compares a non-empty row set instead of agreeing on nothing."""
+    import sys
+
+    import duckdb
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if root not in sys.path:
+        sys.path.insert(0, root)
+    import __spark_entry__ as E
+
+    got = {tuple(r) for r in E.q_dedup_exact_documents(spark, sf_small).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
+                f"'{sf_small}/documents.parquet')")
+    want = {tuple(r) for r in con.execute(E.SQL_DEDUP_EXACT_DOCUMENTS).fetchall()}
+    assert got == want
+    planted = {r for r in got if r[3] >= 100000}
+    assert len(planted) >= 1
+    assert all(r[3] - 100000 < 20 and r[1] >= 2 for r in planted)
+
+
 def test_minhash_incremental_matches_full_corpus(spark):
     """Completeness invariant of the incremental path: (batch vs stored
     corpus index) ∪ (within-batch) == the full-corpus candidate set
