@@ -177,16 +177,15 @@ def minhash_signatures(
 
 def _bucket_pairs(
     index: DataFrame,
-    other: DataFrame | None = None,
-    keys: tuple[str, ...] = (),
+    other: DataFrame | None,
+    keys: tuple[str, ...],
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Distinct (id_a, id_b, <c>_a, <c>_b for c in carry) pairs of index
     rows equal on every bucket key. Without ``other``: a self-join of
     ``index`` with id_a < id_b (each unordered pair once). With ``other``:
     ``index`` rows (a side) against ``other`` rows (b side), id_a != id_b.
-    A pair sharing several buckets is reported once; with no keys every
-    row shares the one bucket (the brute-force product)."""
+    A pair sharing several buckets is reported once."""
     a = index.alias("a")
     b = (index if other is None else other).alias("b")
     cond = F.col("a.id") < F.col("b.id") if other is None else F.col("a.id") != F.col("b.id")
@@ -260,8 +259,8 @@ def minhash_lsh_candidates(
     variants)."""
     sig = minhash_signatures(df, num_hashes, id_col, text_col, n,
                              max_shingle_freq, prehash_fn, mix_fn)
-    return _bucket_pairs(minhash_band_buckets(sig, num_hashes, bands),
-                         keys=("band", "bucket"))
+    return _bucket_pairs(minhash_band_buckets(sig, num_hashes, bands), None,
+                         ("band", "bucket"))
 
 
 def minhash_incremental_candidates(
@@ -415,8 +414,8 @@ def hamming_near_duplicates(
     shares ≥1 exact block (pigeonhole, EXHAUSTIVE — equals brute force) —
     so candidates come from equi-joins on block values, never a cross join.
     Returns (id_a, id_b, hamming)."""
-    pairs = _bucket_pairs(hamming_block_index(sig, max_hamming, sig_col),
-                          keys=("blk", "key"), carry=("simhash",))
+    pairs = _bucket_pairs(hamming_block_index(sig, max_hamming, sig_col), None,
+                          ("blk", "key"), ("simhash",))
     return _within_hamming(pairs, max_hamming).select("id_a", "id_b", "hamming")
 
 
@@ -453,15 +452,6 @@ def simhash_near_duplicates(
     return hamming_near_duplicates(sig, max_hamming, "simhash")
 
 
-def _embedding_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, v: array<double>, nrm) — each vector with its L2 norm."""
-    from .similarity import _norm
-
-    return df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
-
-
 def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
     """Exact cosine verify of candidates carrying (v, nrm): the threshold
     applies to the RAW cosine and ``cos`` is rounded to 6 places only in
@@ -491,11 +481,13 @@ def embedding_bucket_index(
     so batches indexed later land in the SAME buckets). The vector and its
     norm ride along because the verify stage needs them; at north scale the
     index is bucketed storage on (tbl, bkt)."""
-    from .similarity import _hyperplanes, lsh_buckets_all, resolve_dim
+    from .similarity import _norm, _hyperplanes, lsh_buckets_all, resolve_dim
 
     dim = resolve_dim(df, vec_col, dim)
     all_planes = [_hyperplanes(dim, planes, seed + t) for t in range(tables)]
-    return _embedding_rows(df, id_col, vec_col).select(
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    ).withColumn("nrm", _norm(F.col("v"))).select(
         "id", "v", "nrm", F.explode(lsh_buckets_all("v", all_planes)).alias("e")
     ).select("id", "v", "nrm", "e.tbl", "e.bkt")
 
@@ -505,7 +497,6 @@ def embedding_near_duplicates(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "lsh",
     planes: int = 8,
     tables: int = 6,
     dim: int | None = None,
@@ -513,10 +504,10 @@ def embedding_near_duplicates(
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id_a, id_b, cos).
 
-    ``method="lsh"`` (the wired default — the scale path): candidates come
-    from an equi-join on random-hyperplane LSH buckets across ``tables``
-    hash tables, then exact cosine verifies each candidate. Linear shuffle
-    in corpus size — no all-pairs product ever forms. Recall < 1 by design:
+    Candidates come from an equi-join on random-hyperplane LSH buckets
+    across ``tables`` hash tables, then exact cosine verifies each
+    candidate. Linear shuffle in corpus size — no all-pairs product ever
+    forms. Recall < 1 by design:
     a pair at angle θ collides in one table with prob (1-θ/π)^planes, so the
     miss probability is (1-(1-θ/π)^planes)^tables — at the default
     (planes=8, tables=6) that is ≈3.6% for a pair at exactly cos 0.95
@@ -528,16 +519,10 @@ def embedding_near_duplicates(
     dim would NULL every dot product and silently collapse all vectors
     into one bucket — an O(n²) cross join). Pass it explicitly to skip the
     one-row lookup; a passed value is still validated against the data.
-
-    ``method="exact"``: the brute-force O(n²) theta-join — correctness
-    oracle for tests and small inputs ONLY (10^9 vectors → 10^18 pairs).
     """
-    if method == "exact":
-        pairs = _bucket_pairs(_embedding_rows(df, id_col, vec_col), carry=("v", "nrm"))
-    else:
-        pairs = _bucket_pairs(
-            embedding_bucket_index(df, planes, tables, dim, seed, id_col, vec_col),
-            keys=("tbl", "bkt"), carry=("v", "nrm"))
+    pairs = _bucket_pairs(
+        embedding_bucket_index(df, planes, tables, dim, seed, id_col, vec_col), None,
+        ("tbl", "bkt"), ("v", "nrm"))
     return _cosine_at_least(pairs, threshold).select("id_a", "id_b", "cos")
 
 

@@ -156,22 +156,6 @@ def test_time_rule_exclusion_is_direction_blind():
     assert not rounds[2]["time_clean"] and not rounds[2]["clean"]
 
 
-def test_time_rule_cpu_dirty_rounds_do_not_set_reference():
-    # A CPU-contaminated round's regions must not set the reference: the
-    # fast dirty round (60s) in the pool would cap every region at 78s and
-    # declassify both quiet rounds. Against the CPU-clean minimum (84) the
-    # quiet rounds pass and the 120s round is correctly flagged.
-    rounds = [_tround(1, True, 84.0, 44.0),
-              _tround(2, True, 86.0, 45.0),
-              _tround(3, False, 60.0, 30.0),
-              _tround(4, False, 170.0, 80.0),
-              _tround(5, True, 120.0, 44.0)]
-    _apply_time_rule_v4(rounds, headroom=1.3)
-    assert rounds[0]["clean"] and rounds[1]["clean"]
-    assert not rounds[2]["clean"] and not rounds[3]["clean"]
-    assert not rounds[4]["time_clean"] and not rounds[4]["clean"]
-
-
 def test_time_rule_skips_regions_a_round_does_not_carry():
     # Legacy rounds predate the agg/mix control regions; a missing or
     # zero region must be skipped, not treated as infinitely fast/slow.
@@ -232,10 +216,16 @@ def test_time_rule_v4_quiet_variance_within_headroom_stays_clean():
 
 
 def test_time_rule_v4_cpu_dirty_rounds_do_not_set_reference():
-    # A CPU-dirty FAST round must not tighten the reference for clean
-    # rounds (same guard as v3: the anchor pool is CPU-clean rounds only).
-    rounds = [_tround(1, False, 60.0, 30.0),  # dirty, anomalously fast? no:
-              _tround(2, True, 84.0, 44.0),   # clean rounds set the anchor
-              _tround(3, True, 100.0, 52.0)]
+    # A CPU-dirty round's regions must not set the reference: the fast
+    # dirty round (60s) in the pool would cap every region at 78s and
+    # declassify the quiet rounds. Against the CPU-clean minimum (84) the
+    # quiet rounds pass and the 120s round is correctly flagged.
+    rounds = [_tround(1, False, 60.0, 30.0),
+              _tround(2, True, 84.0, 44.0),
+              _tround(3, True, 100.0, 52.0),
+              _tround(4, False, 170.0, 80.0),
+              _tround(5, True, 120.0, 44.0)]
     _apply_time_rule_v4(rounds, headroom=1.3)
-    assert rounds[1]["time_clean"] and rounds[2]["time_clean"]
+    assert rounds[1]["clean"] and rounds[2]["clean"]
+    assert not rounds[0]["clean"] and not rounds[3]["clean"]
+    assert not rounds[4]["time_clean"] and not rounds[4]["clean"]
