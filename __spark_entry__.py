@@ -1471,15 +1471,17 @@ def q_suggest_documents(spark: SparkSession, sf: str) -> DataFrame:
     sorted enum candidates for low-cardinality columns. One fused hash
     aggregation; enum sets collected only under an approx-distinct guard.
 
-    The enum list is serialized to a comma-joined string for the gate (the
-    driver canonicalizer sorts columns with pandas and cannot hash Python
-    lists); the array itself is already deterministically sorted, so the
-    join is lossless for comparison purposes."""
+    The enum list is serialized to one string for the oracle gate (its
+    canonicalizer sorts columns with pandas and cannot hash Python lists);
+    the array itself is already deterministically sorted. The separator is
+    U+0001, not a comma: ["a,b"] and ["a", "b"] joined with "," are the
+    same string, so a value containing a comma would collide. The join is
+    lossless for any value that does not itself contain U+0001."""
     from jsonschema_spark.suggest import profile_columns
 
     return profile_columns(
         _t(spark, sf, "documents"), ["doc_id", "lang", "source", "n_chars"]
-    ).withColumn("enum_vals", F.array_join("enum_vals", ","))
+    ).withColumn("enum_vals", F.array_join("enum_vals", "\u0001"))
 
 
 def _fmt_case_sql(col: str) -> str:
@@ -1518,7 +1520,7 @@ SELECT 'lang', 'string', n.n_rows,
        (SELECT max(length(lang)) FROM documents),
        (SELECT count(DISTINCT lang) FROM documents),
        CASE WHEN (SELECT count(DISTINCT lang) FROM documents) <= 16
-            THEN (SELECT array_to_string(list_sort(list(DISTINCT lang)), ',')
+            THEN (SELECT array_to_string(list_sort(list(DISTINCT lang)), chr(1))
                   FROM documents WHERE lang IS NOT NULL)
             END,
        {_fmt_case_sql('lang')}
@@ -1532,7 +1534,7 @@ SELECT 'source', 'string', n.n_rows,
        (SELECT max(length(source)) FROM documents),
        (SELECT count(DISTINCT source) FROM documents),
        CASE WHEN (SELECT count(DISTINCT source) FROM documents) <= 16
-            THEN (SELECT array_to_string(list_sort(list(DISTINCT source)), ',')
+            THEN (SELECT array_to_string(list_sort(list(DISTINCT source)), chr(1))
                   FROM documents WHERE source IS NOT NULL)
             END,
        {_fmt_case_sql('source')}

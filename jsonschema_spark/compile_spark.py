@@ -762,15 +762,37 @@ def spec_struct_type(node: SpecNode) -> T.DataType:
     return T.StringType()
 
 
-def compile_json_column(spec: Spec, json_col: str) -> tuple[CompiledTableSpec, T.DataType]:
-    """Compile a spec against a JSON-STRING column: the payload is parsed
-    once with ``from_json`` into the spec-derived struct, then every keyword
-    runs as a normal codegen predicate on the parsed struct — dynamic-schema
-    validation without any per-row Python."""
-    dt = spec_struct_type(spec.root)
-    doc = F.from_json(F.col(json_col), dt)
-    checks = compile_node(spec.root, doc, "", json_col, dt)
-    return CompiledTableSpec(checks=checks, columns=[json_col], spec=spec), dt
+def compile_json_node(
+    node: SpecNode, raw: Column, path: str, column: str
+) -> list[CheckExpr]:
+    """Compile ``node`` against a JSON-STRING column ``raw``: the payload is
+    parsed once with ``from_json`` into the node-derived type and every
+    keyword runs as a codegen predicate on the parsed value (SURVEY B25/B44).
+
+    One ``type`` check at ``path`` fails on malformed JSON and, when the
+    node's type is exactly ``["object"]``, on a parseable non-object (unions
+    stay permissive). Only object payloads are parsed: PERMISSIVE from_json
+    turns anything else into a null-fielded struct, which would fabricate
+    ``required`` violations, so every other payload reaches the keyword
+    checks as NULL, which ``compile_node`` forgives (draft-4: object keywords
+    apply only to objects)."""
+    dt = spec_struct_type(node)
+    parsed = F.try_parse_json(raw).isNotNull()
+    # a parseable value is an object iff its first non-whitespace char is
+    # '{'; JSON whitespace is space/tab/CR/LF (ltrim strips spaces only)
+    is_object = raw.rlike(r"^[ \t\r\n]*\{")
+    ok = parsed & is_object if list(node.type or ()) == ["object"] else parsed
+    doc = F.when(parsed & is_object, F.from_json(raw, dt))
+    return [CheckExpr("type", path, column, raw.isNull() | ok, raw),
+            *compile_node(node, doc, path, column, dt)]
+
+
+def compile_json_column(spec: Spec, json_col: str) -> CompiledTableSpec:
+    """Compile a whole spec against one JSON-STRING column, rooted at ``""``
+    — dynamic-schema validation without any per-row Python."""
+    return CompiledTableSpec(
+        checks=compile_json_node(spec.root, F.col(json_col), "", json_col),
+        columns=[json_col], spec=spec)
 
 
 def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
@@ -800,24 +822,11 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
             continue
         used.add(name)
         if sub.meta.get("x-json"):
-            # engine extension: the column is a JSON-STRING payload — parse
-            # once with from_json into the subschema-derived struct/map and
-            # run every keyword on the parsed value (same machinery as
-            # compile_json_column, scoped to one column of a wider table).
-            # Unparseable payloads surface as a root 'type' violation.
+            # engine extension: the column is a JSON-STRING payload, compiled
+            # by the same compile_json_node as validate_json_rows
             if not isinstance(fields[name], T.StringType):
                 raise CompileError(f"x-json column {name!r} must be a string column")
-            jdt = spec_struct_type(sub)
-            doc = F.from_json(F.col(name), jdt)
-            ok = F.try_parse_json(F.col(name)).isNotNull()
-            if sub.type is not None and "object" in sub.type:
-                # mirror validate_json_rows: a parseable non-object payload
-                # (scalar/array JSON) violates type:object rather than
-                # silently passing as an all-null struct
-                ok = ok & F.col(name).rlike(r"^[ \t\r\n]*\{")
-            checks.append(CheckExpr("type", f"/{name}", name,
-                                    F.col(name).isNull() | ok, F.col(name)))
-            checks.extend(compile_node(sub, doc, f"/{name}", name, jdt))
+            checks.extend(compile_json_node(sub, F.col(name), f"/{name}", name))
             continue
         checks.extend(compile_node(sub, F.col(name), f"/{name}", name, fields[name]))
         if sub.d3_required:

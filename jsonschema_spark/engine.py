@@ -11,6 +11,13 @@ Compiles a JSONSchema-style spec and runs the validation passes:
 P1–P4 and P6 consume ONE fused scan of the fact table (SURVEY §4 pass fusion);
 P5 is the only pass that reads the binary column, on its own sampled scan.
 
+Row validation without the table passes: ``validate_rows`` (batch or
+streaming; ``streaming.validate_stream`` is this function) and
+``validate_json_rows`` (a JSON-string payload column, compiled by the same
+``compile_spark.compile_json_node`` as an ``x-json`` table column). They
+and P1 turn the compiled violations array into rows through one explode,
+``passes.stats.explode_violations``.
+
 Violation streams are unioned into one schema (B23); verdicts are assembled
 per (partition, check) (B18). Nothing here collects fact-scale data to the
 driver — violations/verdicts are returned as DataFrames for the caller to
@@ -26,7 +33,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .compile_spark import CompiledTableSpec, compile_table
+from .compile_spark import CompiledTableSpec, compile_json_column, compile_table
 from .spec import Spec, parse
 from .passes import stats as P1
 from .passes import uniqueness as P2
@@ -106,66 +113,29 @@ def validate_rows(
 ) -> DataFrame:
     """Generic row-level validation: compile the spec against ``df``'s schema
     and return violation rows keyed by ``keys`` — (keys..., keyword, path,
-    value). One projection + explode; no per-row Python (B5/B6)."""
+    value). One projection + explode; no per-row Python (B5/B6). Stateless,
+    so it runs unchanged on a streaming DataFrame (``streaming
+    .validate_stream`` is this function, B26)."""
     if not isinstance(spec, Spec):
         spec = parse(spec)
     compiled = compile_table(spec, df.schema)
-    narrow = df.select(*keys, compiled.violations_array().alias("viols"))
-    return (
-        narrow.where(F.size("viols") > 0)
-        .select(*keys, F.explode("viols").alias("v"))
-        .select(*keys, "v.keyword", "v.path", "v.value")
-    )
+    return P1.explode_violations(df, keys, compiled.violations_array())
 
 
 def validate_json_rows(
     df: DataFrame, json_col: str, spec: dict[str, Any] | Spec, keys: list[str]
 ) -> DataFrame:
     """Row-level validation of a JSON-STRING payload column (e.g. an
-    ``events.props`` blob): the spec's shape derives a struct schema, the
-    payload is parsed once via ``from_json``, and all keyword checks run as
-    codegen predicates on the parsed struct (SURVEY.md B25/A15). Unparseable
-    JSON surfaces as a ``type`` violation at the root path."""
-    from .compile_spark import compile_json_column
-
+    ``events.props`` blob) with ``compile_json_node`` — the compiler an
+    ``x-json`` table column uses: the payload is parsed once via
+    ``from_json`` and every keyword runs as a codegen predicate on the
+    parsed struct (SURVEY.md B25/A15). Malformed JSON, and a non-object
+    payload under a ``type: object`` root, surface as a ``type`` violation
+    at the root path."""
     if not isinstance(spec, Spec):
         spec = parse(spec)
-    compiled, dt = compile_json_column(spec, json_col)
-    # PERMISSIVE from_json returns a null-fielded struct (not NULL) for
-    # malformed input — detect corruption with try_parse_json instead
-    malformed = (
-        F.col(json_col).isNotNull()
-        & F.try_parse_json(F.col(json_col)).isNull()
-    )
-    # Draft-4: object keywords (required/properties/...) apply only to
-    # objects. A valid non-object payload ('42', '"x"', '[1]') parses to a
-    # null-fielded struct, which would fabricate required violations — skip
-    # the compiled checks for it, emitting a type violation only when the
-    # spec itself demands an object. (A parsed payload is an object iff its
-    # first non-whitespace char is '{'. JSON whitespace is the four-char
-    # class space/tab/CR/LF — ltrim strips spaces only, which misclassified
-    # '\n{...}' payloads as non-objects.)
-    is_object = F.col(json_col).rlike(r"^[ \t\r\n]*\{")
-    empty = F.array().cast("array<struct<keyword:string,path:string,value:string>>")
-    root_type = list(spec.root.type or [])
-    non_object_arr = (
-        F.array(F.struct(F.lit("type").alias("keyword"), F.lit("").alias("path"),
-                         F.col(json_col).alias("value")))
-        if root_type == ["object"] else empty  # unions stay permissive
-    )
-    type_viol = F.array(F.struct(F.lit("type").alias("keyword"), F.lit("").alias("path"),
-                                 F.col(json_col).alias("value")))
-    arr = (
-        F.when(malformed, type_viol)
-        .when(F.col(json_col).isNotNull() & ~is_object, non_object_arr)
-        .otherwise(compiled.violations_array())
-    )
-    narrow = df.select(*keys, arr.alias("viols"))
-    return (
-        narrow.where(F.size("viols") > 0)
-        .select(*keys, F.explode("viols").alias("v"))
-        .select(*keys, "v.keyword", "v.path", "v.value")
-    )
+    compiled = compile_json_column(spec, json_col)
+    return P1.explode_violations(df, keys, compiled.violations_array())
 
 
 def rollup_verdicts(verdicts: DataFrame) -> DataFrame:
@@ -363,13 +333,10 @@ def validate_table(
     verdict_streams: list[DataFrame] = []
 
     # P1 — row predicates (the array precomputed by the fused projection)
-    viol1 = _persist(
-        base.where(F.size("__viols") > 0)
-        .select(F.col(part_col).alias("part_id"),
-                F.col(key_col).cast("string").alias("row_key"),
-                F.explode("__viols").alias("v"))
-        .select("part_id", "row_key", "v.keyword", "v.path", "v.value")
-    )
+    viol1 = _persist(P1.explode_violations(
+        base, [F.col(part_col).alias("part_id"),
+               F.col(key_col).cast("string").alias("row_key")],
+        F.col("__viols")))
     checks1 = [(cid, *cid.split("@", 1)) for cid in compiled.check_ids()]
     verdict_streams.append(
         P1.verdicts_from_violations(viol1, all_parts, checks1)
@@ -563,38 +530,29 @@ def validate_table(
             "distinct", F.concat(F.lit("distinct@/"), "column"))
         verdict_streams.append(dv.withColumn("pass_id", F.lit("distinct")))
 
-    # null-rate bounds: per-partition AND table-wide, both straight off the
+    # null-rate bounds: per-partition AND table-wide verdicts in ONE
+    # aggregation (grouping sets, as in rollup_verdicts) straight off the
     # stats rows (no extra scan); n_violations carries the null count
     if nrchecks:
         nr_df = spark.createDataFrame(
             [(n["column"], float(n["max_rate"])) for n in nrchecks],
             "column string, max_rate double")
-        per_part = (
+        nr = (
             stats_df.select("part_id", "column", "n_rows", "n_nulls")
             .join(nr_df, "column")
-            .withColumn("passed",
-                        F.col("n_nulls") / F.greatest(F.col("n_rows"), F.lit(1))
-                        <= F.col("max_rate"))
-        )
-        table_wide = (
-            stats_df.select("column", "n_rows", "n_nulls")
-            .join(nr_df, "column")
-            .groupBy("column", "max_rate")
+            .groupingSets([["part_id", "column", "max_rate"], ["column", "max_rate"]],
+                          "part_id", "column", "max_rate")
             .agg(F.sum("n_rows").alias("n_rows"), F.sum("n_nulls").alias("n_nulls"))
-            .withColumn("passed",
-                        F.col("n_nulls") / F.greatest(F.col("n_rows"), F.lit(1))
-                        <= F.col("max_rate"))
-            .withColumn("part_id", F.lit(None).cast("int"))
         )
-        for frame in (per_part, table_wide):
-            verdict_streams.append(frame.select(
-                F.col("part_id").cast("int").alias("part_id"),
-                F.concat(F.lit("null-rate@/"), "column").alias("check_id"),
-                F.lit("null-rate").alias("keyword"),
-                F.concat(F.lit("/"), "column").alias("path"),
-                "passed",
-                F.col("n_nulls").cast("long").alias("n_violations"),
-            ).withColumn("pass_id", F.lit("null_rate")))
+        verdict_streams.append(nr.select(
+            F.col("part_id").cast("int").alias("part_id"),
+            F.concat(F.lit("null-rate@/"), "column").alias("check_id"),
+            F.lit("null-rate").alias("keyword"),
+            F.concat(F.lit("/"), "column").alias("path"),
+            (F.col("n_nulls") / F.greatest(F.col("n_rows"), F.lit(1))
+             <= F.col("max_rate")).alias("passed"),
+            F.col("n_nulls").cast("long").alias("n_violations"),
+        ).withColumn("pass_id", F.lit("null_rate")))
 
     violations = streams[0]
     for s in streams[1:]:

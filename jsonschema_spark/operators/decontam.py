@@ -8,9 +8,8 @@ shingle set is SMALL by nature — eval sets are thousands of documents — so
 it is broadcast and the corpus shingle stream is never shuffled: one
 broadcast inner join on the scan output plus one hash aggregation keyed by
 corpus doc (map-side combine applies; keys are per-document, no hot key).
-If a caller's "benchmark" is actually huge, pass ``broadcast_benchmark=
-False`` and AQE picks the join strategy (same no-forced-broadcast rule as
-the uniqueness pass).
+The broadcast is unconditional: a "benchmark" too large to broadcast is
+not an eval set.
 """
 
 from __future__ import annotations
@@ -29,7 +28,6 @@ def contamination_hits(
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str | None = None,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per contaminated corpus doc: (id_col, n_contaminated_grams) — the
     number of DISTINCT word n-grams the doc shares with ANY benchmark doc
@@ -37,13 +35,11 @@ def contamination_hits(
     overlap). Docs with fewer than ``min_overlap`` shared grams are clean
     and never leave the aggregation."""
     c_sh = shingles(corpus, id_col, text_col, n)
-    b_sh = (
+    b_sh = F.broadcast(
         shingles(benchmark, id_col, bench_text_col or text_col, n)
         .select("shingle")
         .distinct()
     )
-    if broadcast_benchmark:
-        b_sh = F.broadcast(b_sh)
     return (
         c_sh.join(b_sh, "shingle")
         .groupBy("id")
@@ -61,14 +57,12 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str | None = None,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """The clean corpus: drop every doc ``contamination_hits`` flags.
     left_anti against the flagged-id set; no forced broadcast — the flagged
     set's size depends on how dirty the corpus is, so AQE picks the join
     strategy (the same rule as the uniqueness pass's dup-set join)."""
     hits = contamination_hits(
-        corpus, benchmark, n, min_overlap, id_col, text_col,
-        bench_text_col, broadcast_benchmark,
+        corpus, benchmark, n, min_overlap, id_col, text_col, bench_text_col
     ).select(id_col)
     return corpus.join(hits, id_col, "left_anti")

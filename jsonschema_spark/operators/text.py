@@ -375,7 +375,7 @@ def chunk_documents(
 # the cumulative-coverage window runs over exactly k rows (bounded, single
 # partition of k — documented, not a scale risk for the k<=10^5 a
 # vocabulary report uses). `oov_stats` joins the token aggregate against
-# the vocabulary — broadcast by default (vocabularies are ~10^4-10^6 rows).
+# the vocabulary, which is broadcast (vocabularies are ~10^4-10^6 rows).
 # ---------------------------------------------------------------------------
 
 
@@ -440,19 +440,14 @@ def oov_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     vocab_col: str = "token",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Out-of-vocabulary mass vs a given vocabulary table: one row
     (n_tokens, n_types, n_oov_tokens, n_oov_types, oov_token_frac,
     oov_type_frac). Token mass weighs by occurrences; type counts weigh
     each distinct token once. The join runs on the (small) per-type
-    aggregate, not the raw token stream; ``broadcast_vocab=False`` is the
-    escape hatch for a vocabulary too large to broadcast (shuffle-hash on
-    the token key).
+    aggregate, not the raw token stream, and the vocabulary is broadcast.
     """
-    v = vocab.select(F.col(vocab_col).alias("token")).distinct()
-    if broadcast_vocab:
-        v = F.broadcast(v)
+    v = F.broadcast(vocab.select(F.col(vocab_col).alias("token")).distinct())
     counts = (
         _corpus_tokens(df, text_col, id_col)
         .groupBy("token").agg(F.count(F.lit(1)).alias("n_occ"))

@@ -28,6 +28,22 @@ from ..compile_spark import CompiledTableSpec
 VIOLATION_COLS = ["part_id", "row_key", "keyword", "path", "value"]
 
 
+def explode_violations(
+    df: DataFrame, keys: list[str | Column], viols: Column
+) -> DataFrame:
+    """One row per violation: project ``keys`` (names or Columns) and the
+    ``viols`` array, drop rows whose array is empty before the explode, and
+    return (keys..., keyword, path, value). Every E2 row entry point — batch,
+    streaming, JSON payloads and the fused P1 — goes through here."""
+    narrow = df.select(*keys, viols.alias("viols"))
+    names = narrow.columns[:-1]
+    return (
+        narrow.where(F.size("viols") > 0)
+        .select(*names, F.explode("viols").alias("v"))
+        .select(*names, "v.keyword", "v.path", "v.value")
+    )
+
+
 def row_violations(
     df: DataFrame,
     compiled: CompiledTableSpec,
@@ -37,17 +53,10 @@ def row_violations(
 ) -> DataFrame:
     """Row-level violations: one narrow projection → explode → (optional)
     top-k per (partition, keyword). Returns VIOLATION_COLS schema."""
-    narrow = df.select(
-        F.col(part_col).alias("part_id"),
-        F.col(key_col).cast("string").alias("row_key"),
-        compiled.violations_array().alias("viols"),
-    )
-    # Cheap pre-filter: rows with no violations never reach the explode.
-    v = (
-        narrow.where(F.size("viols") > 0)
-        .select("part_id", "row_key", F.explode("viols").alias("v"))
-        .select("part_id", "row_key", "v.keyword", "v.path", "v.value")
-    )
+    v = explode_violations(
+        df, [F.col(part_col).alias("part_id"),
+             F.col(key_col).cast("string").alias("row_key")],
+        compiled.violations_array())
     if top_k is not None:
         v = bound_top_k(v, top_k)
     return v

@@ -1,7 +1,7 @@
+from ..engine import validate_rows as validate_stream
 from .validate import (
     drift_state_stream,
     incremental_dedup_stream,
-    validate_stream,
     windowed_stats_stream,
 )
 

@@ -1,42 +1,21 @@
 """B26 — Structured-Streaming variants of the validation passes.
 
 The batch contract (SURVEY.md §2 B26) is the north rule; these wrappers add
-the incremental path for continuously-arriving data: the SAME compiled
-predicates run on a streaming DataFrame (violations stream), windowed
-column-stats aggregate with a watermark for late data, and a custom
-stateful drift tracker accumulates per-group histograms across micro-batches
-via ``applyInPandasWithState``.
+the stateful parts of the incremental path for continuously-arriving data:
+windowed column-stats aggregate with a watermark for late data, a custom
+stateful drift tracker that accumulates per-group histograms across
+micro-batches via ``applyInPandasWithState``, and continuous-ingestion
+dedup against a persisted LSH index.
 
-Everything here reuses the batch compiler — streaming and batch semantics
-agree by construction.
+Row validation needs no streaming variant: it is stateless, so the
+package's ``validate_stream`` is ``engine.validate_rows`` itself —
+streaming and batch row semantics agree because they are one function.
 """
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..compile_spark import compile_table
-from ..spec import Spec, parse
-
-
-def validate_stream(
-    stream_df: DataFrame, spec: dict[str, Any] | Spec, keys: list[str]
-) -> DataFrame:
-    """Streaming row validation: identical projection+explode as the batch
-    ``validate_rows`` (stateless → no watermark needed). Returns a streaming
-    DataFrame of (keys..., keyword, path, value) to hand to writeStream."""
-    if not isinstance(spec, Spec):
-        spec = parse(spec)
-    compiled = compile_table(spec, stream_df.schema)
-    narrow = stream_df.select(*keys, compiled.violations_array().alias("viols"))
-    return (
-        narrow.where(F.size("viols") > 0)
-        .select(*keys, F.explode("viols").alias("v"))
-        .select(*keys, "v.keyword", "v.path", "v.value")
-    )
 
 
 def windowed_stats_stream(

@@ -64,6 +64,54 @@ def test_validate_json_rows_agrees_with_local(spark):
         assert (len(validate_local(doc, JSON_SPEC)) > 0) == (i in bad), (i, payload)
 
 
+def test_x_json_payload_column_in_table_spec(spark):
+    """Engine extension x-json: a table-spec property marked x-json is a
+    JSON-STRING column compiled by the same compile_json_node as
+    validate_json_rows — parsed once with from_json, every keyword runs on
+    the parsed value, scoped to one column of a wider table. Malformed,
+    array and scalar payloads give one type row and no required row, for a
+    map-parsed and a struct-parsed subschema alike."""
+    from jsonschema_spark.engine import validate_rows
+    from jsonschema_spark.compile_spark import compile_table, CompileError
+    from jsonschema_spark import spec as specmod
+
+    rows = [(1, 5, '{"x_a": 1}'), (2, 5, '{"x_a": 1, "rogue": 2}'),
+            (3, 5, "not json"), (4, 5, "[1, 2]"), (5, 5, None), (6, 5, "42"),
+            (7, 5, '{"rogue": 2}')]
+    df = spark.createDataFrame(rows, "id int, w int, props string")
+    bad_payloads = [(3, "type", "/props"), (4, "type", "/props"),
+                    (6, "type", "/props")]
+    cases = [
+        # patternProperties only: parsed as a map, so unevaluatedProperties
+        # sees every key
+        ({"type": "object", "patternProperties": {"^x_": {}},
+          "unevaluatedProperties": False, "required": ["x_a"]},
+         [(2, "unevaluatedProperties", "/props"), *bad_payloads,
+          (7, "required", "/props/x_a"), (7, "unevaluatedProperties", "/props")]),
+        # named properties: parsed as a struct, which PERMISSIVE from_json
+        # fills with nulls for a non-object payload
+        ({"type": "object", "properties": {"x_a": {"type": "integer"}},
+          "required": ["x_a"]},
+         [*bad_payloads, (7, "required", "/props/x_a")]),
+    ]
+    for sub, want in cases:
+        spec = {"properties": {"w": {"minimum": 0},
+                               "props": {"x-json": True, **sub}}}
+        got = sorted((r["id"], r["keyword"], r["path"])
+                     for r in validate_rows(df, spec, keys=["id"]).collect())
+        assert got == want
+        # the same subschema over the bare payload column: the same rows,
+        # with paths rooted at "" instead of "/props"
+        whole = sorted((r["id"], r["keyword"], "/props" + r["path"])
+                       for r in validate_json_rows(df, "props", sub, ["id"]).collect())
+        assert whole == got
+
+    # x-json on a non-string column fails fast at compile time
+    with pytest.raises(CompileError, match="x-json"):
+        compile_table(specmod.parse(
+            {"properties": {"w": {"x-json": True, "type": "object"}}}), df.schema)
+
+
 def test_rollup_verdicts(spark):
     rows = [
         (0, "minimum@/w", "minimum", "/w", True, 0),

@@ -1512,33 +1512,6 @@ def test_unevaluated_properties_root_static_check(spark):
         compile_table(specmod.parse(bad), schema)
 
 
-def test_x_json_payload_column_in_table_spec(spark):
-    """Engine extension x-json: a table-spec property marked x-json is a
-    JSON-STRING column — parsed once with from_json, every keyword runs on
-    the parsed value (one codegen projection, same as validate_json_rows but
-    scoped to one column of a wider table)."""
-    from jsonschema_spark.engine import validate_rows
-    from jsonschema_spark.compile_spark import compile_table, CompileError
-    from jsonschema_spark import spec as specmod
-
-    rows = [(1, 5, '{"x_a": 1}'), (2, 5, '{"x_a": 1, "rogue": 2}'),
-            (3, 5, "not json"), (4, 5, "[1, 2]"), (5, 5, None)]
-    df = spark.createDataFrame(rows, "id int, w int, props string")
-    spec = {"properties": {
-        "w": {"minimum": 0},
-        "props": {"x-json": True, "type": "object",
-                  "patternProperties": {"^x_": {}},
-                  "unevaluatedProperties": False}}}
-    got = sorted((r["id"], r["keyword"])
-                 for r in validate_rows(df, spec, keys=["id"]).collect())
-    assert got == [(2, "unevaluatedProperties"), (3, "type"), (4, "type")]
-
-    # x-json on a non-string column fails fast at compile time
-    with pytest.raises(CompileError, match="x-json"):
-        compile_table(specmod.parse(
-            {"properties": {"w": {"x-json": True, "type": "object"}}}), df.schema)
-
-
 # --------------------------------------------- spec suggestion (suggest.py)
 
 def test_suggest_spec_golden_and_roundtrip(spark):

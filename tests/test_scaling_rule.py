@@ -1,73 +1,13 @@
-"""Unit tests for the scaling protocol's DRAM-floor cleanliness rule.
-
-The rule under test is ``tools/run_scaling._apply_mem_rule`` (v2,
-guarded-reference): a round's in-region DRAM gauges must each be >= ``frac``
-x the cross-round best for that region type, where the reference best is
-taken over CPU-clean rounds only — the bandwidth probe reads system-wide
-DRAM traffic, so readings from rounds with foreign CPU load anywhere are
-inflated by the neighbor's own memory traffic and invalid as quiet-host
-references (this exact failure declassified genuinely clean rounds twice
-before the guard existed; see run_scaling.py docstring).
+"""Unit tests for the scaling protocol in ``tools/run_scaling.py``: the
+benchmark-level retry of ``run_level_once`` and cleanliness rule v4
+(``_apply_time_rule_v4``: a CPU-clean region running above a headroom
+multiple of its per-region minimum over CPU-clean rounds excludes the
+round).
 """
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-
-from run_scaling import _apply_mem_rule  # noqa: E402
-
-
-def _round(n, clean_cpu, small_mem, large_mem):
-    return {"round": n, "clean_cpu": clean_cpu,
-            "small_mem": small_mem, "large_mem": large_mem}
-
-
-def test_contaminated_round_reading_never_sets_the_floor():
-    # The poisoning scenario: a CPU-contaminated round records an inflated
-    # 9.3 GB/s (neighbor traffic on top of its own); the two CPU-clean
-    # rounds read ~5.5-6.1. Under v1 (all-rounds max) the floor would be
-    # 0.75 * 9.3 = 6.98 and both clean rounds would be declassified; under
-    # v2 the reference pool is the clean rounds themselves.
-    rounds = [_round(1, True, 5.5, 6.1),
-              _round(2, False, 5.4, 9.3),
-              _round(3, True, 5.6, 5.9)]
-    _apply_mem_rule(rounds, frac=0.75)
-    assert rounds[0]["mem_clean"] and rounds[0]["clean"]
-    assert rounds[2]["mem_clean"] and rounds[2]["clean"]
-    assert not rounds[1]["clean"]  # clean_cpu False dominates regardless
-
-
-def test_dram_contaminated_cpu_clean_round_is_still_declassified():
-    # The instrument must still bite: a CPU-clean round whose 32-wide
-    # region achieved less than frac x another CPU-clean round's reading
-    # ran under memory contention invisible to the CPU gauges.
-    rounds = [_round(1, True, 5.5, 5.9),
-              _round(2, True, 5.4, 2.7)]  # 2.7 < 0.75 * 5.9
-    _apply_mem_rule(rounds, frac=0.75)
-    assert rounds[0]["clean"]
-    assert rounds[1]["clean_cpu"] and not rounds[1]["mem_clean"]
-    assert not rounds[1]["clean"]
-
-
-def test_no_cpu_clean_round_falls_back_to_all_rounds_max():
-    # With zero CPU-clean rounds nothing can be clean anyway (clean
-    # requires clean_cpu), but mem_clean should still classify against the
-    # v1 all-rounds max rather than crash or pass everything.
-    rounds = [_round(1, False, 5.5, 9.3),
-              _round(2, False, 5.4, 5.0)]  # 5.0 < 0.75 * 9.3
-    _apply_mem_rule(rounds, frac=0.75)
-    assert rounds[0]["mem_clean"]
-    assert not rounds[1]["mem_clean"]
-    assert not any(r["clean"] for r in rounds)
-
-
-def test_legacy_round_without_gauges_keeps_recorded_flag():
-    rounds = [{"round": 1, "clean_cpu": True, "clean": True},
-              _round(2, True, 5.5, 5.9)]
-    _apply_mem_rule(rounds, frac=0.75)
-    assert rounds[0]["mem_clean"] is None
-    assert rounds[0]["clean"] is True
-    assert rounds[1]["clean"]
 
 
 class _FakeCompleted:

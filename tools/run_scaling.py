@@ -81,51 +81,6 @@ def run_level_once(cores: int, n_images: int) -> dict | None:
     return None
 
 
-_MEM_KEYS = ("small_mem", "large_mem", "calib_small_mem", "calib_large_mem",
-             "agg_small_mem", "agg_large_mem", "mix_small_mem",
-             "mix_large_mem")
-
-def _apply_mem_rule(rounds: list[dict], frac: float = 0.5,
-                    steal_cut: float = 2.0) -> None:
-    """Set mem_clean + final clean on every round: each region's in-region
-    DRAM gauge must be >= ``frac`` x the best (max) achieved for that region
-    type by a CPU-clean round (``clean_cpu``: every timed region's steal AND
-    other-load < ``steal_cut``). Rule v2: the bandwidth probe reads
-    SYSTEM-wide DRAM traffic, so a round during which a neighbor was
-    demonstrably active (CPU gauges over the cut in ANY region) can record
-    the neighbor's memory traffic on top of its own in any other region
-    between the neighbor's CPU bursts — an inflated reading that is invalid
-    as a quiet-host reference by the protocol's own cleanliness standard.
-    Observed twice before this rule: a 9.33 GB/s agg-32c reading during
-    9.78% other-load declassified the only CPU-clean round of the quiet4
-    attempt; an 8.07 GB/s mix-32c reading in a round with 4.34% agg-region
-    steal did the same to a CPU-clean fresh-run round. If no CPU-clean round
-    exists, fall back to the all-rounds max (v1 behavior). Note the
-    instrument only discriminates once >=2 CPU-clean rounds exist — with
-    one, its floors are self-referential and pass trivially; the gate needs
-    >=3 clean rounds anyway. A key a round does not carry (legacy logs
-    predate the agg-calibration regions) is skipped for that round; rounds
-    with no gauges at all keep their recorded clean flag.
-
-    ``steal_cut`` is used only when a round predates the recorded
-    ``clean_cpu`` flag (never in practice: every gauge-bearing log carries
-    it)."""
-    ref_rounds = [r for r in rounds if r.get("clean_cpu", False)]
-    pool = ref_rounds if ref_rounds else rounds
-    best = {k: max((r.get(k, 0.0) for r in pool), default=0.0)
-            for k in _MEM_KEYS}
-    for r in rounds:
-        if not any(r.get(k, 0.0) > 0.0 for k in _MEM_KEYS):
-            r.setdefault("mem_clean", None)  # legacy round: no gauge
-            r.setdefault("clean", r.get("clean_cpu", False))
-            continue
-        r["mem_clean"] = all(
-            best[k] <= 0.0 or r.get(k, 0.0) >= frac * best[k]
-            for k in _MEM_KEYS if k in r)
-        r["clean"] = bool(r.get("clean_cpu", r.get("clean", False))
-                          and r["mem_clean"])
-
-
 _TIME_KEYS = ("small_sec", "large_sec", "calib_small_sec", "calib_large_sec",
               "agg_small_sec", "agg_large_sec", "mix_small_sec",
               "mix_large_sec")
@@ -186,27 +141,12 @@ def main() -> None:
     ap.add_argument("--steal-cut", type=float, default=2.0,
                     help="suite-run steal%% at-or-above this, on either "
                          "level, marks the round contaminated")
-    ap.add_argument("--mem-frac", type=float, default=0.75,
-                    help="in-region DRAM-gauge floor as a fraction of the "
-                         "cross-round best for that region type; below it "
-                         "the round is memory-contaminated. 0.5 (attempt 3 "
-                         "rounds 1-2) proved too lenient: rounds at ~0.7x "
-                         "best memory recorded the 32-wide suite 1.5-2.2x "
-                         "its known-quiet time while reading 'clean'.")
     ap.add_argument("--n-images", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES",
                                                "32000000")))
-    ap.add_argument("--clean-rule", choices=("v2", "v4"), default="v4",
-                    help="third cleanliness check: 'v2' = DRAM-probe "
-                         "floor (>= --mem-frac x per-region best among "
-                         "CPU-clean rounds), 'v4' (default; registered "
-                         "2026-08-21 per ADVICE r4, see SCALING_NOTES_r04 "
-                         "§11) = region wall time <= --time-headroom x "
-                         "per-region MIN among CPU-clean rounds. All flags "
-                         "are recorded per round; only the selected rule "
-                         "binds.")
     ap.add_argument("--time-headroom", type=float, default=1.3,
-                    help="v4: a region running above this multiple of "
+                    help="cleanliness rule v4: a region running above "
+                         "this multiple of "
                          "its cross-round CPU-clean minimum wall time "
                          "marks the round contaminated")
     ap.add_argument("--gate-estimator", choices=("scan", "agg", "mix"),
@@ -236,14 +176,11 @@ def main() -> None:
                     rd = ast.literal_eval(line.split(": ", 1)[1].strip())
                     rounds.append(rd)
                     n_clean += bool(rd["clean"])
-        _apply_mem_rule(rounds, frac=args.mem_frac,
-                        steal_cut=args.steal_cut)
-        if args.clean_rule == "v4":
-            _apply_time_rule_v4(rounds, headroom=args.time_headroom)
+        _apply_time_rule_v4(rounds, headroom=args.time_headroom)
         n_clean = sum(bool(r["clean"]) for r in rounds)
         print(f"[run_scaling] resumed {len(rounds)} rounds "
-              f"({n_clean} clean after re-applying the mem rule at "
-              f"{args.mem_frac}) from {args.resume_log}", flush=True)
+              f"({n_clean} clean after re-applying rule v4) from "
+              f"{args.resume_log}", flush=True)
     for i in range(len(rounds), args.max_rounds):
         print(f"[run_scaling] === round {i + 1}/{args.max_rounds} "
               f"(clean so far: {n_clean}/{args.clean_rounds}) ===", flush=True)
@@ -335,21 +272,7 @@ def main() -> None:
             rd["normalized_ratio_mix"] = round(
                 rd["suite_speedup"] / rd["mix_speedup"], 3)
         rounds.append(rd)
-        # PRE-REGISTERED mem rule (fixed before this run's first timed
-        # region): a round is mem-clean iff EVERY region's in-region
-        # bandwidth is >= 0.5x the max any round achieved for that SAME
-        # region type (suite/calib x level). Relative-to-best is
-        # self-calibrating: the suite's own bandwidth draw differs by
-        # level (so one absolute floor cannot serve both), but it is
-        # IDENTICAL work across rounds of the same region type, so the
-        # cross-round max is the quietest-host reference. Applied with a
-        # running max (max only grows; the final classification below uses
-        # the complete set). v2: only CPU-clean regions contribute to the
-        # reference max (see _apply_mem_rule docstring).
-        _apply_mem_rule(rounds, frac=args.mem_frac,
-                        steal_cut=args.steal_cut)
-        if args.clean_rule == "v4":
-            _apply_time_rule_v4(rounds, headroom=args.time_headroom)
+        _apply_time_rule_v4(rounds, headroom=args.time_headroom)
         rd_now = rounds[-1]
         print(f"[run_scaling] round {i + 1}: {rd_now}", flush=True)
         n_clean = sum(r["clean"] for r in rounds)
@@ -403,22 +326,12 @@ def main() -> None:
                     f"steal < {args.steal_cut}% and other-process host load "
                     f"< {args.steal_cut}% (own-load instrument: host busy "
                     "ticks minus benchmark-tree ticks) AND "
-                    + (f"wall time <= {args.time_headroom}x the per-region "
-                       f"MIN over CPU-clean rounds (rule {args.clean_rule} — "
-                       "identical work per region, so a CPU-quiet region "
-                       "running slower is stalled by contention invisible "
-                       "to the CPU gauges; the in-region DRAM probe is "
-                       "recorded as corroborating diagnostics)"
-                       if args.clean_rule == "v4" else
-                       f"in-region DRAM bandwidth >= {args.mem_frac}x the "
-                       "cross-round best for that region type among "
-                       "CPU-clean rounds only — a reading from a round "
-                       "with foreign CPU load anywhere includes the "
-                       "neighbor's DRAM traffic and is invalid as a "
-                       "reference (concurrent single-thread streaming-read "
-                       "probe — catches neighbor MEMORY contention that "
-                       "stalls vCPUs inside busy ticks, invisible to both "
-                       "CPU gauges)")
+                    f"wall time <= {args.time_headroom}x the per-region "
+                    "MIN over CPU-clean rounds (rule v4 — identical work "
+                    "per region, so a CPU-quiet region running slower is "
+                    "stalled by contention invisible to the CPU gauges; "
+                    "the in-region DRAM probe is recorded as corroborating "
+                    "diagnostics)"
                     + "; contaminated rounds reported but excluded "
                     "(interference hits the wide level asymmetrically — "
                     "see BASELINE.md)",
@@ -427,17 +340,8 @@ def main() -> None:
                                    "gate >= 0.8",
         "n_images": args.n_images,
         "steal_cut_pct": args.steal_cut,
-        "mem_rule": f"v2 guarded-reference: region DRAM gauge >= "
-                    f"{args.mem_frac}x the cross-round best for that region "
-                    f"type among CPU-clean rounds (every region's steal AND "
-                    f"other-load < {args.steal_cut}%); system-wide probe "
-                    f"readings from rounds with foreign CPU load anywhere "
-                    f"are invalid references"
-                    + (f" — RECORDED ONLY under clean-rule "
-                       f"{args.clean_rule}, not binding"
-                       if args.clean_rule == "v4" else ""),
-        "clean_rule": args.clean_rule,
-        "time_rule": (f"{args.clean_rule} time-anomaly: every region's "
+        "clean_rule": "v4",
+        "time_rule": (f"v4 time-anomaly: every region's "
                       f"wall time <= {args.time_headroom}x the per-region "
                       f"MIN over CPU-clean rounds (identical work per region; "
                       f"a CPU-quiet region running slower than that is "
@@ -450,10 +354,8 @@ def main() -> None:
                       f"instrument like the two CPU gauges; it "
                       f"discriminates once >=2 CPU-clean reference rounds "
                       f"exist (with one, that round is its own reference; "
-                      f"with none, time_clean is recorded as None)"
-                      if args.clean_rule == "v4" else None),
-        "time_headroom": (args.time_headroom
-                          if args.clean_rule == "v4" else None),
+                      f"with none, time_clean is recorded as None)"),
+        "time_headroom": args.time_headroom,
         "rounds": rounds,
         "n_rounds": len(rounds),
         "n_clean_rounds": len(clean),
@@ -506,7 +408,6 @@ def main() -> None:
                 / (min(r["calib_small_sec"] for r in rounds)
                    / min(r["calib_large_sec"] for r in rounds)), 3),
         },
-        "mem_frac": args.mem_frac,
         # north-rule reporting: validated images/sec at BOTH parallelism
         # levels (the rule's metric), alongside the efficiency figures.
         "throughput_img_per_sec": {
@@ -533,18 +434,13 @@ def main() -> None:
         json.dump(result, f, indent=2)
 
     rule3_desc = (
-        f"region wall-time anomaly (rule {args.clean_rule}): every timed "
+        f"region wall-time anomaly (rule v4): every timed "
         f"region's wall time must be <= {args.time_headroom}x the "
         f"per-region MIN over CPU-clean "
         f"rounds — each region runs identical work every round, so a "
         f"CPU-quiet region running slower than that is stalled by "
         f"contention the CPU gauges cannot see; the concurrent DRAM "
-        f"probe's per-region readings are recorded as corroboration."
-        if args.clean_rule == "v4" else
-        f"in-region DRAM bandwidth (a concurrent single-thread "
-        f"streaming-read probe, ~30 ms sample every 400 ms, median per "
-        f"region, round clean iff every region >= {args.mem_frac}x that "
-        f"region type's cross-round best among CPU-clean rounds, rule v2).")
+        f"probe's per-region readings are recorded as corroboration.")
     rows = "\n".join(
         f"| {r['round']} | {r['small_sec']}s ({r['small_steal']}%) | "
         f"{r['large_sec']}s ({r['large_steal']}%) | {r['suite_speedup']}x | "
@@ -604,7 +500,7 @@ invisible to both CPU gauges. Unlike (1) and (2), check (3) is NOT an
 independent instrument: it censors the measured wall-time distribution
 itself (disclosed per ADVICE r4), which is why it anchors on CPU-clean
 rounds and why the gate still requires >=3 clean rounds. Rule history:
-v2 floored an in-region DRAM-bandwidth probe at {args.mem_frac}x the
+v2 (since deleted) floored an in-region DRAM-bandwidth probe at 0.75x the
 per-region cross-round best among CPU-clean rounds; on the fresh2 run
 its AND of eight max-derived floors declassified all 8 CPU-clean rounds
 while per-region CPU-clean probe readings spread up to 3.6x with
