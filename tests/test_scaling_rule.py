@@ -7,6 +7,8 @@ round).
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 
@@ -169,3 +171,60 @@ def test_time_rule_v4_cpu_dirty_rounds_do_not_set_reference():
     assert rounds[1]["clean"] and rounds[2]["clean"]
     assert not rounds[0]["clean"] and not rounds[3]["clean"]
     assert not rounds[4]["time_clean"] and not rounds[4]["clean"]
+
+
+def test_time_rule_v4_ignores_dram_gauges():
+    # The in-region DRAM readings stay recorded in every round but no
+    # longer classify it: a CPU-clean round whose 32-wide region read less
+    # than half the other round's bandwidth is still clean when its wall
+    # times are within headroom of the CPU-clean minimum.
+    rounds = [_tround(1, True, 84.0, 44.0, small_mem=5.5, large_mem=5.9),
+              _tround(2, True, 86.0, 45.0, small_mem=5.4, large_mem=2.7)]
+    _apply_time_rule_v4(rounds, headroom=1.3)
+    assert all(r["time_clean"] and r["clean"] for r in rounds)
+    assert "mem_clean" not in rounds[1]
+
+
+def test_time_rule_v4_region_at_exactly_headroom_stays_clean():
+    # The bound is inclusive: a region at exactly headroom x the reference
+    # passes; the first region past it excludes the round.
+    rounds = [_tround(1, True, 80.0, 40.0),
+              _tround(2, True, 100.0, 40.0),    # 1.25x the min: clean
+              _tround(3, True, 80.0, 50.0),     # exactly 1.25x: clean
+              _tround(4, True, 80.0, 50.5)]     # past 1.25x: excluded
+    _apply_time_rule_v4(rounds, headroom=1.25)
+    assert all(r["time_clean"] and r["clean"] for r in rounds[:3])
+    assert not rounds[3]["time_clean"] and not rounds[3]["clean"]
+
+
+def test_time_rule_v4_legacy_round_keeps_recorded_flag():
+    # A round logged before the CPU gauges existed carries only its
+    # recorded ``clean`` flag. That flag stands in for clean_cpu in the
+    # final verdict, but the round never joins the reference pool: its
+    # fast 60s region would otherwise cap round 2 at 78s and exclude it.
+    rounds = [{"round": 1, "clean": True, "small_sec": 60.0,
+               "large_sec": 30.0},
+              _tround(2, True, 84.0, 44.0),
+              {"round": 3, "clean": False, "small_sec": 84.0,
+               "large_sec": 44.0}]
+    _apply_time_rule_v4(rounds, headroom=1.3)
+    assert rounds[0]["time_clean"] and rounds[0]["clean"]
+    assert rounds[1]["time_clean"] and rounds[1]["clean"]
+    assert rounds[2]["time_clean"] and not rounds[2]["clean"]
+
+
+def test_main_rejects_retired_rule_v2_flags(monkeypatch, capsys):
+    # Rule v4 is the only cleanliness rule: the v2 options are gone, and an
+    # old command line fails at argument parsing before any region runs.
+    import run_scaling
+
+    def _no_run(*a, **kw):
+        raise AssertionError("a benchmark region ran")
+
+    monkeypatch.setattr(run_scaling, "run_level_once", _no_run)
+    for argv in (["--mem-frac", "0.75"], ["--clean-rule", "v2"]):
+        monkeypatch.setattr(sys, "argv", ["run_scaling.py", *argv])
+        with pytest.raises(SystemExit) as exc:
+            run_scaling.main()
+        assert exc.value.code == 2
+        assert "unrecognized arguments" in capsys.readouterr().err
