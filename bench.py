@@ -237,10 +237,14 @@ def main() -> None:
     # (VERDICT r4 #4: the 51-query single-line JSON exceeded the capture
     # and BENCH_r04.json recorded parsed=null). The compact line keeps the
     # driver contract's "queries" key with the flagship + per-family heads.
+    # Each run is also archived under its UTC time with mode "x", so no
+    # record is ever overwritten.
     bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
     os.makedirs(bench_dir, exist_ok=True)
-    with open(os.path.join(bench_dir, "bench_full_latest.json"), "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
+    archive = f"bench_full_{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}.json"
+    for name, mode in ((archive, "x"), ("bench_full_latest.json", "w")):
+        with open(os.path.join(bench_dir, name), mode) as f:
+            json.dump(full, f, indent=1, sort_keys=True)
     headline_keys = [
         "images_full_suite", "fidelity_images_bytes", "row_checks_lineitem",
         "stats_lineitem", "uniqueness_orders", "referential_violations",
@@ -260,7 +264,7 @@ def main() -> None:
         "flagship_steal_pct": STEALS.get("images_full_suite"),
         "flagship_other_load_pct": OTHERS.get("images_full_suite"),
         "flagship_dram_gb_per_sec": MEMS.get("images_full_suite"),
-        "full_record": "BENCH/bench_full_latest.json",
+        "full_record": f"BENCH/{archive}",
     }))
     spark.stop()
 

@@ -436,10 +436,8 @@ def validate_table(
                 f"x-table-checks/{kind} references non-spec'd columns {missing} "
                 "— these checks run on the fused stats scan, so the column "
                 "must appear in the spec's properties")
-    from .passes.stats import _NUMERIC_TYPENAMES
-    bad_q = [c["column"] for c in qchecks
-             if not fact.schema[c["column"]].dataType.typeName()
-             .startswith(_NUMERIC_TYPENAMES)]
+    numeric_q = P1.numeric_columns(fact, [c["column"] for c in qchecks])
+    bad_q = [c["column"] for c in qchecks if c["column"] not in numeric_q]
     if bad_q:
         # a quantile bound on a non-numeric column gets no KLL sketch and
         # would surface as a data failure instead of a config error
@@ -453,8 +451,6 @@ def validate_table(
     stats_df = None
     wide_agg = None
     if stat_cols or acfg is not None:
-        from .passes.stats import numeric_columns, partition_wide_agg, stats_long
-
         # ONE aggregation over `base` for the stats sink, the quantile/
         # distinct/null-rate verdict branches AND the P6 profile; the
         # result is partitions-scale, so persist it — without this the
@@ -462,14 +458,14 @@ def validate_table(
         # consumer (measured: three ~300-600 task-second
         # ObjectHashAggregate stages per suite run at 32M rows, each
         # re-shuffling ~277 MB of partial sketch state).
-        wide_agg = _persist(partition_wide_agg(
+        wide_agg = _persist(P1.partition_wide_agg(
             base, stat_cols, part_col=part_col,
             with_quantiles=with_quantiles, kll_k=kll_k,
             anomaly_exprs=tuple(a_cols)))
         if stat_cols:
-            stats_df = stats_long(wide_agg, stat_cols,
-                                  numeric_columns(base, stat_cols),
-                                  with_quantiles=with_quantiles)
+            stats_df = P1.stats_long(wide_agg, stat_cols,
+                                     P1.numeric_columns(base, stat_cols),
+                                     with_quantiles=with_quantiles)
 
     # P6 assembly — from the fused wide agg
     if acfg is not None:

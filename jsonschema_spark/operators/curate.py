@@ -8,21 +8,31 @@ this package's operators so each stage keeps its individual scale shape:
 - near-dup (opt-in): MinHash-LSH candidates + exact verify (dedup.py)
 
 The funnel report (docs surviving each stage) is the artifact a data-quality
-review reads; it is deterministic, so the driver query has an exact DuckDB
-oracle twin (`curate_documents`).
+review reads. ``curate`` and ``curate_images`` both build it with
+``_funnel``: one aggregation over one frame annotated with each stage's drop
+marks, never one count per staged frame. It is deterministic, so the driver
+query has an exact DuckDB oracle twin (`curate_documents`).
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import dedup as D
 from . import pii as P
 from . import sampling as S
 from . import text as T
+
+
+def _funnel(frame: DataFrame, stages: list[tuple[str, Column]]) -> DataFrame:
+    """(stage_idx, stage, n_docs): every ``(name, aggregate)`` stage count
+    evaluated in ONE ``frame.agg`` and exploded to one row per stage."""
+    wide = frame.agg(*[agg.alias(f"s{i}") for i, (_, agg) in enumerate(stages)])
+    rows = [F.struct(F.lit(i).alias("stage_idx"), F.lit(name).alias("stage"),
+                     F.col(f"s{i}").cast("long").alias("n_docs"))
+            for i, (name, _) in enumerate(stages)]
+    return wide.select(F.explode(F.array(*rows)).alias("s")).select("s.*")
 
 
 def curate(
@@ -45,19 +55,16 @@ def curate(
     rows; redaction before fingerprinting so dedup keys match what ships):
     input -> lang -> quality -> redact -> exact-dedup -> near-dup -> split.
 
-    Scale shape (round 5 — the r4 composition re-scanned the fact table
-    once per stage and shuffled it twice for predicates that are pure
-    Column expressions):
+    Scale shape:
     - lang/quality gate with scan-side filters (``language_id_cols`` /
       ``quality_score_cols``) — no score frame, no semi-join, no shuffle;
-    - the funnel's input/lang/quality/redact/exact-dedup/split counts come
-      from ONE conditional aggregation over a single scan (stage
+    - the funnel is ONE conditional aggregation over the scan (stage
       predicates as ``sum(cond)``, the dedup count as
-      ``count_distinct(when(keep, fingerprint))``) instead of one
-      re-executed count per staged frame;
-    - only the opt-in near-dup stage still counts from the composed frame
-      (its survivor set needs the LSH join); callers enabling it at scale
-      should persist ``curated`` before materializing both outputs.
+      ``count_distinct(when(keep, fingerprint))``); a stage that drops
+      nothing repeats the previous stage's aggregate;
+    - the opt-in near-dup stage left-joins the scan to the distinct LSH
+      drop ids and subtracts their count from the exact-dedup count — the
+      same aggregation, no second count over the composed frame.
     """
     lang_ok = F.lit(True)
     if lang is not None:
@@ -69,6 +76,16 @@ def curate(
     # fingerprint of the text as it SHIPS (post-redaction); null-fp docs
     # collapse to one canonical like the groupBy form, hence the sentinel
     fp_expr = F.coalesce(T.fingerprint_cols(red_expr)[0], F.lit("\x00null"))
+
+    stages = [("input", F.count(F.lit(1)))]
+    if lang is not None:
+        stages.append(("lang", F.sum(lang_ok.cast("long"))))
+    if quality:
+        stages.append(("quality", F.sum(keep_ok.cast("long"))))
+    if redact_pii:
+        stages.append(("redact", stages[-1][1]))    # redaction drops nothing
+    stages.append(("exact_dedup",
+                   F.count_distinct(F.when(keep_ok, fp_expr))))
 
     # --- curated rows: filters and redaction fold into the scan ---------
     cur = df
@@ -83,54 +100,19 @@ def curate(
     canon = fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col)) \
         .select(id_col)
     cur = cur.join(canon, id_col, "left_semi")
+    frame = df
     if near_dup_threshold is not None:
         pairs = D.minhash_dedup(cur, threshold=near_dup_threshold,
                                 id_col=id_col, text_col=text_col)
+        drop = pairs.select(F.col("id_b").alias("__near")).distinct()
+        frame = df.join(drop, F.col(id_col) == F.col("__near"), "left")
+        # pairs run over the exact-deduped cur: every dropped id survived it
+        stages.append(("near_dedup", stages[-1][1] - F.count("__near")))
         cur = D.keep_canonical(cur, pairs, id_col=id_col)
-        near_base = cur  # funnel counts this frame (pre-split)
     if split_weights:
+        stages.append(("split", stages[-1][1]))     # splits drop nothing
         cur = S.assign_splits(cur, split_weights, key_col=id_col)
-
-    # --- funnel: one conditional-aggregation pass over the scan ---------
-    aggs = [F.count(F.lit(1)).alias("input")]
-    if lang is not None:
-        aggs.append(F.sum(lang_ok.cast("long")).alias("lang"))
-    if quality:
-        aggs.append(F.sum(keep_ok.cast("long")).alias("quality"))
-    aggs.append(F.count_distinct(F.when(keep_ok, fp_expr)).alias("exact_dedup"))
-    wide = df.agg(*aggs)
-
-    names = ["input"]
-    if lang is not None:
-        names.append("lang")
-    if quality:
-        names.append("quality")
-    if redact_pii:
-        names.append("redact")      # redaction drops nothing
-    names.append("exact_dedup")
-    if near_dup_threshold is None and split_weights:
-        names.append("split")       # split assignment drops nothing
-    prev = "input"
-    entries = []
-    for i, nm in enumerate(names):
-        src = nm if nm in ("input", "lang", "quality", "exact_dedup") else prev
-        entries.append(F.struct(
-            F.lit(i).alias("stage_idx"), F.lit(nm).alias("stage"),
-            F.col(src).cast("long").alias("n_docs")))
-        prev = src
-    funnel = wide.select(F.explode(F.array(*entries)).alias("s")).select("s.*")
-
-    if near_dup_threshold is not None:
-        i = len(names)
-        tail = [near_base.agg(F.lit(i).alias("stage_idx"),
-                              F.lit("near_dedup").alias("stage"),
-                              F.count(F.lit(1)).alias("n_docs"))]
-        if split_weights:
-            tail.append(near_base.agg(F.lit(i + 1).alias("stage_idx"),
-                                      F.lit("split").alias("stage"),
-                                      F.count(F.lit(1)).alias("n_docs")))
-        funnel = reduce(DataFrame.unionByName, [funnel, *tail])
-    return cur, funnel
+    return cur, _funnel(frame, stages)
 
 
 def curate_images(
@@ -153,37 +135,36 @@ def curate_images(
     dedup (pigeonhole Hamming pairs, keep-lowest-key canonical) ->
     deterministic splits. Returns (curated, funnel) like ``curate``.
 
-    Scale shape: the violation keys are a narrow (pass, key) projection of
-    the violations stream — the anti-join is key-only; phash dedup is the
-    B48 pigeonhole equi-join; splits are scan-side hash intervals.
+    Scale shape: the fact table is left-joined once to the distinct
+    violation keys (a narrow (row_key) projection of the violations
+    stream) and once to the distinct phash drop ids (the B48 pigeonhole
+    equi-join over the valid rows); ``curated`` filters that annotated
+    frame and the funnel is one aggregation over it, so validation and
+    the Hamming join run once for both. Splits are scan-side hash
+    intervals.
     """
     from ..engine import validate_table
 
-    stages: list[tuple[str, DataFrame]] = [("input", fact)]
     res = validate_table(fact, spec, dims=dims, key_col=key_col,
                          part_col=part_col)
-    bad_keys = (res.violations.where(F.col("row_key").isNotNull())
-                .select(F.col("row_key")).distinct())
-    cur = fact.join(
-        bad_keys.withColumnRenamed("row_key", "__bk"),
-        fact[key_col].cast("string") == F.col("__bk"), "left_anti")
-    stages.append(("valid", cur))
+    bad = (res.violations.where(F.col("row_key").isNotNull())
+           .select(F.col("row_key").alias("__bad")).distinct())
+    frame = fact.join(bad, F.col(key_col).cast("string") == F.col("__bad"),
+                      "left")
+    keep = F.col("__bad").isNull()
+    stages = [("input", F.count(F.lit(1))), ("valid", F.sum(keep.cast("long")))]
 
     if max_hamming is not None:
-        sig = cur.select(F.col(key_col).alias("id"),
-                         F.col(phash_col).alias("simhash"))
+        sig = frame.where(keep).select(F.col(key_col).alias("id"),
+                                       F.col(phash_col).alias("simhash"))
         pairs = D.hamming_near_duplicates(sig, max_hamming=max_hamming)
-        cur = D.keep_canonical(cur, pairs, id_col=key_col)
-        stages.append(("phash_dedup", cur))
+        drop = pairs.select(F.col("id_b").alias("__dup")).distinct()
+        frame = frame.join(drop, F.col(key_col) == F.col("__dup"), "left")
+        keep = keep & F.col("__dup").isNull()
+        stages.append(("phash_dedup", F.sum(keep.cast("long"))))
 
+    cur = frame.where(keep).select(*fact.columns)
     if split_weights:
+        stages.append(("split", stages[-1][1]))
         cur = S.assign_splits(cur, split_weights, key_col=key_col)
-        stages.append(("split", cur))
-
-    funnel = reduce(
-        DataFrame.unionByName,
-        [s.agg(F.lit(i).alias("stage_idx"), F.lit(name).alias("stage"),
-               F.count(F.lit(1)).alias("n_docs"))
-         for i, (name, s) in enumerate(stages)],
-    )
-    return cur, funnel
+    return cur, _funnel(frame, stages)

@@ -8,10 +8,11 @@ whose mean jumped 10x, passes both when the damaged values are individually
 legal. The partition profile catches exactly that failure mode.
 
 Scale shape:
-- ``partition_profile`` is ONE fact scan → one hash aggregation keyed by
-  (partition): output is partitions × columns rows, independent of row
-  count. Map-side partial aggregation collapses everything before the
-  shuffle.
+- the profile is the anomaly branch of ``stats.partition_wide_agg``, the
+  one per-partition hash aggregation: output is partitions × columns rows,
+  independent of row count, and map-side partial aggregation collapses
+  everything before the shuffle. ``validate_table`` folds it into the
+  stats pass's aggregation; ``partition_profile`` runs it alone.
 - ``anomaly_flags`` runs entirely on that tiny profile table: per-column
   median and MAD via window functions, no fact data touched. Robust
   statistics (median/MAD, not mean/stddev) so the outlier batches being
@@ -24,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .stats import partition_wide_agg
+
 # Φ^{-1}(0.75): MAD × 1.4826 estimates σ under normality, making the z
 # threshold comparable to a classic z-score cut.
 MAD_SIGMA = 1.4826
@@ -32,37 +35,22 @@ MAD_SIGMA = 1.4826
 def partition_profile(
     df: DataFrame, columns: list[str], part_col: str = "part_id"
 ) -> DataFrame:
-    """(part_id, column, metric, value) — per-partition mean and null-rate
-    for each requested column (a column name OR any SQL expression, e.g.
-    ``length(caption)`` — same surface as the drift columns), one scan, one
-    aggregation. The expression string itself is the reported label."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for i, c in enumerate(columns):
-        v = F.expr(c)
-        aggs.append(F.avg(v.cast("double")).alias(f"m{i}__mean"))
-        aggs.append(F.avg(v.isNull().cast("double")).alias(f"m{i}__nullrate"))
-    wide = df.groupBy(F.col(part_col).alias("part_id")).agg(*aggs)
-
-    entries = []
-    for i, c in enumerate(columns):
-        entries.append(F.struct(
-            F.lit(c).alias("column"), F.lit("mean").alias("metric"),
-            F.col(f"m{i}__mean").alias("value")))
-        entries.append(F.struct(
-            F.lit(c).alias("column"), F.lit("null_rate").alias("metric"),
-            F.col(f"m{i}__nullrate").alias("value")))
-    return (
-        wide.select("part_id", "n_rows", F.explode(F.array(*entries)).alias("e"))
-        .select("part_id", "n_rows", "e.column", "e.metric", "e.value")
-    )
+    """(part_id, n_rows, column, metric, value) — per-partition mean and
+    null-rate for each requested column (a column name OR any SQL
+    expression, e.g. ``length(caption)`` — same surface as the drift
+    columns). The expression string itself is the reported label. This is
+    ``stats.partition_wide_agg`` with no stats columns, projected by
+    ``profile_from_wide``."""
+    return profile_from_wide(
+        partition_wide_agg(df, [], part_col=part_col,
+                           anomaly_exprs=tuple(columns)), columns)
 
 
 def profile_from_wide(wide: DataFrame, exprs: list[str]) -> DataFrame:
     """Derive the (part_id, n_rows, column, metric, value) profile from a
-    ``stats.partition_wide_agg(..., anomaly_exprs=exprs)`` result — the
-    fused path: P6 then costs zero extra fact-table aggregations (the wide
-    agg is partitions-scale and persisted by the engine). Output is
-    identical to ``partition_profile`` on the same input."""
+    ``stats.partition_wide_agg(..., anomaly_exprs=exprs)`` result. The
+    engine passes its fused wide agg, so P6 costs zero extra fact-table
+    aggregations (the wide agg is partitions-scale and persisted)."""
     entries = []
     for i, c in enumerate(exprs):
         entries.append(F.struct(

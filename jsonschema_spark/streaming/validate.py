@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..passes.stats import numeric_columns
+
 
 def windowed_stats_stream(
     stream_df: DataFrame,
@@ -39,11 +41,7 @@ def windowed_stats_stream(
     w = stream_df.withWatermark(ts_col, watermark).groupBy(
         F.window(F.col(ts_col), window).alias("win")
     )
-    numeric = {
-        f.name for f in stream_df.schema.fields
-        if f.dataType.typeName().startswith(
-            ("byte", "short", "integer", "long", "float", "double", "decimal"))
-    }
+    numeric = numeric_columns(stream_df, cols)
     aggs = []
     for c in cols:
         aggs += [

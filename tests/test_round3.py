@@ -1741,46 +1741,6 @@ def test_minhash_incremental_matches_full_corpus(spark):
     assert got == expected and len(expected) > 0
 
 
-# --------------------------------------------------- curation pipeline (E2E)
-
-def test_curate_pipeline_every_stage_bites(spark):
-    """Planted corpus where each stage removes something: non-English docs,
-    a too-short doc, exact dups (post-redaction), and near-dups; the funnel
-    counts descend accordingly and the curated output carries redacted text
-    + deterministic splits."""
-    from jsonschema_spark.operators.curate import curate
-
-    en = ("the quick brown fox jumps over the lazy dog and it is that for " * 3)
-    rows = [
-        (1, en + "one"),
-        (2, en + "two"),
-        (3, en + "one"),                    # exact dup of 1 (post-normalization)
-        (4, "der die das und ist nicht ein mit fur von der die das und ist"),  # German
-        (5, "the of to"),                   # too short -> quality
-        (6, en + "mail me at a@b.com for it"),   # PII -> redacted
-        (7, en + "one two three four five six"),  # near-dup of 1 under low threshold
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    curated, funnel = curate(df, lang="en", quality=True, redact_pii=True,
-                             near_dup_threshold=0.5,
-                             split_weights={"train": 0.8, "val": 0.2})
-    f = {r["stage"]: r["n_docs"] for r in funnel.collect()}
-    assert f["input"] == 7
-    assert f["lang"] == 6          # doc 4 out
-    assert f["quality"] == 5       # doc 5 out
-    assert f["redact"] == 5
-    assert f["exact_dedup"] == 4   # doc 3 out (dup of 1)
-    assert f["near_dedup"] < 4     # doc 7 (and/or 2/6) folded into canonical
-    assert f["split"] == f["near_dedup"]
-
-    out = curated.collect()
-    assert all(r["split"] in ("train", "val") for r in out)
-    kept = {r["doc_id"]: r["text"] for r in out}
-    assert 1 in kept and 4 not in kept and 5 not in kept and 3 not in kept
-    if 6 in kept:
-        assert "[EMAIL]" in kept[6] and "a@b.com" not in kept[6]
-
-
 # ------------------------------------------------ snapshot diff (versioning)
 
 def test_snapshot_diff_statuses_and_schema_diff(spark):
@@ -1884,35 +1844,6 @@ def test_embedding_incremental_matches_full_corpus(spark):
                 if r.id_a in new_ids or r.id_b in new_ids}
     assert got == expected and len(expected) > 0
     assert not any(a == 500 for a, _, _ in got)
-
-
-def test_curate_images_validation_gated(spark):
-    """Validation output gates curation: rows named by row-addressable
-    violations (row checks, dup examples, orphans) are dropped, then phash
-    near-dups fold to the lowest key, then splits assign."""
-    from jsonschema_spark.operators.curate import curate_images
-
-    base = 0x0123456789ABCDEF
-    rows = [
-        # (image_id, part_id, w, h, fmt, phash)
-        ("img-0", 0, 100, 100, "png", base),
-        ("img-1", 0, 100, 100, "png", base ^ 0b11),     # phash dist 2 of img-0
-        ("img-2", 1, -5, 100, "png", 1 << 20),          # w violates minimum
-        ("img-3", 1, 100, 100, "gif", 2 << 20),         # fmt violates enum
-        ("img-4", 1, 100, 100, "bmp", 0),               # clean, far from all
-        ("img-5", 0, 100, 100, "raw", 0x0F0F0F0F),      # clean, dist 16 from img-4
-    ]
-    df = spark.createDataFrame(
-        rows, "image_id string, part_id int, w int, h int, fmt string, phash long")
-    spec = {"properties": {"w": {"minimum": 0},
-                           "fmt": {"enum": ["png", "bmp", "raw", "jpeg"]}}}
-    curated, funnel = curate_images(
-        df, spec, max_hamming=3, split_weights={"train": 0.8, "val": 0.2})
-    f = {r["stage"]: r["n_docs"] for r in funnel.collect()}
-    assert f == {"input": 6, "valid": 4, "phash_dedup": 3, "split": 3}
-    kept = {r["image_id"] for r in curated.collect()}
-    assert kept == {"img-0", "img-4", "img-5"}   # img-1 folded into img-0
-    assert all(r["split"] in ("train", "val") for r in curated.collect())
 
 
 def test_quantile_bound_checks_verdicts(spark):

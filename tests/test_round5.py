@@ -1,85 +1,15 @@
-"""Round-5 additions: plan-shape pins for the curate() composition fix
-(VERDICT r4 #5) and the flagship oracle replay (VERDICT r4 #2)."""
+"""Round-5 additions: the flagship oracle replay (VERDICT r4 #2). The
+curate() plan-shape pins live in test_curate.py."""
 
-from pyspark.sql import functions as F
-
-import re
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-_JOIN_RX = re.compile(
-    r"BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin")
-
-
-def test_curate_funnel_single_pass_no_joins(spark):
-    """The funnel must be ONE conditional aggregation over the scan: no join
-    operator anywhere, and only the aggregation's own exchanges (the r4
-    composition re-counted every staged frame — 29 exchanges and a
-    left_semi shuffle per predicate stage)."""
-    from jsonschema_spark.operators.curate import curate
-
-    docs = spark.createDataFrame(
-        [(i, f"the of to and is in it you that he was for on are {i}")
-         for i in range(50)],
-        "doc_id long, text string")
-    _, funnel = curate(docs, lang="en", quality=True, redact_pii=True,
-                       near_dup_threshold=None,
-                       split_weights={"train": 0.9, "val": 0.1})
-    plan = _plan(funnel)
-    assert not _JOIN_RX.search(plan), plan
-    assert plan.count("Exchange") <= 3, plan
-
-
-def test_curate_lang_quality_are_scan_side_filters(spark):
-    """The curated frame's only join is the exact-dedup left_semi — the
-    lang and quality gates must compile to Filter nodes on the scan, not
-    score-frame joins."""
-    from jsonschema_spark.operators.curate import curate
-
-    docs = spark.createDataFrame(
-        [(i, f"the of to and is in it you that he was for on are {i}")
-         for i in range(50)],
-        "doc_id long, text string")
-    curated, _ = curate(docs, lang="en", quality=True, redact_pii=True,
-                        near_dup_threshold=None, split_weights=None)
-    plan = _plan(curated)
-    assert len(_JOIN_RX.findall(plan)) == 1, plan  # the dedup semi-join only
-    assert "LeftSemi" in plan, plan
-
-
-def test_curate_funnel_matches_staged_counts(spark):
-    """The one-pass conditional-aggregation funnel must report the same
-    counts the staged composition would: planted rows exercising every
-    stage (non-English, low-quality, PII, exact dup pair)."""
-    from jsonschema_spark.operators.curate import curate
-
-    en = "the quick brown fox jumps over the lazy dog and it is that for " * 3
-    rows = [
-        (1, en + "one"),
-        (2, en + "two"),
-        (3, en + "one"),          # exact dup of 1 post-normalization
-        (4, "der die das und ist nicht ein mit fur von der die das und ist"),
-        (5, "the of to"),         # quality fail
-        (6, en + "mail a@b.com"),  # PII redacted, survives
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    curated, funnel = curate(df, lang="en", quality=True, redact_pii=True,
-                             near_dup_threshold=None,
-                             split_weights={"train": 1.0})
-    f = {r["stage"]: (r["stage_idx"], r["n_docs"]) for r in funnel.collect()}
-    assert f == {"input": (0, 6), "lang": (1, 5), "quality": (2, 4),
-                 "redact": (3, 4), "exact_dedup": (4, 3), "split": (5, 3)}
-    kept = {r["doc_id"] for r in curated.collect()}
-    assert kept == {1, 2, 6}
+import pytest
 
 
 def test_flagship_oracle_replay_matches_spark(spark):
     """The pure-Python replay behind the flagship VALUES twin must equal
     the engine's verdict matrix row-for-row (the driver gate compares the
-    same two sets at sf0.01; this pins it in-suite at the same fixture)."""
+    same two sets at sf0.01; this pins it in-suite at the same fixture).
+    The replay raises on any KS p, PSI or robust |z| within a relative
+    1e-3 of its threshold, so a float verdict cannot sit on an edge."""
     import __spark_entry__ as E
 
     actual = {
@@ -90,3 +20,7 @@ def test_flagship_oracle_replay_matches_spark(spark):
     expected = set(E._replay_images_full_suite())
     assert len(expected) == 436
     assert actual == expected
+    for value, edge in ((0.01001, 0.01), (0.19985, 0.2), (3.5, 3.5)):
+        with pytest.raises(ValueError, match="within 1e-3"):
+            E._clear_of_edge(value, edge, "probe")
+    assert E._clear_of_edge(0.0102, 0.01, "probe") == 0.0102
