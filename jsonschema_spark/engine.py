@@ -18,16 +18,19 @@ streaming; ``streaming.validate_stream`` is this function) and
 and P1 turn the compiled violations array into rows through one explode,
 ``passes.stats.explode_violations``.
 
-Violation streams are unioned into one schema (B23); verdicts are assembled
-per (partition, check) (B18). Nothing here collects fact-scale data to the
-driver — violations/verdicts are returned as DataFrames for the caller to
-sink (B3) or aggregate.
+Violation streams are unioned into one schema (B23). Every check counted
+from a violation stream (P1, P2, P3, P5, P7) is judged per (partition,
+check) in the one verdict grid, ``passes.stats.verdicts_from_violations``
+(B18): one zero-filled count and one join. Nothing here collects fact-scale
+data to the driver — violations/verdicts are returned as DataFrames for the
+caller to sink (B3) or aggregate.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -192,16 +195,6 @@ def _fused_projection(
     return fact.select(*keep, compiled.violations_array().alias("__viols"))
 
 
-def _single_check_verdicts(
-    stream: DataFrame, parts: DataFrame, check_id: str, keyword: str, path: str,
-) -> DataFrame:
-    """Per-partition verdicts of a pass judged as ONE check: every row of
-    its violation stream counts toward ``check_id``."""
-    relabelled = stream.select(
-        "part_id", F.lit(keyword).alias("keyword"), F.lit(path).alias("path"))
-    return P1.verdicts_from_violations(relabelled, parts, [(check_id, keyword, path)])
-
-
 def _bound_verdicts(
     bounds: DataFrame, values: DataFrame, on: list[str], value: str,
     keyword: str, check_id: Column,
@@ -291,9 +284,11 @@ def validate_table(
     Each pass's violation stream feeds BOTH the sink and the verdict
     counts, so it is persisted (MEMORY_AND_DISK) and executes once instead
     of once per consumer. Violations are bounded (≪ fact rows by
-    construction), so this holds at 10^12-row scale. Every zero-filled
-    per-partition verdict grid comes from
-    ``passes.stats.verdicts_from_violations`` (B18).
+    construction), so this holds at 10^12-row scale. The P1, P2, P3, P5
+    and P7 verdicts come from the one verdict grid,
+    ``passes.stats.verdicts_from_violations`` (B18): a single count over
+    the union of their unbounded streams, zero-filled over the partitions
+    of ``fact`` (P2: over every ``uniqueness_scope`` partition).
 
     Call ``result.cleanup()`` after sinking to unpersist all caches.
     """
@@ -329,19 +324,21 @@ def validate_table(
         else all_parts
     )
 
+    # sink rows per pass; exact-count rows for the verdict grid and the
+    # grid's (pass_id, check_id, keyword, path) checks — P2's judged on
+    # `scope_parts`, every other one on `all_parts`
     streams: list[DataFrame] = []
-    verdict_streams: list[DataFrame] = []
+    counted: list[DataFrame] = []
+    part_checks: list[tuple[str, str, str, str]] = []
+    scope_checks: list[tuple[str, str, str, str]] = []
 
     # P1 — row predicates (the array precomputed by the fused projection)
     viol1 = _persist(P1.explode_violations(
         base, [F.col(part_col).alias("part_id"),
                F.col(key_col).cast("string").alias("row_key")],
         F.col("__viols")))
-    checks1 = [(cid, *cid.split("@", 1)) for cid in compiled.check_ids()]
-    verdict_streams.append(
-        P1.verdicts_from_violations(viol1, all_parts, checks1)
-        .withColumn("pass_id", F.lit("rows"))
-    )
+    counted.append(viol1.withColumn("pass_id", F.lit("rows")))
+    part_checks += [("rows", cid, *cid.split("@", 1)) for cid in compiled.check_ids()]
     sink1 = viol1 if top_k is None else P1.bound_top_k(viol1, top_k)
     streams.append(sink1.withColumn("pass_id", F.lit("rows")))
 
@@ -349,11 +346,9 @@ def validate_table(
     for key_cols in spec.table_checks.unique:
         v = _persist(P2.uniqueness_violations(scope, list(key_cols), key_col=key_col, part_col=part_col))
         streams.append(v.withColumn("pass_id", F.lit("unique")))
+        counted.append(streams[-1])
         path = "/" + ",".join(key_cols)
-        verdict_streams.append(
-            _single_check_verdicts(v, scope_parts, f"uniqueItems@{path}", "uniqueItems", path)
-            .withColumn("pass_id", F.lit("unique"))
-        )
+        scope_checks.append(("unique", f"uniqueItems@{path}", "uniqueItems", path))
 
     # P3 — referential (reads the fused cache, never parquet)
     for ref in spec.table_checks.references:
@@ -366,11 +361,26 @@ def validate_table(
             strategy=ref.get("strategy", "broadcast"), dim_name=dim_name,
         ))
         streams.append(v.withColumn("pass_id", F.lit("refs")))
+        counted.append(streams[-1])
         path = f"/{ref['column']}->{dim_name}.{ref['key']}"
-        verdict_streams.append(
-            _single_check_verdicts(v, all_parts, f"references@{path}", "references", path)
-            .withColumn("pass_id", F.lit("refs"))
-        )
+        part_checks.append(("refs", f"references@{path}", "references", path))
+
+    # P5 — sampled fidelity (B28): own scan, the only pass touching `bytes`;
+    # P7 — container-header sniff (B53): header fields only, no decode.
+    # Each is judged as ONE check: every row of its stream counts toward it.
+    for pass_id, fn, path in (("fidelity", fidelity_fn, "/"), ("headers", headers_fn, "/bytes")):
+        if fn is None:
+            continue
+        v = _persist(fn(fact))
+        streams.append(v.withColumn("pass_id", F.lit(pass_id)))
+        counted.append(streams[-1].withColumns(
+            {"keyword": F.lit(pass_id), "path": F.lit(path)}))
+        part_checks.append((pass_id, f"{pass_id}@{path}", pass_id, path))
+
+    # THE verdict grid (B18): one zero-filled count over every stream above
+    verdict_streams = [P1.verdicts_from_violations(
+        reduce(DataFrame.unionByName, counted),
+        [(all_parts, part_checks), (scope_parts, scope_checks)])]
 
     # P4 — drift (histograms over the fused cache)
     drift_df = None
@@ -403,18 +413,6 @@ def validate_table(
         fields = {f.name: f.dataType for f in fact.schema.fields}
         a_cols = [c for c in acfg["columns"]
                   if c not in fields or fields[c].typeName() != "binary"]
-
-    # P5 — sampled fidelity (B28): own scan, the only pass touching `bytes`;
-    # P7 — container-header sniff (B53): header fields only, no decode
-    for pass_id, fn, path in (("fidelity", fidelity_fn, "/"), ("headers", headers_fn, "/bytes")):
-        if fn is None:
-            continue
-        v = _persist(fn(fact))
-        streams.append(v.withColumn("pass_id", F.lit(pass_id)))
-        verdict_streams.append(
-            _single_check_verdicts(v, all_parts, f"{pass_id}@{path}", pass_id, path)
-            .withColumn("pass_id", F.lit(pass_id))
-        )
 
     # fused stats (B14/B15) — from the same cached scan, never `bytes`
     qchecks = spec.table_checks.quantiles
@@ -473,36 +471,29 @@ def validate_table(
 
         prof = P6.profile_from_wide(wide_agg, a_cols)
         anomaly_df = P6.anomaly_flags(prof, z_max=acfg.get("z_max", 3.5))
-        flagged = P6.anomaly_verdicts(anomaly_df).withColumn("pass_id", F.lit("anomaly"))
+        flagged = P6.anomaly_verdicts(anomaly_df)
         # healthy partitions still get explicit pass rows (per-partition
-        # pass/fail contract): the passed rows of the one-check grid
-        healthy = (
-            _single_check_verdicts(flagged, all_parts, "anomaly@", "anomaly", "/")
-            .where(F.col("passed"))
-            .withColumn("pass_id", F.lit("anomaly"))
-        )
-        verdict_streams.append(flagged.unionByName(healthy))
+        # pass/fail contract): every partition with no flag
+        healthy = all_parts.join(flagged, "part_id", "left_anti").select(
+            "part_id", F.lit("anomaly@").alias("check_id"),
+            F.lit("anomaly").alias("keyword"), F.lit("/").alias("path"),
+            F.lit(True).alias("passed"), F.lit(0).cast("long").alias("n_violations"))
+        verdict_streams.append(
+            flagged.unionByName(healthy).withColumn("pass_id", F.lit("anomaly")))
 
     # quantile-bound verdicts (B42 as a CHECK TYPE): the merged table-wide
     # sketch value against the spec'd bound — metadata-scale joins only
     spark = fact.sparkSession
     quantile_verdicts = None
     if qchecks:
-        from .passes.stats import merge_quantiles
-
         qs = tuple(sorted({float(q["q"]) for q in qchecks}))
-        merged = merge_quantiles(stats_df, qs)
-
-        def _qname(q: float) -> str:
-            return "q" + f"{q * 100:g}".replace(".", "_")
-
-        melted = merged.selectExpr(
+        melted = P1.merge_quantiles(stats_df, qs).selectExpr(
             "column",
             f"stack({len(qs)}, "
-            + ", ".join(f"'{_qname(q)}', {_qname(q)}" for q in qs)
+            + ", ".join(f"'{P1.quantile_name(q)}', {P1.quantile_name(q)}" for q in qs)
             + ") as (qname, value)")
         checks_df = spark.createDataFrame(
-            [(q["column"], float(q["q"]), _qname(float(q["q"])),
+            [(q["column"], float(q["q"]), P1.quantile_name(float(q["q"])),
               float(q["min"]) if "min" in q else None,
               float(q["max"]) if "max" in q else None)
              for q in qchecks],
@@ -550,16 +541,9 @@ def validate_table(
             F.col("n_nulls").cast("long").alias("n_violations"),
         ).withColumn("pass_id", F.lit("null_rate")))
 
-    violations = streams[0]
-    for s in streams[1:]:
-        violations = violations.unionByName(s)
-    verdicts = verdict_streams[0]
-    for v in verdict_streams[1:]:
-        verdicts = verdicts.unionByName(v)
-
     return ValidationResult(
-        violations=violations,
-        verdicts=verdicts,
+        violations=reduce(DataFrame.unionByName, streams),
+        verdicts=reduce(DataFrame.unionByName, verdict_streams),
         stats=stats_df,
         drift_metrics=drift_df,
         anomaly_flags=anomaly_df,

@@ -20,6 +20,8 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -49,17 +51,13 @@ def row_violations(
     compiled: CompiledTableSpec,
     key_col: str,
     part_col: str = "part_id",
-    top_k: int | None = None,
 ) -> DataFrame:
-    """Row-level violations: one narrow projection → explode → (optional)
-    top-k per (partition, keyword). Returns VIOLATION_COLS schema."""
-    v = explode_violations(
+    """Row-level violations: one narrow projection → explode. Returns
+    VIOLATION_COLS schema (bound it with ``bound_top_k`` for a sink)."""
+    return explode_violations(
         df, [F.col(part_col).alias("part_id"),
              F.col(key_col).cast("string").alias("row_key")],
         compiled.violations_array())
-    if top_k is not None:
-        v = bound_top_k(v, top_k)
-    return v
 
 
 def bound_top_k(violations: DataFrame, top_k: int) -> DataFrame:
@@ -72,13 +70,6 @@ def bound_top_k(violations: DataFrame, top_k: int) -> DataFrame:
         violations.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= top_k)
         .drop("_rn")
-    )
-
-
-def violation_counts(violations: DataFrame) -> DataFrame:
-    """Exact per-(partition, check) counts — computed BEFORE top-k bounding."""
-    return violations.groupBy("part_id", "keyword", "path").agg(
-        F.count(F.lit(1)).alias("n_violations")
     )
 
 
@@ -214,26 +205,28 @@ def column_stats(
                       with_sketches=with_sketches, with_quantiles=with_quantiles)
 
 
+def quantile_name(q: float) -> str:
+    """The column name of quantile ``q`` in ``merge_quantiles`` output:
+    q ×100, dots becoming underscores (0.5 → q50, 0.999 → q99_9)."""
+    return "q" + f"{q * 100:g}".replace(".", "_")
+
+
 def merge_quantiles(
     stats: DataFrame, quantiles: tuple[float, ...] = (0.5, 0.9, 0.99)
 ) -> DataFrame:
     """Roll partition-level KLL sketches up table-wide (resume-safe merge —
     the quantile analogue of ``merge_sketches``). Input must come from
     ``column_stats(..., with_quantiles=True)``; non-numeric columns (null
-    sketches) are skipped. Output: column, q50, q90, q99, ... (quantile ×100,
-    dots becoming underscores: 0.5 → q50, 0.999 → q99_9)."""
+    sketches) are skipped. Output: column, then one column per quantile
+    named by ``quantile_name`` (q50, q90, q99, ...)."""
     merged = (
         stats.where(F.col("kll_sketch").isNotNull())
         .groupBy("column")
         .agg(F.kll_merge_agg_double("kll_sketch").alias("_m"))
     )
-
-    def _name(q: float) -> str:
-        return "q" + f"{q * 100:g}".replace(".", "_")
-
     return merged.select(
         "column",
-        *[F.kll_sketch_get_quantile_double("_m", F.lit(q)).alias(_name(q))
+        *[F.kll_sketch_get_quantile_double("_m", F.lit(q)).alias(quantile_name(q))
           for q in quantiles],
     )
 
@@ -249,32 +242,39 @@ def merge_sketches(stats: DataFrame) -> DataFrame:
 
 def verdicts_from_violations(
     violations: DataFrame,
-    all_part_ids: DataFrame,
-    checks: list[tuple[str, str, str]],
+    groups: list[tuple[DataFrame, list[tuple[str, str, str, str]]]],
 ) -> DataFrame:
-    """B18: fold a violation stream into a dense per-(partition, check)
-    verdict matrix — parts×checks with zero violations must appear as
-    passed=true. The one place the engine zero-fills verdict rows.
+    """B18: THE verdict grid — fold every violation stream into one dense
+    per-(partition, check) verdict matrix; parts×checks with zero
+    violations appear as passed=true. The one place the engine zero-fills
+    verdict rows: one count aggregation and one join for all checks.
 
-    ``violations``: rows with part_id, keyword, path; a row counts toward
-    the check with the same keyword and path (exact counts: pass the
-    stream before top-k bounding).
-    ``all_part_ids``: DataFrame with a single ``part_id`` column (distinct).
-    ``checks``: (check_id, keyword, path) triples.
+    ``violations``: exact-count rows (part_id, pass_id, keyword, path); a
+    row counts toward the check of the same pass_id, keyword and path (pass
+    streams before top-k bounding). ``pass_id`` in the key keeps a row
+    check apart from a table check of the same keyword and path.
+    ``groups``: (parts, checks) pairs — each check (pass_id, check_id,
+    keyword, path) is judged on every partition of ``parts`` (a DataFrame
+    with a single, distinct ``part_id`` column).
+
+    Output: part_id, check_id, keyword, path, passed, n_violations, pass_id.
     """
-    entries = [F.struct(F.lit(cid).alias("check_id"), F.lit(kw).alias("keyword"),
-                        F.lit(path).alias("path"))
-               for cid, kw, path in checks]
-    # parts × checks grid as a literal array per part: metadata-scale, no
-    # join, no fact-table data (the cast types an empty check list)
-    grid = all_part_ids.select(
-        "part_id",
-        F.explode(F.array(*entries).cast(
-            "array<struct<check_id:string,keyword:string,path:string>>")).alias("c"),
-    ).select("part_id", "c.*")
+    key = ["part_id", "pass_id", "keyword", "path"]
+    grids = []
+    for parts, checks in groups:
+        entries = [F.struct(F.lit(pid).alias("pass_id"), F.lit(cid).alias("check_id"),
+                            F.lit(kw).alias("keyword"), F.lit(path).alias("path"))
+                   for pid, cid, kw, path in checks]
+        # parts × checks as a literal array per part: metadata-scale, no
+        # join, no fact-table data (the cast types an empty check list)
+        grids.append(parts.select("part_id", F.explode(F.array(*entries).cast(
+            "array<struct<pass_id:string,check_id:string,keyword:string,path:string>>"))
+            .alias("c")).select("part_id", "c.*"))
+    counts = violations.groupBy(*key).agg(F.count(F.lit(1)).alias("n_violations"))
     return (
-        grid.join(violation_counts(violations), ["part_id", "keyword", "path"], "left")
+        reduce(DataFrame.unionByName, grids).join(counts, key, "left")
         .withColumn("n_violations", F.coalesce(F.col("n_violations"), F.lit(0)))
         .withColumn("passed", F.col("n_violations") == 0)
-        .select("part_id", "check_id", "keyword", "path", "passed", "n_violations")
+        .select("part_id", "check_id", "keyword", "path", "passed", "n_violations",
+                "pass_id")
     )

@@ -2,9 +2,10 @@
 
 A full job run is the reference. Then a "killed" run is simulated: the
 manifest says half the partitions completed and the output dir holds only
-those partitions' violations. Re-running with --resume must process only
-the pending partitions and leave a combined output identical to the full
-run (dynamic partition overwrite = exactly-once effect, SURVEY.md B4/B7).
+those partitions' violations, stats and verdicts. Re-running with --resume
+must process only the pending partitions and leave a combined output
+identical to the full run (dynamic partition overwrite = exactly-once
+effect, SURVEY.md B4/B7).
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from jsonschema_spark import fixtures as FX
 from jsonschema_spark import job
@@ -58,6 +60,15 @@ def violations_set(spark, path):
     }
 
 
+def verdicts_set(spark, path):
+    """The per-partition verdicts of the passes judged in the verdict grid."""
+    return {
+        (r.pass_id, r.part_id, r.check_id, r.passed, r.n_violations)
+        for r in spark.read.parquet(path).collect()
+        if r.pass_id in ("rows", "unique", "refs")
+    }
+
+
 def test_kill_and_resume(spark, workspace):
     ws = workspace
 
@@ -80,6 +91,16 @@ def test_kill_and_resume(spark, workspace):
         .write.mode("overwrite").partitionBy("pass_id", "part_id")
         .parquet(str(ws / "out_half" / "violations"))
     )
+    # the done parts' verdicts too, with their uniqueness verdicts made
+    # stale: P2 is table-wide, so a resume must re-judge it on EVERY part
+    full_verdicts = spark.read.parquet(str(ws / "out_full" / "verdicts"))
+    (
+        full_verdicts.where(full_verdicts.part_id.isin(DONE_PARTS))
+        .withColumn("passed", F.when(F.col("pass_id") == "unique", ~F.col("passed"))
+                    .otherwise(F.col("passed")))
+        .write.mode("overwrite").partitionBy("pass_id", "part_id")
+        .parquet(str(ws / "out_half" / "verdicts"))
+    )
     full_stats = spark.read.parquet(str(ws / "out_full" / "stats"))
     (
         full_stats.where(full_stats.part_id.isin(DONE_PARTS))
@@ -95,6 +116,8 @@ def test_kill_and_resume(spark, workspace):
     # combined output identical to the full run — nothing lost, nothing doubled
     got = violations_set(spark, str(ws / "out_half" / "violations"))
     assert got == ref
+    assert (verdicts_set(spark, str(ws / "out_half" / "verdicts"))
+            == verdicts_set(spark, str(ws / "out_full" / "verdicts")))
 
     # manifest now covers every partition
     done = set(Manifest(spark, str(ws / "man_half")).completed_parts("full"))
@@ -118,8 +141,6 @@ def test_string_partition_column(spark, tmp_path):
     end-to-end: manifest record, resume filter (typed IN-list), CLI job.
     Regression: the manifest used to cast part_id with int() and crashed
     on '5-LOW'."""
-    from pyspark.sql import functions as F
-
     table = str(tmp_path / "t")
     (
         spark.range(200)

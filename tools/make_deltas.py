@@ -16,15 +16,24 @@ import json
 import os
 import sys
 
+_ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
 # registry merge map (VERDICT r4 #7): old query name -> carrier query; keys
 # starting with "_" are documentation
-_MERGE_MAP_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "..", "BENCH", "merge_map.json")
+_MERGE_MAP_PATH = os.path.join(_ROOT, "BENCH", "merge_map.json")
 
 
 def load(path: str) -> dict:
+    """A bench record's compact line. Its ``queries`` hold the 12 headline
+    queries only; when the line names a ``full_record`` that exists
+    relative to the repo root, that archive's ``queries`` (the whole
+    registry) replace them."""
     d = json.load(open(path))
-    return d["parsed"] if "parsed" in d else d
+    d = d["parsed"] if "parsed" in d else d
+    full = d.get("full_record") and os.path.join(_ROOT, d["full_record"])
+    if full and os.path.isfile(full):
+        with open(full) as f:
+            d = {**d, "queries": json.load(f)["queries"]}
+    return d
 
 
 def load_merge_map() -> dict[str, str]:
