@@ -2,8 +2,12 @@
 
 This is the engine's "compiler backend" (SURVEY.md §2 B5): every draft-03/04
 keyword from Part A becomes a JVM-side Column expression — whole-stage
-codegen, zero per-row Python (BASELINE.json:15). One compiled table spec
-yields:
+codegen, zero per-row Python (BASELINE.json:15). There is one object
+compiler, ``compile_node``: a table row is one object whose properties are
+its columns, so ``compile_table`` compiles the spec's root with it over a
+struct of the columns, exactly as a nested struct column is compiled; an
+``x-json`` string value is dispatched to ``compile_json_node`` from there.
+One compiled table spec yields:
 
 - ``row_checks``: list of CheckExpr (keyword, path, null-safe predicate,
   offending-value column) — evaluated in a single ``select`` producing an
@@ -19,7 +23,7 @@ predicate is null-forgiving via ``coalesce(pred, true)``.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 from typing import Any
 
@@ -45,7 +49,6 @@ VIOLATION_STRUCT = T.StructType(
 class CheckExpr:
     keyword: str
     path: str            # JSON-Pointer-style path, e.g. "/w"
-    column: str          # top-level source column the check reads
     ok: Column           # True/Null = row passes (null-forgiving already applied)
     value: Column        # offending value rendered as string
 
@@ -136,7 +139,7 @@ def _lit_eq(col: Column, dt: T.DataType | None, v: Any) -> Column | None:
 def node_valid(node: SpecNode, col: Column, dt: T.DataType | None) -> Column:
     """Single boolean Column: does `col` satisfy the whole (sub)schema?
     Used inside combinators (anyOf/oneOf/not) and array lambdas."""
-    checks = compile_node(node, col, path="", column="<sub>", dt=dt)
+    checks = compile_node(node, col, path="", dt=dt)
     if not checks:
         return F.lit(True)
     return reduce(lambda a, b: a & b, (c.ok for c in checks))
@@ -270,14 +273,25 @@ def _contains_subschemas(
 
 
 def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
-    node: SpecNode, col: Column, path: str, column: str, dt: T.DataType | None
+    node: SpecNode, col: Column, path: str, dt: T.DataType | None
 ) -> list[CheckExpr]:
-    """Compile one SpecNode against one Column. Returns null-forgiving checks."""
+    """Compile one SpecNode against one Column. Returns null-forgiving checks.
+
+    A check's value defaults to ``col`` rendered as a string, except at the
+    root (``path == ""``): there ``col`` is the whole table row (or JSON
+    document), and rendering it would make the scan read every column."""
+    if node.meta.get("x-json"):
+        # engine extension: the value is a JSON-STRING payload, compiled by
+        # the same compile_json_node as validate_json_rows
+        if not isinstance(dt, T.StringType):
+            name = path.rsplit("/", 1)[-1]
+            raise CompileError(f"x-json column {name!r} must be a string column")
+        return compile_json_node(node, col, path)
     out: list[CheckExpr] = []
-    sval = col.cast("string")
+    sval = col.cast("string") if path else F.lit(None).cast("string")
 
     def add(keyword: str, ok: Column, p: str | None = None, value: Column | None = None):
-        out.append(CheckExpr(keyword, p if p is not None else path, column,
+        out.append(CheckExpr(keyword, p if p is not None else path,
                              ok, value if value is not None else sval))
 
     # --- A1 type ---------------------------------------------------------
@@ -506,39 +520,41 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
     # --- A15–A17 objects -----------------------------------------------------
     if isinstance(dt, T.StructType):
         fields = {f.name: f.dataType for f in dt.fields}
-        if node.required is not None:
-            for name in node.required:
-                if name in fields:
-                    add("required", col.isNull() | col.getField(name).isNotNull(),
-                        p=f"{path}/{name}", value=F.lit(None).cast("string"))
-                else:
-                    add("required", col.isNull(), p=f"{path}/{name}",
-                        value=F.lit(None).cast("string"))
+
+        def has(name: str) -> Column:
+            return col.getField(name).isNotNull() if name in fields else F.lit(False)
+
+        def require(name: str) -> None:
+            add("required", col.isNull() | has(name), p=f"{path}/{name}",
+                value=F.lit(None).cast("string"))
+
+        for name in node.required or ():
+            require(name)
         for name, sub in node.properties.items():
             if name in fields:
-                out.extend(compile_node(sub, col.getField(name), f"{path}/{name}", column, fields[name]))
-                if sub.d3_required:
-                    add("required", col.isNull() | col.getField(name).isNotNull(),
-                        p=f"{path}/{name}", value=F.lit(None).cast("string"))
-            elif sub.d3_required or (node.required and name in node.required):
-                pass  # handled above / missing field => required already emitted
+                out.extend(compile_node(sub, col.getField(name), f"{path}/{name}", fields[name]))
+            if sub.d3_required:
+                require(name)
+        for pat, sub in node.pattern_properties.items():
+            # names are static: a pattern applies to every field it matches,
+            # `properties` names included (as in E1)
+            for name in fields:
+                if re.search(pat, name):
+                    out.extend(compile_node(sub, col.getField(name), f"{path}/{name}", fields[name]))
         if node.additional_properties is False:
-            extras = [n for n in fields if n not in node.properties]
-            import re as _re
-            extras = [n for n in extras
-                      if not any(_re.search(p, n) for p in node.pattern_properties)]
+            extras = [n for n in fields if n not in node.properties
+                      and not any(re.search(p, n) for p in node.pattern_properties)]
             for n in extras:
                 add("additionalProperties", col.isNull() | col.getField(n).isNull(),
                     p=f"{path}/{n}", value=col.getField(n).cast("string"))
-        if node.min_properties is not None:
+        if node.min_properties is not None or node.max_properties is not None:
             # struct arity is static; count non-null fields at runtime
             cnt = reduce(lambda a, b: a + b,
-                         [col.getField(f).isNotNull().cast("int") for f in fields]) if fields else F.lit(0)
-            add("minProperties", _forgive_null(col, cnt >= node.min_properties))
-        if node.max_properties is not None:
-            cnt = reduce(lambda a, b: a + b,
-                         [col.getField(f).isNotNull().cast("int") for f in fields]) if fields else F.lit(0)
-            add("maxProperties", _forgive_null(col, cnt <= node.max_properties))
+                         [has(f).cast("int") for f in fields]) if fields else F.lit(0)
+            if node.min_properties is not None:
+                add("minProperties", _forgive_null(col, cnt >= node.min_properties))
+            if node.max_properties is not None:
+                add("maxProperties", _forgive_null(col, cnt <= node.max_properties))
         if node.property_names is not None:
             # struct field names are static — validate each NAME at compile
             # time with the local evaluator (same SpecNode semantics by
@@ -551,11 +567,10 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
         for name, dep in node.dependencies.items():
             if name not in fields:
                 continue
-            present = col.getField(name).isNotNull()
+            present = has(name)
             if isinstance(dep, tuple):
                 for d in dep:
-                    need = col.getField(d).isNotNull() if d in fields else F.lit(False)
-                    add("dependencies", _forgive_null(col, F.when(present, need).otherwise(F.lit(True))),
+                    add("dependencies", _forgive_null(col, F.when(present, has(d)).otherwise(F.lit(True))),
                         p=f"{path}/{d}")
             else:
                 add("dependencies",
@@ -586,7 +601,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
                     p=f"{path}/{name}", value=F.lit(None).cast("string"))
         for name, sub in node.properties.items():
             v = F.element_at(col, F.lit(name))
-            out.extend(compile_node(sub, v, f"{path}/{name}", column, dt.valueType))
+            out.extend(compile_node(sub, v, f"{path}/{name}", dt.valueType))
         for pat, sub in node.pattern_properties.items():
             jpat = sqlglue.to_java_regex(pat)
             ok = F.forall(
@@ -595,7 +610,6 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             )
             add("patternProperties", _forgive_null(col, ok), p=f"{path}")
         if node.additional_properties is False:
-            import re as _re  # noqa: F401 — compile-time only
             names = list(node.properties)
             pats = [sqlglue.to_java_regex(p) for p in node.pattern_properties]
             def _extra(k: Column) -> Column:
@@ -639,7 +653,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
     # --- A18–A21 combinators ---------------------------------------------------
     if node.all_of is not None:
         for sub in node.all_of:
-            out.extend(compile_node(sub, col, path, column, dt))
+            out.extend(compile_node(sub, col, path, dt))
     if node.any_of is not None:
         pred = reduce(lambda a, b: a | b, [node_valid(s, col, dt) for s in node.any_of])
         add("anyOf", _forgive_null(col, pred))
@@ -669,7 +683,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
 @dataclass
 class CompiledTableSpec:
     checks: list[CheckExpr]
-    columns: list[str]                 # source columns the row pass must read
+    columns: list[str]                 # columns the spec names; the stats pass judges these
     spec: Spec
 
     def violations_array(self) -> Column:
@@ -762,9 +776,7 @@ def spec_struct_type(node: SpecNode) -> T.DataType:
     return T.StringType()
 
 
-def compile_json_node(
-    node: SpecNode, raw: Column, path: str, column: str
-) -> list[CheckExpr]:
+def compile_json_node(node: SpecNode, raw: Column, path: str) -> list[CheckExpr]:
     """Compile ``node`` against a JSON-STRING column ``raw``: the payload is
     parsed once with ``from_json`` into the node-derived type and every
     keyword runs as a codegen predicate on the parsed value (SURVEY B25/B44).
@@ -775,7 +787,9 @@ def compile_json_node(
     turns anything else into a null-fielded struct, which would fabricate
     ``required`` violations, so every other payload reaches the keyword
     checks as NULL, which ``compile_node`` forgives (draft-4: object keywords
-    apply only to objects)."""
+    apply only to objects). ``node``'s ``x-json`` flag, if any, is dropped
+    before the parsed value is compiled."""
+    node = replace(node, meta={k: v for k, v in node.meta.items() if k != "x-json"})
     dt = spec_struct_type(node)
     parsed = F.try_parse_json(raw).isNotNull()
     # a parseable value is an object iff its first non-whitespace char is
@@ -783,85 +797,73 @@ def compile_json_node(
     is_object = raw.rlike(r"^[ \t\r\n]*\{")
     ok = parsed & is_object if list(node.type or ()) == ["object"] else parsed
     doc = F.when(parsed & is_object, F.from_json(raw, dt))
-    return [CheckExpr("type", path, column, raw.isNull() | ok, raw),
-            *compile_node(node, doc, path, column, dt)]
+    return [CheckExpr("type", path, raw.isNull() | ok, raw),
+            *compile_node(node, doc, path, dt)]
 
 
 def compile_json_column(spec: Spec, json_col: str) -> CompiledTableSpec:
     """Compile a whole spec against one JSON-STRING column, rooted at ``""``
     — dynamic-schema validation without any per-row Python."""
     return CompiledTableSpec(
-        checks=compile_json_node(spec.root, F.col(json_col), "", json_col),
+        checks=compile_json_node(spec.root, F.col(json_col), ""),
         columns=[json_col], spec=spec)
 
 
+def _in_place(node: SpecNode):
+    """``node`` and, recursively, its in-place applicator subschemas whose
+    property names can evaluate the same instance (allOf/anyOf/oneOf,
+    if/then/else, schema-form dependencies; ``not`` never does)."""
+    yield node
+    for sub in ((node.all_of or ()) + (node.any_of or ()) + (node.one_of or ())
+                + tuple(x for x in (node.if_, node.then_, node.else_) if x is not None)
+                + tuple(d for d in node.dependencies.values()
+                        if isinstance(d, SpecNode))):
+        yield from _in_place(sub)
+
+
 def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
-    """Compile a root object-spec against a flat DataFrame schema: each
-    ``properties`` entry maps to a top-level column (SURVEY.md §1.2)."""
+    """Compile a root object-spec against a flat DataFrame schema.
+
+    The row is one object whose properties are its columns (SURVEY.md
+    §1.2): ``compile_node`` compiles the root once over a struct of the
+    columns, so every keyword means at the root what it means on a nested
+    struct column. ``part_id``, the engine's partition column, is in the
+    row only when the spec names it. Root-level checks carry a NULL value,
+    and Catalyst folds each field access on the row struct back to its
+    column, so the fused scan still reads only the columns a check reads.
+
+    What the table shape decides at compile time raises ``CompileError``:
+    absent required columns, extra columns under a root
+    additionalProperties/unevaluatedProperties false, absent columns under
+    if/then/else, and bad row predicates."""
     root = spec.root
     fields = {f.name: f.dataType for f in schema.fields}
-    checks: list[CheckExpr] = []
-    used: set[str] = set()
-
-    if root.required is not None:
-        for name in root.required:
-            if name in fields:
-                checks.append(CheckExpr("required", f"/{name}", name,
-                                        F.col(name).isNotNull(), F.lit(None).cast("string")))
-                used.add(name)
-            # column absent entirely => static schema violation, raised below
 
     missing = [n for n in (root.required or ()) if n not in fields]
     if missing:
         raise CompileError(f"required columns absent from table schema: {missing}")
-
     for name, sub in root.properties.items():
-        if name not in fields:
-            if sub.d3_required:
-                raise CompileError(f"required column absent: {name}")
-            continue
-        used.add(name)
-        if sub.meta.get("x-json"):
-            # engine extension: the column is a JSON-STRING payload, compiled
-            # by the same compile_json_node as validate_json_rows
-            if not isinstance(fields[name], T.StringType):
-                raise CompileError(f"x-json column {name!r} must be a string column")
-            checks.extend(compile_json_node(sub, F.col(name), f"/{name}", name))
-            continue
-        checks.extend(compile_node(sub, F.col(name), f"/{name}", name, fields[name]))
-        if sub.d3_required:
-            checks.append(CheckExpr("required", f"/{name}", name,
-                                    F.col(name).isNotNull(), F.lit(None).cast("string")))
+        if sub.d3_required and name not in fields:
+            raise CompileError(f"required column absent: {name}")
 
     if root.additional_properties is False:
-        import re as _re
         extras = [
             n for n in fields
             if n not in root.properties
-            and not any(_re.search(p, n) for p in root.pattern_properties)
+            and not any(re.search(p, n) for p in root.pattern_properties)
             and n != "part_id"
         ]
         if extras:
             raise CompileError(f"additionalProperties:false but table has extra columns: {extras}")
 
+    branches = list(_in_place(root))
     if root.unevaluated_properties is False:
-        # table columns are static, so root-level unevaluatedProperties:false
-        # folds to a compile-time column-set check like additionalProperties —
-        # with the draft-2019 twist that names evaluated by ANY applicator
-        # branch count (static over-approximation of branch validity: a
-        # column the spec names somewhere is considered evaluated)
-        def _static_names(nd: SpecNode, acc_names: set, acc_pats: set) -> None:
-            acc_names.update(nd.properties)
-            acc_pats.update(nd.pattern_properties)
-            for sub in ((nd.all_of or ()) + (nd.any_of or ()) + (nd.one_of or ())
-                        + tuple(x for x in (nd.if_, nd.then_, nd.else_) if x is not None)
-                        + tuple(d for d in nd.dependencies.values()
-                                if isinstance(d, SpecNode))):
-                _static_names(sub, acc_names, acc_pats)
-
-        names: set = set()
-        pats: set = set()
-        _static_names(root, names, pats)
+        # table columns are static, so a column that no branch names can
+        # never be evaluated: reject the table at compile time. Columns
+        # that only some branch names get compile_node's runtime
+        # annotation-flow check.
+        names = {n for nd in branches for n in nd.properties}
+        pats = {p for nd in branches for p in nd.pattern_properties}
         extras = [n for n in fields
                   if n not in names and not any(re.search(p, n) for p in pats)
                   and n != "part_id"]
@@ -870,16 +872,7 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
                 "unevaluatedProperties:false but table has columns no schema "
                 f"branch evaluates: {extras}")
 
-    for pat, sub in root.pattern_properties.items():
-        import re as _re
-        for name in fields:
-            if _re.search(pat, name) and name not in root.properties:
-                used.add(name)
-                checks.extend(compile_node(sub, F.col(name), f"/{name}", name, fields[name]))
-
     if root.if_ is not None:
-        # root-level draft-7 conditional over the row: evaluate against a
-        # synthesized row struct so then/else see every referenced column
         cond_cols: set[str] = set()
         for sub in (root.if_, root.then_, root.else_):
             if sub is not None:
@@ -888,14 +881,14 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
         unknown = [c for c in sorted(cond_cols) if c not in fields]
         if unknown:
             raise CompileError(f"if/then/else references absent columns: {unknown}")
-        used.update(cond_cols)
-        # struct over ONLY the referenced columns, so fused-scan pruning holds
-        sub_fields = [f for f in schema.fields if f.name in cond_cols]
-        row_struct = F.struct(*[F.col(f.name).alias(f.name) for f in sub_fields])
-        cond_node = SpecNode(if_=root.if_, then_=root.then_, else_=root.else_)
-        checks.extend(compile_node(cond_node, row_struct, "",
-                                   next(iter(sorted(cond_cols)), "<row>"),
-                                   T.StructType(sub_fields)))
+
+    used = {n for nd in branches for n in (*nd.properties, *(nd.required or ()))
+            if n in fields}
+    used.update(n for nd in branches for p in nd.pattern_properties
+                for n in fields if re.search(p, n))
+    row = [f for f in schema.fields if f.name != "part_id" or f.name in used]
+    checks = compile_node(root, F.struct(*[F.col(f.name) for f in row]), "",
+                          T.StructType(row))
 
     for pred in spec.table_checks.row_predicates:
         name, test = pred["name"], pred["test"]
@@ -903,8 +896,7 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
         if cols is None:
             # conservative identifier scan: any schema field named in the
             # test must survive fused-scan column pruning
-            import re as _re
-            tokens = set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", test))
+            tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", test))
             cols = [c for c in fields if c in tokens]
         unknown = [c for c in cols if c not in fields]
         if unknown:
@@ -918,7 +910,6 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
                 else F.lit(None).cast("string")
         except Exception as exc:
             raise CompileError(f"row-predicate {name!r}: bad SQL expression: {exc}") from exc
-        checks.append(CheckExpr("x-predicate", f"/{name}",
-                                cols[0] if cols else name, ok, show))
+        checks.append(CheckExpr("x-predicate", f"/{name}", ok, show))
 
     return CompiledTableSpec(checks=checks, columns=sorted(used), spec=spec)

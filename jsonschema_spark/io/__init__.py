@@ -1,3 +1,3 @@
-from .tables import load_fact_table, load_dim_table
+from .tables import load_fact_table
 
-__all__ = ["load_fact_table", "load_dim_table"]
+__all__ = ["load_fact_table"]

@@ -15,7 +15,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def load_fact_table(
@@ -40,13 +39,3 @@ def load_fact_table(
     if columns is not None:
         df = df.select(*columns)
     return df
-
-
-def load_dim_table(
-    spark: SparkSession, location: str, fmt: str | None = None,
-    broadcast_hint: bool = True,
-) -> DataFrame:
-    """Load a dimension table; small dims get the broadcast hint so the
-    referential anti-joins never shuffle the fact side (B9)."""
-    df = load_fact_table(spark, location, fmt)
-    return F.broadcast(df) if broadcast_hint else df

@@ -73,8 +73,6 @@ def bound_top_k(violations: DataFrame, top_k: int) -> DataFrame:
     )
 
 
-STAT_FIELDS = ["n_rows", "n_nulls", "min_val", "max_val", "n_distinct_approx", "hll_sketch"]
-
 _NUMERIC_TYPENAMES = (
     "byte", "short", "integer", "long", "float", "double", "decimal",
 )

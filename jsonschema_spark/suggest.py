@@ -29,7 +29,6 @@ driver query has an exact DuckDB oracle twin):
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -174,8 +173,3 @@ def suggest_spec(
     if required:
         out["required"] = sorted(required)
     return out
-
-
-def suggest_spec_json(df: DataFrame, **kw: Any) -> str:
-    """Canonical (sorted-keys) JSON rendering, for golden tests and diffs."""
-    return json.dumps(suggest_spec(df, **kw), sort_keys=True)

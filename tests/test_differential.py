@@ -12,6 +12,10 @@ Documented, intentional divergences (skipped):
 - object instances: flat tables have no object-valued cells (struct columns
   are covered by the golden table tests).
 - heterogeneous arrays: not representable as a Spark array type.
+
+The table root is differential-tested too: a row is one object whose
+properties are its columns, so every object keyword at the root of a table
+spec must flag the same (row, keyword, path) set as E1 over the row dicts.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ import os
 import pytest
 
 from jsonschema_spark.engine import validate_rows
-from jsonschema_spark.local import is_valid
+from jsonschema_spark.local import is_valid, validate
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 CORPUS = os.path.join(HERE, "conformance")
@@ -85,6 +89,68 @@ def test_corpus_agreement(spark, schema, data, valid, stype):
     viols = validate_rows(df, wrapped_schema, keys=["id"])
     e2 = viols.count() == 0
     assert e2 == e1, f"E2 (Spark) disagrees with E1: violations={viols.collect()}"
+
+
+# ------------------------------------------------------------------ table root
+
+ROOT_ROWS = [
+    (1, 1, "ab", 5, (1, "q", 2)),
+    (2, -3, None, None, (-1, None, None)),
+    (3, None, "zzzz", 10, None),
+    (4, 7, "b", None, (None, "long-string", 9)),
+    (5, None, None, None, None),
+    (6, 0, "abc", -1, (5, "", -4)),
+    (7, 2, "ab", 3, (None, None, None)),
+]
+ROOT_DDL = "id long, a long, b string, c long, s struct<x_a: long, x_b: string, y: long>"
+
+ROOT_SPECS = {
+    "allOf": {"allOf": [{"properties": {"a": {"minimum": 0}}}, {"required": ["b"]}]},
+    "anyOf": {"anyOf": [{"required": ["a"]},
+                        {"properties": {"b": {"minLength": 3}}, "required": ["b"]}]},
+    "oneOf": {"oneOf": [{"required": ["a"]}, {"required": ["c"]}]},
+    "not": {"not": {"required": ["c"]}},
+    "if_then_else": {"if": {"properties": {"a": {"minimum": 1}}, "required": ["a"]},
+                     "then": {"required": ["b"]},
+                     "else": {"properties": {"c": {"maximum": 5}}}},
+    "dependencies_array": {"dependencies": {"a": ["b", "c"]}},
+    "dependencies_schema": {"dependencies": {
+        "b": {"properties": {"a": {"minimum": 0}}, "required": ["a"]}}},
+    "minProperties": {"minProperties": 4},
+    "maxProperties": {"maxProperties": 3},
+    "propertyNames": {"propertyNames": {"pattern": "^(id|[abs])$"}},
+    # a pattern also applies to a name that `properties` lists
+    "patternProperties": {"properties": {"a": {"minimum": 0}},
+                          "patternProperties": {"^[ab]$": {"type": "integer"},
+                                                "^a$": {"maximum": 3}}},
+    "unevaluatedProperties": {"properties": {"id": {}, "a": {}, "s": {}},
+                              "anyOf": [{"properties": {"b": {"minLength": 3}}},
+                                        {"properties": {"c": {"minimum": 0}}}],
+                              "unevaluatedProperties": False},
+    # draft-3 boolean `required`: a field the struct type lacks is absent
+    "nested_d3_required": {"properties": {"s": {"properties": {
+        "x_a": {"required": True}, "z": {"required": True}}}}},
+    "nested_patternProperties": {"properties": {"s": {
+        "patternProperties": {"^x_": {"type": "integer"}, "^y$": {"minimum": 0}}}}},
+}
+
+
+def _row_doc(row: dict) -> dict:
+    """A table row as the JSON object E1 sees: a NULL column is an absent key."""
+    return {k: _row_doc(v.asDict()) if hasattr(v, "asDict") else v
+            for k, v in row.items() if v is not None}
+
+
+@pytest.mark.parametrize("name", sorted(ROOT_SPECS))
+def test_table_root_agreement(spark, name):
+    spec = ROOT_SPECS[name]
+    df = spark.createDataFrame(ROOT_ROWS, ROOT_DDL)
+    e2 = {(r["id"], r["keyword"], r["path"])
+          for r in validate_rows(df, spec, keys=["id"]).collect()}
+    e1 = {(r["id"], v.keyword, v.path)
+          for r in df.collect() for v in validate(_row_doc(r.asDict()), spec)}
+    assert e1, f"{name}: no row violates the spec, so the case shows nothing"
+    assert e2 == e1, f"{name}: E2 only {sorted(e2 - e1)}, E1 only {sorted(e1 - e2)}"
 
 
 # --------------------------------------------------------------- property-based

@@ -1150,47 +1150,6 @@ def test_pii_redact_masks_all_and_preserves_clean(spark):
 
 # ------------------------------------- draft-06/07 keywords on the Spark path
 
-def test_if_then_else_flat_table(spark):
-    """Root-level draft-7 conditional compiles against a row struct of ONLY
-    the referenced columns (fused-scan pruning intact)."""
-    from jsonschema_spark.engine import validate_rows
-    from jsonschema_spark.compile_spark import compile_table
-    from jsonschema_spark import spec as specmod
-
-    rows = [(1, "raw", 10, 20), (2, "raw", None, 20), (3, "png", 5000, 20), (4, "png", 50, 20)]
-    df = spark.createDataFrame(rows, "id int, fmt string, w int, h int")
-    spec = {"if": {"properties": {"fmt": {"const": "raw"}}, "required": ["fmt"]},
-            "then": {"required": ["w", "h"]},
-            "else": {"properties": {"w": {"maximum": 100}}}}
-    got = sorted((r["id"], r["keyword"]) for r in validate_rows(df, spec, keys=["id"]).collect())
-    assert got == [(2, "then"), (3, "else")]
-    # pruning: the conditional must not drag unreferenced columns into the scan
-    cts = compile_table(specmod.parse(spec), df.schema)
-    assert "id" not in cts.columns
-
-    # absent column referenced by a conditional fails fast at compile time
-    from jsonschema_spark.compile_spark import CompileError
-    bad = {"if": {"required": ["nope"]}, "then": {"required": ["w"]}}
-    with pytest.raises(CompileError):
-        compile_table(specmod.parse(bad), df.schema)
-
-
-def test_if_then_else_json_payload(spark):
-    """Conditional-only fields (named only in then.required / else.properties)
-    must still materialize in the from_json struct."""
-    from jsonschema_spark.engine import validate_json_rows
-
-    spec = {"if": {"properties": {"fmt": {"const": "raw"}}, "required": ["fmt"]},
-            "then": {"required": ["w", "h"]},
-            "else": {"properties": {"w": {"maximum": 100}}}}
-    rows = [(1, '{"fmt":"raw","w":1,"h":2}'), (2, '{"fmt":"raw","w":1}'),
-            (3, '{"fmt":"png","w":500}'), (4, '{"fmt":"png","w":50}')]
-    df = spark.createDataFrame(rows, "id int, payload string")
-    got = sorted((r["id"], r["keyword"])
-                 for r in validate_json_rows(df, "payload", spec, keys=["id"]).collect())
-    assert got == [(2, "then"), (3, "else")]
-
-
 def test_property_names_map_and_struct(spark):
     from jsonschema_spark.engine import validate_json_rows, validate_rows
 
@@ -1493,23 +1452,6 @@ def test_unevaluated_items_array_column(spark):
              "allOf": [{"items": [{}, {}, {}]}], "unevaluatedItems": False}}}
     got3 = sorted((r["id"], r["keyword"]) for r in validate_rows(df, spec3, keys=["id"]).collect())
     assert got3 == []
-
-
-def test_unevaluated_properties_root_static_check(spark):
-    """Root-level unevaluatedProperties:false folds to a compile-time
-    column-set check (names evaluated by ANY branch count)."""
-    from jsonschema_spark.compile_spark import compile_table, CompileError
-    from jsonschema_spark import spec as specmod
-
-    schema = spark.createDataFrame([(1, "x", 2)], "a int, b string, c int").schema
-    ok_spec = {"properties": {"a": {}},
-               "anyOf": [{"properties": {"b": {}}}, {"properties": {"c": {}}}],
-               "unevaluatedProperties": False}
-    compile_table(specmod.parse(ok_spec), schema)  # no branch misses a column
-
-    bad = {"properties": {"a": {}}, "unevaluatedProperties": False}
-    with pytest.raises(CompileError, match="unevaluatedProperties"):
-        compile_table(specmod.parse(bad), schema)
 
 
 # --------------------------------------------- spec suggestion (suggest.py)
