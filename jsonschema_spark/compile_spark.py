@@ -24,10 +24,11 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, replace
-from functools import reduce
+from functools import cached_property, reduce
 from typing import Any
 
 from pyspark.sql import Column
+from pyspark.sql.classic.column import Column as ClassicColumn
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -187,43 +188,34 @@ def _applicator_guards(
     return out
 
 
-def _covers_field(
-    node: SpecNode, fname: str, col: Column, dt: T.DataType | None
+def _unmatched(names, props, pats) -> list[str]:
+    """The ``names`` that ``props`` does not list and no regex in ``pats``
+    matches: the properties ``additionalProperties`` applies to."""
+    return [n for n in names if n not in props and not any(re.search(p, n) for p in pats)]
+
+
+def _covers(
+    node: SpecNode, key: str | Column, col: Column, dt: T.DataType | None
 ) -> Column | bool:
-    """Is struct field ``fname`` evaluated? True/False when decidable at
-    compile time (names are static), a guard Column otherwise."""
-    if (node.additional_properties is not None or fname in node.properties
-            or any(re.search(rx, fname) for rx in node.pattern_properties)):
+    """Is property ``key`` evaluated? ``key`` is a struct field name, whose
+    static coverage folds to True/False at compile time, or a map-key
+    Column, where static names become ``isin`` and patterns ``rlike``;
+    runtime branch validity adds guard Columns."""
+    if node.additional_properties is not None:
         return True
     terms: list[Column] = []
+    if isinstance(key, str):
+        if key in node.properties or any(re.search(rx, key) for rx in node.pattern_properties):
+            return True
+    else:
+        if node.properties:
+            terms.append(key.isin(*node.properties.keys()))
+        terms.extend(key.rlike(sqlglue.to_java_regex(rx)) for rx in node.pattern_properties)
     for sub, guard in _applicator_guards(node, col, dt):
         # a validated applied branch carrying its own unevaluatedProperties
         # evaluates every name (annotation flow — mirrors local._names_cover)
         c = (True if sub.unevaluated_properties is not None
-             else _covers_field(sub, fname, col, dt))
-        if c is False:
-            continue
-        terms.append(guard if c is True else guard & c)
-    if not terms:
-        return False
-    return reduce(lambda a, b: a | b, terms)
-
-
-def _covers_key(
-    node: SpecNode, kcol: Column, col: Column, dt: T.DataType | None
-) -> Column | bool:
-    """Map form of ``_covers_field``: keys are runtime values, so static
-    names become ``isin`` and patternProperties become ``rlike``."""
-    if node.additional_properties is not None:
-        return True
-    terms: list[Column] = []
-    if node.properties:
-        terms.append(kcol.isin(*node.properties.keys()))
-    for rx in node.pattern_properties:
-        terms.append(kcol.rlike(sqlglue.to_java_regex(rx)))
-    for sub, guard in _applicator_guards(node, col, dt):
-        c = (True if sub.unevaluated_properties is not None
-             else _covers_key(sub, kcol, col, dt))
+             else _covers(sub, key, col, dt))
         if c is False:
             continue
         terms.append(guard if c is True else guard & c)
@@ -277,9 +269,9 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
 ) -> list[CheckExpr]:
     """Compile one SpecNode against one Column. Returns null-forgiving checks.
 
-    A check's value defaults to ``col`` rendered as a string, except at the
-    root (``path == ""``): there ``col`` is the whole table row (or JSON
-    document), and rendering it would make the scan read every column."""
+    A check's value defaults to ``col`` rendered as a string, except when
+    ``col`` is the whole table row (``_TableRow``): rendering it would make
+    the scan read every column, so its own checks carry a NULL value."""
     if node.meta.get("x-json"):
         # engine extension: the value is a JSON-STRING payload, compiled by
         # the same compile_json_node as validate_json_rows
@@ -288,7 +280,8 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             raise CompileError(f"x-json column {name!r} must be a string column")
         return compile_json_node(node, col, path)
     out: list[CheckExpr] = []
-    sval = col.cast("string") if path else F.lit(None).cast("string")
+    sval = (F.lit(None).cast("string") if isinstance(col, _TableRow)
+            else col.cast("string"))
 
     def add(keyword: str, ok: Column, p: str | None = None, value: Column | None = None):
         out.append(CheckExpr(keyword, p if p is not None else path,
@@ -542,9 +535,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
                 if re.search(pat, name):
                     out.extend(compile_node(sub, col.getField(name), f"{path}/{name}", fields[name]))
         if node.additional_properties is False:
-            extras = [n for n in fields if n not in node.properties
-                      and not any(re.search(p, n) for p in node.pattern_properties)]
-            for n in extras:
+            for n in _unmatched(fields, node.properties, node.pattern_properties):
                 add("additionalProperties", col.isNull() | col.getField(n).isNull(),
                     p=f"{path}/{n}", value=col.getField(n).cast("string"))
         if node.min_properties is not None or node.max_properties is not None:
@@ -582,7 +573,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             # failing the unevaluatedProperties subschema)
             up = node.unevaluated_properties
             for f in fields:
-                covf = _covers_field(node, f, col, dt)
+                covf = _covers(node, f, col, dt)
                 if covf is True:
                     continue
                 fcol = col.getField(f)
@@ -640,7 +631,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             val_dt = dt.valueType
 
             def _key_ok(k: Column) -> Column:
-                c = _covers_key(node, k, col, dt)
+                c = _covers(node, k, col, dt)
                 t = F.lit(False) if c is False else (F.lit(True) if c is True else c)
                 if isinstance(up, SpecNode):
                     t = t | F.coalesce(
@@ -821,6 +812,32 @@ def _in_place(node: SpecNode):
         yield from _in_place(sub)
 
 
+def _names(node: SpecNode) -> set[str]:
+    """The property names ``node`` lists in ``properties`` or ``required``."""
+    return {*node.properties, *(node.required or ())}
+
+
+class _TableRow(ClassicColumn):
+    """The table row as one object value: a struct of ``fields`` that is
+    never null and whose field access resolves straight to the column.
+    A check thus carries only the columns it reads; the struct itself is
+    built only where a keyword reads the row as a whole."""
+
+    def __init__(self, fields: list[T.StructField]):
+        self._fields = fields
+
+    @cached_property
+    def _jc(self):
+        return F.struct(*[self.getField(f.name).alias(f.name) for f in self._fields])._jc
+
+    def getField(self, name: str) -> Column:
+        # quoted: dots and backticks in a column name are part of the name
+        return F.col("`" + name.replace("`", "``") + "`")
+
+    def isNull(self) -> Column:
+        return F.lit(False)
+
+
 def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
     """Compile a root object-spec against a flat DataFrame schema.
 
@@ -828,9 +845,10 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
     §1.2): ``compile_node`` compiles the root once over a struct of the
     columns, so every keyword means at the root what it means on a nested
     struct column. ``part_id``, the engine's partition column, is in the
-    row only when the spec names it. Root-level checks carry a NULL value,
-    and Catalyst folds each field access on the row struct back to its
-    column, so the fused scan still reads only the columns a check reads.
+    row only when the spec names it. A field access on the row
+    (``_TableRow``) is the column itself and the row's own checks carry a
+    NULL value, so a check names only the columns it reads and the fused
+    scan reads no others.
 
     What the table shape decides at compile time raises ``CompileError``:
     absent required columns, extra columns under a root
@@ -838,6 +856,7 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
     if/then/else, and bad row predicates."""
     root = spec.root
     fields = {f.name: f.dataType for f in schema.fields}
+    cols = [n for n in fields if n != "part_id"]
 
     missing = [n for n in (root.required or ()) if n not in fields]
     if missing:
@@ -847,12 +866,7 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
             raise CompileError(f"required column absent: {name}")
 
     if root.additional_properties is False:
-        extras = [
-            n for n in fields
-            if n not in root.properties
-            and not any(re.search(p, n) for p in root.pattern_properties)
-            and n != "part_id"
-        ]
+        extras = _unmatched(cols, root.properties, root.pattern_properties)
         if extras:
             raise CompileError(f"additionalProperties:false but table has extra columns: {extras}")
 
@@ -864,31 +878,23 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
         # annotation-flow check.
         names = {n for nd in branches for n in nd.properties}
         pats = {p for nd in branches for p in nd.pattern_properties}
-        extras = [n for n in fields
-                  if n not in names and not any(re.search(p, n) for p in pats)
-                  and n != "part_id"]
+        extras = _unmatched(cols, names, pats)
         if extras:
             raise CompileError(
                 "unevaluatedProperties:false but table has columns no schema "
                 f"branch evaluates: {extras}")
 
     if root.if_ is not None:
-        cond_cols: set[str] = set()
-        for sub in (root.if_, root.then_, root.else_):
-            if sub is not None:
-                cond_cols.update(sub.properties)
-                cond_cols.update(sub.required or ())
-        unknown = [c for c in sorted(cond_cols) if c not in fields]
+        conds = [sub for sub in (root.if_, root.then_, root.else_) if sub is not None]
+        unknown = sorted(set().union(*map(_names, conds)) - fields.keys())
         if unknown:
             raise CompileError(f"if/then/else references absent columns: {unknown}")
 
-    used = {n for nd in branches for n in (*nd.properties, *(nd.required or ()))
-            if n in fields}
+    used = set().union(*map(_names, branches)) & fields.keys()
     used.update(n for nd in branches for p in nd.pattern_properties
                 for n in fields if re.search(p, n))
     row = [f for f in schema.fields if f.name != "part_id" or f.name in used]
-    checks = compile_node(root, F.struct(*[F.col(f.name) for f in row]), "",
-                          T.StructType(row))
+    checks = compile_node(root, _TableRow(row), "", T.StructType(row))
 
     for pred in spec.table_checks.row_predicates:
         name, test = pred["name"], pred["test"]

@@ -3,9 +3,10 @@ Column predicates.
 
 ``compile_table`` compiles the table root with ``compile_node`` over one
 struct of the row's columns. These tests pin what that struct must not
-cost (Catalyst folds every field access back to a column, so the fused
-scan reads only what some check reads) and the static table-shape checks
-that stay in ``compile_table``.
+cost (a field access on it is the column itself, so analysis carries no
+copy of the struct and the fused scan reads only what some check reads),
+the column names it must survive, and the static table-shape checks that
+stay in ``compile_table``.
 """
 
 from __future__ import annotations
@@ -88,11 +89,14 @@ def test_row_struct_folds_to_columns(spark, tmp_path):
     fact = spark.read.parquet(path)
 
     compiled = compile_table(parse(FX.SPEC_IMAGES), fact.schema)
-    plan = fact.select(compiled.violations_array().alias("v")) \
-        ._jdf.queryExecution().optimizedPlan().toString()
+    qe = fact.select(compiled.violations_array().alias("v"))._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
     assert "named_struct" not in plan
-    # the only struct left is the violation record (keyword, path, value)
-    assert set(re.findall(r"struct\((\w+)", plan)) == {"keyword"}
+    # the only struct left is the violation record (keyword, path, value),
+    # already in the analyzed plan: a field access on the row is its column,
+    # so no check carries a copy of the row struct through analysis
+    for p in (plan, qe.analyzed().toString()):
+        assert set(re.findall(r"struct\((\w+)", p)) == {"keyword"}
 
     cond = {"if": {"properties": {"fmt": {"const": "raw"}}, "required": ["fmt"]},
             "then": {"required": ["w", "h"]},
@@ -124,3 +128,48 @@ def test_x_json_on_a_nested_struct_field(spark):
     bad = spark.createDataFrame([(1, (2,))], "id int, s struct<p: int>")
     with pytest.raises(CompileError, match="x-json column 'p'"):
         compile_table(parse(spec), bad.schema)
+
+
+def test_unnamed_columns_with_awkward_names(spark):
+    """A check names only the columns it reads, and the row quotes every
+    column name. So a column with a dot or backtick in its name, or two
+    that differ only in case, validate as long as no check names them
+    ambiguously; and a root keyword that reads every column reads those
+    names too."""
+    from jsonschema_spark.engine import validate_rows
+
+    df = spark.createDataFrame([(1, 2, 3, 4, 5), (-1, None, None, None, None)],
+                               "id int, `a.b` int, `c``d` int, x int, X int")
+    got = [(r["id"], r["keyword"], r["path"])
+           for r in validate_rows(df, {"properties": {"id": {"minimum": 0}}},
+                                  keys=["id"]).collect()]
+    assert got == [(-1, "minimum", "/id")]
+
+    wide = spark.createDataFrame([(1, 2, 3, 4), (-1, None, None, None)],
+                                 "id int, `a.b` int, `c``d` int, x int")
+    spec = {"maxProperties": 3, "propertyNames": {"pattern": "^[a-z]+$"}}
+    got = sorted((r["id"], r["keyword"], r["path"], r["value"])
+                 for r in validate_rows(wide, spec, keys=["id"]).collect())
+    assert got == [(1, "maxProperties", "", None),
+                   (1, "propertyNames", "/a.b", "a.b"),
+                   (1, "propertyNames", "/c`d", "c`d")]
+
+
+def test_root_level_value(spark):
+    """A root-level check on the table row reports a NULL value (rendering
+    the row would read every column); on a ``validate_json_rows`` document
+    it reports the parsed document rendered as a string."""
+    from jsonschema_spark.engine import validate_json_rows, validate_rows
+
+    spec = {"properties": {"a": {}, "b": {}}, "maxProperties": 1}
+    df = spark.createDataFrame([(1, 1, None), (2, 1, 2)], "id int, a int, b int")
+    got = [(r["id"], r["keyword"], r["path"], r["value"])
+           for r in validate_rows(df, {**spec, "maxProperties": 2},  # id counts
+                                  keys=["id"]).collect()]
+    assert got == [(2, "maxProperties", "", None)]
+
+    docs = spark.createDataFrame([(1, '{"a":1}'), (2, '{"a":1,"b":2}')],
+                                 "id int, payload string")
+    got = [(r["id"], r["keyword"], r["path"], r["value"])
+           for r in validate_json_rows(docs, "payload", spec, keys=["id"]).collect()]
+    assert got == [(2, "maxProperties", "", "{1, 2}")]
