@@ -56,31 +56,22 @@ def sink(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _read_steal() -> tuple[int, int]:
-    """(steal_ticks, total_ticks) from the host-wide /proc/stat cpu line —
-    per-measurement interference context (this host shows up to 11% CPU
-    steal; a timing without its steal figure cannot be interpreted)."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    return (vals[7] if len(vals) > 7 else 0), sum(vals)
-
-
 STEALS: dict[str, float] = {}
 OTHERS: dict[str, float] = {}   # CPU%% burned outside this process tree
 MEMS: dict[str, float] = {}     # in-region DRAM-probe bandwidth, GB/s
 PER_REP: dict[str, list[float]] = {}
 
-# The scaling protocol's two extra contamination instruments (VERDICT r4
-# #3): hypervisor steal is blind to both self-inflicted load (a concurrent
-# pytest run) and neighbor DRAM contention — the r4 flagship number could
-# not be adjudicated against the builder's quiet-host run because the
-# driver artifact carried only the steal figure. Import is best-effort so
-# bench.py still runs standalone if tools/ is absent. tools/ goes at the END
-# of sys.path so its modules cannot shadow the package's or the stdlib's.
+# The scaling protocol's interference instruments (tools/scaling_bench.py):
+# host-wide CPU steal per measurement (a shared host shows up to 11% steal;
+# a timing without its steal figure cannot be interpreted), plus two
+# contamination gauges (VERDICT r4 #3), because steal is blind to both
+# self-inflicted load (a concurrent pytest run) and neighbor DRAM
+# contention. The DRAM probe is best-effort. tools/ goes at the END of
+# sys.path so its modules cannot shadow the package's or the stdlib's.
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
+from scaling_bench import MemProbe, other_load_pct, read_load, read_steal  # noqa: E402
+
 try:
-    sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-    from scaling_bench import MemProbe, other_load_pct, read_load
     _PROBE = MemProbe()
 except Exception:  # pragma: no cover - instrumentation is optional
     _PROBE = None
@@ -99,7 +90,7 @@ def timed_median(fn, name: str | None = None, warmup: int = 0) -> float:
     for _ in range(warmup):
         fn()
     ts = []
-    s0 = _read_steal()
+    s0 = read_steal()
     l0 = read_load() if _PROBE is not None else None
     if _PROBE is not None:
         _PROBE.region_start()
@@ -108,7 +99,7 @@ def timed_median(fn, name: str | None = None, warmup: int = 0) -> float:
         fn()
         ts.append(time.time() - t0)
     if name is not None:
-        s1 = _read_steal()
+        s1 = read_steal()
         if s1[1] > s0[1]:
             STEALS[name] = round(100.0 * (s1[0] - s0[0]) / (s1[1] - s0[1]), 2)
         if _PROBE is not None:

@@ -534,10 +534,14 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             for name in fields:
                 if re.search(pat, name):
                     out.extend(compile_node(sub, col.getField(name), f"{path}/{name}", fields[name]))
-        if node.additional_properties is False:
+        ap = node.additional_properties
+        if ap is False or isinstance(ap, SpecNode):
             for n in _unmatched(fields, node.properties, node.pattern_properties):
-                add("additionalProperties", col.isNull() | col.getField(n).isNull(),
-                    p=f"{path}/{n}", value=col.getField(n).cast("string"))
+                if ap is False:
+                    add("additionalProperties", col.isNull() | col.getField(n).isNull(),
+                        p=f"{path}/{n}", value=col.getField(n).cast("string"))
+                else:
+                    out.extend(compile_node(ap, col.getField(n), f"{path}/{n}", fields[n]))
         if node.min_properties is not None or node.max_properties is not None:
             # struct arity is static; count non-null fields at runtime
             cnt = reduce(lambda a, b: a + b,
@@ -568,21 +572,21 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
                     _forgive_null(col, F.when(present, node_valid(dep, col, dt)).otherwise(F.lit(True))))
         if node.unevaluated_properties is not None and node.unevaluated_properties is not True:
             # struct fields are static names — coverage folds to compile-time
-            # True/False plus runtime branch-validity guards; a field is a
-            # violation iff present AND unevaluated (AND, in the schema form,
-            # failing the unevaluatedProperties subschema)
+            # True/False plus runtime branch-validity guards. In the false
+            # form a field is a violation iff present AND unevaluated; in the
+            # schema form an unevaluated field gets the subschema's own
+            # checks (as in E1), each passing wherever the field is covered
             up = node.unevaluated_properties
             for f in fields:
                 covf = _covers(node, f, col, dt)
                 if covf is True:
                     continue
                 fcol = col.getField(f)
-                ok = fcol.isNull()
-                if covf is not False:
-                    ok = ok | covf
                 if isinstance(up, SpecNode):
-                    fdt = dt[f].dataType
-                    ok = ok | F.coalesce(node_valid(up, fcol, fdt), F.lit(True))
+                    out.extend(c if covf is False else replace(c, ok=covf | c.ok)
+                               for c in compile_node(up, fcol, f"{path}/{f}", fields[f]))
+                    continue
+                ok = fcol.isNull() if covf is False else fcol.isNull() | covf
                 add("unevaluatedProperties", _forgive_null(col, ok),
                     p=f"{path}/{f}", value=fcol.cast("string"))
     elif isinstance(dt, T.MapType):
@@ -600,7 +604,8 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
                 lambda v: node_valid(sub, v, dt.valueType),
             )
             add("patternProperties", _forgive_null(col, ok), p=f"{path}")
-        if node.additional_properties is False:
+        ap = node.additional_properties
+        if ap is False or isinstance(ap, SpecNode):
             names = list(node.properties)
             pats = [sqlglue.to_java_regex(p) for p in node.pattern_properties]
             def _extra(k: Column) -> Column:
@@ -608,7 +613,12 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
                 for jp in pats:
                     known = known | k.rlike(jp)
                 return ~known
-            ok = F.size(F.filter(F.map_keys(col), _extra)) == 0
+            if ap is False:
+                ok = F.size(F.filter(F.map_keys(col), _extra)) == 0
+            else:
+                # one check over the unmatched keys' values, as patternProperties
+                ok = F.forall(F.map_values(F.map_filter(col, lambda k, _v: _extra(k))),
+                              lambda v: node_valid(ap, v, dt.valueType))
             add("additionalProperties", _forgive_null(col, ok))
         if node.min_properties is not None:
             add("minProperties", _forgive_null(col, F.size(col) >= node.min_properties))

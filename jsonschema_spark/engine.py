@@ -93,6 +93,15 @@ def recommended_conf(parallelism: int = 32) -> dict[str, str]:
         # of the stats stage in GC (event-log profile). Sketch state is
         # O(KB) per (partition x column); thousands of groups fit trivially.
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "131072",
+        # validate_table persists ~10 partitions-scale intermediates (the
+        # partition list, violation streams, drift histograms, the wide
+        # stats agg). With this false, AQE never coalesces inside a cached
+        # plan, so each keeps spark.sql.shuffle.partitions partitions and
+        # every consumer stage runs that many near-empty tasks: 834 tasks
+        # over 32k rows per image_suite op on local[4], ~35 % of executor
+        # time in task deserialization. With it true, AQE sizes each cache
+        # from its runtime bytes (170 tasks per op).
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     }
 
 
@@ -193,6 +202,16 @@ def _fused_projection(
     keep = [c for c in fact.columns
             if c in needed and fields[c].typeName() != "binary"]
     return fact.select(*keep, compiled.violations_array().alias("__viols"))
+
+
+def _literal_table(spark: SparkSession, fields: list[tuple[str, str]],
+                   rows: list[tuple]) -> DataFrame:
+    """A small table of spec literals, built in the JVM: one task exploding
+    a literal array of typed structs. ``spark.createDataFrame(list)`` would
+    plan a Python RDD scan and wait on Python workers each time it runs."""
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(v).cast(t).alias(n) for (n, t), v in zip(fields, row)])
+        for row in rows])))
 
 
 def _bound_verdicts(
@@ -492,12 +511,14 @@ def validate_table(
             f"stack({len(qs)}, "
             + ", ".join(f"'{P1.quantile_name(q)}', {P1.quantile_name(q)}" for q in qs)
             + ") as (qname, value)")
-        checks_df = spark.createDataFrame(
+        checks_df = _literal_table(
+            spark,
+            [("column", "string"), ("q", "double"), ("qname", "string"),
+             ("lo", "double"), ("hi", "double")],
             [(q["column"], float(q["q"]), P1.quantile_name(float(q["q"])),
               float(q["min"]) if "min" in q else None,
               float(q["max"]) if "max" in q else None)
-             for q in qchecks],
-            "column string, q double, qname string, lo double, hi double")
+             for q in qchecks])
         judged, qv = _bound_verdicts(
             checks_df, melted, ["column", "qname"], "value", "quantile",
             F.concat(F.lit("quantile@/"), "column", F.lit("@q"), F.col("q").cast("string")))
@@ -507,11 +528,11 @@ def validate_table(
     # distinct-cardinality bounds (B15 as a CHECK TYPE): merged HLL estimate
     # vs the spec'd bound — table-wide, metadata-scale join
     if dchecks:
-        d_df = spark.createDataFrame(
+        d_df = _literal_table(
+            spark, [("column", "string"), ("lo", "long"), ("hi", "long")],
             [(d["column"],
               int(d["min"]) if "min" in d else None,
-              int(d["max"]) if "max" in d else None) for d in dchecks],
-            "column string, lo long, hi long")
+              int(d["max"]) if "max" in d else None) for d in dchecks])
         _, dv = _bound_verdicts(
             d_df, P1.merge_sketches(stats_df), ["column"], "n_distinct_merged",
             "distinct", F.concat(F.lit("distinct@/"), "column"))
@@ -521,9 +542,9 @@ def validate_table(
     # aggregation (grouping sets, as in rollup_verdicts) straight off the
     # stats rows (no extra scan); n_violations carries the null count
     if nrchecks:
-        nr_df = spark.createDataFrame(
-            [(n["column"], float(n["max_rate"])) for n in nrchecks],
-            "column string, max_rate double")
+        nr_df = _literal_table(
+            spark, [("column", "string"), ("max_rate", "double")],
+            [(n["column"], float(n["max_rate"])) for n in nrchecks])
         nr = (
             stats_df.select("part_id", "column", "n_rows", "n_nulls")
             .join(nr_df, "column")

@@ -173,3 +173,20 @@ def test_root_level_value(spark):
     got = [(r["id"], r["keyword"], r["path"], r["value"])
            for r in validate_json_rows(docs, "payload", spec, keys=["id"]).collect()]
     assert got == [(2, "maxProperties", "", "{1, 2}")]
+
+
+def test_additional_properties_schema_on_a_map_column(spark):
+    """On a map column, schema-form ``additionalProperties`` is one check at
+    the map's path over the values of the keys that neither ``properties``
+    nor ``patternProperties`` matches, as map ``patternProperties`` is."""
+    from jsonschema_spark.engine import validate_rows
+
+    df = spark.createDataFrame(
+        [(1, {"a": 9, "x_1": 9, "b": 1}), (2, {"a": 9, "x_1": 9, "b": 5}), (3, None)],
+        "id int, m map<string, int>")
+    spec = {"properties": {"m": {"properties": {"a": {}},
+                                 "patternProperties": {"^x_": {}},
+                                 "additionalProperties": {"maximum": 3}}}}
+    got = [(r["id"], r["keyword"], r["path"])
+           for r in validate_rows(df, spec, keys=["id"]).collect()]
+    assert got == [(2, "additionalProperties", "/m")]

@@ -132,6 +132,22 @@ ROOT_SPECS = {
         "x_a": {"required": True}, "z": {"required": True}}}}},
     "nested_patternProperties": {"properties": {"s": {
         "patternProperties": {"^x_": {"type": "integer"}, "^y$": {"minimum": 0}}}}},
+    # schema-form additionalProperties applies to every unmatched property
+    "additionalProperties_schema": {"properties": {"id": {}, "a": {}},
+                                    "additionalProperties": {"type": "integer"}},
+    "nested_additionalProperties_schema": {"properties": {"s": {
+        "properties": {"x_a": {}}, "additionalProperties": {"type": "integer"}}}},
+    # schema-form unevaluatedProperties reports the subschema's own keywords,
+    # on the properties no validated branch evaluates
+    "unevaluatedProperties_schema": {
+        "properties": {"id": {}, "s": {}},
+        "anyOf": [{"properties": {"b": {"minLength": 3}}},
+                  {"properties": {"c": {"minimum": 0}}}],
+        "unevaluatedProperties": {"type": "string", "maxLength": 1}},
+    "nested_unevaluatedProperties_schema": {"properties": {"s": {
+        "properties": {"x_a": {}},
+        "anyOf": [{"properties": {"y": {"minimum": 0}}}],
+        "unevaluatedProperties": {"type": "integer", "maximum": 2}}}},
 }
 
 

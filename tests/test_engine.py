@@ -1,4 +1,5 @@
-"""engine.validate_table: the shape of its one verdict grid.
+"""engine.validate_table: the shape of its one verdict grid, and the work
+one suite run costs.
 
 Every check counted from a violation stream (P1, P2, P3, P5, P7) is judged
 in one zero-filled count and one join (``passes.stats
@@ -8,7 +9,10 @@ aggregation or join of its own.
 
 from __future__ import annotations
 
+from jsonschema_spark import fixtures as FX
 from jsonschema_spark.engine import validate_table
+from jsonschema_spark.passes.drift import baseline_profile
+from test_table_golden import CFG
 from test_table_golden import result  # noqa: F401  the golden fixture's suite run
 
 # Exchange and BroadcastExchange nodes that the golden fixture's verdict
@@ -32,6 +36,58 @@ def _own_exchanges(df) -> int:
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
     return n
+
+
+# Completed tasks of one parquet-backed golden-fixture suite run (verdicts,
+# violations and stats materialized) at 8 shuffle partitions: 357 with AQE
+# sizing the cached intermediates; 546 when every cache kept all 8 shuffle
+# partitions and the spec-literal bound tables were Python RDD scans.
+SUITE_TASK_BUDGET = 400
+
+
+def _group_tasks(sc, group: str) -> int:
+    """Completed tasks over the distinct stages of ``group``'s jobs (a
+    reused shuffle stage is listed by every job that reads it)."""
+    tracker = sc.statusTracker()
+    stages = {sid for jid in tracker.getJobIdsForGroup(group)
+              for sid in tracker.getJobInfo(jid).stageIds}
+    return sum(info.numCompletedTasks for info in map(tracker.getStageInfo, stages)
+               if info is not None)
+
+
+def test_suite_tasks_and_no_python_scan(spark, tmp_path):
+    """A suite run over parquet inputs plans no Python RDD scan (the spec's
+    quantile, distinct and null-rate bounds are JVM literals) and runs
+    partition-scale task counts on its partition-scale caches."""
+    d = str(tmp_path)
+    FX.write_images(spark, CFG, f"{d}/fact")
+    clean = FX.generate_images_df(
+        spark, FX.FixtureConfig(n=CFG.n, n_parts=CFG.n_parts, plants=False,
+                                with_bytes=False, drift_part=-1))
+    inputs = {"dim_fmt": FX.dim_fmt_df(spark),
+              "dim_license": FX.dim_license_df(spark, CFG),
+              "baseline": baseline_profile(clean, FX.drift_columns())}
+    for name, df in inputs.items():
+        df.write.parquet(f"{d}/{name}")
+    read = {name: spark.read.parquet(f"{d}/{name}") for name in inputs}
+    res = validate_table(
+        spark.read.parquet(f"{d}/fact"), FX.SPEC_IMAGES,
+        dims={"dim_fmt": read["dim_fmt"], "dim_license": read["dim_license"]},
+        baseline=read["baseline"], drift_columns=FX.drift_columns())
+    sc = spark.sparkContext
+    sc.setJobGroup("suite-task-budget", "parquet-backed golden suite run")
+    try:
+        res.verdicts.collect()
+        for df in (res.violations, res.stats):
+            df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plan = res.verdicts._jdf.queryExecution().executedPlan().toString()
+    tasks = _group_tasks(sc, "suite-task-budget")
+    res.cleanup()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+    assert tasks <= SUITE_TASK_BUDGET, tasks
 
 
 def test_verdict_exchange_budget(result):  # noqa: F811
