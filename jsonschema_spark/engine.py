@@ -97,10 +97,9 @@ def recommended_conf(parallelism: int = 32) -> dict[str, str]:
         # partition list, violation streams, drift histograms, the wide
         # stats agg). With this false, AQE never coalesces inside a cached
         # plan, so each keeps spark.sql.shuffle.partitions partitions and
-        # every consumer stage runs that many near-empty tasks: 834 tasks
-        # over 32k rows per image_suite op on local[4], ~35 % of executor
-        # time in task deserialization. With it true, AQE sizes each cache
-        # from its runtime bytes (170 tasks per op).
+        # every stage reading it runs that many near-empty tasks: ~800
+        # tasks per 32k-row image_suite op at 32 shuffle partitions. With
+        # it true, AQE sizes each cache from its runtime bytes (170 tasks).
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     }
 

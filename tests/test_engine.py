@@ -12,8 +12,7 @@ from __future__ import annotations
 from jsonschema_spark import fixtures as FX
 from jsonschema_spark.engine import validate_table
 from jsonschema_spark.passes.drift import baseline_profile
-from test_table_golden import CFG
-from test_table_golden import result  # noqa: F401  the golden fixture's suite run
+from test_table_golden import CFG, result  # noqa: F401  result: the golden fixture's suite run
 
 # Exchange and BroadcastExchange nodes that the golden fixture's verdict
 # frame plans on top of its cached inputs: 19 with one verdict grid, 32-34
