@@ -1651,7 +1651,6 @@ def q_images_full_suite(spark: SparkSession, sf: str) -> DataFrame:
         FX.SPEC_IMAGES,
         dims={"dim_fmt": FX.dim_fmt_df(spark), "dim_license": FX.dim_license_df(spark, cfg)},
         baseline=bp(clean, FX.drift_columns()),
-        drift_columns=FX.drift_columns(),
     )
     return res.verdicts
 
@@ -1857,10 +1856,15 @@ def _replay_images_full_suite() -> list[tuple]:
             out.append((p, "anomaly@", "anomaly", "/", True, 0, "anomaly"))
 
     # table-wide stats checks: q0.99(w) <= 16384, 2 <= distinct(fmt) <= 10,
-    # null-rate(caption) <= 0.05 per part AND table-wide. The bounds have
-    # orders-of-magnitude margin at this fixture (w <= 128, 5 formats,
-    # nulls ~0.4%), so KLL/HLL estimation error cannot flip the boolean.
+    # null-rate(caption) <= 0.05 per part AND table-wide. KLL compaction is
+    # randomized, so the engine's q0.99 may be any value within KLL's rank
+    # error at k = 200 (0.0165) of the exact one: raise unless the exact
+    # quantiles at both ends of that band lie on one side of the bound.
     ws = [r["w"] for r in rows if r["w"] is not None]
+    band = [float(np.quantile(ws, min(max(q, 0.0), 1.0))) <= 16384.0
+            for q in (0.99 - 0.0165, 0.99 + 0.0165)]
+    if band[0] != band[1]:
+        raise ValueError("q0.99(w) lies within KLL's rank error of its bound 16384")
     q_ok = float(np.quantile(ws, 0.99)) <= 16384.0
     out.append((None, "quantile@/w@q0.99", "quantile", "/w",
                 q_ok, 0 if q_ok else 1, "quantiles"))

@@ -184,7 +184,7 @@ def main() -> None:
         res = validate_table(
             fact, FX.SPEC_IMAGES,
             dims=dims,
-            baseline=baseline, drift_columns=FX.drift_columns(),
+            baseline=baseline,
             fidelity_fn=lambda _: fidelity_violations(
                 fid_df, fcfg, fraction=fid_fraction,
                 parts_fraction=fid_parts_fraction),

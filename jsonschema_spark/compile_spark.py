@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from . import formats
 from .formats import FORMAT_REGEXES
-from .spec import Spec, SpecNode
+from .spec import Spec, SpecNode, declared_names, in_place_branches, sql_identifiers
 from . import sqlglue
 
 VIOLATION_STRUCT = T.StructType(
@@ -810,23 +810,6 @@ def compile_json_column(spec: Spec, json_col: str) -> CompiledTableSpec:
         columns=[json_col], spec=spec)
 
 
-def _in_place(node: SpecNode):
-    """``node`` and, recursively, its in-place applicator subschemas whose
-    property names can evaluate the same instance (allOf/anyOf/oneOf,
-    if/then/else, schema-form dependencies; ``not`` never does)."""
-    yield node
-    for sub in ((node.all_of or ()) + (node.any_of or ()) + (node.one_of or ())
-                + tuple(x for x in (node.if_, node.then_, node.else_) if x is not None)
-                + tuple(d for d in node.dependencies.values()
-                        if isinstance(d, SpecNode))):
-        yield from _in_place(sub)
-
-
-def _names(node: SpecNode) -> set[str]:
-    """The property names ``node`` lists in ``properties`` or ``required``."""
-    return {*node.properties, *(node.required or ())}
-
-
 class _TableRow(ClassicColumn):
     """The table row as one object value: a struct of ``fields`` that is
     never null and whose field access resolves straight to the column.
@@ -880,7 +863,7 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
         if extras:
             raise CompileError(f"additionalProperties:false but table has extra columns: {extras}")
 
-    branches = list(_in_place(root))
+    branches = list(in_place_branches(root))
     if root.unevaluated_properties is False:
         # table columns are static, so a column that no branch names can
         # never be evaluated: reject the table at compile time. Columns
@@ -896,11 +879,11 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
 
     if root.if_ is not None:
         conds = [sub for sub in (root.if_, root.then_, root.else_) if sub is not None]
-        unknown = sorted(set().union(*map(_names, conds)) - fields.keys())
+        unknown = sorted(set().union(*map(declared_names, conds)) - fields.keys())
         if unknown:
             raise CompileError(f"if/then/else references absent columns: {unknown}")
 
-    used = set().union(*map(_names, branches)) & fields.keys()
+    used = set().union(*map(declared_names, branches)) & fields.keys()
     used.update(n for nd in branches for p in nd.pattern_properties
                 for n in fields if re.search(p, n))
     row = [f for f in schema.fields if f.name != "part_id" or f.name in used]
@@ -912,7 +895,7 @@ def compile_table(spec: Spec, schema: T.StructType) -> CompiledTableSpec:
         if cols is None:
             # conservative identifier scan: any schema field named in the
             # test must survive fused-scan column pruning
-            tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", test))
+            tokens = sql_identifiers(test)
             cols = [c for c in fields if c in tokens]
         unknown = [c for c in cols if c not in fields]
         if unknown:

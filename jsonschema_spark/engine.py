@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .compile_spark import CompiledTableSpec, compile_json_column, compile_table
-from .spec import Spec, parse
+from .spec import Spec, parse, sql_identifiers
 from .passes import stats as P1
 from .passes import uniqueness as P2
 from .passes import referential as P3
@@ -167,7 +167,7 @@ def _referenced_columns(expr: str, columns: list[str]) -> set[str]:
     reference: each one that appears in ``expr`` as an identifier token or
     as a whole word. Keeping a column too many costs cache space; dropping
     a referenced one fails analysis on the fused projection."""
-    tokens = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", expr))
+    tokens = sql_identifiers(expr)
     return {c for c in columns
             if c in tokens or re.search(rf"\b{re.escape(c)}\b", expr)}
 
@@ -178,7 +178,6 @@ def _fused_projection(
     spec: Spec,
     key_col: str,
     part_col: str,
-    drift_columns: list[P4.DriftColumn] | None,
 ) -> DataFrame:
     """The SURVEY §4 pass-fusion projection: ONE scan of the fact table
     producing every non-binary column any pass consumes PLUS the compiled
@@ -192,7 +191,7 @@ def _fused_projection(
         needed.update(key_cols)
     for ref in spec.table_checks.references:
         needed.add(ref["column"])
-    exprs = [dc.expr for dc in drift_columns or []]
+    exprs = [dc.expr for dc in spec.table_checks.drift_columns]
     if spec.table_checks.anomaly is not None:
         exprs += spec.table_checks.anomaly["columns"]
     for expr in exprs:
@@ -248,10 +247,8 @@ def validate_table(
     top_k: int | None = None,
     drift_columns: list[P4.DriftColumn] | None = None,
     uniqueness_scope: DataFrame | None = None,
-    fuse_scratch: str | None = None,
     fidelity_fn: Any | None = None,
     headers_fn: Any | None = None,
-    with_quantiles: bool = False,
     kll_k: int = 200,
 ) -> ValidationResult:
     """Run the validation suite over ``fact``.
@@ -264,24 +261,18 @@ def validate_table(
     narrow column set × row count (binary columns never enter it) and
     spills to disk.
 
-    ``fuse_scratch``: materialize the fused projection as a PARQUET scratch
-    table at this path instead of the SQL columnar cache. One clean write
-    job builds it (no per-partition cache locks, no columnar-cache-builder
-    allocation — measured GC relief at 32 local cores), consumers get
-    vectorized parquet reads, and at cluster scale the scratch lands on
-    shared storage exactly like any intermediate table. Caller owns
-    cleanup of the path.
-
     ``uniqueness_scope``: uniqueness (P2) is a whole-table property — a
     duplicate key can span a completed and a pending partition. On resume,
     pass the FULL table here while ``fact`` carries only pending partitions;
     P2 then scans just its key columns table-wide (narrow columnar scan)
     while the per-partition passes stay pruned.
 
-    ``with_quantiles``/``kll_k``: fuse a mergeable KLL quantile sketch per
-    numeric spec'd column into the SAME single-scan stats aggregation
-    (SURVEY §2 B42); roll up table-wide with ``passes.stats
-    .merge_quantiles`` — resume-safe p50/p90/p99 with no global sort.
+    The spec decides which passes run: P4 drift needs ``baseline`` and the
+    drift columns ``spec.parse`` resolved (``drift_columns``, if given, must
+    equal them); a spec with quantile checks fuses a mergeable KLL sketch
+    (size ``kll_k``) per numeric spec'd column into the SAME single-scan
+    stats aggregation (SURVEY §2 B42), and its stats rows carry them for
+    ``passes.stats.merge_quantiles``.
 
     ``fidelity_fn``: optional callable ``fact -> violations DataFrame``
     (part_id, row_key, keyword, path, value) — the sampled decoded-pixel
@@ -312,6 +303,9 @@ def validate_table(
     """
     if not isinstance(spec, Spec):
         spec = parse(spec)
+    if drift_columns is not None and tuple(drift_columns) != spec.table_checks.drift_columns:
+        raise ValueError("drift_columns differ from the spec's x-table-checks/drift "
+                         "columns; the spec's are the ones run")
     dims = dims or {}
     compiled = compile_table(spec, fact.schema)
     cached: list[DataFrame] = []
@@ -325,12 +319,7 @@ def validate_table(
 
     # THE fact scan (SURVEY §4): all passes below read `base`, so parquet
     # is hit exactly once for the suite (assert_single_scan test pins this).
-    narrow = _fused_projection(fact, compiled, spec, key_col, part_col, drift_columns)
-    if fuse_scratch is not None:
-        narrow.write.mode("overwrite").parquet(fuse_scratch)
-        base = fact.sparkSession.read.parquet(fuse_scratch)
-    else:
-        base = _persist(narrow)
+    base = _persist(_fused_projection(fact, compiled, spec, key_col, part_col))
 
     # tiny (one row per partition) but consumed by every verdict stream
     all_parts = base.select(F.col(part_col).alias("part_id")).distinct()
@@ -403,13 +392,14 @@ def validate_table(
     # P4 — drift (histograms over the fused cache)
     drift_df = None
     dcfg = spec.table_checks.drift
-    if dcfg is not None and baseline is not None and drift_columns:
+    drift_cols = spec.table_checks.drift_columns
+    if baseline is not None and drift_cols:
         # The histogram table is tiny (partitions x columns x buckets) but
         # drift_metrics consumes it several times (partition list, bucket
         # grid, CDF join) and the verdicts sink runs as its own job —
         # without a persist the 10^12-row aggregation would re-execute per
         # consumer job instead of once per suite.
-        obs = _persist(P4.observed_histograms(base, drift_columns, part_col=part_col))
+        obs = _persist(P4.observed_histograms(base, drift_cols, part_col=part_col))
         drift_df = P4.drift_metrics(obs, baseline)
         verdict_streams.append(
             P4.drift_verdicts(
@@ -436,12 +426,6 @@ def validate_table(
     qchecks = spec.table_checks.quantiles
     dchecks = spec.table_checks.distinct
     nrchecks = spec.table_checks.null_rates
-    if qchecks:
-        with_quantiles = True  # the checks need the sketches
-    if (qchecks or dchecks or nrchecks) and not compiled.columns:
-        raise ValueError(
-            "x-table-checks/quantiles|distinct|null-rates declared but the spec "
-            "has no properties — the stats scan has no columns to judge from")
     stat_cols = [c for c in compiled.columns
                  if fact.schema[c].dataType.typeName() != "binary"]
     for kind, checks in (("quantiles", qchecks), ("distinct", dchecks),
@@ -449,9 +433,8 @@ def validate_table(
         missing = [c["column"] for c in checks if c["column"] not in stat_cols]
         if missing:
             raise ValueError(
-                f"x-table-checks/{kind} references non-spec'd columns {missing} "
-                "— these checks run on the fused stats scan, so the column "
-                "must appear in the spec's properties")
+                f"x-table-checks/{kind} columns {missing} are absent from the "
+                "table or binary — these checks run on the fused stats scan")
     numeric_q = P1.numeric_columns(fact, [c["column"] for c in qchecks])
     bad_q = [c["column"] for c in qchecks if c["column"] not in numeric_q]
     if bad_q:
@@ -460,10 +443,6 @@ def validate_table(
         raise ValueError(
             f"x-table-checks/quantiles on non-numeric columns {bad_q} — "
             "quantile sketches exist only for numeric columns")
-    if (qchecks or dchecks or nrchecks) and not stat_cols:
-        raise ValueError(
-            "x-table-checks/quantiles|distinct|null-rates declared but the "
-            "spec has no non-binary stats columns to judge them from")
     stats_df = None
     wide_agg = None
     if stat_cols or acfg is not None:
@@ -476,12 +455,12 @@ def validate_table(
         # re-shuffling ~277 MB of partial sketch state).
         wide_agg = _persist(P1.partition_wide_agg(
             base, stat_cols, part_col=part_col,
-            with_quantiles=with_quantiles, kll_k=kll_k,
+            with_quantiles=bool(qchecks), kll_k=kll_k,
             anomaly_exprs=tuple(a_cols)))
         if stat_cols:
             stats_df = P1.stats_long(wide_agg, stat_cols,
                                      P1.numeric_columns(base, stat_cols),
-                                     with_quantiles=with_quantiles)
+                                     with_quantiles=bool(qchecks))
 
     # P6 assembly — from the fused wide agg
     if acfg is not None:

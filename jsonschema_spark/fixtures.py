@@ -281,9 +281,7 @@ SPEC_IMAGES = {
             {"column": "image_id", "dim": "dim_license", "key": "image_id",
              "strategy": "shuffle_hash"},
         ],
-        # object entries carry the histogram grid explicitly (job.py
-        # parse_drift_columns) — identical to drift_columns() below, so the
-        # E3 CLI path and the library path share one bucket grid.
+        # object entries carry the histogram grid explicitly
         "drift": {"columns": [
             {"expr": "w", "name": "w", "lo": 0, "hi": 128, "buckets": 32},
             {"expr": "h", "name": "h", "lo": 0, "hi": 128, "buckets": 32},
@@ -305,11 +303,8 @@ SPEC_IMAGES = {
 
 
 def drift_columns():
-    from .passes.drift import DriftColumn
+    """The drift columns ``spec.parse`` resolves from ``SPEC_IMAGES``: the
+    bucket grid of its baseline profile."""
+    from .spec import parse
 
-    return [
-        DriftColumn("w", "w", "numeric", 0, 128, 32),
-        DriftColumn("h", "h", "numeric", 0, 128, 32),
-        DriftColumn("fmt", "fmt", "categorical"),
-        DriftColumn("caption_len", "length(caption)", "numeric", 0, 1024, 32),
-    ]
+    return list(parse(SPEC_IMAGES).table_checks.drift_columns)

@@ -10,6 +10,13 @@ Runs the full constraint suite partition-batch-wise, appending per-partition
 manifest rows after each batch so a killed run resumes where it left off
 (BASELINE.json:14). Prints a one-line JSON summary with images/sec (the
 north metric, BASELINE.json:2).
+
+The spec decides which table passes run: its ``x-table-checks`` block,
+checked and resolved by ``spec.parse``, declares them. Drift runs when the
+block has drift columns and ``--baseline`` is given; quantile checks add
+KLL sketches to the stats sink and ``global_quantiles`` to the summary.
+Spec lint runs first and stops the job on an error finding unless
+``--force-lint`` is given.
 """
 
 from __future__ import annotations
@@ -26,64 +33,6 @@ from .engine import get_session, validate_table
 from .io.tables import load_fact_table
 from .manifest import Manifest
 from .spec import parse
-from .passes.drift import DriftColumn
-
-
-def _drift_name(expr: str) -> str:
-    """Metric name for a drift expression without an explicit "name":
-    any SQL expression sanitizes to an identifier-ish slug — e.g.
-    ``length(caption)`` -> ``length_caption``, ``w * h`` -> ``w_h`` —
-    so sink paths and verdict keys never carry raw SQL."""
-    import re
-
-    slug = re.sub(r"[^A-Za-z0-9]+", "_", expr).strip("_")
-    return slug or "expr"
-
-
-def parse_drift_columns(spec) -> list[DriftColumn]:
-    """Build DriftColumn configs from the spec's drift block.
-
-    Two entry forms:
-    - object: ``{"expr": "length(caption)", "name": "caption_len",
-      "kind": "numeric", "lo": 0, "hi": 1024, "buckets": 32}`` — explicit
-      ranges, required for expression columns (a guessed range like
-      [0, 2^20) collapses every value into one bucket and blinds KS/PSI).
-    - bare string: a property name; numeric ranges derive from the
-      spec-declared minimum/maximum, strings become categorical. An entry
-      with no derivable range is an error, not a degenerate histogram.
-
-    The SAME config must drive both the observed histograms and the
-    baseline profile — ranges define the bucket grid they share.
-    """
-    d = spec.table_checks.drift
-    if not d:
-        return []
-    out = []
-    for entry in d.get("columns", []):
-        if isinstance(entry, dict):
-            expr = entry["expr"]
-            name = entry.get("name") or _drift_name(expr)
-            if entry.get("kind", "numeric") == "categorical":
-                out.append(DriftColumn(name, expr, "categorical"))
-            else:
-                out.append(DriftColumn(
-                    name, expr, "numeric", float(entry.get("lo", 0.0)),
-                    float(entry["hi"]), int(entry.get("buckets", 32))))
-            continue
-        name = _drift_name(entry)
-        prop = spec.root.properties.get(entry)
-        if prop is not None and prop.type and "string" in prop.type and "(" not in entry:
-            out.append(DriftColumn(name, entry, "categorical"))
-            continue
-        lo = prop.minimum if prop and prop.minimum is not None else 0.0
-        hi = prop.maximum if prop and prop.maximum is not None else None
-        if hi is None:
-            raise ValueError(
-                f"drift column {entry!r} has no derivable numeric range "
-                "(no matching property with minimum/maximum); use the object "
-                'form {"expr": ..., "lo": ..., "hi": ..., "buckets": ...}')
-        out.append(DriftColumn(name, entry, "numeric", float(lo), float(hi), 32))
-    return out
 
 
 def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict:
@@ -97,7 +46,9 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     ap.add_argument("--manifest", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--dim", action="append", default=[], help="name=path, repeatable")
-    ap.add_argument("--baseline", default=None)
+    ap.add_argument("--baseline", default=None,
+                    help="baseline profile (passes.drift.baseline_profile) "
+                         "for the spec's x-table-checks/drift columns")
     ap.add_argument("--key-col", default="image_id")
     ap.add_argument("--part-col", default="part_id")
     ap.add_argument("--resume", action="store_true")
@@ -135,17 +86,6 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
                          "bytes / header dims / raw byte-length checked "
                          "against the declared fmt/w/h columns on EVERY row "
                          "— pure Column exprs, no pixel decode")
-    ap.add_argument("--scratch", default=None,
-                    help="materialize the fused scan as a parquet scratch table "
-                         "at this path instead of the SQL columnar cache "
-                         "(shared storage on a cluster, tmpfs locally)")
-    ap.add_argument("--quantile-sketches", action="store_true",
-                    help="fuse a mergeable KLL quantile sketch per numeric "
-                         "spec'd column into the stats pass; the summary "
-                         "gains global_quantiles (p50/p90/p99 merged over "
-                         "ALL partitions — resume-safe like global_distinct)."
-                         " Keep the flag consistent across resumes of one "
-                         "sink (it changes the stats schema)")
     ap.add_argument("--force-lint", action="store_true",
                     help="run even when spec lint reports error-severity "
                          "findings (unsatisfiable nodes)")
@@ -154,8 +94,9 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
                          "(table_passed false) — CI gate; handled at the "
                          "__main__ level so library callers are unaffected")
     ap.add_argument("--kll-k", type=int, default=200,
-                    help="KLL sketch size parameter (exact below k per "
-                         "sketch; ~1.65%% rank error at the default 200)")
+                    help="KLL sketch size for a spec with x-table-checks/"
+                         "quantiles (exact below k values per sketch; "
+                         "~1.65%% rank error at the default 200)")
     args = ap.parse_args(argv)
 
     own_session = spark is None
@@ -249,14 +190,11 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     res = validate_table(
         fact, spec, dims=dims, baseline=baseline,
         key_col=args.key_col, part_col=args.part_col, top_k=args.top_k,
-        drift_columns=parse_drift_columns(spec),
         # uniqueness is table-global: a dup can span a done and a pending
         # partition, so P2 always scans the full table's key columns
         uniqueness_scope=fact_full,
         fidelity_fn=fidelity_fn,
         headers_fn=headers_fn,
-        fuse_scratch=args.scratch,
-        with_quantiles=args.quantile_sketches,
         kll_k=args.kll_k,
     )
     # Sinks partitioned by (pass_id, part_id). Overwrite semantics:
@@ -312,10 +250,11 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
         }
 
     global_quantiles = {}
-    if res.stats is not None and args.quantile_sketches:
-        # B42: same resume-safe rollup for the KLL quantile sketches — the
-        # sink holds every partition's sketch, so table-wide p50/p90/p99
-        # cover completed-before-a-kill partitions too.
+    if res.stats is not None and spec.table_checks.quantiles:
+        # B42: same resume-safe rollup for the KLL quantile sketches that a
+        # spec with quantile checks puts in the stats sink — the sink holds
+        # every partition's sketch, so table-wide p50/p90/p99 cover
+        # completed-before-a-kill partitions too.
         from .passes.stats import merge_quantiles
 
         global_quantiles = {
@@ -397,7 +336,7 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
         "wall_sec": round(elapsed, 3),
         "images_per_sec": round(n_rows / elapsed, 1) if elapsed > 0 else 0.0,
         "global_distinct": global_distinct,
-        **({"global_quantiles": global_quantiles} if args.quantile_sketches else {}),
+        **({"global_quantiles": global_quantiles} if spec.table_checks.quantiles else {}),
         "n_failed_checks": failed_checks,
         "table_passed": not failed_checks,
     }

@@ -11,6 +11,9 @@ so messages point at what the author wrote). Each finding is
 - warning: legal but almost certainly not what the author meant (inert
   then/else, unknown format, redundant unevaluatedProperties, required
   names never declared).
+
+The root's ``x-table-checks`` block is checked by ``spec``'s one reader
+(``table_check_problems``), not by this walk; each problem is an error.
 """
 
 from __future__ import annotations
@@ -66,6 +69,9 @@ def lint_spec(schema: dict[str, Any] | bool) -> list[Finding]:
     if isinstance(schema, dict):
         _lint_refs(schema, out)
         _lint_meta(schema, out)
+        from .spec import table_check_problems
+
+        out.extend(("error", ptr, msg) for ptr, msg in table_check_problems(schema))
     return out
 
 
@@ -215,64 +221,6 @@ def _walk(s: Any, path: str, out: list[Finding]) -> None:
             if isinstance(name, str) and name not in declared:
                 warn(f"required name {name!r} is never declared in properties "
                      "(typo?)")
-
-    # --- x-table-checks (round 4): the stats-check families are judged from
-    # the fused stats scan over spec'd properties — a check naming a column
-    # the spec never declares, or carrying an impossible bound, burns the
-    # whole scan before failing (engine.py raises; lint catches pre-flight)
-    tc = s.get("x-table-checks")
-    if isinstance(tc, dict):
-        declared_cols = set(s.get("properties") or {})
-
-        def tc_err(fam: str, i: int, msg: str) -> None:
-            out.append(("error", f"{path}/x-table-checks/{fam}/{i}", msg))
-
-        for i, q in enumerate(tc.get("quantiles") or []):
-            if not isinstance(q, dict):
-                continue
-            qq = q.get("q")
-            if isinstance(qq, (int, float)) and not 0.0 < float(qq) < 1.0:
-                tc_err("quantiles", i, f"q={qq} is outside (0, 1)")
-            lo, hi = q.get("min"), q.get("max")
-            if (isinstance(lo, (int, float)) and isinstance(hi, (int, float))
-                    and lo > hi):
-                tc_err("quantiles", i, f"min ({lo}) > max ({hi}): unsatisfiable")
-            if "min" not in q and "max" not in q:
-                tc_err("quantiles", i, "neither min nor max: checks nothing")
-            if declared_cols and q.get("column") not in declared_cols:
-                tc_err("quantiles", i,
-                       f"column {q.get('column')!r} is not a spec'd property "
-                       "(the check is judged from the fused stats scan)")
-        for i, d in enumerate(tc.get("distinct") or []):
-            if not isinstance(d, dict):
-                continue
-            lo, hi = d.get("min"), d.get("max")
-            if isinstance(lo, int) and isinstance(hi, int) and lo > hi:
-                tc_err("distinct", i, f"min ({lo}) > max ({hi}): unsatisfiable")
-            if "min" not in d and "max" not in d:
-                tc_err("distinct", i, "neither min nor max: checks nothing")
-            if declared_cols and d.get("column") not in declared_cols:
-                tc_err("distinct", i,
-                       f"column {d.get('column')!r} is not a spec'd property")
-        for i, nr in enumerate(tc.get("null-rates") or []):
-            if not isinstance(nr, dict):
-                continue
-            r = nr.get("max_rate")
-            if isinstance(r, (int, float)) and not 0.0 <= float(r) <= 1.0:
-                tc_err("null-rates", i, f"max_rate={r} is outside [0, 1]")
-            if declared_cols and nr.get("column") not in declared_cols:
-                tc_err("null-rates", i,
-                       f"column {nr.get('column')!r} is not a spec'd property")
-        for i, ref in enumerate(tc.get("references") or []):
-            if isinstance(ref, dict):
-                for field in ("column", "dim", "key"):
-                    if field not in ref:
-                        tc_err("references", i, f"missing {field!r}")
-        a = tc.get("anomaly")
-        if isinstance(a, dict) and isinstance(a.get("z_max"), (int, float)) \
-                and a["z_max"] <= 0:
-            out.append(("error", f"{path}/x-table-checks/anomaly",
-                        f"z_max={a['z_max']} flags every partition"))
 
     # --- recurse ---------------------------------------------------------
     for key in ("properties", "patternProperties", "$defs", "definitions",

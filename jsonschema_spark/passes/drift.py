@@ -19,32 +19,25 @@ Scale design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..spec import DriftColumn  # re-exported; spec.parse resolves the columns
+
 EPS = 1e-6  # PSI smoothing for empty buckets
 
 
-@dataclass(frozen=True)
-class DriftColumn:
-    name: str               # label, e.g. "caption_len"
-    expr: str               # SQL expression, e.g. "length(caption)"
-    kind: str = "numeric"   # "numeric" | "categorical"
-    lo: float | None = None
-    hi: float | None = None
-    buckets: int = 32
-
-    def bucket_col(self) -> Column:
-        v = F.expr(self.expr)
-        if self.kind == "categorical":
-            return v.cast("string")
-        return F.width_bucket(
-            v.cast("double"), F.lit(float(self.lo)), F.lit(float(self.hi)), F.lit(self.buckets)
-        ).cast("string")
+def bucket_col(c: DriftColumn) -> Column:
+    """The histogram bucket of drift column ``c`` for one row."""
+    v = F.expr(c.expr)
+    if c.kind == "categorical":
+        return v.cast("string")
+    return F.width_bucket(
+        v.cast("double"), F.lit(float(c.lo)), F.lit(float(c.hi)), F.lit(c.buckets)
+    ).cast("string")
 
 
 def observed_histograms(
@@ -52,7 +45,7 @@ def observed_histograms(
 ) -> DataFrame:
     """(part_id, col, bucket, n) for every drift column — one scan."""
     entries = [
-        F.struct(F.lit(c.name).alias("col"), c.bucket_col().alias("bucket")) for c in cols
+        F.struct(F.lit(c.name).alias("col"), bucket_col(c).alias("bucket")) for c in cols
     ]
     return (
         df.select(F.col(part_col).alias("part_id"), F.explode(F.array(*entries)).alias("e"))
@@ -64,7 +57,7 @@ def observed_histograms(
 def baseline_profile(df: DataFrame, cols: list[DriftColumn]) -> DataFrame:
     """(col, bucket, p_expected) from a clean reference table (global)."""
     entries = [
-        F.struct(F.lit(c.name).alias("col"), c.bucket_col().alias("bucket")) for c in cols
+        F.struct(F.lit(c.name).alias("col"), bucket_col(c).alias("bucket")) for c in cols
     ]
     hist = (
         df.select(F.explode(F.array(*entries)).alias("e"))

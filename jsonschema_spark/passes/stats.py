@@ -216,7 +216,12 @@ def merge_quantiles(
     the quantile analogue of ``merge_sketches``). Input must come from
     ``column_stats(..., with_quantiles=True)``; non-numeric columns (null
     sketches) are skipped. Output: column, then one column per quantile
-    named by ``quantile_name`` (q50, q90, q99, ...)."""
+    named by ``quantile_name`` (q50, q90, q99, ...).
+
+    Past k values a KLL sketch compacts at random, so the estimate is not
+    reproducible: on identical input it may be any value within the rank
+    error (~0.0165 at k = 200) of the exact quantile, and a quantile
+    verdict whose bound lies in that band may flip between runs."""
     merged = (
         stats.where(F.col("kll_sketch").isNotNull())
         .groupBy("column")

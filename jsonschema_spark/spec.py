@@ -116,12 +116,31 @@ class SpecNode:
 
 
 @dataclass(frozen=True)
+class DriftColumn:
+    """One histogram column of ``x-table-checks/drift``, resolved at parse
+    time (``passes.drift`` builds its bucket Column). The same grid drives
+    the observed histograms and the baseline profile."""
+
+    name: str               # label, e.g. "caption_len"
+    expr: str               # SQL expression, e.g. "length(caption)"
+    kind: str = "numeric"   # "numeric" | "categorical"
+    lo: float | None = None
+    hi: float | None = None
+    buckets: int = 32
+
+
+@dataclass(frozen=True)
 class TableChecks:
-    """Engine extension block ``x-table-checks`` (SURVEY.md §2 Part B)."""
+    """Engine extension block ``x-table-checks`` (SURVEY.md §2 Part B), as
+    checked and resolved by ``parse`` (``_read_table_checks``)."""
 
     unique: tuple[tuple[str, ...], ...] = ()
+    # {"column", "dim", "key", "strategy"?}
     references: tuple[dict[str, Any], ...] = ()
+    # {"columns": [...], "ks_alpha"?, "psi_max"?}; ``drift_columns`` holds
+    # its resolved column entries
     drift: dict[str, Any] | None = None
+    drift_columns: tuple[DriftColumn, ...] = ()
     # cross-field row predicates — SQL invariants JSON Schema cannot express
     # (e.g. "fmt <> 'raw' OR length(bytes) = w*h*3"); each entry:
     # {"name": str, "test": <SQL bool expr>, "show"?: <SQL value expr>,
@@ -279,7 +298,8 @@ def _resolve_id_ref(ptr: str, doc_root: dict[str, Any]) -> tuple[dict[str, Any],
 
 
 def parse(schema: dict[str, Any] | bool) -> Spec:
-    """Parse a full spec document (root schema + optional x-table-checks)."""
+    """Parse a full spec document (root schema + optional x-table-checks);
+    one ``SpecError`` lists every problem of the x-table-checks block."""
     if schema is True:
         schema = {}
     if schema is False:
@@ -295,41 +315,10 @@ def parse(schema: dict[str, Any] | bool) -> Spec:
     finally:
         if fresh_memo:
             _REF_MEMO = None
-    tc = schema.get("x-table-checks", {}) or {}
-    table_checks = TableChecks(
-        unique=tuple(tuple(k) for k in tc.get("unique", [])),
-        references=tuple(dict(r) for r in tc.get("references", [])),
-        drift=dict(tc["drift"]) if "drift" in tc else None,
-        row_predicates=tuple(dict(p) for p in tc.get("row-predicates", [])),
-        anomaly=dict(tc["anomaly"]) if "anomaly" in tc else None,
-        quantiles=tuple(dict(q) for q in tc.get("quantiles", [])),
-        distinct=tuple(dict(d) for d in tc.get("distinct", [])),
-        null_rates=tuple(dict(n) for n in tc.get("null-rates", [])),
-    )
-    for d in table_checks.distinct:
-        if not isinstance(d.get("column"), str) or not d["column"]:
-            raise SpecError(f"distinct check needs a 'column': {d!r}")
-        if "min" not in d and "max" not in d:
-            raise SpecError(f"distinct check needs a 'min' or 'max' bound: {d!r}")
-    for nr in table_checks.null_rates:
-        if not isinstance(nr.get("column"), str) or not nr["column"]:
-            raise SpecError(f"null-rate check needs a 'column': {nr!r}")
-        if not isinstance(nr.get("max_rate"), (int, float)) or not 0 <= nr["max_rate"] <= 1:
-            raise SpecError(f"null-rate check needs 0 <= max_rate <= 1: {nr!r}")
-    for q in table_checks.quantiles:
-        if not isinstance(q.get("column"), str) or not q["column"]:
-            raise SpecError(f"quantile check needs a 'column': {q!r}")
-        if not isinstance(q.get("q"), (int, float)) or not 0 < q["q"] < 1:
-            raise SpecError(f"quantile check needs 0 < q < 1: {q!r}")
-        if "min" not in q and "max" not in q:
-            raise SpecError(f"quantile check needs a 'min' or 'max' bound: {q!r}")
-    if table_checks.anomaly is not None and not table_checks.anomaly.get("columns"):
-        raise SpecError("x-table-checks/anomaly needs a non-empty 'columns' list")
-    for p in table_checks.row_predicates:
-        if not isinstance(p.get("name"), str) or not p["name"]:
-            raise SpecError(f"row-predicate needs a non-empty 'name': {p!r}")
-        if not isinstance(p.get("test"), str) or not p["test"]:
-            raise SpecError(f"row-predicate {p['name']!r} needs a SQL 'test' string")
+    table_checks, problems = _read_table_checks(schema.get("x-table-checks"), root)
+    if problems:
+        raise SpecError(f"x-table-checks has {len(problems)} problem(s): "
+                        + "; ".join(f"{ptr}: {msg}" for ptr, msg in problems))
     return Spec(root=root, table_checks=table_checks, raw=schema)
 
 
@@ -348,6 +337,195 @@ def parse_node(schema: dict[str, Any] | bool) -> SpecNode:
     finally:
         if fresh_memo:
             _REF_MEMO = None
+
+
+Problem = tuple[str, str]  # (JSON pointer, message)
+
+_TC = "/x-table-checks"
+_FAMILIES = ("unique", "references", "drift", "row-predicates", "anomaly",
+             "quantiles", "distinct", "null-rates")
+
+
+def sql_identifiers(expr: str) -> set[str]:
+    """The identifier tokens (column names it may read) of an SQL expression."""
+    return set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", expr))
+
+
+def in_place_branches(node: SpecNode):
+    """``node`` and, recursively, its in-place applicator subschemas whose
+    property names can evaluate the same instance (allOf/anyOf/oneOf,
+    if/then/else, schema-form dependencies; ``not`` never does)."""
+    yield node
+    for sub in ((node.all_of or ()) + (node.any_of or ()) + (node.one_of or ())
+                + tuple(x for x in (node.if_, node.then_, node.else_) if x is not None)
+                + tuple(d for d in node.dependencies.values()
+                        if isinstance(d, SpecNode))):
+        yield from in_place_branches(sub)
+
+
+def declared_names(node: SpecNode) -> set[str]:
+    """The property names ``node`` lists in ``properties`` or ``required``."""
+    return {*node.properties, *(node.required or ())}
+
+
+def _drift_name(expr: str) -> str:
+    """The slug naming a drift expression without a "name" (``length(caption)``
+    -> ``length_caption``): sink paths and verdict keys carry no raw SQL."""
+    return re.sub(r"[^A-Za-z0-9]+", "_", expr).strip("_") or "expr"
+
+
+def _is_name(v: Any) -> bool:
+    return isinstance(v, str) and v != ""
+
+
+def _number(v: Any) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+def _read_table_checks(tc: Any, root: SpecNode | None, lint: bool = False
+                       ) -> tuple[TableChecks, list[Problem]]:
+    """THE reader of the ``x-table-checks`` block: checks every entry and
+    resolves the drift columns, collecting each problem as a (pointer,
+    message) pair; ``lint=True`` adds the ones a run survives (inverted
+    min/max, ``z_max <= 0``). A stats-family column must be named where
+    ``compile_table`` can put it in the fused scan (root or in-place branch
+    properties/required/patternProperties, or a row predicate); that walk
+    and bare-string drift entries are skipped without ``root``."""
+    problems: list[Problem] = []
+
+    def need(ok: Any, ptr: str, msg: str) -> bool:
+        if not ok:
+            problems.append((ptr, msg))
+        return bool(ok)
+
+    tc = {} if tc is None else tc
+    if not need(isinstance(tc, dict), _TC, f"must be an object, got {tc!r}"):
+        return TableChecks(), problems
+    for fam in tc:
+        need(fam in _FAMILIES, f"{_TC}/{fam}", f"unknown check family {fam!r}")
+
+    def entries(ptr: str, value: Any, kind: Any = dict, what: str = "an object"):
+        if not need(isinstance(value, (list, tuple)), ptr, f"must be an array, got {value!r}"):
+            return []
+        return [(f"{ptr}/{i}", e) for i, e in enumerate(value)
+                if need(isinstance(e, kind), f"{ptr}/{i}", f"must be {what}, got {e!r}")]
+
+    def family(fam: str, **kw):
+        return entries(f"{_TC}/{fam}", tc.get(fam, []), **kw)
+
+    unique = tuple(tuple(k) for p, k in family(
+        "unique", kind=(list, tuple), what="an array of column names")
+        if need(k and all(map(_is_name, k)), p, "a key must be a non-empty array of column names"))
+    references = tuple(dict(r) for p, r in family("references") if all([
+        need(_is_name(r.get(f)), p, f"missing {f!r}") for f in ("column", "dim", "key")]))
+    predicates = tuple(dict(r) for p, r in family("row-predicates") if all([
+        need(_is_name(r.get("name")), p, "row-predicate needs a non-empty 'name'"),
+        need(_is_name(r.get("test")), p, "row-predicate needs a SQL 'test' string")]))
+
+    anomaly = tc.get("anomaly")
+    ptr = f"{_TC}/anomaly"
+    if anomaly is not None and need(isinstance(anomaly, dict), ptr, "must be an object"):
+        cols, z = anomaly.get("columns"), anomaly.get("z_max")
+        need(isinstance(cols, list) and cols and all(map(_is_name, cols)), ptr,
+             "anomaly needs a non-empty 'columns' list of expressions")
+        need(not (lint and _number(z) and z <= 0), ptr, f"z_max={z} flags every partition")
+        anomaly = dict(anomaly)
+
+    drift, drift_columns = tc.get("drift"), []
+    ptr = f"{_TC}/drift"
+    if drift is not None and need(isinstance(drift, dict), ptr, "must be an object"):
+        for p, e in entries(f"{ptr}/columns", drift.get("columns", []), (dict, str),
+                            "an object or a property name"):
+            drift_columns += _drift_column(p, e, root, need)
+        drift = dict(drift)
+
+    bounded: dict[str, list] = {}
+    for fam in ("quantiles", "distinct", "null-rates"):
+        bounded[fam] = []
+        for p, c in family(fam):
+            lo, hi, q, r = (c.get(k) for k in ("min", "max", "q", "max_rate"))
+            oks = [need(_is_name(c.get("column")), p, f"{fam} check needs a 'column'")]
+            if fam == "null-rates":
+                oks.append(need(_number(r) and 0 <= r <= 1, p,
+                                f"null-rate check needs 0 <= max_rate <= 1, got {r!r}"))
+            else:
+                oks.append(need((lo, hi) != (None, None) and all(
+                    v is None or _number(v) for v in (lo, hi)), p,
+                    "needs a numeric 'min' or 'max' bound (neither checks nothing)"))
+                if fam == "quantiles":
+                    oks.append(need(_number(q) and 0 < q < 1, p,
+                                    f"quantile check needs 0 < q < 1, got {q!r}"))
+                need(not (lint and _number(lo) and _number(hi) and lo > hi), p,
+                     f"min ({lo}) > max ({hi}): unsatisfiable")
+            if all(oks):
+                bounded[fam].append((p, dict(c)))
+
+    if root is not None:
+        branches = list(in_place_branches(root))
+        named = set().union(*map(declared_names, branches))
+        patterns = [p for b in branches for p in b.pattern_properties]
+        for pred in predicates:
+            cols = pred.get("columns")
+            named |= set(cols) if cols is not None else sql_identifiers(pred["test"])
+        for p, c in (x for checks in bounded.values() for x in checks):
+            col = c["column"]
+            need(col in named or any(re.search(rx, col) for rx in patterns), p,
+                 f"column {col!r} is not named by the spec's properties, required, "
+                 "patternProperties or row predicates (the check is judged from "
+                 "the fused stats scan)" if named or patterns else
+                 f"column {col!r}: the spec has no properties, so the stats scan "
+                 "has no columns to judge it from")
+
+    return TableChecks(
+        unique=unique, references=references, drift=drift,
+        drift_columns=tuple(drift_columns), row_predicates=predicates,
+        anomaly=anomaly,
+        quantiles=tuple(c for _, c in bounded["quantiles"]),
+        distinct=tuple(c for _, c in bounded["distinct"]),
+        null_rates=tuple(c for _, c in bounded["null-rates"]),
+    ), problems
+
+
+def _drift_column(ptr: str, e: dict | str, root: SpecNode | None, need) -> list[DriftColumn]:
+    """Resolve one drift column entry: an object ``{"expr", "name"?,
+    "kind"?, "lo"?, "hi", "buckets"?}`` (expressions need explicit ranges:
+    a guessed one blinds KS/PSI), or a root property name, categorical if
+    string-typed, else ranged by its minimum/maximum."""
+    if isinstance(e, dict):
+        expr, lo, hi, n = e.get("expr"), e.get("lo", 0.0), e.get("hi"), e.get("buckets", 32)
+        if not need(_is_name(expr), ptr, "drift column needs a SQL 'expr' string"):
+            return []
+        name = e.get("name") or _drift_name(expr)
+        if e.get("kind", "numeric") == "categorical":
+            return [DriftColumn(name, expr, "categorical")]
+        if not need(_number(lo) and _number(hi) and isinstance(n, int) and n > 0, ptr,
+                    "numeric drift column needs numbers 'hi' and 'lo' (default 0) and "
+                    f"a positive integer 'buckets' (default 32), got {hi!r}/{lo!r}/{n!r}"):
+            return []
+        return [DriftColumn(name, expr, "numeric", float(lo), float(hi), n)]
+    prop = root.properties.get(e) if root is not None else None
+    if prop is not None and prop.type and "string" in prop.type and "(" not in e:
+        return [DriftColumn(_drift_name(e), e, "categorical")]
+    if root is None or not need(
+            prop is not None and prop.maximum is not None, ptr,
+            f"drift column {e!r} has no derivable numeric range (no matching property "
+            'with minimum/maximum); use the object form {"expr": ..., "lo": ..., '
+            '"hi": ..., "buckets": ...}'):
+        return []
+    lo = prop.minimum if prop.minimum is not None else 0.0
+    return [DriftColumn(_drift_name(e), e, "numeric", float(lo), float(prop.maximum), 32)]
+
+
+def table_check_problems(schema: dict[str, Any]) -> list[Problem]:
+    """Every problem of ``schema``'s ``x-table-checks`` block, including the
+    ones a run survives, as (pointer, message)."""
+    try:
+        root = parse_node(schema)
+    except (ValueError, TypeError, AttributeError, re.error):
+        # a root that does not parse (SpecError is a ValueError) is the
+        # meta-schema and $ref lints' concern
+        root = None
+    return _read_table_checks(schema.get("x-table-checks"), root, lint=True)[1]
 
 
 def _sub(v: Any, root: dict, depth: int, ref_stack: tuple[str, ...] = (),

@@ -72,7 +72,7 @@ def test_suite_tasks_and_no_python_scan(spark, tmp_path):
     res = validate_table(
         spark.read.parquet(f"{d}/fact"), FX.SPEC_IMAGES,
         dims={"dim_fmt": read["dim_fmt"], "dim_license": read["dim_license"]},
-        baseline=read["baseline"], drift_columns=FX.drift_columns())
+        baseline=read["baseline"])
     sc = spark.sparkContext
     sc.setJobGroup("suite-task-budget", "parquet-backed golden suite run")
     try:

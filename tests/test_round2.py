@@ -31,7 +31,6 @@ def test_fused_suite_reads_one_cached_scan(spark, tmp_path):
         dims={"dim_fmt": FX.dim_fmt_df(spark),
               "dim_license": FX.dim_license_df(spark, cfg)},
         baseline=baseline_profile(fact, FX.drift_columns()),
-        drift_columns=FX.drift_columns(),
     )
     res.violations.count()  # materialize the fused cache
     for name, df in [("violations", res.violations), ("stats", res.stats),
@@ -39,24 +38,6 @@ def test_fused_suite_reads_one_cached_scan(spark, tmp_path):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, f"{name} does not read the fused cache"
     res.cleanup()
-
-
-def test_fuse_scratch_matches_cache(spark, tmp_path):
-    """The parquet-scratch fusion route (used by the scaling bench and
-    job.py --scratch) yields identical violations to the cache route."""
-    cfg = FX.FixtureConfig(n=400, n_parts=4, with_bytes=False)
-    fact = FX.generate_images_df(spark, cfg)
-    kw = dict(dims={"dim_fmt": FX.dim_fmt_df(spark),
-                    "dim_license": FX.dim_license_df(spark, cfg)})
-    cached = validate_table(fact, FX.SPEC_IMAGES, **kw)
-    scratch = validate_table(fact, FX.SPEC_IMAGES,
-                             fuse_scratch=str(tmp_path / "base"), **kw)
-    cols = ["part_id", "row_key", "keyword", "path"]
-    a = sorted(tuple(r) for r in cached.violations.select(*cols).collect())
-    b = sorted(tuple(r) for r in scratch.violations.select(*cols).collect())
-    assert a == b and len(a) > 0
-    cached.cleanup()
-    scratch.cleanup()
 
 
 # --------------------------------------------------- CLI drift + fidelity path

@@ -235,7 +235,7 @@ def test_loader_is_the_single_fact_scan_choke_point(monkeypatch, spark, tmp_path
 
     # static sweep: engine/job/passes never call spark.read.parquet on the
     # fact table — the only read.parquet sites are the loader itself, the
-    # engine's own scratch/sink re-reads, and dim/baseline inputs.
+    # job's own sink re-reads, and dim/baseline inputs.
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     offenders = []
     for dirpath, _, files in os.walk(os.path.join(root, "jsonschema_spark")):
@@ -249,7 +249,6 @@ def test_loader_is_the_single_fact_scan_choke_point(monkeypatch, spark, tmp_path
                     offenders.append((os.path.relpath(p, root), i, line.strip()))
     allowed = {
         "jsonschema_spark/io/tables.py",     # the choke point itself
-        "jsonschema_spark/engine.py",        # fuse_scratch re-read (engine-internal intermediate)
         "jsonschema_spark/job.py",           # dims/baseline/own-sink re-reads only
         "jsonschema_spark/manifest.py",      # manifest sink re-read
         # engine-owned LSH-index re-read (per-trigger, so appends are
@@ -1357,9 +1356,9 @@ def test_theta_set_overlap_exact_and_algebra(spark):
 
 
 def test_cli_quantile_sketches_summary_and_resume_rollup(spark, tmp_path):
-    """--quantile-sketches: the stats sink carries per-partition KLL state
-    and the summary's global_quantiles are the table-wide merge — with
-    kll_k above the row count the values are exact inclusive-rank
+    """A spec with a quantile check: the stats sink carries per-partition
+    KLL state and the summary's global_quantiles are the table-wide merge
+    — with kll_k above the row count the values are exact inclusive-rank
     quantiles."""
     import json as _json
     from jsonschema_spark.job import run
@@ -1372,10 +1371,11 @@ def test_cli_quantile_sketches_summary_and_resume_rollup(spark, tmp_path):
     df.write.parquet(str(tmp_path / "t"))
     spec_path = str(tmp_path / "spec.json")
     with open(spec_path, "w") as f:
-        _json.dump({"properties": {"w": {"minimum": 0}}}, f)
+        _json.dump({"properties": {"w": {"minimum": 0}}, "x-table-checks": {
+            "quantiles": [{"column": "w", "q": 0.5, "min": 0}]}}, f)
     s = run(["--table", str(tmp_path / "t"), "--spec", spec_path,
              "--manifest", str(tmp_path / "man"), "--out", str(tmp_path / "out"),
-             "--quantile-sketches", "--kll-k", "2048"], spark=spark)
+             "--kll-k", "2048"], spark=spark)
     assert s["status"] == "ok"
     q = s["global_quantiles"]["w"]
     # inclusive rank over 0..399: ceil(q*400)-th smallest, 1-indexed
@@ -1786,77 +1786,6 @@ def test_embedding_incremental_matches_full_corpus(spark):
                 if r.id_a in new_ids or r.id_b in new_ids}
     assert got == expected and len(expected) > 0
     assert not any(a == 500 for a, _, _ in got)
-
-
-def test_quantile_bound_checks_verdicts(spark):
-    """x-table-checks/quantiles: spec'd quantile bounds judged against the
-    merged table-wide KLL sketch; verdicts join the main stream as
-    table-wide rows (part_id null, pass_id 'quantiles'); non-spec'd columns
-    fail fast."""
-    from jsonschema_spark.engine import validate_table
-
-    df = spark.range(1000).select(
-        F.concat(F.lit("img-"), F.col("id")).alias("image_id"),
-        (F.col("id") % 4).alias("part_id"),
-        F.col("id").cast("long").alias("w"))
-    spec = {"properties": {"w": {"minimum": 0}},
-            "x-table-checks": {"quantiles": [
-                {"column": "w", "q": 0.99, "max": 995},
-                {"column": "w", "q": 0.5, "min": 600}]}}
-    res = validate_table(df, spec, kll_k=4096)
-    qv = {(r["q"], r["passed"], r["value"]) for r in res.quantile_verdicts.collect()}
-    assert (0.99, True, 989.0) in qv and (0.5, False, 499.0) in qv
-    v = res.verdicts.where(F.col("pass_id") == "quantiles").collect()
-    assert len(v) == 2 and all(r["part_id"] is None for r in v)
-    assert {r["check_id"] for r in v} == {"quantile@/w@q0.99", "quantile@/w@q0.5"}
-
-    with pytest.raises(ValueError, match="zz"):
-        validate_table(df, {"properties": {"w": {}}, "x-table-checks": {
-            "quantiles": [{"column": "zz", "q": 0.5, "max": 1}]}})
-
-    from jsonschema_spark.spec import parse, SpecError
-    with pytest.raises(SpecError):
-        parse({"x-table-checks": {"quantiles": [{"column": "w", "q": 1.5, "max": 1}]}})
-    with pytest.raises(SpecError):
-        parse({"x-table-checks": {"quantiles": [{"column": "w", "q": 0.5}]}})
-
-
-def test_distinct_and_nullrate_checks_verdicts(spark):
-    """x-table-checks/distinct (merged HLL) and /null-rates (per-partition +
-    table-wide off the stats rows, n_violations = null count)."""
-    from jsonschema_spark.engine import validate_table
-    from jsonschema_spark.spec import parse, SpecError
-
-    df = spark.range(1000).select(
-        F.concat(F.lit("img-"), F.col("id")).alias("image_id"),
-        (F.col("id") % 4).alias("part_id"),
-        F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id") % 7).alias("v"),
-        (F.col("id") % 3).cast("string").alias("fmt"))
-    spec = {"properties": {"v": {}, "fmt": {}},
-            "x-table-checks": {
-                "distinct": [{"column": "fmt", "min": 2, "max": 10},
-                             {"column": "v", "min": 100}],
-                "null-rates": [{"column": "v", "max_rate": 0.05},
-                               {"column": "fmt", "max_rate": 0.0}]}}
-    res = validate_table(df, spec)
-    d = {(r["pass_id"], r["check_id"], r["part_id"]): (r["passed"], r["n_violations"])
-         for r in res.verdicts.where(
-             F.col("pass_id").isin("distinct", "null_rate")).collect()}
-    assert d[("distinct", "distinct@/fmt", None)][0] is True
-    assert d[("distinct", "distinct@/v", None)][0] is False   # 7 < 100
-    assert d[("null_rate", "null-rate@/v", None)] == (False, 100)
-    assert d[("null_rate", "null-rate@/fmt", None)] == (True, 0)
-    # nulls land only in even partitions (id%10==0 => id even)
-    assert d[("null_rate", "null-rate@/v", 0)] == (False, 50)
-    assert d[("null_rate", "null-rate@/v", 1)] == (True, 0)
-
-    with pytest.raises(ValueError, match="zz"):
-        validate_table(df, {"properties": {"v": {}}, "x-table-checks": {
-            "distinct": [{"column": "zz", "min": 1}]}})
-    with pytest.raises(SpecError):
-        parse({"x-table-checks": {"distinct": [{"column": "v"}]}})
-    with pytest.raises(SpecError):
-        parse({"x-table-checks": {"null-rates": [{"column": "v", "max_rate": 2}]}})
 
 
 def test_flagship_spec_emits_stats_check_family(spark):

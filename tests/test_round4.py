@@ -59,16 +59,6 @@ def test_stats_checks_require_spec_columns(spark):
         validate_table(df, spec, key_col="id", part_col="s")
 
 
-def test_quantile_check_on_non_numeric_column_rejected(spark):
-    """ADVICE r3 low: a quantile bound on a string column must be a config
-    error, not a silently-failing data verdict."""
-    df = spark.createDataFrame([(1, "a")], "id int, s string")
-    spec = {"properties": {"s": {}},
-            "x-table-checks": {"quantiles": [{"column": "s", "q": 0.5, "min": 0}]}}
-    with pytest.raises(ValueError, match="non-numeric"):
-        validate_table(df, spec, key_col="id", part_col="s")
-
-
 # --------------------------------------- contentSchema scalar (ADVICE #3)
 
 def test_content_schema_scalar_subschema_compiles(spark):
@@ -165,34 +155,6 @@ def test_unevaluated_nested_branch_compiled_map_runtime(spark):
 
 
 # ------------------------------------------ x-table-checks lint (round 4)
-
-def test_lint_x_table_checks():
-    from jsonschema_spark.lint import lint_spec
-
-    spec = {
-        "properties": {"w": {}, "fmt": {}},
-        "x-table-checks": {
-            "quantiles": [
-                {"column": "w", "q": 1.5, "max": 10},      # q out of range
-                {"column": "nope", "q": 0.5, "min": 0},    # undeclared column
-                {"column": "w", "q": 0.5},                 # no bound
-                {"column": "w", "q": 0.9, "min": 10, "max": 5},  # inverted
-            ],
-            "distinct": [{"column": "fmt", "min": 5, "max": 2}],
-            "null-rates": [{"column": "w", "max_rate": 1.5}],
-            "references": [{"column": "fmt"}],             # missing dim/key
-        },
-    }
-    findings = lint_spec(spec)
-    msgs = {(sev, p) for sev, p, _ in findings}
-    assert ("error", "/x-table-checks/quantiles/0") in msgs
-    assert ("error", "/x-table-checks/quantiles/1") in msgs
-    assert ("error", "/x-table-checks/quantiles/2") in msgs
-    assert ("error", "/x-table-checks/quantiles/3") in msgs
-    assert ("error", "/x-table-checks/distinct/0") in msgs
-    assert ("error", "/x-table-checks/null-rates/0") in msgs
-    assert ("error", "/x-table-checks/references/0") in msgs
-
 
 def test_lint_flagship_spec_clean():
     """The shipped flagship spec must lint clean (no errors)."""

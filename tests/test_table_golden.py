@@ -72,7 +72,6 @@ def result(spark):
         dims={"dim_fmt": FX.dim_fmt_df(spark),
               "dim_license": FX.dim_license_df(spark, CFG)},
         baseline=baseline_profile(clean, FX.drift_columns()),
-        drift_columns=FX.drift_columns(),
         fidelity_fn=lambda _: stub_stream(spark, "fidelity"),
         headers_fn=lambda _: stub_stream(spark, "headers"),
     )

@@ -260,19 +260,11 @@ def main() -> None:
     baseline = spark.read.parquet(base_dir)
     dims = {"dim_fmt": FX.dim_fmt_df(spark), "dim_license": FX.dim_license_df(spark, cfg)}
 
-    scratch = "/dev/shm/spark-scratch/fuse-base"
-
     def one_run() -> float:
         from concurrent.futures import ThreadPoolExecutor
-        import shutil
 
-        shutil.rmtree(scratch, ignore_errors=True)
         t0 = time.time()
-        # fuse_scratch: the fused projection materializes as a parquet
-        # scratch table (one clean write job, vectorized re-reads) instead
-        # of the SQL columnar cache — measured GC relief at 32 local cores.
-        res = validate_table(fact, FX.SPEC_IMAGES, dims=dims, baseline=baseline,
-                             drift_columns=FX.drift_columns(), fuse_scratch=scratch)
+        res = validate_table(fact, FX.SPEC_IMAGES, dims=dims, baseline=baseline)
         # the three outputs are independent DAGs — submit concurrently so
         # stage gaps of one job are filled by tasks of another (same as
         # job.py's sink writes)
