@@ -44,13 +44,18 @@ from .passes import referential as P3
 from .passes import drift as P4
 
 
+# the passes judged by counting violation rows (verdict n_violations = rows)
+VIOLATION_PASSES = ("rows", "unique", "refs", "fidelity", "headers")
+
+
 @dataclass
 class ValidationResult:
     violations: DataFrame       # (part_id, row_key, keyword, path, value)
     verdicts: DataFrame         # (part_id, check_id, keyword, path, passed, n_violations)
-    stats: DataFrame | None     # per-partition column stats (long format)
+    stats: DataFrame            # this run's partitions' state rows (stats.STATS_SCHEMA)
     drift_metrics: DataFrame | None
     compiled: CompiledTableSpec
+    table_stats: DataFrame | None = None  # `stats` plus the `state` passed in
     anomaly_flags: DataFrame | None = None  # per-(part, col, metric) robust-z
     quantile_verdicts: DataFrame | None = None  # x-table-checks/quantiles detail
     _cached: list[DataFrame] = field(default_factory=list)
@@ -250,6 +255,7 @@ def validate_table(
     fidelity_fn: Any | None = None,
     headers_fn: Any | None = None,
     kll_k: int = 200,
+    state: DataFrame | None = None,
 ) -> ValidationResult:
     """Run the validation suite over ``fact``.
 
@@ -273,6 +279,11 @@ def validate_table(
     (size ``kll_k``) per numeric spec'd column into the SAME single-scan
     stats aggregation (SURVEY §2 B42), and its stats rows carry them for
     ``passes.stats.merge_quantiles``.
+
+    ``state``: stats rows (``part_id`` + ``passes.stats.STATS_SCHEMA``) of
+    partitions an earlier run validated — a resume's completed ones. The
+    quantile, distinct, null-rate and P6 verdicts are judged on this run's
+    stats rows plus ``state``, as a fresh run over the whole table would.
 
     ``fidelity_fn``: optional callable ``fact -> violations DataFrame``
     (part_id, row_key, keyword, path, value) — the sampled decoded-pixel
@@ -410,17 +421,17 @@ def validate_table(
         )
 
     # P6 — partition anomaly (passes/anomaly.py): robust median/MAD z-score
-    # of per-partition column profiles. Its profile aggregation is FUSED
-    # into the stats aggregation below (one groupBy(part) agg serves P1
-    # stats, the check families AND P6), so the config is read here and the
-    # pass is constructed after the shared agg exists.
+    # of per-partition column profiles. Its state is FUSED into the stats
+    # aggregation below (one groupBy(part) agg serves P1 stats, the check
+    # families AND P6), so the config is read here and the pass is
+    # constructed from the state rows.
     acfg = spec.table_checks.anomaly
     anomaly_df = None
-    a_cols: list[str] = []
+    a_cols: tuple[str, ...] = ()
     if acfg is not None:
         fields = {f.name: f.dataType for f in fact.schema.fields}
-        a_cols = [c for c in acfg["columns"]
-                  if c not in fields or fields[c].typeName() != "binary"]
+        a_cols = tuple(c for c in acfg["columns"]
+                       if c not in fields or fields[c].typeName() != "binary")
 
     # fused stats (B14/B15) — from the same cached scan, never `bytes`
     qchecks = spec.table_checks.quantiles
@@ -443,35 +454,34 @@ def validate_table(
         raise ValueError(
             f"x-table-checks/quantiles on non-numeric columns {bad_q} — "
             "quantile sketches exist only for numeric columns")
-    stats_df = None
-    wide_agg = None
-    if stat_cols or acfg is not None:
-        # ONE aggregation over `base` for the stats sink, the quantile/
-        # distinct/null-rate verdict branches AND the P6 profile; the
-        # result is partitions-scale, so persist it — without this the
-        # concurrent sink jobs re-ran the 10^12-row aggregation once per
-        # consumer (measured: three ~300-600 task-second
-        # ObjectHashAggregate stages per suite run at 32M rows, each
-        # re-shuffling ~277 MB of partial sketch state).
-        wide_agg = _persist(P1.partition_wide_agg(
-            base, stat_cols, part_col=part_col,
-            with_quantiles=bool(qchecks), kll_k=kll_k,
-            anomaly_exprs=tuple(a_cols)))
-        if stat_cols:
-            stats_df = P1.stats_long(wide_agg, stat_cols,
-                                     P1.numeric_columns(base, stat_cols),
-                                     with_quantiles=bool(qchecks))
+    # ONE aggregation over `base` for the stats sink, the quantile/
+    # distinct/null-rate verdict branches AND the P6 profile; the result is
+    # partitions-scale, so persist it — without this the concurrent sink
+    # jobs re-ran the 10^12-row aggregation once per consumer (measured:
+    # three ~300-600 task-second ObjectHashAggregate stages per suite run
+    # at 32M rows, each re-shuffling ~277 MB of partial sketch state).
+    wide_agg = _persist(P1.partition_wide_agg(
+        base, stat_cols, part_col=part_col,
+        with_quantiles=bool(qchecks), kll_k=kll_k, anomaly_exprs=a_cols))
+    stats_df = P1.stats_long(wide_agg, stat_cols, a_cols)
+    # every table-wide judgement below reads this run's state plus the
+    # completed partitions' (see ``state`` in the docstring)
+    table_stats = stats_df
+    judged_parts = all_parts
+    if state is not None:
+        table_stats = stats_df.unionByName(state.select(*stats_df.columns))
+        judged_parts = all_parts.unionByName(state.select("part_id").distinct())
 
-    # P6 assembly — from the fused wide agg
+    # P6 assembly — from the state rows of every judged partition
     if acfg is not None:
         from jsonschema_spark.passes import anomaly as P6
 
-        prof = P6.profile_from_wide(wide_agg, a_cols)
+        prof = P6.profile_from_stats(table_stats, a_cols)
         anomaly_df = P6.anomaly_flags(prof, z_max=acfg.get("z_max", 3.5))
         flagged = P6.anomaly_verdicts(anomaly_df)
         # healthy partitions still get explicit pass rows (per-partition
         # pass/fail contract): every partition with no flag
-        healthy = all_parts.join(flagged, "part_id", "left_anti").select(
+        healthy = judged_parts.join(flagged, "part_id", "left_anti").select(
             "part_id", F.lit("anomaly@").alias("check_id"),
             F.lit("anomaly").alias("keyword"), F.lit("/").alias("path"),
             F.lit(True).alias("passed"), F.lit(0).cast("long").alias("n_violations"))
@@ -484,7 +494,7 @@ def validate_table(
     quantile_verdicts = None
     if qchecks:
         qs = tuple(sorted({float(q["q"]) for q in qchecks}))
-        melted = P1.merge_quantiles(stats_df, qs).selectExpr(
+        melted = P1.merge_quantiles(table_stats, qs).selectExpr(
             "column",
             f"stack({len(qs)}, "
             + ", ".join(f"'{P1.quantile_name(q)}', {P1.quantile_name(q)}" for q in qs)
@@ -512,19 +522,19 @@ def validate_table(
               int(d["min"]) if "min" in d else None,
               int(d["max"]) if "max" in d else None) for d in dchecks])
         _, dv = _bound_verdicts(
-            d_df, P1.merge_sketches(stats_df), ["column"], "n_distinct_merged",
+            d_df, P1.merge_sketches(table_stats), ["column"], "n_distinct_merged",
             "distinct", F.concat(F.lit("distinct@/"), "column"))
         verdict_streams.append(dv.withColumn("pass_id", F.lit("distinct")))
 
     # null-rate bounds: per-partition AND table-wide verdicts in ONE
     # aggregation (grouping sets, as in rollup_verdicts) straight off the
-    # stats rows (no extra scan); n_violations carries the null count
+    # state rows (no extra scan); n_violations carries the null count
     if nrchecks:
         nr_df = _literal_table(
             spark, [("column", "string"), ("max_rate", "double")],
             [(n["column"], float(n["max_rate"])) for n in nrchecks])
         nr = (
-            stats_df.select("part_id", "column", "n_rows", "n_nulls")
+            table_stats.select("part_id", "column", "n_rows", "n_nulls")
             .join(nr_df, "column")
             .groupingSets([["part_id", "column", "max_rate"], ["column", "max_rate"]],
                           "part_id", "column", "max_rate")
@@ -544,6 +554,7 @@ def validate_table(
         violations=reduce(DataFrame.unionByName, streams),
         verdicts=reduce(DataFrame.unionByName, verdict_streams),
         stats=stats_df,
+        table_stats=table_stats,
         drift_metrics=drift_df,
         anomaly_flags=anomaly_df,
         quantile_verdicts=quantile_verdicts,

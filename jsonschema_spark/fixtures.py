@@ -272,6 +272,8 @@ SPEC_IMAGES = {
         "fmt": {"type": "string", "enum": ["png", "bmp", "raw", "jpeg"]},
         "caption": {"type": "string", "minLength": 1, "maxLength": 4096},
         "phash": {"type": "integer"},
+        # the encoded image: required, its content judged by P5/P7 only
+        "bytes": {},
     },
     "required": ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
     "x-table-checks": {

@@ -11,6 +11,10 @@ manifest rows after each batch so a killed run resumes where it left off
 (BASELINE.json:14). Prints a one-line JSON summary with images/sec (the
 north metric, BASELINE.json:2).
 
+The summary comes from the run's verdict frame and stats rows, never from
+its sinks; a ``--resume`` first reads the completed partitions' stats rows
+(``validate_table``'s ``state``) and failed verdicts once.
+
 The spec decides which table passes run: its ``x-table-checks`` block,
 checked and resolved by ``spec.parse``, declares them. Drift runs when the
 block has drift columns and ``--baseline`` is given; quantile checks add
@@ -26,13 +30,55 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import get_session, validate_table
+from .engine import VIOLATION_PASSES, get_session, validate_table
 from .io.tables import load_fact_table
 from .manifest import Manifest
+from .passes.stats import STATS_SCHEMA, merge_quantiles, merge_sketches
 from .spec import parse
+
+VERDICTS_SCHEMA = ("check_id string, keyword string, path string, passed boolean, "
+                   "n_violations long, pass_id string")
+
+
+def _cell_counts(verdicts: DataFrame) -> dict:
+    """(part_id, pass_id) -> (failed checks, exact violation rows)."""
+    return {
+        (r.part_id, r.pass_id): (r.n_failed, r.n_violations)
+        for r in verdicts.groupBy("part_id", "pass_id").agg(
+            F.count(F.when(~F.col("passed"), 1)).alias("n_failed"),
+            F.sum(F.when(F.col("pass_id").isin(*VIOLATION_PASSES), F.col("n_violations"))
+                  .otherwise(0)).alias("n_violations"),
+        ).collect()
+    }
+
+
+def _rows_per_part(stats: DataFrame) -> dict:
+    return {r.part_id: r.n for r in
+            stats.groupBy("part_id").agg(F.max("n_rows").alias("n")).collect()}
+
+
+def _completed_state(spark: SparkSession, out: str, done: list, part_type: str):
+    """The completed partitions' stats rows, row counts and failed
+    verdicts' ``_cell_counts``; raises when a partition's state is gone, as
+    no table-wide check could then be judged. The stats rows are
+    checkpointed, not persisted: a plan that still read the sink would be
+    re-executed from the rewritten files once the stats sink is written."""
+    part = f", part_id {part_type}"
+    is_done = F.col("part_id").cast("string").isin([str(p) for p in done])
+    state = (spark.read.schema(STATS_SCHEMA + part).parquet(out + "/stats")
+             .where(is_done).localCheckpoint())
+    rows = _rows_per_part(state)
+    missing = [p for p in done if str(p) not in map(str, rows)]
+    if missing:
+        raise SystemExit(
+            f"--resume: the manifest marks partitions {missing} done but "
+            f"{out}/stats holds no state for them; rerun without --resume")
+    failed = (spark.read.schema(VERDICTS_SCHEMA + part).parquet(out + "/verdicts")
+              .where(is_done & ~F.col("passed")))
+    return state, rows, _cell_counts(failed)
 
 
 def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict:
@@ -124,10 +170,9 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     # format swap point (parquet here, `--table-format iceberg` or
     # SPARK_GRAFT_TABLE_FORMAT=iceberg on a real cluster).
     fact_full = load_fact_table(spark, args.table, fmt=args.table_format)
-    fact = fact_full
     man = Manifest(spark, args.manifest)
-    if args.resume:
-        fact = man.filter_pending(fact_full, "full", part_col=args.part_col)
+    done = man.completed_parts("full") if args.resume else []
+    fact = man.exclude(fact_full, done, part_col=args.part_col)
 
     dims = {}
     for d in args.dim:
@@ -142,6 +187,10 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
         man.write_summary(summary)
         print(json.dumps(summary))
         return summary
+    state, prior_rows, prior_cells = None, {}, {}
+    if done:
+        state, prior_rows, prior_cells = _completed_state(
+            spark, args.out, done, fact_full.schema[args.part_col].dataType.simpleString())
 
     fidelity_fn = None
     if args.sample_fidelity:
@@ -196,11 +245,13 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
         fidelity_fn=fidelity_fn,
         headers_fn=headers_fn,
         kll_k=args.kll_k,
+        state=state,
     )
     # Sinks partitioned by (pass_id, part_id). Overwrite semantics:
     # - resume: DYNAMIC partition overwrite rewrites exactly the cells this
     #   run recomputed (pending partitions per-partition, all partitions for
-    #   the global uniqueness pass) and completed cells survive (B4).
+    #   the table-wide uniqueness, anomaly and null-rate passes) and
+    #   completed cells survive (B4).
     # - fresh run: STATIC overwrite truncates the whole sink first — dynamic
     #   mode would leave stale cells from a previous run with a different
     #   spec/data (a partition whose violations dropped to zero writes no
@@ -210,119 +261,52 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     from concurrent.futures import ThreadPoolExecutor
 
     ow_mode = "dynamic" if args.resume else "static"
+    # the verdicts sink and the summary both read the verdict frame
+    verdicts = res.verdicts.persist()
 
-    writes = [
-        lambda: (
-            res.violations.repartition("pass_id", "part_id")
-            .write.mode("overwrite").option("partitionOverwriteMode", ow_mode)
-            .partitionBy("pass_id", "part_id")
-            .parquet(args.out + "/violations")
-        ),
-        lambda: (
-            res.verdicts.write.mode("overwrite")
-            .option("partitionOverwriteMode", ow_mode)
-            .partitionBy("pass_id", "part_id")
-            .parquet(args.out + "/verdicts")
-        ),
-    ]
-    if res.stats is not None:
-        writes.append(
-            lambda: res.stats.write.mode("overwrite")
-            .option("partitionOverwriteMode", ow_mode)
-            .partitionBy("part_id")
-            .parquet(args.out + "/stats")
-        )
-    with ThreadPoolExecutor(len(writes)) as ex:
-        for f in ex.map(lambda w: w(), writes):
-            pass
+    sinks = [("violations", res.violations.repartition("pass_id", "part_id"), ["pass_id"]),
+             ("verdicts", verdicts, ["pass_id"]), ("stats", res.stats, [])]
 
-    global_distinct = {}
-    if res.stats is not None:
-        # B15: the stats sink keeps every partition's HLL sketch (dynamic
-        # overwrite preserves completed parts across resumes), so the
-        # table-wide distinct estimate merges sketches over ALL partitions —
-        # including ones validated before a kill — via hll_union_agg.
-        from .passes.stats import merge_sketches
+    def write(sink) -> None:
+        name, df, keys = sink
+        (df.write.mode("overwrite").option("partitionOverwriteMode", ow_mode)
+         .partitionBy(*keys, "part_id").parquet(f"{args.out}/{name}"))
 
-        global_distinct = {
-            r.column: int(r.n_distinct_merged)
-            for r in merge_sketches(spark.read.parquet(args.out + "/stats")).collect()
-        }
+    with ThreadPoolExecutor(len(sinks)) as ex:
+        list(ex.map(write, sinks))
 
-    global_quantiles = {}
-    if res.stats is not None and spec.table_checks.quantiles:
-        # B42: same resume-safe rollup for the KLL quantile sketches that a
-        # spec with quantile checks puts in the stats sink — the sink holds
-        # every partition's sketch, so table-wide p50/p90/p99 cover
-        # completed-before-a-kill partitions too.
-        from .passes.stats import merge_quantiles
-
-        global_quantiles = {
-            r.column: {"q50": r.q50, "q90": r.q90, "q99": r.q99}
-            for r in merge_quantiles(spark.read.parquet(args.out + "/stats")).collect()
-        }
-
-    # the one-line answer to "did the table pass": failed-check counts per
-    # pass from the (tiny) verdicts sink — covers every check family incl.
-    # the table-wide quantile/distinct/null-rate rows
-    from pyspark.errors import AnalysisException as _AE
-
-    try:
-        failed_checks = {
-            r.pass_id: r.n
-            for r in spark.read.parquet(args.out + "/verdicts")
-            .where(~F.col("passed"))
-            .groupBy("pass_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-    except _AE:
-        # a spec with zero checks writes no verdict rows — the sink then has
-        # no data files and schema inference raises; that is a (degenerate)
-        # clean table. Any other failure propagates via the sinks above.
-        failed_checks = {}
-
-    # lineage rows: per-partition row + violation counts from the written
-    # outputs. Row counts come from the stats sink (every column row of a
-    # partition carries the same n_rows) — re-scanning the fact table for
-    # numbers already on disk would be an entire extra 100 TB read.
-    from pyspark.errors import AnalysisException
-
-    try:
-        vc = {
-            r.part_id: r.n
-            for r in spark.read.parquet(args.out + "/violations")
-            .groupBy("part_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-    except AnalysisException:
-        # a fully-clean run writes zero violation rows — the sink then has
-        # no data files and schema inference raises AnalysisException; that
-        # IS the happy path. Any OTHER failure (corrupted sink, permissions,
-        # transient I/O) must propagate — mapping it to vc={} would make a
-        # hard failure indistinguishable from a clean run.
-        vc = {}
-    if res.stats is not None:
-        rc = {
-            r.part_id: r.n
-            for r in spark.read.parquet(args.out + "/stats")
-            .groupBy("part_id").agg(F.max("n_rows").alias("n")).collect()
-        }
-    else:  # no stat columns in the spec — fall back to one narrow count scan
-        rc = {
-            r.part_id: r.n
-            for r in fact.groupBy(args.part_col).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-    wall_ms = (time.time() - t0) * 1000
+    # The summary and the manifest rows come from this run's frames plus
+    # the completed partitions' state read above, never from the sinks. A
+    # (part, pass) verdict cell this run judged replaces the completed
+    # one, as the dynamic overwrite replaces it in the sink.
+    cells = {**prior_cells, **_cell_counts(verdicts)}
+    vc: dict = {}
+    failed_checks: dict = {}
+    for (part, pass_id), (n_failed, n_viol) in cells.items():
+        vc[part] = vc.get(part, 0) + n_viol
+        if n_failed:
+            failed_checks[pass_id] = failed_checks.get(pass_id, 0) + n_failed
+    rc = {**prior_rows, **_rows_per_part(res.stats)}
+    # B15/B42: the table-wide distinct and quantile estimates merge the
+    # sketches of every partition, completed ones included
+    global_distinct = {r.column: int(r.n_distinct_merged)
+                       for r in merge_sketches(res.table_stats).collect()}
+    global_quantiles = {
+        r.column: {"q50": r.q50, "q90": r.q90, "q99": r.q99}
+        for r in merge_quantiles(res.table_stats).collect()
+    } if spec.table_checks.quantiles else None
+    # wall_ms is NULL: a fused run validates its partitions in one pass and
+    # cannot observe a per-partition wall time (the summary has wall_sec)
     man.record(
         [
             {"part_id": p, "pass_id": "full", "status": "done",
-             "n_rows": rc.get(p, 0), "n_violations": vc.get(p, 0),
-             "wall_ms": wall_ms / max(len(pending_parts), 1)}
+             "n_rows": rc.get(p, 0), "n_violations": vc.get(p, 0), "wall_ms": None}
             for p in pending_parts
         ]
     )
-    # On resume the sinks (dynamic overwrite) carry EVERY completed
-    # partition's rows, but this run only processed the pending ones —
-    # n_rows/images_per_sec must reflect the work actually done, with the
-    # table-wide totals reported separately.
+    # n_rows/n_violations/images_per_sec cover the partitions this run
+    # processed; the table_* totals cover every partition, completed ones
+    # included.
     pend = set(pending_parts)
     n_rows = sum(n for p, n in rc.items() if p in pend)
     elapsed = time.time() - t0
@@ -336,13 +320,14 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
         "wall_sec": round(elapsed, 3),
         "images_per_sec": round(n_rows / elapsed, 1) if elapsed > 0 else 0.0,
         "global_distinct": global_distinct,
-        **({"global_quantiles": global_quantiles} if spec.table_checks.quantiles else {}),
+        **({"global_quantiles": global_quantiles} if global_quantiles is not None else {}),
         "n_failed_checks": failed_checks,
         "table_passed": not failed_checks,
     }
     man.write_summary(summary)
     print(json.dumps(summary))
     res.cleanup()  # unpersist run caches — library callers keep their session
+    verdicts.unpersist()
     if own_session:
         spark.stop()
     return summary

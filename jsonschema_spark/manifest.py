@@ -3,8 +3,9 @@
 BASELINE.json:6/14: "resumable from a checkpointed per-partition lineage +
 metrics manifest". The manifest is itself a small Parquet table, one row per
 (part_id, pass_id) batch completion, carrying lineage (rows, violations,
-wall_ms, engine version) and mergeable metric state (HLL sketch binaries,
-B15) so table-wide rollups survive resume boundaries.
+wall_ms, engine version). ``job.py`` records ``wall_ms`` as NULL: a fused
+run cannot observe a per-partition wall time. The mergeable state that lets
+table-wide rollups survive resume boundaries (B15) is in the stats sink.
 
 Resume semantics: completed part_ids are skipped via an anti-join (B7) —
 or, when the done-list is small, a pushed-down ``NOT IN`` partition filter
@@ -88,7 +89,7 @@ class Manifest:
                 "status": r.get("status", "done"),
                 "n_rows": int(r.get("n_rows", 0)),
                 "n_violations": int(r.get("n_violations", 0)),
-                "wall_ms": float(r.get("wall_ms", 0.0)),
+                "wall_ms": None if r.get("wall_ms") is None else float(r["wall_ms"]),
                 "engine_version": __version__,
                 "ts": now,
             }
@@ -105,7 +106,10 @@ class Manifest:
 
     def filter_pending(self, fact: DataFrame, pass_id: str, part_col: str = "part_id") -> DataFrame:
         """B7: drop partitions already completed for ``pass_id``."""
-        done = self.completed_parts(pass_id)
+        return self.exclude(fact, self.completed_parts(pass_id), part_col)
+
+    def exclude(self, fact: DataFrame, done: list, part_col: str = "part_id") -> DataFrame:
+        """Drop the partitions ``done`` (as ``completed_parts`` lists them)."""
         if not done:
             return fact
         # Convert the done-list to the FACT column's own type so the

@@ -8,11 +8,9 @@ whose mean jumped 10x, passes both when the damaged values are individually
 legal. The partition profile catches exactly that failure mode.
 
 Scale shape:
-- the profile is the anomaly branch of ``stats.partition_wide_agg``, the
-  one per-partition hash aggregation: output is partitions × columns rows,
-  independent of row count, and map-side partial aggregation collapses
-  everything before the shuffle. ``validate_table`` folds it into the
-  stats pass's aggregation; ``partition_profile`` runs it alone.
+- the profile derives from mergeable state (non-null count, sum, null
+  count per expression) that ``stats.partition_wide_agg`` puts in the
+  stats rows: partitions × columns rows, independent of row count.
 - ``anomaly_flags`` runs entirely on that tiny profile table: per-column
   median and MAD via window functions, no fact data touched. Robust
   statistics (median/MAD, not mean/stddev) so the outlier batches being
@@ -25,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .stats import partition_wide_agg
+from .stats import partition_wide_agg, stats_long
 
 # Φ^{-1}(0.75): MAD × 1.4826 estimates σ under normality, making the z
 # threshold comparable to a classic z-score cut.
@@ -40,28 +38,26 @@ def partition_profile(
     expression, e.g. ``length(caption)`` — same surface as the drift
     columns). The expression string itself is the reported label. This is
     ``stats.partition_wide_agg`` with no stats columns, projected by
-    ``profile_from_wide``."""
-    return profile_from_wide(
-        partition_wide_agg(df, [], part_col=part_col,
-                           anomaly_exprs=tuple(columns)), columns)
+    ``profile_from_stats``."""
+    exprs = tuple(columns)
+    wide = partition_wide_agg(df, [], part_col=part_col, anomaly_exprs=exprs)
+    return profile_from_stats(stats_long(wide, [], exprs), columns)
 
 
-def profile_from_wide(wide: DataFrame, exprs: list[str]) -> DataFrame:
-    """Derive the (part_id, n_rows, column, metric, value) profile from a
-    ``stats.partition_wide_agg(..., anomaly_exprs=exprs)`` result. The
-    engine passes its fused wide agg, so P6 costs zero extra fact-table
-    aggregations (the wide agg is partitions-scale and persisted)."""
-    entries = []
-    for i, c in enumerate(exprs):
-        entries.append(F.struct(
-            F.lit(c).alias("column"), F.lit("mean").alias("metric"),
-            F.col(f"__a{i}_mean").alias("value")))
-        entries.append(F.struct(
-            F.lit(c).alias("column"), F.lit("null_rate").alias("metric"),
-            F.col(f"__a{i}_nullrate").alias("value")))
+def profile_from_stats(stats: DataFrame, exprs: list[str]) -> DataFrame:
+    """The (part_id, n_rows, column, metric, value) profile of state rows
+    (``stats.stats_long``): mean = sum_numeric / n_numeric, null rate =
+    n_nulls / n_rows. The engine passes every judged partition's rows, a
+    resume's completed ones included, as the median/MAD population."""
+    metrics = F.array(
+        F.struct(F.lit("mean").alias("metric"),
+                 F.try_divide("sum_numeric", "n_numeric").alias("value")),
+        F.struct(F.lit("null_rate").alias("metric"),
+                 F.try_divide(F.col("n_nulls").cast("double"), "n_rows").alias("value")))
     return (
-        wide.select("part_id", "n_rows", F.explode(F.array(*entries)).alias("e"))
-        .select("part_id", "n_rows", "e.column", "e.metric", "e.value")
+        stats.where(F.col("column").isin(list(exprs)))
+        .select("part_id", "n_rows", "column", F.explode(metrics).alias("m"))
+        .select("part_id", "n_rows", "column", "m.metric", "m.value")
     )
 
 

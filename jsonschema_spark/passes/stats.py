@@ -11,7 +11,7 @@ Scale notes (100 TB / 10^12 rows):
   Catalyst executes it as map-side partial + final hash aggregation, so the
   shuffle carries one small row per (partition × map-task), not data rows.
 - HLL sketches (`hll_sketch_agg`) are mergeable binary state (O(KB)): they
-  round-trip through the manifest and roll up table-wide via
+  round-trip through the stats sink and roll up table-wide via
   ``hll_union_agg`` across resume boundaries (B15).
 - Row violations are a pure projection (whole-stage codegen) + explode;
   the sink is bounded by top-k per (partition, keyword) (B21) while exact
@@ -85,6 +85,23 @@ def numeric_columns(df: DataFrame, columns: list[str]) -> set[str]:
     }
 
 
+# The per-partition state table (the stats sink): one row per (partition,
+# key), a key being a spec'd column or a P6 anomaly expression; a field a
+# key does not carry is NULL. Every field merges across partitions.
+# n_numeric/sum_numeric: count and sum of the key's non-null double values.
+_STATE_FIELDS = (
+    ("n_rows", "long"), ("n_nulls", "long"), ("min_val", "string"),
+    ("max_val", "string"), ("n_distinct_approx", "long"),
+    ("hll_sketch", "binary"), ("kll_sketch", "binary"),
+    ("n_numeric", "long"), ("sum_numeric", "double"),
+)
+STATS_SCHEMA = "column string, " + ", ".join(f"{n} {t}" for n, t in _STATE_FIELDS)
+
+
+def _state_keys(columns: list[str], anomaly_exprs: tuple[str, ...]) -> list[str]:
+    return list(dict.fromkeys([*columns, *anomaly_exprs]))
+
+
 def partition_wide_agg(
     df: DataFrame,
     columns: list[str],
@@ -94,44 +111,42 @@ def partition_wide_agg(
     kll_k: int = 200,
     anomaly_exprs: tuple[str, ...] = (),
 ) -> DataFrame:
-    """THE per-partition aggregation: one ``groupBy(part)`` hash agg
-    computing the stats-pass state for every spec'd column and, when
-    ``anomaly_exprs`` is non-empty, the partition-anomaly profile
-    (mean + null-rate per expression, ``__a{i}_mean``/``__a{i}_nullrate``
-    columns) in the SAME pass — the stats sink, the quantile/distinct/
-    null-rate check families, and P6 all derive from this one result, so
-    the fact table is aggregated exactly once for all of them (at 32M rows
-    the un-fused form ran three ~300-600 task-second ObjectHashAggregate
-    stages per suite, each re-exchanging ~277 MB of partial sketch state).
+    """THE per-partition aggregation: one ``groupBy(part)`` hash agg of the
+    state of every key (each column, and each ``anomaly_exprs`` entry — a
+    column or any SQL expression). The stats sink, the quantile/distinct/
+    null-rate checks and P6 all derive from it, so the fact table is
+    aggregated once for all of them (un-fused, 32M rows ran three ~300-600
+    task-second ObjectHashAggregate stages per suite).
 
-    Output: one row per partition; the caller persists it (partitions ×
-    columns scale, independent of row count) and projects the long stats
-    shape via ``stats_long`` / the anomaly profile via
-    ``anomaly.profile_from_wide``."""
+    Output: one row per partition, ``n_rows`` plus ``__{i}_{field}`` for
+    key i; ``stats_long`` projects the state rows."""
     aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
     numeric = numeric_columns(df, columns)
-    for c in columns:
-        col = F.col(c)
-        aggs.append(F.sum(col.isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.min(col).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(col).cast("string").alias(f"{c}__max"))
-        aggs.append(F.approx_count_distinct(col).alias(f"{c}__dist"))
-        if with_sketches:
-            # hll_sketch_agg natively supports int/long/string/binary — pass
-            # those through unchanged (a cast("string") on an int column
-            # allocates a UTF8String per CELL: measured GC churn at 32
-            # cores); only unsupported types (double, date, ...) cast.
-            dt = df.schema[c].dataType.typeName()
-            sk = col if dt in ("integer", "long", "string") else col.cast("string")
-            aggs.append(F.hll_sketch_agg(sk).alias(f"{c}__hll"))
-        if with_quantiles and c in numeric:
-            aggs.append(
-                F.kll_sketch_agg_double(col.cast("double"), F.lit(kll_k))
-                .alias(f"{c}__kll"))
-    for i, e in enumerate(anomaly_exprs):
-        v = F.expr(e)
-        aggs.append(F.avg(v.cast("double")).alias(f"__a{i}_mean"))
-        aggs.append(F.avg(v.isNull().cast("double")).alias(f"__a{i}_nullrate"))
+    for i, c in enumerate(_state_keys(columns, anomaly_exprs)):
+        p = f"__{i}_"
+        col = F.col(c) if c in columns else F.expr(c)
+        aggs.append(F.sum(col.isNull().cast("long")).alias(p + "n_nulls"))
+        if c in columns:
+            aggs.append(F.min(col).cast("string").alias(p + "min_val"))
+            aggs.append(F.max(col).cast("string").alias(p + "max_val"))
+            aggs.append(F.approx_count_distinct(col).alias(p + "n_distinct_approx"))
+            if with_sketches:
+                # hll_sketch_agg natively supports int/long/string/binary —
+                # pass those through unchanged (a cast("string") on an int
+                # column allocates a UTF8String per CELL: measured GC churn
+                # at 32 cores); only unsupported types (double, date, ...)
+                # cast.
+                dt = df.schema[c].dataType.typeName()
+                sk = col if dt in ("integer", "long", "string") else col.cast("string")
+                aggs.append(F.hll_sketch_agg(sk).alias(p + "hll_sketch"))
+            if with_quantiles and c in numeric:
+                aggs.append(
+                    F.kll_sketch_agg_double(col.cast("double"), F.lit(kll_k))
+                    .alias(p + "kll_sketch"))
+        if c in anomaly_exprs:
+            v = col.cast("double")
+            aggs.append(F.count(v).alias(p + "n_numeric"))
+            aggs.append(F.sum(v).alias(p + "sum_numeric"))
     # no pre-select: anomaly expressions may reference any input column;
     # Catalyst column-prunes the scan to exactly the referenced set (the
     # single-HashAggregate plan assert pins this)
@@ -139,36 +154,24 @@ def partition_wide_agg(
 
 
 def stats_long(
-    wide: DataFrame,
-    columns: list[str],
-    numeric: set[str],
-    with_sketches: bool = True,
-    with_quantiles: bool = False,
+    wide: DataFrame, columns: list[str], anomaly_exprs: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Project ``partition_wide_agg`` output to the stats-sink long format:
-    part_id, column, n_rows, n_nulls, min_val, max_val, n_distinct_approx,
-    hll_sketch[, kll_sketch]."""
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col(f"{c}__nulls").alias("n_nulls"),
-            F.col(f"{c}__min").alias("min_val"),
-            F.col(f"{c}__max").alias("max_val"),
-            F.col(f"{c}__dist").alias("n_distinct_approx"),
-            (F.col(f"{c}__hll") if with_sketches else F.lit(None).cast("binary")).alias("hll_sketch"),
-            *([(F.col(f"{c}__kll") if c in numeric else F.lit(None).cast("binary")).alias("kll_sketch")]
-              if with_quantiles else []),
-        )
-        for c in columns
+    """Project ``partition_wide_agg`` output to the state rows: part_id
+    then ``STATS_SCHEMA``, one row per (partition, key). A partition with
+    no keys still gets one row (``column`` NULL) carrying its ``n_rows``."""
+    have = set(wide.columns)
+
+    def field(i: int, name: str, typ: str) -> Column:
+        src = "n_rows" if name == "n_rows" else f"__{i}_{name}"
+        return (F.col(src) if src in have else F.lit(None).cast(typ)).alias(name)
+
+    entries = [
+        F.struct(F.lit(c).cast("string").alias("column"),
+                 *[field(i, n, t) for n, t in _STATE_FIELDS])
+        for i, c in enumerate(_state_keys(columns, anomaly_exprs) or [None])
     ]
-    out_cols = [
-        "part_id", "s.column", "n_rows", "s.n_nulls", "s.min_val", "s.max_val",
-        "s.n_distinct_approx", "s.hll_sketch",
-    ] + (["s.kll_sketch"] if with_quantiles else [])
-    return (
-        wide.select("part_id", "n_rows", F.explode(F.array(*structs)).alias("s"))
-        .select(*out_cols)
-    )
+    return wide.select("part_id", F.explode(F.array(*entries)).alias("s")).select(
+        "part_id", "s.*")
 
 
 def column_stats(
@@ -179,28 +182,19 @@ def column_stats(
     with_quantiles: bool = False,
     kll_k: int = 200,
 ) -> DataFrame:
-    """Fused per-partition stats for all spec'd columns in ONE aggregation.
-
-    Output (long format): part_id, column, n_rows, n_nulls, min_val:string,
-    max_val:string, n_distinct_approx, hll_sketch:binary[, kll_sketch:binary].
+    """Fused per-partition stats for all spec'd columns in ONE aggregation:
+    the state rows (part_id, then ``STATS_SCHEMA``; the anomaly fields
+    NULL).
 
     ``with_quantiles`` adds a mergeable KLL quantile sketch per NUMERIC
-    column (Apache DataSketches, same family as the HLL sketches): binary
-    state that round-trips through the stats manifest and rolls up
-    table-wide via ``kll_merge_agg_double`` across resume boundaries — the
-    quantile analogue of B15, giving resumable p50/p90/p99 without a global
-    sort or a second fact scan. KLL is exact while a sketch has seen ≤ k
-    values (no compaction yet) and carries the published ~1.65%/k=200 rank
-    error beyond; raise ``kll_k`` for tighter tails. Opt-in so existing
-    stats-sink schemas are unchanged.
-
-    Composition of ``partition_wide_agg`` + ``stats_long``; the engine calls
-    those directly so the anomaly pass can share the same aggregation."""
+    column, rolled up table-wide by ``merge_quantiles`` across resume
+    boundaries (B42, the quantile analogue of B15). KLL is exact while a
+    sketch has seen ≤ k values and carries ~1.65% rank error at k=200
+    beyond; raise ``kll_k`` for tighter tails."""
     wide = partition_wide_agg(
         df.select(part_col, *columns), columns, part_col=part_col,
         with_sketches=with_sketches, with_quantiles=with_quantiles, kll_k=kll_k)
-    return stats_long(wide, columns, numeric_columns(df, columns),
-                      with_sketches=with_sketches, with_quantiles=with_quantiles)
+    return stats_long(wide, columns)
 
 
 def quantile_name(q: float) -> str:
@@ -235,11 +229,16 @@ def merge_quantiles(
 
 
 def merge_sketches(stats: DataFrame) -> DataFrame:
-    """Roll partition-level HLL sketches up table-wide (resume-safe union)."""
-    return stats.groupBy("column").agg(
+    """Roll partition-level HLL sketches up table-wide (resume-safe union);
+    rows without a sketch are skipped. ``hll_union_agg``'s estimate depends
+    on merge order (8 sketches in ascending and descending order: 787,
+    806); its union with itself is estimated from the registers alone
+    (794 for both), so a resume reads what a fresh run reads."""
+    merged = F.hll_union_agg("hll_sketch")
+    return stats.where(F.col("hll_sketch").isNotNull()).groupBy("column").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_nulls").alias("n_nulls"),
-        F.hll_sketch_estimate(F.hll_union_agg("hll_sketch")).alias("n_distinct_merged"),
+        F.hll_sketch_estimate(F.hll_union(merged, merged)).alias("n_distinct_merged"),
     )
 
 

@@ -1,11 +1,11 @@
-"""Round-2 regression tests: pass fusion, CLI drift/fidelity path, static
-overwrite semantics, hot-shingle skew guard, sort-merge fallback, union-type
-JSON parsing, non-object payloads, and vectorized batch-path equivalence.
+"""Round-2 regression tests: pass fusion, hot-shingle skew guard,
+sort-merge fallback, union-type JSON parsing, non-object payloads, and
+vectorized batch-path equivalence. The CLI drift/fidelity-path tests live
+in ``test_job.py``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -40,86 +40,7 @@ def test_fused_suite_reads_one_cached_scan(spark, tmp_path):
     res.cleanup()
 
 
-# --------------------------------------------------- CLI drift + fidelity path
-
-def _write_job_inputs(spark, tmp_path, with_bytes=False, plants=True, n=2000):
-    cfg = FX.FixtureConfig(n=n, n_parts=16, with_bytes=with_bytes, plants=plants)
-    d = str(tmp_path)
-    FX.generate_images_df(spark, cfg).write.mode("overwrite").parquet(d + "/images")
-    clean = FX.FixtureConfig(n=n, n_parts=16, plants=False, with_bytes=False,
-                             drift_part=-1)
-    baseline_profile(FX.generate_images_df(spark, clean), FX.drift_columns()) \
-        .write.mode("overwrite").parquet(d + "/baseline")
-    FX.dim_fmt_df(spark).write.mode("overwrite").parquet(d + "/dim_fmt")
-    FX.dim_license_df(spark, cfg).write.mode("overwrite").parquet(d + "/dim_license")
-    with open(d + "/spec.json", "w") as f:
-        json.dump(FX.SPEC_IMAGES, f)
-    return cfg, d
-
-
-def test_cli_drift_verdict_flags_planted_partition(spark, tmp_path):
-    """E3 CLI path end-to-end: the spec's object-form drift entries carry the
-    bucket grid, so the planted caption-length/width drift partition FAILS
-    the drift verdict through job.run (regression: expression columns used
-    to fall back to a degenerate [0, 2^20) range that blinded KS/PSI)."""
-    from jsonschema_spark.job import run
-
-    # 1250 rows/partition: at n=2000 (125/part) KS sampling noise can trip a
-    # clean partition at alpha=0.01; the planted drift must separate cleanly
-    cfg, d = _write_job_inputs(spark, tmp_path, n=20000)
-    summary = run([
-        "--table", d + "/images", "--spec", d + "/spec.json",
-        "--manifest", d + "/man", "--out", d + "/out",
-        "--dim", f"dim_fmt={d}/dim_fmt", "--dim", f"dim_license={d}/dim_license",
-        "--baseline", d + "/baseline",
-    ], spark=spark)
-    assert summary["status"] == "ok"
-    verd = spark.read.parquet(d + "/out/verdicts")
-    failed = {
-        (r.part_id, r.path)
-        for r in verd.where((F.col("pass_id") == "drift") & ~F.col("passed")).collect()
-    }
-    assert (cfg.drift_part, "/caption_len") in failed
-    assert (cfg.drift_part, "/w") in failed
-    # clean partitions must not drift
-    assert all(p == cfg.drift_part for p, _ in failed)
-
-
-def test_cli_fidelity_pass_and_static_overwrite(spark, tmp_path):
-    """--sample-fidelity wires B28 into the job (violations land in the sink
-    under pass_id=fidelity with the golden planted count), and a fresh
-    (non-resume) rerun into the same --out statically overwrites stale cells."""
-    from jsonschema_spark.job import run
-
-    cfg, d = _write_job_inputs(spark, tmp_path, with_bytes=True)
-    args = [
-        "--table", d + "/images", "--spec", d + "/spec.json",
-        "--manifest", d + "/man", "--out", d + "/out",
-        "--dim", f"dim_fmt={d}/dim_fmt", "--dim", f"dim_license={d}/dim_license",
-        "--baseline", d + "/baseline", "--sample-fidelity", "1.0",
-    ]
-    summary = run(args, spark=spark)
-    assert summary["status"] == "ok"
-    viol = spark.read.parquet(d + "/out/violations")
-    fid = viol.where(F.col("pass_id") == "fidelity")
-    got = {(r.row_key, r.path) for r in fid.collect()}
-    assert got == expected_fidelity(cfg)
-    assert len(got) > 0
-
-    # fresh rerun on a CLEAN table into the same out dir: static overwrite
-    # must wipe the stale planted-violation cells (dynamic would keep them)
-    _write_job_inputs(spark, tmp_path, with_bytes=True, plants=False)
-    summary2 = run(args[:-2], spark=spark)  # no fidelity on the clean run
-    assert summary2["status"] == "ok"
-    assert summary2["n_violations"] == 0
-    try:
-        viol2 = spark.read.parquet(d + "/out/violations")
-        stale = viol2.where(F.col("pass_id").isin("rows", "unique", "refs", "fidelity"))
-        n_stale = stale.count()
-    except Exception:
-        n_stale = 0  # sink truncated to zero data files — nothing stale
-    assert n_stale == 0, "stale violation cells survived a fresh overwrite"
-
+# --------------------------------------------------- fidelity expectations
 
 def expected_fidelity(cfg: FX.FixtureConfig) -> set[tuple[str, str]]:
     """Driver-side mirror of the fidelity pass over the planted fixture —

@@ -1,6 +1,7 @@
 """Round-3 regression tests: JSON-whitespace object classification, LSH dim
 inference, hot-shingle-cut visibility, pathological-uniqueness join strategy,
-resume summary accounting, and the iceberg-swap choke point.
+and the iceberg-swap choke point. Its ``job.py`` tests live in
+``test_job.py``.
 """
 
 from __future__ import annotations
@@ -154,49 +155,6 @@ def test_uniqueness_no_forced_broadcast_on_dup_heavy_table(spark):
     assert v.count() == n
 
 
-# --------------------------------------------- resume summary (ADVICE r2 #5)
-
-def test_resume_summary_counts_only_pending_partitions(spark, tmp_path):
-    """On --resume the stats sink keeps completed partitions (dynamic
-    overwrite), but the summary's n_rows/images_per_sec must reflect only
-    the work THIS run did; table-wide totals live in table_n_rows."""
-    from jsonschema_spark import fixtures as FX
-    from jsonschema_spark.job import run
-
-    cfg = FX.FixtureConfig(n=400, n_parts=4, with_bytes=False)
-    table = str(tmp_path / "imgs")
-    FX.generate_images_df(spark, cfg).write.parquet(table)
-    spec_path = str(tmp_path / "spec.json")
-    with open(spec_path, "w") as f:
-        json.dump({"properties": {"w": {"type": "integer", "minimum": 1}},
-                   "required": ["image_id"]}, f)
-    manifest = str(tmp_path / "man")
-    out = str(tmp_path / "out")
-    args = ["--table", table, "--spec", spec_path,
-            "--manifest", manifest, "--out", out]
-
-    first = run(args, spark=spark)
-    assert first["n_rows"] == 400
-
-    # mark partitions 0 and 1 as NOT done (delete their manifest rows) and resume
-    from jsonschema_spark.manifest import Manifest
-
-    man = Manifest(spark, manifest)
-    rows = man.read().collect()
-    keep = [r.asDict() for r in rows if int(r.part_id) not in (0, 1)]
-    import shutil
-
-    shutil.rmtree(manifest)
-    man2 = Manifest(spark, manifest)
-    man2.record(keep)
-
-    second = run(args + ["--resume"], spark=spark)
-    per_part = 400 // 4
-    assert second["n_partitions"] == 2
-    assert second["n_rows"] == 2 * per_part, second
-    assert second["table_n_rows"] == 400, second
-
-
 # ---------------------------------------------- iceberg swap point (VERDICT 8)
 
 def test_loader_is_the_single_fact_scan_choke_point(monkeypatch, spark, tmp_path):
@@ -234,8 +192,9 @@ def test_loader_is_the_single_fact_scan_choke_point(monkeypatch, spark, tmp_path
     assert calls and calls[0] == (table, "iceberg")
 
     # static sweep: engine/job/passes never call spark.read.parquet on the
-    # fact table — the only read.parquet sites are the loader itself, the
-    # job's own sink re-reads, and dim/baseline inputs.
+    # fact table — the only read.parquet sites are the loader itself, a
+    # resume's read of the completed partitions' output, and dim/baseline
+    # inputs.
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     offenders = []
     for dirpath, _, files in os.walk(os.path.join(root, "jsonschema_spark")):
@@ -249,7 +208,7 @@ def test_loader_is_the_single_fact_scan_choke_point(monkeypatch, spark, tmp_path
                     offenders.append((os.path.relpath(p, root), i, line.strip()))
     allowed = {
         "jsonschema_spark/io/tables.py",     # the choke point itself
-        "jsonschema_spark/job.py",           # dims/baseline/own-sink re-reads only
+        "jsonschema_spark/job.py",           # dims/baseline/resume prior-state reads only
         "jsonschema_spark/manifest.py",      # manifest sink re-read
         # engine-owned LSH-index re-read (per-trigger, so appends are
         # visible) — an internal artifact like the manifest, not a fact scan
@@ -321,29 +280,6 @@ def test_fidelity_ref_mode_identical_tables_clean(spark):
     rows = [_raw_row(i, 0) for i in range(10)]
     df = _raw_table(spark, rows)
     assert fidelity_violations_ref(df, df, fraction=1.0).count() == 0
-
-
-def test_cli_fidelity_phash_mode_no_generator_knobs(spark, tmp_path):
-    """VERDICT r2 #3 'done' condition: a CLI run over a table with NO
-    generator coupling produces fidelity verdicts in the sink."""
-    from jsonschema_spark.job import run
-
-    rows = [_raw_row(i, i % 2) for i in range(40)]
-    rows[11]["phash"] = rows[11]["phash"] ^ 3
-    _raw_table(spark, rows).write.parquet(str(tmp_path / "imgs"))
-    spec_path = str(tmp_path / "spec.json")
-    with open(spec_path, "w") as f:
-        json.dump({"required": ["image_id"]}, f)
-    s = run(["--table", str(tmp_path / "imgs"), "--spec", spec_path,
-             "--manifest", str(tmp_path / "man"), "--out", str(tmp_path / "out"),
-             "--sample-fidelity", "1.0", "--fidelity-mode", "phash"], spark=spark)
-    assert s["status"] == "ok"
-    fid = spark.read.parquet(str(tmp_path / "out/violations")).where(
-        F.col("pass_id") == "fidelity")
-    assert {r.row_key for r in fid.collect()} == {"prod-11"}
-    verd = spark.read.parquet(str(tmp_path / "out/verdicts")).where(
-        F.col("pass_id") == "fidelity")
-    assert verd.count() > 0
 
 
 def test_fidelity_phash_mode_null_stored_phash_is_violation(spark):
@@ -1355,37 +1291,6 @@ def test_theta_set_overlap_exact_and_algebra(spark):
     assert r2["n_a"] == 600 and r2["n_intersection"] == 300
 
 
-def test_cli_quantile_sketches_summary_and_resume_rollup(spark, tmp_path):
-    """A spec with a quantile check: the stats sink carries per-partition
-    KLL state and the summary's global_quantiles are the table-wide merge
-    — with kll_k above the row count the values are exact inclusive-rank
-    quantiles."""
-    import json as _json
-    from jsonschema_spark.job import run
-
-    df = spark.range(400).select(
-        (F.concat(F.lit("img-"), F.col("id"))).alias("image_id"),
-        (F.col("id") % 4).alias("part_id"),
-        F.col("id").cast("long").alias("w"),
-    )
-    df.write.parquet(str(tmp_path / "t"))
-    spec_path = str(tmp_path / "spec.json")
-    with open(spec_path, "w") as f:
-        _json.dump({"properties": {"w": {"minimum": 0}}, "x-table-checks": {
-            "quantiles": [{"column": "w", "q": 0.5, "min": 0}]}}, f)
-    s = run(["--table", str(tmp_path / "t"), "--spec", spec_path,
-             "--manifest", str(tmp_path / "man"), "--out", str(tmp_path / "out"),
-             "--kll-k", "2048"], spark=spark)
-    assert s["status"] == "ok"
-    q = s["global_quantiles"]["w"]
-    # inclusive rank over 0..399: ceil(q*400)-th smallest, 1-indexed
-    assert (q["q50"], q["q90"], q["q99"]) == (199.0, 359.0, 395.0)
-    # the sink itself carries the mergeable binary state per partition
-    st = spark.read.parquet(str(tmp_path / "out/stats"))
-    assert "kll_sketch" in st.columns
-    assert st.where(F.col("kll_sketch").isNotNull()).count() == 4
-
-
 # ------------------------- draft-2019 unevaluatedProperties/unevaluatedItems
 
 def test_unevaluated_properties_struct_branch_annotations(spark):
@@ -1807,30 +1712,6 @@ def test_flagship_spec_emits_stats_check_family(spark):
     assert all(fams.values())
 
 
-def test_job_summary_reports_failed_checks(spark, tmp_path):
-    """Summary carries n_failed_checks per pass and a table_passed flag —
-    the one-line deploy gate."""
-    import json as _json
-    from jsonschema_spark.job import run
-
-    df = spark.range(200).select(
-        F.concat(F.lit("img-"), F.col("id")).alias("image_id"),
-        (F.col("id") % 4).alias("part_id"),
-        F.when(F.col("id") % 5 == 0, -1).otherwise(F.col("id") % 50)
-         .cast("int").alias("w"))
-    df.write.parquet(str(tmp_path / "t"))
-    spec_path = str(tmp_path / "spec.json")
-    with open(spec_path, "w") as f:
-        _json.dump({"properties": {"w": {"minimum": 0}},
-                    "x-table-checks": {"null-rates": [{"column": "w", "max_rate": 0.5}]}}, f)
-    s = run(["--table", str(tmp_path / "t"), "--spec", spec_path,
-             "--manifest", str(tmp_path / "man"), "--out", str(tmp_path / "out")],
-            spark=spark)
-    assert s["n_failed_checks"].get("rows", 0) > 0     # minimum violations
-    assert s["table_passed"] is False
-    assert "null_rate" not in s["n_failed_checks"]     # that check passes
-
-
 # ------------------------------------------------------ spec linter (lint.py)
 
 def test_lint_spec_errors_and_warnings():
@@ -1866,22 +1747,3 @@ def test_lint_spec_errors_and_warnings():
     # clean spec has no findings
     assert lint_spec({"properties": {"n": {"minimum": 0, "maximum": 9}}}) == []
 
-
-def test_job_preflight_lint_blocks_unsatisfiable_spec(spark, tmp_path):
-    import json as _json
-    from jsonschema_spark.job import run
-
-    spark.createDataFrame([("img-1", 0, 5)], "image_id string, part_id int, w int") \
-        .write.parquet(str(tmp_path / "t"))
-    bad = str(tmp_path / "bad.json")
-    with open(bad, "w") as f:
-        _json.dump({"properties": {"w": {"minimum": 10, "maximum": 5}}}, f)
-    with pytest.raises(SystemExit, match="lint"):
-        run(["--table", str(tmp_path / "t"), "--spec", bad,
-             "--manifest", str(tmp_path / "m"), "--out", str(tmp_path / "o")],
-            spark=spark)
-    # --force-lint overrides; every row then (correctly) violates
-    s = run(["--table", str(tmp_path / "t"), "--spec", bad,
-             "--manifest", str(tmp_path / "m2"), "--out", str(tmp_path / "o2"),
-             "--force-lint"], spark=spark)
-    assert s["n_violations"] > 0

@@ -433,41 +433,6 @@ def test_header_violations_plan_is_scan_side(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_job_check_headers_flag(spark, tmp_path):
-    """CLI --check-headers adds the headers pass: violations + verdicts land
-    under pass_id=headers and the summary counts its failed checks."""
-    import json as _json
-    import subprocess, sys, os
-
-    from jsonschema_spark import fixtures as FX
-
-    tbl = str(tmp_path / "tbl")
-    FX.generate_images_df(spark, _header_fixture_cfg()).write.parquet(tbl)
-    specp = tmp_path / "spec.json"
-    specp.write_text(_json.dumps({
-        "type": "object",
-        "properties": {"image_id": {"type": "string"}, "fmt": {"type": "string"}},
-    }))
-    env = dict(os.environ, PYTHONPATH="/root/repo")
-    out = subprocess.run(
-        [sys.executable, "-m", "jsonschema_spark.job",
-         "--table", tbl, "--spec", str(specp),
-         "--manifest", str(tmp_path / "man"), "--out", str(tmp_path / "out"),
-         "--parallelism", "4", "--check-headers"],
-        capture_output=True, text=True, env=env, cwd="/root/repo")
-    assert out.returncode == 0, out.stderr[-2000:]
-    summary = _json.loads(
-        [l for l in out.stdout.splitlines() if l.startswith("{")][-1])
-    assert summary["status"] == "ok"
-    assert summary["n_failed_checks"].get("headers", 0) > 0
-    import duckdb
-
-    n = duckdb.sql(
-        f"SELECT count(*) FROM parquet_scan('{tmp_path}/out/violations/*/*/*.parquet', "
-        "hive_partitioning=1) WHERE pass_id='headers'").fetchone()[0]
-    assert n > 0
-
-
 # --------------------------------------- aspect-ratio bucketing (r4)
 
 def test_assign_aspect_buckets_against_duckdb_twin(spark):
