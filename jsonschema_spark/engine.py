@@ -18,8 +18,8 @@ streaming; ``streaming.validate_stream`` is this function) and
 and P1 turn the compiled violations array into rows through one explode,
 ``passes.stats.explode_violations``.
 
-Violation streams are unioned into one schema (B23). Every check counted
-from a violation stream (P1, P2, P3, P5, P7) is judged per (partition,
+Violation streams are unioned into one schema (B23) and one persisted frame;
+every check counted from it (P1, P2, P3, P5, P7) is judged per (partition,
 check) in the one verdict grid, ``passes.stats.verdicts_from_violations``
 (B18): one zero-filled count and one join. Nothing here collects fact-scale
 data to the driver — violations/verdicts are returned as DataFrames for the
@@ -31,6 +31,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 from functools import reduce
+from itertools import chain
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -46,6 +47,9 @@ from .passes import drift as P4
 
 # the passes judged by counting violation rows (verdict n_violations = rows)
 VIOLATION_PASSES = ("rows", "unique", "refs", "fidelity", "headers")
+# the passes judged as ONE check each (keyword = pass_id), by its path:
+# every row of the pass counts toward it
+ONE_CHECK_PASSES = {"fidelity": "/", "headers": "/bytes"}
 
 
 @dataclass
@@ -62,9 +66,10 @@ class ValidationResult:
 
     def cleanup(self) -> None:
         """Unpersist every DataFrame this run cached (the fused scan
-        projection, violation streams, partition lists). Call after the
-        sinks are written — long-lived sessions otherwise accumulate
-        cached storage across validate_table calls."""
+        projection, the violation frame, the drift histograms and the
+        per-partition stats aggregate). Call after the sinks are written —
+        long-lived sessions otherwise accumulate cached storage across
+        validate_table calls."""
         for df in self._cached:
             try:
                 df.unpersist()
@@ -98,13 +103,15 @@ def recommended_conf(parallelism: int = 32) -> dict[str, str]:
         # of the stats stage in GC (event-log profile). Sketch state is
         # O(KB) per (partition x column); thousands of groups fit trivially.
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "131072",
-        # validate_table persists ~10 partitions-scale intermediates (the
-        # partition list, violation streams, drift histograms, the wide
-        # stats agg). With this false, AQE never coalesces inside a cached
-        # plan, so each keeps spark.sql.shuffle.partitions partitions and
-        # every stage reading it runs that many near-empty tasks: ~800
-        # tasks per 32k-row image_suite op at 32 shuffle partitions. With
-        # it true, AQE sizes each cache from its runtime bytes (170 tasks).
+        # validate_table persists 4 intermediates (the fused scan, the
+        # violation frame, the drift histograms, the wide stats agg whose
+        # part_id column is the partition list). With this false, AQE
+        # never coalesces inside a cached plan, so each keeps
+        # spark.sql.shuffle.partitions partitions and every stage reading
+        # it runs that many near-empty tasks: ~800 tasks per 32k-row
+        # image_suite op at 32 shuffle partitions (with the 10 caches of
+        # the time). With it true, AQE sizes each cache from its runtime
+        # bytes (170 tasks then).
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     }
 
@@ -251,11 +258,11 @@ def validate_table(
     part_col: str = "part_id",
     top_k: int | None = None,
     drift_columns: list[P4.DriftColumn] | None = None,
-    uniqueness_scope: DataFrame | None = None,
     fidelity_fn: Any | None = None,
     headers_fn: Any | None = None,
     kll_k: int = 200,
     state: DataFrame | None = None,
+    completed: DataFrame | None = None,
 ) -> ValidationResult:
     """Run the validation suite over ``fact``.
 
@@ -267,12 +274,6 @@ def validate_table(
     narrow column set × row count (binary columns never enter it) and
     spills to disk.
 
-    ``uniqueness_scope``: uniqueness (P2) is a whole-table property — a
-    duplicate key can span a completed and a pending partition. On resume,
-    pass the FULL table here while ``fact`` carries only pending partitions;
-    P2 then scans just its key columns table-wide (narrow columnar scan)
-    while the per-partition passes stay pruned.
-
     The spec decides which passes run: P4 drift needs ``baseline`` and the
     drift columns ``spec.parse`` resolved (``drift_columns``, if given, must
     equal them); a spec with quantile checks fuses a mergeable KLL sketch
@@ -280,35 +281,31 @@ def validate_table(
     stats aggregation (SURVEY §2 B42), and its stats rows carry them for
     ``passes.stats.merge_quantiles``.
 
-    ``state``: stats rows (``part_id`` + ``passes.stats.STATS_SCHEMA``) of
-    partitions an earlier run validated — a resume's completed ones. The
+    ``state`` and ``completed`` (both or neither) describe the partitions
+    an earlier run validated, a resume's completed ones: their stats rows
+    (``part_id`` + ``passes.stats.STATS_SCHEMA``) and their fact rows. The
     quantile, distinct, null-rate and P6 verdicts are judged on this run's
-    stats rows plus ``state``, as a fresh run over the whole table would.
+    stats rows plus ``state``, and P2 on the fused cache's key columns plus
+    ``completed``'s, as a fresh run over the whole table would judge them.
 
-    ``fidelity_fn``: optional callable ``fact -> violations DataFrame``
-    (part_id, row_key, keyword, path, value) — the sampled decoded-pixel
-    PSNR + caption-equality pass (passes/fidelity.py). It is the only pass
-    that reads ``bytes`` and runs on its own sampled scan by design.
-
-    ``headers_fn``: optional callable with the same contract — the
-    container-header sniff pass (passes/headers.py, B53): magic bytes /
-    header dims / raw-length vs the declared fmt/w/h columns, pure Column
-    expressions over EVERY row (the cheap always-on tier below sampled
-    fidelity). It also reads ``bytes`` but never decodes pixels, so it runs
-    on its own header-only scan rather than the fused narrow cache.
+    ``fidelity_fn`` (P5) and ``headers_fn`` (P7): optional callables
+    ``fact -> violations DataFrame`` (part_id, row_key, keyword, path,
+    value): the sampled decoded-pixel PSNR + caption-equality pass
+    (passes/fidelity.py) and the container-header sniff over every row
+    (passes/headers.py, B53). Both read ``bytes``, on scans of their own.
 
     Every violation row carries a ``pass_id`` column ("rows" | "unique" |
-    "refs" | "fidelity" | "headers") so sinks can partition by (pass_id, part_id) and a
-    resumed pass dynamically overwrites exactly its own cells (B4).
+    "refs" | "fidelity" | "headers") so sinks can partition by (pass_id,
+    part_id) and a resumed pass dynamically overwrites exactly its own
+    cells (B4).
 
-    Each pass's violation stream feeds BOTH the sink and the verdict
-    counts, so it is persisted (MEMORY_AND_DISK) and executes once instead
-    of once per consumer. Violations are bounded (≪ fact rows by
-    construction), so this holds at 10^12-row scale. The P1, P2, P3, P5
-    and P7 verdicts come from the one verdict grid,
-    ``passes.stats.verdicts_from_violations`` (B18): a single count over
-    the union of their unbounded streams, zero-filled over the partitions
-    of ``fact`` (P2: over every ``uniqueness_scope`` partition).
+    The violation streams form ONE persisted frame (MEMORY_AND_DISK; ≪ fact
+    rows by construction) that feeds the sink and the verdict grid,
+    ``passes.stats.verdicts_from_violations`` (B18): one zero-filled count,
+    judged on this run's partitions (P2: plus the ``state`` ones). The other
+    caches are the fused scan, the drift histograms, the per-partition
+    stats aggregate (its ``part_id`` column is the partition list) and, on
+    a resume with uniqueness checks, ``completed``'s key columns.
 
     Call ``result.cleanup()`` after sinking to unpersist all caches.
     """
@@ -317,6 +314,8 @@ def validate_table(
     if drift_columns is not None and tuple(drift_columns) != spec.table_checks.drift_columns:
         raise ValueError("drift_columns differ from the spec's x-table-checks/drift "
                          "columns; the spec's are the ones run")
+    if (state is None) != (completed is None):
+        raise ValueError("state and completed go together: pass both or neither")
     dims = dims or {}
     compiled = compile_table(spec, fact.schema)
     cached: list[DataFrame] = []
@@ -331,94 +330,6 @@ def validate_table(
     # THE fact scan (SURVEY §4): all passes below read `base`, so parquet
     # is hit exactly once for the suite (assert_single_scan test pins this).
     base = _persist(_fused_projection(fact, compiled, spec, key_col, part_col))
-
-    # tiny (one row per partition) but consumed by every verdict stream
-    all_parts = base.select(F.col(part_col).alias("part_id")).distinct()
-    all_parts = _persist(all_parts)
-    scope = uniqueness_scope if uniqueness_scope is not None else base
-    scope_parts = (
-        _persist(scope.select(F.col(part_col).alias("part_id")).distinct())
-        if uniqueness_scope is not None
-        else all_parts
-    )
-
-    # sink rows per pass; exact-count rows for the verdict grid and the
-    # grid's (pass_id, check_id, keyword, path) checks — P2's judged on
-    # `scope_parts`, every other one on `all_parts`
-    streams: list[DataFrame] = []
-    counted: list[DataFrame] = []
-    part_checks: list[tuple[str, str, str, str]] = []
-    scope_checks: list[tuple[str, str, str, str]] = []
-
-    # P1 — row predicates (the array precomputed by the fused projection)
-    viol1 = _persist(P1.explode_violations(
-        base, [F.col(part_col).alias("part_id"),
-               F.col(key_col).cast("string").alias("row_key")],
-        F.col("__viols")))
-    counted.append(viol1.withColumn("pass_id", F.lit("rows")))
-    part_checks += [("rows", cid, *cid.split("@", 1)) for cid in compiled.check_ids()]
-    sink1 = viol1 if top_k is None else P1.bound_top_k(viol1, top_k)
-    streams.append(sink1.withColumn("pass_id", F.lit("rows")))
-
-    # P2 — uniqueness (always over the full scope, see docstring)
-    for key_cols in spec.table_checks.unique:
-        v = _persist(P2.uniqueness_violations(scope, list(key_cols), key_col=key_col, part_col=part_col))
-        streams.append(v.withColumn("pass_id", F.lit("unique")))
-        counted.append(streams[-1])
-        path = "/" + ",".join(key_cols)
-        scope_checks.append(("unique", f"uniqueItems@{path}", "uniqueItems", path))
-
-    # P3 — referential (reads the fused cache, never parquet)
-    for ref in spec.table_checks.references:
-        dim_name = ref["dim"]
-        if dim_name not in dims:
-            raise KeyError(f"referential check needs dim table {dim_name!r}")
-        v = _persist(P3.referential_violations(
-            base, dims[dim_name], fact_key=ref["column"], dim_key=ref["key"],
-            key_col=key_col, part_col=part_col,
-            strategy=ref.get("strategy", "broadcast"), dim_name=dim_name,
-        ))
-        streams.append(v.withColumn("pass_id", F.lit("refs")))
-        counted.append(streams[-1])
-        path = f"/{ref['column']}->{dim_name}.{ref['key']}"
-        part_checks.append(("refs", f"references@{path}", "references", path))
-
-    # P5 — sampled fidelity (B28): own scan, the only pass touching `bytes`;
-    # P7 — container-header sniff (B53): header fields only, no decode.
-    # Each is judged as ONE check: every row of its stream counts toward it.
-    for pass_id, fn, path in (("fidelity", fidelity_fn, "/"), ("headers", headers_fn, "/bytes")):
-        if fn is None:
-            continue
-        v = _persist(fn(fact))
-        streams.append(v.withColumn("pass_id", F.lit(pass_id)))
-        counted.append(streams[-1].withColumns(
-            {"keyword": F.lit(pass_id), "path": F.lit(path)}))
-        part_checks.append((pass_id, f"{pass_id}@{path}", pass_id, path))
-
-    # THE verdict grid (B18): one zero-filled count over every stream above
-    verdict_streams = [P1.verdicts_from_violations(
-        reduce(DataFrame.unionByName, counted),
-        [(all_parts, part_checks), (scope_parts, scope_checks)])]
-
-    # P4 — drift (histograms over the fused cache)
-    drift_df = None
-    dcfg = spec.table_checks.drift
-    drift_cols = spec.table_checks.drift_columns
-    if baseline is not None and drift_cols:
-        # The histogram table is tiny (partitions x columns x buckets) but
-        # drift_metrics consumes it several times (partition list, bucket
-        # grid, CDF join) and the verdicts sink runs as its own job —
-        # without a persist the 10^12-row aggregation would re-execute per
-        # consumer job instead of once per suite.
-        obs = _persist(P4.observed_histograms(base, drift_cols, part_col=part_col))
-        drift_df = P4.drift_metrics(obs, baseline)
-        verdict_streams.append(
-            P4.drift_verdicts(
-                drift_df,
-                ks_alpha=dcfg.get("ks_alpha", 0.01),
-                psi_max=dcfg.get("psi_max", 0.2),
-            ).withColumn("pass_id", F.lit("drift"))
-        )
 
     # P6 — partition anomaly (passes/anomaly.py): robust median/MAD z-score
     # of per-partition column profiles. Its state is FUSED into the stats
@@ -455,15 +366,18 @@ def validate_table(
             f"x-table-checks/quantiles on non-numeric columns {bad_q} — "
             "quantile sketches exist only for numeric columns")
     # ONE aggregation over `base` for the stats sink, the quantile/
-    # distinct/null-rate verdict branches AND the P6 profile; the result is
-    # partitions-scale, so persist it — without this the concurrent sink
-    # jobs re-ran the 10^12-row aggregation once per consumer (measured:
-    # three ~300-600 task-second ObjectHashAggregate stages per suite run
-    # at 32M rows, each re-shuffling ~277 MB of partial sketch state).
+    # distinct/null-rate verdict branches, the P6 profile AND the partition
+    # list; the result is partitions-scale, so persist it — without this
+    # the concurrent sink jobs re-ran the 10^12-row aggregation once per
+    # consumer (measured: three ~300-600 task-second ObjectHashAggregate
+    # stages per suite run at 32M rows, each re-shuffling ~277 MB of
+    # partial sketch state).
     wide_agg = _persist(P1.partition_wide_agg(
         base, stat_cols, part_col=part_col,
         with_quantiles=bool(qchecks), kll_k=kll_k, anomaly_exprs=a_cols))
     stats_df = P1.stats_long(wide_agg, stat_cols, a_cols)
+    # one row per partition of this run
+    all_parts = wide_agg.select("part_id")
     # every table-wide judgement below reads this run's state plus the
     # completed partitions' (see ``state`` in the docstring)
     table_stats = stats_df
@@ -471,6 +385,91 @@ def validate_table(
     if state is not None:
         table_stats = stats_df.unionByName(state.select(*stats_df.columns))
         judged_parts = all_parts.unionByName(state.select("part_id").distinct())
+
+    # the violation streams, tagged with their pass_id, and the grid's
+    # (pass_id, check_id, keyword, path) checks: P2's judged on
+    # `judged_parts`, every other one on `all_parts`
+    streams: list[DataFrame] = []
+    part_checks: list[tuple[str, str, str, str]] = []
+    table_checks: list[tuple[str, str, str, str]] = []
+
+    # P1 — row predicates (the array precomputed by the fused projection)
+    streams.append(P1.explode_violations(
+        base, [F.col(part_col).alias("part_id"),
+               F.col(key_col).cast("string").alias("row_key")],
+        F.col("__viols")).withColumn("pass_id", F.lit("rows")))
+    part_checks += [("rows", cid, *cid.split("@", 1)) for cid in compiled.check_ids()]
+
+    # P2 — uniqueness, table-wide: the fused cache plus, on a resume, the
+    # completed rows' key columns; each key reads them twice (uncached, 6
+    # scans with the runtime bloom filter their partition filter draws)
+    unique = spec.table_checks.unique
+    scope = base
+    if completed is not None and unique:
+        cols = list(dict.fromkeys([part_col, key_col, *(c for k in unique for c in k)]))
+        scope = base.select(*cols).unionByName(_persist(completed.select(*cols)))
+    for key_cols in unique:
+        streams.append(P2.uniqueness_violations(
+            scope, list(key_cols), key_col=key_col, part_col=part_col)
+            .withColumn("pass_id", F.lit("unique")))
+        path = "/" + ",".join(key_cols)
+        table_checks.append(("unique", f"uniqueItems@{path}", "uniqueItems", path))
+
+    # P3 — referential (reads the fused cache, never parquet)
+    for ref in spec.table_checks.references:
+        dim_name = ref["dim"]
+        if dim_name not in dims:
+            raise KeyError(f"referential check needs dim table {dim_name!r}")
+        streams.append(P3.referential_violations(
+            base, dims[dim_name], fact_key=ref["column"], dim_key=ref["key"],
+            key_col=key_col, part_col=part_col,
+            strategy=ref.get("strategy", "broadcast"), dim_name=dim_name,
+        ).withColumn("pass_id", F.lit("refs")))
+        path = f"/{ref['column']}->{dim_name}.{ref['key']}"
+        part_checks.append(("refs", f"references@{path}", "references", path))
+
+    # P5 — sampled fidelity (B28): own scan, the only pass touching `bytes`;
+    # P7 — container-header sniff (B53): header fields only, no decode.
+    for pass_id, fn in (("fidelity", fidelity_fn), ("headers", headers_fn)):
+        if fn is not None:
+            streams.append(fn(fact).withColumn("pass_id", F.lit(pass_id)))
+            path = ONE_CHECK_PASSES[pass_id]
+            part_checks.append((pass_id, f"{pass_id}@{path}", pass_id, path))
+
+    # ONE violation frame for the sink and the verdict grid
+    violations = _persist(reduce(DataFrame.unionByName, streams))
+    rows = F.col("pass_id") == "rows"  # --top-k bounds the row pass only
+    sink = violations if top_k is None else P1.bound_top_k(
+        violations.where(rows), top_k).unionByName(violations.where(~rows))
+
+    # THE verdict grid (B18): one zero-filled count over every stream; a
+    # P5/P7 row counts toward its pass's one check
+    one_path = F.create_map(*map(F.lit, chain(*ONE_CHECK_PASSES.items())))[F.col("pass_id")]
+    counted = violations.withColumns({
+        "keyword": F.when(one_path.isNotNull(), F.col("pass_id")).otherwise(F.col("keyword")),
+        "path": F.coalesce(one_path, F.col("path"))})
+    verdict_streams = [P1.verdicts_from_violations(
+        counted, [(all_parts, part_checks), (judged_parts, table_checks)])]
+
+    # P4 — drift (histograms over the fused cache)
+    drift_df = None
+    dcfg = spec.table_checks.drift
+    drift_cols = spec.table_checks.drift_columns
+    if baseline is not None and drift_cols:
+        # The histogram table is tiny (partitions x columns x buckets) but
+        # drift_metrics consumes it several times (partition list, bucket
+        # grid, CDF join) and the verdicts sink runs as its own job —
+        # without a persist the 10^12-row aggregation would re-execute per
+        # consumer job instead of once per suite.
+        obs = _persist(P4.observed_histograms(base, drift_cols, part_col=part_col))
+        drift_df = P4.drift_metrics(obs, baseline)
+        verdict_streams.append(
+            P4.drift_verdicts(
+                drift_df,
+                ks_alpha=dcfg.get("ks_alpha", 0.01),
+                psi_max=dcfg.get("psi_max", 0.2),
+            ).withColumn("pass_id", F.lit("drift"))
+        )
 
     # P6 assembly — from the state rows of every judged partition
     if acfg is not None:
@@ -551,7 +550,7 @@ def validate_table(
         ).withColumn("pass_id", F.lit("null_rate")))
 
     return ValidationResult(
-        violations=reduce(DataFrame.unionByName, streams),
+        violations=sink,
         verdicts=reduce(DataFrame.unionByName, verdict_streams),
         stats=stats_df,
         table_stats=table_stats,

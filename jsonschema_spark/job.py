@@ -101,15 +101,16 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     ap.add_argument("--top-k", type=int, default=None)
     ap.add_argument("--parallelism", type=int, default=None)
     # B28: sampled decoded-pixel fidelity pass (the only pass that reads
-    # `bytes`). Three modes:
+    # `bytes`). Three modes; --fidelity-mode picks one, and without it the
+    # mode is ref when --fidelity-ref is given, else generator:
     #   phash     — recompute the perceptual hash from bytes and compare to
     #               the table's own stored phash column. No reference input;
-    #               runs on ARBITRARY tables (the production default).
+    #               runs on ARBITRARY tables.
     #   ref       — join a reference table of the same shape on image_id;
     #               decoded-pixel PSNR>=40dB + caption equality vs it.
     #   generator — expected pixels re-derive from the deterministic fixture
-    #               generator via image_id index (golden tests; needs the
-    #               generator layout knobs below).
+    #               generator via image_id index (golden tests and fixture
+    #               tables; needs the generator layout knobs below).
     ap.add_argument("--sample-fidelity", type=float, default=None,
                     help="sampling fraction for the decoded-pixel fidelity pass")
     ap.add_argument("--fidelity-parts-fraction", type=float, default=None,
@@ -172,7 +173,8 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     fact_full = load_fact_table(spark, args.table, fmt=args.table_format)
     man = Manifest(spark, args.manifest)
     done = man.completed_parts("full") if args.resume else []
-    fact = man.exclude(fact_full, done, part_col=args.part_col)
+    # `completed`: the done partitions' rows, for the table-wide P2
+    fact, completed = man.split(fact_full, done, part_col=args.part_col)
 
     dims = {}
     for d in args.dim:
@@ -181,8 +183,8 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     baseline = spark.read.parquet(args.baseline) if args.baseline else None
 
     t0 = time.time()
-    pending_parts = [r[0] for r in fact.select(args.part_col).distinct().collect()]
-    if not pending_parts:
+    # a one-row probe; the run's partition list comes from its stats rows
+    if fact.isEmpty():
         summary = {"status": "nothing-to-do", "images_per_sec": 0.0, "n_rows": 0}
         man.write_summary(summary)
         print(json.dumps(summary))
@@ -239,13 +241,11 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
     res = validate_table(
         fact, spec, dims=dims, baseline=baseline,
         key_col=args.key_col, part_col=args.part_col, top_k=args.top_k,
-        # uniqueness is table-global: a dup can span a done and a pending
-        # partition, so P2 always scans the full table's key columns
-        uniqueness_scope=fact_full,
         fidelity_fn=fidelity_fn,
         headers_fn=headers_fn,
         kll_k=args.kll_k,
         state=state,
+        completed=completed,
     )
     # Sinks partitioned by (pass_id, part_id). Overwrite semantics:
     # - resume: DYNAMIC partition overwrite rewrites exactly the cells this
@@ -286,7 +286,9 @@ def run(argv: list[str] | None = None, spark: SparkSession | None = None) -> dic
         vc[part] = vc.get(part, 0) + n_viol
         if n_failed:
             failed_checks[pass_id] = failed_checks.get(pass_id, 0) + n_failed
-    rc = {**prior_rows, **_rows_per_part(res.stats)}
+    run_rows = _rows_per_part(res.stats)
+    pending_parts = list(run_rows)
+    rc = {**prior_rows, **run_rows}
     # B15/B42: the table-wide distinct and quantile estimates merge the
     # sketches of every partition, completed ones included
     global_distinct = {r.column: int(r.n_distinct_merged)

@@ -28,7 +28,7 @@ from . import __version__
 # part_id is stored as STRING — the universal partition-key encoding (the
 # same choice hive-style partition paths make): the fact table's partition
 # column may be int (part_id), string (fmt, o_orderpriority) or date, and
-# the lineage record must carry any of them. filter_pending converts the
+# the lineage record must carry any of them. split converts the
 # done-list back to the fact column's own type driver-side, so the resume
 # predicate stays a typed IN-list the parquet scan can prune on.
 MANIFEST_SCHEMA = (
@@ -106,12 +106,14 @@ class Manifest:
 
     def filter_pending(self, fact: DataFrame, pass_id: str, part_col: str = "part_id") -> DataFrame:
         """B7: drop partitions already completed for ``pass_id``."""
-        return self.exclude(fact, self.completed_parts(pass_id), part_col)
+        return self.split(fact, self.completed_parts(pass_id), part_col)[0]
 
-    def exclude(self, fact: DataFrame, done: list, part_col: str = "part_id") -> DataFrame:
-        """Drop the partitions ``done`` (as ``completed_parts`` lists them)."""
+    def split(self, fact: DataFrame, done: list, part_col: str = "part_id"
+              ) -> tuple[DataFrame, DataFrame | None]:
+        """(pending, completed): ``fact``'s rows outside and inside the
+        partitions ``done`` (as ``completed_parts`` lists them), or None."""
         if not done:
-            return fact
+            return fact, None
         # Convert the done-list to the FACT column's own type so the
         # predicate/join key is typed (no implicit column cast that would
         # block parquet filter pushdown on the partition column).
@@ -123,7 +125,8 @@ class Manifest:
             done = [str(d) for d in done]
         if len(done) <= PRUNE_LIST_MAX:
             # IN-list → Catalyst partition-prunes the parquet scan entirely.
-            return fact.where(~F.col(part_col).isin(done))
+            is_done = F.col(part_col).isin(done)
+            return fact.where(~is_done), fact.where(is_done)
         done_df = self.spark.createDataFrame(
             [(d,) for d in done], f"{part_col} {dt.simpleString()}")
-        return fact.join(done_df, part_col, "left_anti")
+        return tuple(fact.join(done_df, part_col, how) for how in ("left_anti", "left_semi"))

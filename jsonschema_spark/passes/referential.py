@@ -11,12 +11,15 @@ Join-strategy selection (the 100 TB lever):
   registry with 10^11 keys) a broadcast is impossible and Catalyst's default
   sort-merge join would sort 10^12 fact rows; a shuffle-hash join avoids both
   sorts (hash the dim per task). AQE may still override if sizes allow.
+- ``strategy="merge"``: a sort-merge join. Any other value raises.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..spec import JOIN_STRATEGIES
 
 
 def orphan_rows(
@@ -28,15 +31,11 @@ def orphan_rows(
 ) -> DataFrame:
     """Fact rows whose key is absent from the dim (NULL keys are not
     orphans — `required` owns null-ness, matching SQL FK semantics)."""
+    if strategy not in JOIN_STRATEGIES:
+        raise ValueError(f"unknown join strategy {strategy!r}, not one of {JOIN_STRATEGIES}")
     d = dim.select(F.col(dim_key).alias(fact_key)).dropDuplicates([fact_key])
-    if strategy == "broadcast":
-        d = F.broadcast(d)
-        j = fact.join(d, on=fact_key, how="left_anti")
-    elif strategy == "shuffle_hash":
-        j = fact.join(d.hint("shuffle_hash"), on=fact_key, how="left_anti")
-    else:  # sort-merge fallback
-        j = fact.join(d.hint("merge"), on=fact_key, how="left_anti")
-    return j.where(F.col(fact_key).isNotNull())
+    d = F.broadcast(d) if strategy == "broadcast" else d.hint(strategy)
+    return fact.join(d, on=fact_key, how="left_anti").where(F.col(fact_key).isNotNull())
 
 
 def referential_violations(

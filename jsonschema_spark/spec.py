@@ -342,6 +342,8 @@ def parse_node(schema: dict[str, Any] | bool) -> SpecNode:
 Problem = tuple[str, str]  # (JSON pointer, message)
 
 _TC = "/x-table-checks"
+# P3's join strategies (passes/referential.py), "broadcast" by default
+JOIN_STRATEGIES = ("broadcast", "shuffle_hash", "merge")
 _FAMILIES = ("unique", "references", "drift", "row-predicates", "anomaly",
              "quantiles", "distinct", "null-rates")
 
@@ -417,7 +419,9 @@ def _read_table_checks(tc: Any, root: SpecNode | None, lint: bool = False
         "unique", kind=(list, tuple), what="an array of column names")
         if need(k and all(map(_is_name, k)), p, "a key must be a non-empty array of column names"))
     references = tuple(dict(r) for p, r in family("references") if all([
-        need(_is_name(r.get(f)), p, f"missing {f!r}") for f in ("column", "dim", "key")]))
+        *[need(_is_name(r.get(f)), p, f"missing {f!r}") for f in ("column", "dim", "key")],
+        need(r.get("strategy", "broadcast") in JOIN_STRATEGIES, f"{p}/strategy",
+             f"unknown join strategy {r.get('strategy')!r}, not one of {JOIN_STRATEGIES}")]))
     predicates = tuple(dict(r) for p, r in family("row-predicates") if all([
         need(_is_name(r.get("name")), p, "row-predicate needs a non-empty 'name'"),
         need(_is_name(r.get("test")), p, "row-predicate needs a SQL 'test' string")]))

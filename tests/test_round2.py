@@ -1,4 +1,4 @@
-"""Round-2 regression tests: pass fusion, hot-shingle skew guard,
+"""Round-2 regression tests: hot-shingle skew guard,
 sort-merge fallback, union-type JSON parsing, non-object payloads, and
 vectorized batch-path equivalence. The CLI drift/fidelity-path tests live
 in ``test_job.py``.
@@ -6,38 +6,13 @@ in ``test_job.py``.
 
 from __future__ import annotations
 
-import os
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from jsonschema_spark import fixtures as FX
-from jsonschema_spark.engine import validate_table, validate_json_rows
-from jsonschema_spark.passes.drift import baseline_profile
-
-
-# --------------------------------------------------------------- pass fusion
-
-def test_fused_suite_reads_one_cached_scan(spark, tmp_path):
-    """SURVEY §4 pass fusion: after the fused projection materializes, every
-    pass's plan reads the InMemoryTableScan — not parquet again."""
-    cfg = FX.FixtureConfig(n=500, n_parts=4, with_bytes=False)
-    path = str(tmp_path / "imgs")
-    FX.generate_images_df(spark, cfg).write.parquet(path)
-    fact = spark.read.parquet(path)
-    res = validate_table(
-        fact, FX.SPEC_IMAGES,
-        dims={"dim_fmt": FX.dim_fmt_df(spark),
-              "dim_license": FX.dim_license_df(spark, cfg)},
-        baseline=baseline_profile(fact, FX.drift_columns()),
-    )
-    res.violations.count()  # materialize the fused cache
-    for name, df in [("violations", res.violations), ("stats", res.stats),
-                     ("drift", res.drift_metrics)]:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, f"{name} does not read the fused cache"
-    res.cleanup()
+from jsonschema_spark.engine import validate_json_rows
 
 
 # --------------------------------------------------- fidelity expectations

@@ -90,6 +90,29 @@ def test_reference_without_key_is_a_spec_error(spark):
             dims={"dim_fmt": FX.dim_fmt_df(spark)})
 
 
+def test_unknown_join_strategy_is_rejected(spark):
+    """A P3 strategy outside broadcast/shuffle_hash/merge is a spec error
+    at its own pointer; it used to become a sort-merge join silently."""
+    from jsonschema_spark.passes.referential import orphan_rows
+    from jsonschema_spark.spec import JOIN_STRATEGIES
+
+    def spec(strategy):
+        return {"properties": {"fmt": {}}, "x-table-checks": {"references": [
+            {"column": "fmt", "dim": "dim_fmt", "key": "fmt", "strategy": strategy}]}}
+
+    assert table_check_problems(spec("shuffle")) == [(
+        "/x-table-checks/references/0/strategy",
+        "unknown join strategy 'shuffle', not one of "
+        "('broadcast', 'shuffle_hash', 'merge')")]
+    with pytest.raises(SpecError, match="/x-table-checks/references/0/strategy:"):
+        parse(spec("shuffle"))
+    for strategy in JOIN_STRATEGIES:
+        assert parse(spec(strategy)).table_checks.references[0]["strategy"] == strategy
+    df = spark.createDataFrame([("png",)], "fmt string")
+    with pytest.raises(ValueError, match="unknown join strategy 'shuffle'"):
+        orphan_rows(df, FX.dim_fmt_df(spark), "fmt", "fmt", strategy="shuffle")
+
+
 def test_drift_columns_resolve_at_parse():
     """Bare-string entries take their grid from the root property; one
     without a derivable range is a parse error, not a degenerate histogram."""
