@@ -1613,21 +1613,6 @@ FROM p
 """
 
 
-# ------------------------------------------------------------------ fidelity (B28)
-
-def q_fidelity_images(spark: SparkSession, sf: str) -> DataFrame:
-    """Sampled decoded-pixel PSNR≥40dB + caption-equality pass over a
-    deterministic WITH-BYTES fixture table (fraction=1.0 at this size):
-    the planted bad-id and dup-id rows surface as fidelity violations.
-    Binary payloads → rows-only check; exact counts pinned in pytest."""
-    from jsonschema_spark import fixtures as FX
-    from jsonschema_spark.passes.fidelity import fidelity_violations
-
-    cfg = FX.FixtureConfig(n=2000, n_parts=16, with_bytes=True)
-    fact = FX.generate_images_df(spark, cfg)
-    return fidelity_violations(fact, cfg, fraction=1.0).orderBy("row_key", "path")
-
-
 # ------------------------------------------------------------------ flagship (rows-only)
 
 def q_images_full_suite(spark: SparkSession, sf: str) -> DataFrame:

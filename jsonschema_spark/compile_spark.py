@@ -34,7 +34,8 @@ from pyspark.sql import types as T
 
 from . import formats
 from .formats import FORMAT_REGEXES
-from .spec import Spec, SpecNode, declared_names, in_place_branches, sql_identifiers
+from .spec import (Spec, SpecNode, declared_names, in_place_branches,
+                   pointer_token, sql_identifiers)
 from . import sqlglue
 
 VIOLATION_STRUCT = T.StructType(
@@ -287,6 +288,10 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
         out.append(CheckExpr(keyword, p if p is not None else path,
                              ok, value if value is not None else sval))
 
+    def at(name: str) -> str:
+        # the instance path of a property: its name is one escaped segment
+        return f"{path}/{pointer_token(name)}"
+
     # --- A1 type ---------------------------------------------------------
     if node.type is not None:
         alts: list[Column] = []
@@ -518,14 +523,14 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             return col.getField(name).isNotNull() if name in fields else F.lit(False)
 
         def require(name: str) -> None:
-            add("required", col.isNull() | has(name), p=f"{path}/{name}",
+            add("required", col.isNull() | has(name), p=at(name),
                 value=F.lit(None).cast("string"))
 
         for name in node.required or ():
             require(name)
         for name, sub in node.properties.items():
             if name in fields:
-                out.extend(compile_node(sub, col.getField(name), f"{path}/{name}", fields[name]))
+                out.extend(compile_node(sub, col.getField(name), at(name), fields[name]))
             if sub.d3_required:
                 require(name)
         for pat, sub in node.pattern_properties.items():
@@ -533,15 +538,15 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             # `properties` names included (as in E1)
             for name in fields:
                 if re.search(pat, name):
-                    out.extend(compile_node(sub, col.getField(name), f"{path}/{name}", fields[name]))
+                    out.extend(compile_node(sub, col.getField(name), at(name), fields[name]))
         ap = node.additional_properties
         if ap is False or isinstance(ap, SpecNode):
             for n in _unmatched(fields, node.properties, node.pattern_properties):
                 if ap is False:
                     add("additionalProperties", col.isNull() | col.getField(n).isNull(),
-                        p=f"{path}/{n}", value=col.getField(n).cast("string"))
+                        p=at(n), value=col.getField(n).cast("string"))
                 else:
-                    out.extend(compile_node(ap, col.getField(n), f"{path}/{n}", fields[n]))
+                    out.extend(compile_node(ap, col.getField(n), at(n), fields[n]))
         if node.min_properties is not None or node.max_properties is not None:
             # struct arity is static; count non-null fields at runtime
             cnt = reduce(lambda a, b: a + b,
@@ -558,7 +563,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             for n_ in fields:
                 if not _name_valid(n_, node.property_names):
                     add("propertyNames", col.isNull() | col.getField(n_).isNull(),
-                        p=f"{path}/{n_}", value=F.lit(n_))
+                        p=at(n_), value=F.lit(n_))
         for name, dep in node.dependencies.items():
             if name not in fields:
                 continue
@@ -566,7 +571,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
             if isinstance(dep, tuple):
                 for d in dep:
                     add("dependencies", _forgive_null(col, F.when(present, has(d)).otherwise(F.lit(True))),
-                        p=f"{path}/{d}")
+                        p=at(d))
             else:
                 add("dependencies",
                     _forgive_null(col, F.when(present, node_valid(dep, col, dt)).otherwise(F.lit(True))))
@@ -584,19 +589,19 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
                 fcol = col.getField(f)
                 if isinstance(up, SpecNode):
                     out.extend(c if covf is False else replace(c, ok=covf | c.ok)
-                               for c in compile_node(up, fcol, f"{path}/{f}", fields[f]))
+                               for c in compile_node(up, fcol, at(f), fields[f]))
                     continue
                 ok = fcol.isNull() if covf is False else fcol.isNull() | covf
                 add("unevaluatedProperties", _forgive_null(col, ok),
-                    p=f"{path}/{f}", value=fcol.cast("string"))
+                    p=at(f), value=fcol.cast("string"))
     elif isinstance(dt, T.MapType):
         if node.required is not None:
             for name in node.required:
                 add("required", col.isNull() | F.map_contains_key(col, F.lit(name)),
-                    p=f"{path}/{name}", value=F.lit(None).cast("string"))
+                    p=at(name), value=F.lit(None).cast("string"))
         for name, sub in node.properties.items():
             v = F.element_at(col, F.lit(name))
-            out.extend(compile_node(sub, v, f"{path}/{name}", dt.valueType))
+            out.extend(compile_node(sub, v, at(name), dt.valueType))
         for pat, sub in node.pattern_properties.items():
             jpat = sqlglue.to_java_regex(pat)
             ok = F.forall(
@@ -635,7 +640,7 @@ def compile_node(  # noqa: C901 — keyword dispatch is intrinsically wide
                 for d in dep:
                     add("dependencies",
                         _forgive_null(col, F.when(present, F.map_contains_key(col, F.lit(d))).otherwise(F.lit(True))),
-                        p=f"{path}/{d}")
+                        p=at(d))
         if node.unevaluated_properties is not None and node.unevaluated_properties is not True:
             up = node.unevaluated_properties
             val_dt = dt.valueType

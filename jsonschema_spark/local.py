@@ -18,7 +18,7 @@ import re
 from dataclasses import dataclass
 from typing import Any
 
-from .spec import Spec, SpecNode, parse_node
+from .spec import Spec, SpecNode, parse_node, pointer_token
 from . import formats
 from .formats import FORMAT_CHECKERS
 
@@ -90,16 +90,18 @@ def _is_num(v: Any) -> bool:
     return isinstance(v, (int, float)) and not isinstance(v, bool)
 
 
+def _root(schema: dict | bool | Spec | SpecNode) -> SpecNode:
+    if isinstance(schema, Spec):
+        return schema.root
+    if isinstance(schema, SpecNode):
+        return schema
+    return parse_node(schema)
+
+
 def validate(doc: Any, schema: dict | bool | Spec | SpecNode) -> list[Violation]:
     """The reference API: validate one JSON document, return violations."""
-    if isinstance(schema, Spec):
-        node = schema.root
-    elif isinstance(schema, SpecNode):
-        node = schema
-    else:
-        node = parse_node(schema)
     out: list[Violation] = []
-    _eval(doc, node, "", out)
+    _eval(doc, _root(schema), "", out)
     return out
 
 
@@ -108,164 +110,164 @@ def is_valid(doc: Any, schema: dict | bool | Spec | SpecNode) -> bool:
 
 
 def _eval(v: Any, n: SpecNode, path: str, out: list[Violation],
-          sp: str = "") -> None:  # noqa: C901
+          sp: str = "", trace: list | None = None) -> None:  # noqa: C901
     # ``sp`` is the dynamic schema path (keywordLocation prefix) — "" for
     # callers that don't need locations; every recursion extends it with
     # the applicator segment, every violation records f"{sp}/{keyword}".
-    if n.type is not None and not any(_type_matches(v, t) for t in n.type):
-        out.append(Violation("type", path, v, f"{sp}/type"))
+    # With a ``trace`` list, every keyword check appends
+    # (keyword, kloc, iloc, ok) and every applied subschema appends
+    # (None, kloc, iloc, its own trace), in evaluation order — the
+    # ``verbose`` output format is that list folded into a tree.
+
+    def check(kw: str, ok: Any, key: Any = None, value: Any = v,
+              seg: str | None = None) -> None:
+        # ``key``: the property name or index the check is about, appended
+        # to ``path`` as one escaped segment; ``seg``: the schema segment
+        # when it is not the keyword itself
+        if ok and trace is None:
+            return
+        iloc = path if key is None else f"{path}/{pointer_token(str(key))}"
+        kloc = f"{sp}/{seg or kw}"
+        if not ok:
+            out.append(Violation(kw, iloc, value, kloc))
+        if trace is not None:
+            trace.append((kw, kloc, iloc, bool(ok)))
+
+    def apply(x: Any, sub: SpecNode, iloc: str, seg: str) -> None:
+        kloc = f"{sp}/{seg}"
+        kids = None if trace is None else []
+        if trace is not None:
+            trace.append((None, kloc, iloc, kids))
+        _eval(x, sub, iloc, out, kloc, kids)
+
+    if n.type is not None:
+        check("type", any(_type_matches(v, t) for t in n.type))
     if n.disallow is not None:
-        for d in n.disallow:
-            # disallowed when the instance DOES match the type/schema (d3 §5.25)
-            bad = _type_matches(v, d) if isinstance(d, str) else _eval_quiet(v, d)
-            if bad:
-                out.append(Violation("disallow", path, v, f"{sp}/disallow"))
-                break
-    if n.enum is not None and not any(_json_eq(v, e) for e in n.enum):
-        out.append(Violation("enum", path, v, f"{sp}/enum"))
-    if n.has_const and not _json_eq(v, n.const):
-        out.append(Violation("const", path, v, f"{sp}/const"))
+        # disallowed when the instance DOES match the type/schema (d3 §5.25)
+        check("disallow", not any(
+            _type_matches(v, d) if isinstance(d, str) else _eval_quiet(v, d)
+            for d in n.disallow))
+    if n.enum is not None:
+        check("enum", any(_json_eq(v, e) for e in n.enum))
+    if n.has_const:
+        check("const", _json_eq(v, n.const))
 
     if _is_num(v):
         if n.minimum is not None:
             ok = v > n.minimum if n.exclusive_minimum else v >= n.minimum
-            if not ok:
-                kw = "exclusiveMinimum" if n.exclusive_minimum else "minimum"
-                out.append(Violation(kw, path, v, f"{sp}/{kw}"))
+            check("exclusiveMinimum" if n.exclusive_minimum else "minimum", ok)
         if n.maximum is not None:
             ok = v < n.maximum if n.exclusive_maximum else v <= n.maximum
-            if not ok:
-                kw = "exclusiveMaximum" if n.exclusive_maximum else "maximum"
-                out.append(Violation(kw, path, v, f"{sp}/{kw}"))
+            check("exclusiveMaximum" if n.exclusive_maximum else "maximum", ok)
         if n.multiple_of is not None:
             q = v / n.multiple_of
-            if abs(q - round(q)) > 1e-9:
-                out.append(Violation("multipleOf", path, v, f"{sp}/multipleOf"))
+            check("multipleOf", abs(q - round(q)) <= 1e-9)
 
     if isinstance(v, str):
-        if n.min_length is not None and len(v) < n.min_length:
-            out.append(Violation("minLength", path, v, f"{sp}/minLength"))
-        if n.max_length is not None and len(v) > n.max_length:
-            out.append(Violation("maxLength", path, v, f"{sp}/maxLength"))
-        if n.pattern is not None and not re.search(n.pattern, v):
-            out.append(Violation("pattern", path, v, f"{sp}/pattern"))
+        if n.min_length is not None:
+            check("minLength", len(v) >= n.min_length)
+        if n.max_length is not None:
+            check("maxLength", len(v) <= n.max_length)
+        if n.pattern is not None:
+            check("pattern", re.search(n.pattern, v) is not None)
         if n.format is not None:
             chk = FORMAT_CHECKERS.get(n.format)
-            if chk is not None and not chk(v):
-                out.append(Violation("format", path, v, f"{sp}/format"))
-        # draft-7 §8 content keywords (asserting mode — formats.py rationale)
-        if n.content_encoding == "base64" and not formats.check_base64(v):
-            out.append(Violation("contentEncoding", path, v,
-                                 f"{sp}/contentEncoding"))
-        elif n.content_media_type is not None:
+            if chk is not None:
+                check("format", chk(v))
+        # draft-7 §8 content keywords (asserting mode — formats.py rationale):
+        # the media type is judged only on content that decoded, and
+        # contentSchema only on content that parsed
+        decoded = True
+        if n.content_encoding == "base64":
+            decoded = formats.check_base64(v)
+            check("contentEncoding", decoded)
+        if decoded and n.content_media_type is not None:
             data: bytes | str = v
             if n.content_encoding == "base64":
                 import base64
                 data = base64.b64decode(v)
-            if not formats.check_media_type(data, n.content_media_type):
-                out.append(Violation("contentMediaType", path, v,
-                                     f"{sp}/contentMediaType"))
-            elif n.content_schema is not None \
+            parsed = formats.check_media_type(data, n.content_media_type)
+            check("contentMediaType", parsed)
+            if parsed and n.content_schema is not None \
                     and n.content_media_type == "application/json":
                 import json as _json
                 doc = _json.loads(data if isinstance(data, str)
                                   else data.decode("utf-8"))
-                if not _eval_quiet(doc, n.content_schema):
-                    out.append(Violation("contentSchema", path, v,
-                                         f"{sp}/contentSchema"))
+                check("contentSchema", _eval_quiet(doc, n.content_schema))
 
     if isinstance(v, list):
-        if n.min_items is not None and len(v) < n.min_items:
-            out.append(Violation("minItems", path, v, f"{sp}/minItems"))
-        if n.max_items is not None and len(v) > n.max_items:
-            out.append(Violation("maxItems", path, v, f"{sp}/maxItems"))
+        if n.min_items is not None:
+            check("minItems", len(v) >= n.min_items)
+        if n.max_items is not None:
+            check("maxItems", len(v) <= n.max_items)
         if n.unique_items:
-            seen: list[Any] = []
-            for x in v:
-                if any(_json_eq(x, y) for y in seen):
-                    out.append(Violation("uniqueItems", path, v,
-                                         f"{sp}/uniqueItems"))
-                    break
-                seen.append(x)
+            check("uniqueItems", not any(_json_eq(v[i], v[j])
+                                         for i in range(len(v))
+                                         for j in range(i)))
         if n.items is not None:
             for i, x in enumerate(v):
-                _eval(x, n.items, f"{path}/{i}", out, f"{sp}/items")
+                apply(x, n.items, f"{path}/{i}", "items")
         if n.tuple_items is not None:
             for i, x in enumerate(v):
                 if i < len(n.tuple_items):
-                    _eval(x, n.tuple_items[i], f"{path}/{i}", out,
-                          f"{sp}/items/{i}")
+                    apply(x, n.tuple_items[i], f"{path}/{i}", f"items/{i}")
                 elif n.additional_items is False:
-                    out.append(Violation("additionalItems", f"{path}/{i}", x,
-                                         f"{sp}/additionalItems"))
+                    check("additionalItems", False, key=i, value=x)
                 elif isinstance(n.additional_items, SpecNode):
-                    _eval(x, n.additional_items, f"{path}/{i}", out,
-                          f"{sp}/additionalItems")
+                    apply(x, n.additional_items, f"{path}/{i}",
+                          "additionalItems")
         if n.contains is not None:
             cnt = sum(_eval_quiet(x, n.contains) for x in v)
             minc = 1 if n.min_contains is None else n.min_contains
-            if cnt < minc:
-                kw = "contains" if n.min_contains is None else "minContains"
-                out.append(Violation(kw, path, v, f"{sp}/{kw}"))
-            if n.max_contains is not None and cnt > n.max_contains:
-                out.append(Violation("maxContains", path, v,
-                                     f"{sp}/maxContains"))
+            check("contains" if n.min_contains is None else "minContains",
+                  cnt >= minc)
+            if n.max_contains is not None:
+                check("maxContains", cnt <= n.max_contains)
 
     if isinstance(v, dict):
         if n.required is not None:
             for name in n.required:
-                if name not in v:
-                    out.append(Violation("required", f"{path}/{name}", None,
-                                         f"{sp}/required"))
-        if n.min_properties is not None and len(v) < n.min_properties:
-            out.append(Violation("minProperties", path, v,
-                                 f"{sp}/minProperties"))
-        if n.max_properties is not None and len(v) > n.max_properties:
-            out.append(Violation("maxProperties", path, v,
-                                 f"{sp}/maxProperties"))
+                check("required", name in v, key=name, value=None)
+        if n.min_properties is not None:
+            check("minProperties", len(v) >= n.min_properties)
+        if n.max_properties is not None:
+            check("maxProperties", len(v) <= n.max_properties)
         matched: set[str] = set()
         for name, sub in n.properties.items():
             if name in v:
                 matched.add(name)
-                _eval(v[name], sub, f"{path}/{name}", out,
-                      f"{sp}/properties/{name}")
+                tok = pointer_token(name)
+                apply(v[name], sub, f"{path}/{tok}", f"properties/{tok}")
             elif sub.d3_required:
-                out.append(Violation("required", f"{path}/{name}", None,
-                                     f"{sp}/properties/{name}/required"))
+                check("required", False, key=name, value=None,
+                      seg=f"properties/{pointer_token(name)}/required")
         for pat, sub in n.pattern_properties.items():
             for name in v:
                 if re.search(pat, name):
                     matched.add(name)
-                    _eval(v[name], sub, f"{path}/{name}", out,
-                          f"{sp}/patternProperties/{pat}")
+                    apply(v[name], sub, f"{path}/{pointer_token(name)}",
+                          f"patternProperties/{pointer_token(pat)}")
         if n.additional_properties is not None:
             extras = [k for k in v if k not in matched and k not in n.properties]
-            if n.additional_properties is False:
-                for k in extras:
-                    out.append(Violation("additionalProperties",
-                                         f"{path}/{k}", v[k],
-                                         f"{sp}/additionalProperties"))
-            elif isinstance(n.additional_properties, SpecNode):
-                for k in extras:
-                    _eval(v[k], n.additional_properties, f"{path}/{k}", out,
-                          f"{sp}/additionalProperties")
+            for k in extras:
+                if n.additional_properties is False:
+                    check("additionalProperties", False, key=k, value=v[k])
+                elif isinstance(n.additional_properties, SpecNode):
+                    apply(v[k], n.additional_properties,
+                          f"{path}/{pointer_token(k)}", "additionalProperties")
         if n.property_names is not None:
             for k in v:
-                if not _eval_quiet(k, n.property_names):
-                    out.append(Violation("propertyNames", f"{path}/{k}", k,
-                                         f"{sp}/propertyNames"))
+                check("propertyNames", _eval_quiet(k, n.property_names),
+                      key=k, value=k)
         for name, dep in n.dependencies.items():
             if name in v:
+                seg = f"dependencies/{pointer_token(name)}"
                 if isinstance(dep, tuple):
                     for d in dep:
-                        if d not in v:
-                            out.append(Violation("dependencies",
-                                                 f"{path}/{d}", None,
-                                                 f"{sp}/dependencies/{name}"))
+                        check("dependencies", d in v, key=d, value=None,
+                              seg=seg)
                 else:
-                    if not _eval_quiet(v, dep):
-                        out.append(Violation("dependencies", path, v,
-                                             f"{sp}/dependencies/{name}"))
+                    check("dependencies", _eval_quiet(v, dep), seg=seg)
         if n.unevaluated_properties is not None and n.unevaluated_properties is not True:
             acc: set = set()
             if not _names_cover(v, n, acc):
@@ -273,12 +275,12 @@ def _eval(v: Any, n: SpecNode, path: str, out: list[Violation],
                     if k in acc:
                         continue
                     if n.unevaluated_properties is False:
-                        out.append(Violation("unevaluatedProperties",
-                                             f"{path}/{k}", v[k],
-                                             f"{sp}/unevaluatedProperties"))
+                        check("unevaluatedProperties", False, key=k,
+                              value=v[k])
                     else:
-                        _eval(v[k], n.unevaluated_properties, f"{path}/{k}",
-                              out, f"{sp}/unevaluatedProperties")
+                        apply(v[k], n.unevaluated_properties,
+                              f"{path}/{pointer_token(k)}",
+                              "unevaluatedProperties")
 
     if isinstance(v, list) and n.unevaluated_items is not None \
             and n.unevaluated_items is not True:
@@ -290,27 +292,30 @@ def _eval(v: Any, n: SpecNode, path: str, out: list[Violation],
             if any(_eval_quiet(v[i], c) for c in cevals):
                 continue
             if n.unevaluated_items is False:
-                out.append(Violation("unevaluatedItems", f"{path}/{i}", v[i],
-                                     f"{sp}/unevaluatedItems"))
+                check("unevaluatedItems", False, key=i, value=v[i])
             else:
-                _eval(v[i], n.unevaluated_items, f"{path}/{i}", out,
-                      f"{sp}/unevaluatedItems")
+                apply(v[i], n.unevaluated_items, f"{path}/{i}",
+                      "unevaluatedItems")
 
     if n.all_of is not None:
         for i, sub in enumerate(n.all_of):
-            _eval(v, sub, path, out, f"{sp}/allOf/{i}")
-    if n.any_of is not None and not any(_eval_quiet(v, s) for s in n.any_of):
-        out.append(Violation("anyOf", path, v, f"{sp}/anyOf"))
-    if n.one_of is not None and sum(_eval_quiet(v, s) for s in n.one_of) != 1:
-        out.append(Violation("oneOf", path, v, f"{sp}/oneOf"))
-    if n.not_ is not None and _eval_quiet(v, n.not_):
-        out.append(Violation("not", path, v, f"{sp}/not"))
+            apply(v, sub, path, f"allOf/{i}")
+    if n.any_of is not None:
+        check("anyOf", any(_eval_quiet(v, s) for s in n.any_of))
+    if n.one_of is not None:
+        check("oneOf", sum(_eval_quiet(v, s) for s in n.one_of) == 1)
+    if n.not_ is not None:
+        check("not", not _eval_quiet(v, n.not_))
     if n.if_ is not None:
-        if _eval_quiet(v, n.if_):
-            if n.then_ is not None and not _eval_quiet(v, n.then_):
-                out.append(Violation("then", path, v, f"{sp}/then"))
-        elif n.else_ is not None and not _eval_quiet(v, n.else_):
-            out.append(Violation("else", path, v, f"{sp}/else"))
+        matched_if = _eval_quiet(v, n.if_)
+        if trace is not None:
+            # the branch outcome, not a check: it never fails the instance
+            trace.append(("if", f"{sp}/if", path, matched_if))
+        if matched_if:
+            if n.then_ is not None:
+                check("then", _eval_quiet(v, n.then_))
+        elif n.else_ is not None:
+            check("else", _eval_quiet(v, n.else_))
 
 
 def _eval_quiet(v: Any, n: SpecNode) -> bool:

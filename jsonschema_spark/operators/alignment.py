@@ -29,17 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _dotd(a: Column, b: Column) -> Column:
-    """Left-to-right double-precision dot product (oracle-reproducible)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _normd(a: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
+from .similarity import _dot, _norm
 
 
 def alignment_cos(vec_a: Column, vec_b: Column) -> Column:
@@ -47,8 +37,11 @@ def alignment_cos(vec_a: Column, vec_b: Column) -> Column:
     either side is NULL/empty/mismatched-length or has zero norm."""
     ok = (vec_a.isNotNull() & vec_b.isNotNull()
           & (F.size(vec_a) > 0) & (F.size(vec_a) == F.size(vec_b)))
-    denom = _normd(vec_a) * _normd(vec_b)
-    return F.when(ok & (denom > 0), _dotd(vec_a, vec_b) / denom)
+    # widened to double before the multiply, summed left to right: the
+    # oracle reproduces it exactly
+    a, b = vec_a.cast("array<double>"), vec_b.cast("array<double>")
+    denom = _norm(a) * _norm(b)
+    return F.when(ok & (denom > 0), _dot(a, b) / denom)
 
 
 def alignment_verdicts(

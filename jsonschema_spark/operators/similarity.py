@@ -28,6 +28,34 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str, side: str, *extra) -> DataFrame:
+    """``df``'s ids and vectors, widened to ``array<double>``, with their
+    norms: (nid, cv, cnrm) for the corpus side ``"c"``, (qid, qv, qnrm) for
+    the query side ``"q"``."""
+    ids = "nid" if side == "c" else "qid"
+    return df.select(
+        F.col(id_col).alias(ids), F.col(vec_col).cast("array<double>").alias(f"{side}v"),
+        *extra,
+    ).withColumn(f"{side}nrm", _norm(F.col(f"{side}v")))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Score each (query, candidate) pair by cosine and keep each query's
+    ``k`` best, ties broken by neighbor id: (query_id, rank, neighbor_id,
+    cos)."""
+    pairs = pairs.withColumn(
+        "cos", _dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm")))
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias("query_id"), "rank", F.col("nid").alias("neighbor_id"),
+            F.round("cos", 6).alias("cos"),
+        )
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -38,24 +66,10 @@ def cosine_topk(
     """Exact top-k neighbors per query by cosine: (query_id, rank, neighbor_id,
     cos). Brute force: |queries| × |corpus| — use with a bounded query set or
     as the recall oracle for the approximate paths."""
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).cast("array<double>").alias("cv")
-    ).withColumn("cnrm", _norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).withColumn("qnrm", _norm(F.col("qv")))
+    c = _vectors(corpus, id_col, vec_col, "c")
+    q = _vectors(queries, id_col, vec_col, "q")
     # queries are the small side — broadcast them so the corpus never shuffles
-    j = c.crossJoin(F.broadcast(q)).where(F.col("qid") != F.col("nid"))
-    j = j.withColumn("cos", _dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm")))
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"), "rank", F.col("nid").alias("neighbor_id"),
-            F.round("cos", 6).alias("cos"),
-        )
-    )
+    return _top_k(c.crossJoin(F.broadcast(q)).where(F.col("qid") != F.col("nid")), k)
 
 
 def _hyperplanes(dim: int, planes: int, seed: int) -> list[list[float]]:
@@ -159,12 +173,8 @@ def cosine_lsh_topk(
     ``dim`` defaults to the corpus's measured vector length (see
     resolve_dim — a mismatched literal silently zeroes every bucket)."""
     dim = resolve_dim(corpus, vec_col, dim)
-    c = corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).cast("array<double>").alias("cv")
-    ).withColumn("cnrm", _norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).withColumn("qnrm", _norm(F.col("qv")))
+    c = _vectors(corpus, id_col, vec_col, "c")
+    q = _vectors(queries, id_col, vec_col, "q")
 
     all_planes = [_hyperplanes(dim, planes, seed + t) for t in range(tables)]
     cb = c.select("nid", "cv", "cnrm",
@@ -181,18 +191,7 @@ def cosine_lsh_topk(
         .select("qid", "qv", "qnrm", "nid", "cv", "cnrm")
         .distinct()
     )
-    cand = cand.withColumn(
-        "cos", _dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"), "rank", F.col("nid").alias("neighbor_id"),
-            F.round("cos", 6).alias("cos"),
-        )
-    )
+    return _top_k(cand, k)
 
 
 def ivf_assign(
@@ -262,9 +261,8 @@ def ivf_topk(
     clusters. Returns (query_id, rank, neighbor_id, cos)."""
     import numpy as np
 
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("nid"), F.col(vec_col).cast("array<double>").alias("cv"), "cluster"
-    ).withColumn("cnrm", _norm(F.col("cv")))
+    assigned = _vectors(ivf_assign(corpus, centroids, id_col, vec_col),
+                        id_col, vec_col, "c", "cluster")
 
     qrows = queries.select(id_col, vec_col).collect()
     cent = np.array(centroids)
@@ -278,19 +276,8 @@ def ivf_topk(
     probes = spark.createDataFrame(probe_rows, f"qid long, cluster int, qv array<double>")
     probes = probes.withColumn("qnrm", _norm(F.col("qv")))
 
-    cand = assigned.join(F.broadcast(probes), "cluster").where(F.col("qid") != F.col("nid"))
-    cand = cand.withColumn(
-        "cos", _dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"), "rank", F.col("nid").alias("neighbor_id"),
-            F.round("cos", 6).alias("cos"),
-        )
-    )
+    return _top_k(
+        assigned.join(F.broadcast(probes), "cluster").where(F.col("qid") != F.col("nid")), k)
 
 
 def embedding_drift(
@@ -312,12 +299,9 @@ def embedding_drift(
 
     Returns (part_id, cos_to_global, mean_norm, n).
     """
-    # cast each component to double BEFORE squaring (float*float loses the
+    # widen each component to double BEFORE squaring (float*float loses the
     # low bits the DuckDB oracle keeps when it widens first)
-    norm = F.sqrt(
-        F.aggregate(F.col(vec_col), F.lit(0.0),
-                    lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
+    norm = _norm(F.col(vec_col).cast("array<double>"))
     e = df.select(
         F.col(part_col).alias("part_id"),
         norm.alias("nrm"),

@@ -6,7 +6,9 @@ structures built from *output units* carrying ``keywordLocation`` (the
 dynamic evaluation path into the schema), ``instanceLocation`` (a JSON
 Pointer into the instance) and a human-readable ``error``. The reference
 validator's ``validate(doc) -> violations`` shape maps 1:1 onto the
-``basic`` format's error list; this module is the adapter.
+``basic`` format's error list; this module is the adapter. Both
+locations are RFC 6901 pointers: a property name ``a/b`` is the one
+escaped segment ``a~1b``.
 
 Supported: ``flag``, ``basic``, ``detailed``, ``verbose``. Documented
 divergences:
@@ -22,23 +24,21 @@ divergences:
   same stance: ``anyOf``/``oneOf``/``not`` are leaf units (their branch
   evaluations are quiet probes in E1, not annotation-bearing
   applications).
-- ``verbose`` emits one unit per keyword CHECK the evaluator actually
-  performs (a ``maximum`` unit appears only when the instance is a
-  number, mirroring E1's type-gated checks), not one per declared
-  keyword — unapplied keywords are omitted rather than emitted as
-  vacuously valid, which §10.4.4 permits.
+- ``verbose`` is the trace of the one E1 evaluation that ``validate``
+  runs: one unit per keyword CHECK the evaluator actually performs (a
+  ``maximum`` unit appears only when the instance is a number, as E1's
+  checks are type-gated), nested under the subschemas it applied. It is
+  not one unit per declared keyword — unapplied keywords are omitted
+  rather than emitted as vacuously valid, which §10.4.4 permits.
 """
 
 from __future__ import annotations
 
 import json
-import re
 from typing import Any
 
-from .formats import FORMAT_CHECKERS
-from .local import (Violation, _contains_evaluators, _eval, _eval_quiet,
-                    _is_num, _items_cover, _names_cover, validate)
-from .spec import Spec, SpecNode, parse_node
+from . import local
+from .local import Violation, validate
 
 _MESSAGES = {
     "type": "instance does not match the expected type",
@@ -81,13 +81,16 @@ _MESSAGES = {
 }
 
 
+def _message(keyword: str) -> str:
+    return _MESSAGES.get(keyword, f"fails the {keyword} constraint")
+
+
 def _unit(v: Violation) -> dict[str, Any]:
-    msg = _MESSAGES.get(v.keyword, f"fails the {v.keyword} constraint")
     return {
         "valid": False,
         "keywordLocation": v.kloc,
         "instanceLocation": v.path,
-        "error": msg,
+        "error": _message(v.keyword),
     }
 
 
@@ -177,200 +180,32 @@ def verbose(doc: Any, schema: Any) -> dict[str, Any]:
     """Full evaluation tree: one output unit per keyword check E1 performs,
     nested under the applicator units that performed them.
 
-    Single source of truth: every validity flag is derived from the
-    violation set ``_eval`` itself produced for the enclosing subtree —
-    this function only ENUMERATES which (keywordLocation,
-    instanceLocation) units that evaluation applied, mirroring
-    ``local._eval``'s type-gated dispatch step for step, so the two
-    cannot disagree on outcomes (a mismatch could only drop or duplicate
-    a unit, which the test corpus pins)."""
-    if isinstance(schema, Spec):
-        node = schema.root
-    elif isinstance(schema, SpecNode):
-        node = schema
-    else:
-        node = parse_node(schema)
-    return _verbose(doc, node, "", "")
+    One walk: ``local._eval`` runs once with a trace, recording each check
+    and each applied subschema as it evaluates them, and this function
+    folds that trace into units. Validity therefore comes from the very
+    checks that produce ``validate``'s violations."""
+    trace: list = []
+    local._eval(doc, local._root(schema), "", [], "", trace)
+    return _fold(trace, "", "")
 
 
-def _leaf(errs: list[Violation], kw: str, kloc: str, iloc: str) -> dict[str, Any]:
-    bad = any(e.kloc == kloc and e.path == iloc for e in errs)
-    u: dict[str, Any] = {"valid": not bad, "keywordLocation": kloc,
-                         "instanceLocation": iloc}
-    if bad:
-        u["error"] = _MESSAGES.get(kw, f"fails the {kw} constraint")
-    return u
-
-
-def _verbose(v: Any, n: SpecNode, path: str, sp: str) -> dict[str, Any]:  # noqa: C901
-    errs: list[Violation] = []
-    _eval(v, n, path, errs, sp)
+def _fold(trace: list, kloc: str, iloc: str) -> dict[str, Any]:
+    """One subschema's unit from its trace. It is valid iff no check in its
+    subtree failed; the ``if`` unit records the branch outcome only, so it
+    neither carries an error nor counts toward validity."""
     kids: list[dict[str, Any]] = []
-
-    def leaf(kw: str, iloc: str | None = None, seg: str | None = None) -> None:
-        kids.append(_leaf(errs, kw, f"{sp}/{seg or kw}",
-                          path if iloc is None else iloc))
-
-    if n.type is not None:
-        leaf("type")
-    if n.disallow is not None:
-        leaf("disallow")
-    if n.enum is not None:
-        leaf("enum")
-    if n.has_const:
-        leaf("const")
-
-    if _is_num(v):
-        if n.minimum is not None:
-            leaf("exclusiveMinimum" if n.exclusive_minimum else "minimum")
-        if n.maximum is not None:
-            leaf("exclusiveMaximum" if n.exclusive_maximum else "maximum")
-        if n.multiple_of is not None:
-            leaf("multipleOf")
-
-    if isinstance(v, str):
-        if n.min_length is not None:
-            leaf("minLength")
-        if n.max_length is not None:
-            leaf("maxLength")
-        if n.pattern is not None:
-            leaf("pattern")
-        if n.format is not None and n.format in FORMAT_CHECKERS:
-            leaf("format")
-        enc_bad = False
-        if n.content_encoding == "base64":
-            leaf("contentEncoding")
-            enc_bad = any(e.kloc == f"{sp}/contentEncoding" for e in errs)
-        if n.content_media_type is not None and not enc_bad:
-            leaf("contentMediaType")
-            media_bad = any(e.kloc == f"{sp}/contentMediaType" for e in errs)
-            if (n.content_schema is not None and not media_bad
-                    and n.content_media_type == "application/json"):
-                leaf("contentSchema")
-
-    if isinstance(v, list):
-        if n.min_items is not None:
-            leaf("minItems")
-        if n.max_items is not None:
-            leaf("maxItems")
-        if n.unique_items:
-            leaf("uniqueItems")
-        if n.items is not None:
-            for i, x in enumerate(v):
-                kids.append(_verbose(x, n.items, f"{path}/{i}", f"{sp}/items"))
-        if n.tuple_items is not None:
-            for i, x in enumerate(v):
-                if i < len(n.tuple_items):
-                    kids.append(_verbose(x, n.tuple_items[i], f"{path}/{i}",
-                                         f"{sp}/items/{i}"))
-                elif n.additional_items is False:
-                    leaf("additionalItems", iloc=f"{path}/{i}")
-                elif isinstance(n.additional_items, SpecNode):
-                    kids.append(_verbose(x, n.additional_items, f"{path}/{i}",
-                                         f"{sp}/additionalItems"))
-        if n.contains is not None:
-            leaf("contains" if n.min_contains is None else "minContains")
-            if n.max_contains is not None:
-                leaf("maxContains")
-
-    if isinstance(v, dict):
-        if n.required is not None:
-            for name in n.required:
-                leaf("required", iloc=f"{path}/{name}")
-        if n.min_properties is not None:
-            leaf("minProperties")
-        if n.max_properties is not None:
-            leaf("maxProperties")
-        matched: set[str] = set()
-        for name, sub in n.properties.items():
-            if name in v:
-                matched.add(name)
-                kids.append(_verbose(v[name], sub, f"{path}/{name}",
-                                     f"{sp}/properties/{name}"))
-            elif sub.d3_required:
-                leaf("required", iloc=f"{path}/{name}",
-                     seg=f"properties/{name}/required")
-        for pat, sub in n.pattern_properties.items():
-            for name in v:
-                if re.search(pat, name):
-                    matched.add(name)
-                    kids.append(_verbose(v[name], sub, f"{path}/{name}",
-                                         f"{sp}/patternProperties/{pat}"))
-        if n.additional_properties is not None:
-            extras = [k for k in v if k not in matched and k not in n.properties]
-            if n.additional_properties is False:
-                for k in extras:
-                    leaf("additionalProperties", iloc=f"{path}/{k}")
-            elif isinstance(n.additional_properties, SpecNode):
-                for k in extras:
-                    kids.append(_verbose(v[k], n.additional_properties,
-                                         f"{path}/{k}",
-                                         f"{sp}/additionalProperties"))
-        if n.property_names is not None:
-            for k in v:
-                leaf("propertyNames", iloc=f"{path}/{k}")
-        for name, dep in n.dependencies.items():
-            if name in v:
-                if isinstance(dep, tuple):
-                    for d in dep:
-                        leaf("dependencies", iloc=f"{path}/{d}",
-                             seg=f"dependencies/{name}")
-                else:
-                    leaf("dependencies", seg=f"dependencies/{name}")
-        if n.unevaluated_properties is not None \
-                and n.unevaluated_properties is not True:
-            acc: set = set()
-            if not _names_cover(v, n, acc):
-                for k in v:
-                    if k in acc:
-                        continue
-                    if n.unevaluated_properties is False:
-                        leaf("unevaluatedProperties", iloc=f"{path}/{k}")
-                    else:
-                        kids.append(_verbose(v[k], n.unevaluated_properties,
-                                             f"{path}/{k}",
-                                             f"{sp}/unevaluatedProperties"))
-
-    if isinstance(v, list) and n.unevaluated_items is not None \
-            and n.unevaluated_items is not True:
-        cov = _items_cover(v, n)
-        cevals = _contains_evaluators(v, n)
-        for i in range(min(cov, len(v)), len(v)):
-            if any(_eval_quiet(v[i], c) for c in cevals):
-                continue
-            if n.unevaluated_items is False:
-                leaf("unevaluatedItems", iloc=f"{path}/{i}")
-            else:
-                kids.append(_verbose(v[i], n.unevaluated_items, f"{path}/{i}",
-                                     f"{sp}/unevaluatedItems"))
-
-    if n.all_of is not None:
-        for i, sub in enumerate(n.all_of):
-            kids.append(_verbose(v, sub, path, f"{sp}/allOf/{i}"))
-    if n.any_of is not None:
-        leaf("anyOf")
-    if n.one_of is not None:
-        leaf("oneOf")
-    if n.not_ is not None:
-        leaf("not")
-    if n.if_ is not None:
-        if_ok = _eval_quiet(v, n.if_)
-        # the `if` unit's validity records the branch outcome but never
-        # carries an error — §10.4.4 shows exactly this shape
-        kids.append({"valid": if_ok, "keywordLocation": f"{sp}/if",
-                     "instanceLocation": path})
-        if if_ok:
-            if n.then_ is not None:
-                leaf("then")
-        elif n.else_ is not None:
-            leaf("else")
-
-    unit: dict[str, Any] = {"valid": not errs, "keywordLocation": sp,
-                            "instanceLocation": path}
+    valid = True
+    for kw, k, i, res in trace:
+        if kw is None:
+            u = _fold(res, k, i)
+        else:
+            u = {"valid": res, "keywordLocation": k, "instanceLocation": i}
+            if not res and kw != "if":
+                u["error"] = _message(kw)
+        kids.append(u)
+        valid = valid and (u["valid"] or kw == "if")
+    unit: dict[str, Any] = {"valid": valid, "keywordLocation": kloc,
+                            "instanceLocation": iloc}
     if kids:
-        unit["errors" if errs else "annotations"] = kids
-    elif errs:
-        # failures with no enumerated child (cannot happen while the
-        # walker mirrors _eval; belt-and-braces for future keywords)
-        unit["errors"] = [_unit(e) for e in errs]
+        unit["annotations" if valid else "errors"] = kids
     return unit

@@ -207,6 +207,13 @@ def _find_anchor(doc: Any, name: str, key: str = "$anchor") -> Any:
     return None
 
 
+def pointer_token(name: str) -> str:
+    """Escape one JSON-Pointer reference token (RFC 6901 §3): ``~`` → ``~0``,
+    then ``/`` → ``~1``, so a name containing ``/`` stays one segment.
+    ``_resolve_pointer`` applies the inverse."""
+    return name.replace("~", "~0").replace("/", "~1")
+
+
 def _resolve_pointer(doc: Any, pointer: str) -> Any:
     """Resolve a '#/a/b' JSON-Pointer fragment — or a '#name' plain-name
     $anchor fragment (d2019) — against the root schema doc."""

@@ -190,3 +190,34 @@ def test_additional_properties_schema_on_a_map_column(spark):
     got = [(r["id"], r["keyword"], r["path"])
            for r in validate_rows(df, spec, keys=["id"]).collect()]
     assert got == [(2, "additionalProperties", "/m")]
+
+
+def test_property_names_are_escaped_pointer_tokens(spark):
+    """A column or field name is one JSON-Pointer segment (``~`` → ``~0``,
+    ``/`` → ``~1``): column ``a/b`` and field ``b`` of struct column ``a``
+    are two checks with two ids, and E2 reports the paths E1 reports, on a
+    table and on a JSON payload."""
+    import json
+
+    from jsonschema_spark.compile_spark import compile_table
+    from jsonschema_spark.engine import validate_json_rows, validate_rows
+    from jsonschema_spark.local import validate
+    from jsonschema_spark.spec import parse
+
+    spec = {"properties": {"a/b": {"minimum": 5}, "a~": {"minimum": 5},
+                           "a": {"properties": {"b": {"minimum": 5}}}}}
+    doc = {"a/b": 1, "a~": 2, "a": {"b": 3}}
+    want = sorted(v.path for v in validate(doc, spec))
+    assert want == ["/a/b", "/a~0", "/a~1b"]
+
+    df = spark.createDataFrame([(1, 1, 2, (3,))],
+                               "id int, `a/b` int, `a~` int, a struct<b:int>")
+    assert compile_table(parse(spec), df.schema).check_ids() == [
+        "minimum@/a/b", "minimum@/a~0", "minimum@/a~1b"]
+    got = sorted(r["path"] for r in validate_rows(df, spec, keys=["id"]).collect())
+    assert got == want
+
+    docs = spark.createDataFrame([(1, json.dumps(doc))], "id int, payload string")
+    got = sorted(r["path"] for r in
+                 validate_json_rows(docs, "payload", spec, keys=["id"]).collect())
+    assert got == want

@@ -6,6 +6,7 @@ detailed structures in jsonschema_spark.output."""
 
 import json
 
+from jsonschema_spark import local
 from jsonschema_spark.local import validate
 from jsonschema_spark.output import output, output_json
 
@@ -58,6 +59,22 @@ class TestKeywordLocation:
         m = kloc_map({"a": 1},
                      {"dependencies": {"a": ["b"]}})
         assert m == {("dependencies", "/b"): "/dependencies/a"}
+
+    def test_property_names_are_escaped_pointer_tokens(self):
+        # "a/b" is ONE property: its segment is a~1b, distinct from the
+        # nested /a/b; "~" escapes first, so "a~1b" itself stays distinct
+        schema = {"properties": {"a/b": {"type": "string"},
+                                 "a~1b": {"type": "string"},
+                                 "a": {"properties": {"b": {"type": "string"}}}},
+                  "patternProperties": {"^x/": {"type": "string"}},
+                  "dependencies": {"d/e": ["f/g"]}}
+        doc = {"a/b": 1, "a~1b": 1, "a": {"b": 2}, "x/y": 3, "d/e": 0}
+        assert kloc_map(doc, schema) == {
+            ("type", "/a~1b"): "/properties/a~1b/type",
+            ("type", "/a~01b"): "/properties/a~01b/type",
+            ("type", "/a/b"): "/properties/a/properties/b/type",
+            ("type", "/x~1y"): "/patternProperties/^x~1/type",
+            ("dependencies", "/f~1g"): "/dependencies/d~1e"}
 
     def test_default_kloc_empty_for_untracked_callers(self):
         # Violation's 3-field reference shape is intact: as_tuple and
@@ -120,6 +137,16 @@ class TestOutputFormats:
         req = next(u for u in out["errors"]
                    if u["keywordLocation"] == "/required")
         assert req["instanceLocation"] == "/d"
+
+    def test_detailed_nests_an_escaped_name_as_one_segment(self):
+        schema = {"properties": {"a/b": {"type": "string"},
+                                 "a": {"properties": {"b": {"type": "string"}}}}}
+        out = output({"a/b": 1, "a": {"b": 2}}, schema, "detailed")
+        assert out["keywordLocation"] == "/properties"
+        assert [(u["keywordLocation"], u["instanceLocation"])
+                for u in out["errors"]] == [
+            ("/properties/a/properties/b/type", "/a/b"),
+            ("/properties/a~1b/type", "/a~1b")]
 
     def test_output_json_round_trips(self):
         s = output_json(self.DOC, self.SCHEMA, "basic")
@@ -203,6 +230,29 @@ class TestVerbose:
                      "verbose")
         (u,) = out["errors"]
         assert u["keywordLocation"] == "/anyOf" and u["valid"] is False
+
+    def test_verbose_walks_once(self, monkeypatch):
+        # verbose output is ONE evaluation with a trace: it calls the
+        # evaluator exactly as often as validate does, quiet probes included
+        schema = {"properties": {k: {"properties": {
+            "x": {"type": "integer", "minimum": 0},
+            "y": {"anyOf": [{"type": "string"}, {"maximum": 3}]},
+            "z": {"items": {"if": {"minimum": 1}, "then": {"maximum": 9}}}}}
+            for k in "abc"}}
+        doc = {k: {"x": -1, "y": 5, "z": [0, 4, 12]} for k in "abc"}
+        calls = []
+        real = local._eval
+
+        def spy(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(local, "_eval", spy)
+        validate(doc, schema)
+        n_validate = len(calls)
+        calls.clear()
+        assert output(doc, schema, "verbose")["valid"] is False
+        assert len(calls) == n_validate > 1
 
     def test_verbose_json_round_trips(self):
         s = output_json([1, "x"], {"items": {"type": "integer"}}, "verbose")

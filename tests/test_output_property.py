@@ -5,14 +5,18 @@ Invariants pinned over generated instances:
 - every basic output unit's keywordLocation ends with its violation's
   keyword segment and starts with a known applicator path
 - the detailed tree contains exactly the basic leaves, each exactly once
+- the verbose tree agrees with is_valid and basic, here and on every
+  conformance-corpus case
 - kloc threading never changes WHICH violations fire (keyword/path/value
   triples identical to a kloc-blind evaluation — guarded by as_tuple)
 """
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from jsonschema_spark.local import is_valid, validate
 from jsonschema_spark.output import output
+from test_conformance import CASES
 
 # a schema exercising nesting, combinators, tuples and dependencies
 SCHEMA = {
@@ -93,20 +97,19 @@ def verbose_invalid_leaves(unit):
     return out
 
 
-@settings(max_examples=200, deadline=None)
-@given(docs)
-def test_verbose_invariants(doc):
+def assert_verbose_invariants(doc, schema):
     """The verbose tree's root validity equals is_valid, its invalid error
     leaves are EXACTLY the basic format's violations (same multiset of
     (keywordLocation, instanceLocation)), and every unit has the three
     mandatory fields."""
-    viols = validate(doc, SCHEMA)
-    tree = output(doc, SCHEMA, "verbose")
-    assert tree["valid"] == (not viols)
+    viols = validate(doc, schema)
+    tree = output(doc, schema, "verbose")
+    assert tree["valid"] == (not viols) == is_valid(doc, schema)
     assert tree["keywordLocation"] == "" and tree["instanceLocation"] == ""
 
     got = sorted(verbose_invalid_leaves(tree))
-    want = sorted((v.kloc, v.path) for v in viols)
+    want = sorted((u["keywordLocation"], u["instanceLocation"])
+                  for u in output(doc, schema, "basic").get("errors", []))
     assert got == want
 
     def walk(u):
@@ -116,6 +119,17 @@ def test_verbose_invariants(doc):
         for c in u.get("errors", []) + u.get("annotations", []):
             walk(c)
     walk(tree)
+
+
+@settings(max_examples=200, deadline=None)
+@given(docs)
+def test_verbose_invariants(doc):
+    assert_verbose_invariants(doc, SCHEMA)
+
+
+@pytest.mark.parametrize("schema,data,valid", CASES)
+def test_verbose_invariants_on_corpus(schema, data, valid):
+    assert_verbose_invariants(data, schema)
 
 
 @settings(max_examples=100, deadline=None)

@@ -215,14 +215,15 @@ def test_image_features_vectorized_raw_matches_reference(spark):
         assert abs(r.std_gray - sd) < 1e-6
 
 
-def test_fidelity_images_driver_query_golden(spark, sf_small):
-    """The driver-gate fidelity query returns exactly the mirrored planted
-    violation set (golden count pinned by recomputation, not by hand)."""
-    import sys
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as E
+def test_fidelity_images_golden(spark):
+    """The fidelity pass over the with-bytes fixture (fraction 1.0) returns
+    exactly the mirrored planted violation set (golden count pinned by
+    recomputation, not by hand)."""
+    from jsonschema_spark.passes.fidelity import fidelity_violations
 
     cfg = FX.FixtureConfig(n=2000, n_parts=16, with_bytes=True)
-    got = {(r.row_key, r.path) for r in E.q_fidelity_images(spark, sf_small).collect()}
+    fact = FX.generate_images_df(spark, cfg)
+    got = {(r.row_key, r.path)
+           for r in fidelity_violations(fact, cfg, fraction=1.0).collect()}
     assert got == expected_fidelity(cfg)
     assert len(got) > 0
