@@ -59,6 +59,13 @@ class CheckExpr:
         return f"{self.keyword}@{self.path}"
 
 
+def column_pointer(name: Column) -> Column:
+    """``/<name>`` with ``name`` escaped as ``spec.pointer_token`` escapes
+    it: the path of a table-wide check, whose column name is data."""
+    tok = F.replace(F.replace(name, F.lit("~"), F.lit("~0")), F.lit("/"), F.lit("~1"))
+    return F.concat(F.lit("/"), tok)
+
+
 class CompileError(ValueError):
     pass
 

@@ -37,7 +37,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .compile_spark import CompiledTableSpec, compile_json_column, compile_table
+from .compile_spark import (CompiledTableSpec, column_pointer, compile_json_column,
+                            compile_table)
 from .spec import Spec, parse, sql_identifiers
 from .passes import stats as P1
 from .passes import uniqueness as P2
@@ -226,13 +227,15 @@ def _literal_table(spark: SparkSession, fields: list[tuple[str, str]],
 
 def _bound_verdicts(
     bounds: DataFrame, values: DataFrame, on: list[str], value: str,
-    keyword: str, check_id: Column,
+    keyword: str, id_suffix: Column,
 ) -> tuple[DataFrame, DataFrame]:
     """Table-wide lo/hi bound checks (quantile and distinct families):
     ``bounds`` rows (column, ..., lo, hi) joined to the merged ``values``;
-    a missing value, or one outside a given bound, fails. Returns the
-    judged rows and their table-wide verdict rows (part_id NULL)."""
+    a missing value, or one outside a given bound, fails. The check id is
+    ``keyword@path`` plus ``id_suffix``. Returns the judged rows and their
+    table-wide verdict rows (part_id NULL)."""
     v = F.col(value)
+    path = column_pointer(F.col("column"))
     judged = bounds.join(values, on, "left").withColumn(
         "passed",
         v.isNotNull()
@@ -240,9 +243,9 @@ def _bound_verdicts(
         & (F.col("hi").isNull() | (v <= F.col("hi"))))
     verdicts = judged.select(
         F.lit(None).cast("int").alias("part_id"),
-        check_id.alias("check_id"),
+        F.concat(F.lit(f"{keyword}@"), path, id_suffix).alias("check_id"),
         F.lit(keyword).alias("keyword"),
-        F.concat(F.lit("/"), "column").alias("path"),
+        path.alias("path"),
         "passed",
         (~F.col("passed")).cast("long").alias("n_violations"),
     )
@@ -412,7 +415,7 @@ def validate_table(
         streams.append(P2.uniqueness_violations(
             scope, list(key_cols), key_col=key_col, part_col=part_col)
             .withColumn("pass_id", F.lit("unique")))
-        path = "/" + ",".join(key_cols)
+        path = P2.unique_path(key_cols)
         table_checks.append(("unique", f"uniqueItems@{path}", "uniqueItems", path))
 
     # P3 — referential (reads the fused cache, never parquet)
@@ -425,7 +428,7 @@ def validate_table(
             key_col=key_col, part_col=part_col,
             strategy=ref.get("strategy", "broadcast"), dim_name=dim_name,
         ).withColumn("pass_id", F.lit("refs")))
-        path = f"/{ref['column']}->{dim_name}.{ref['key']}"
+        path = P3.ref_path(ref["column"], dim_name, ref["key"])
         part_checks.append(("refs", f"references@{path}", "references", path))
 
     # P5 — sampled fidelity (B28): own scan, the only pass touching `bytes`;
@@ -508,7 +511,7 @@ def validate_table(
              for q in qchecks])
         judged, qv = _bound_verdicts(
             checks_df, melted, ["column", "qname"], "value", "quantile",
-            F.concat(F.lit("quantile@/"), "column", F.lit("@q"), F.col("q").cast("string")))
+            F.concat(F.lit("@q"), F.col("q").cast("string")))
         quantile_verdicts = judged.select("column", "q", "value", "lo", "hi", "passed")
         verdict_streams.append(qv.withColumn("pass_id", F.lit("quantiles")))
 
@@ -522,7 +525,7 @@ def validate_table(
               int(d["max"]) if "max" in d else None) for d in dchecks])
         _, dv = _bound_verdicts(
             d_df, P1.merge_sketches(table_stats), ["column"], "n_distinct_merged",
-            "distinct", F.concat(F.lit("distinct@/"), "column"))
+            "distinct", F.lit(""))
         verdict_streams.append(dv.withColumn("pass_id", F.lit("distinct")))
 
     # null-rate bounds: per-partition AND table-wide verdicts in ONE
@@ -539,11 +542,12 @@ def validate_table(
                           "part_id", "column", "max_rate")
             .agg(F.sum("n_rows").alias("n_rows"), F.sum("n_nulls").alias("n_nulls"))
         )
+        path = column_pointer(F.col("column"))
         verdict_streams.append(nr.select(
             F.col("part_id").cast("int").alias("part_id"),
-            F.concat(F.lit("null-rate@/"), "column").alias("check_id"),
+            F.concat(F.lit("null-rate@"), path).alias("check_id"),
             F.lit("null-rate").alias("keyword"),
-            F.concat(F.lit("/"), "column").alias("path"),
+            path.alias("path"),
             (F.col("n_nulls") / F.greatest(F.col("n_rows"), F.lit(1))
              <= F.col("max_rate")).alias("passed"),
             F.col("n_nulls").cast("long").alias("n_violations"),

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..compile_spark import column_pointer
 from .stats import partition_wide_agg, stats_long
 
 # Φ^{-1}(0.75): MAD × 1.4826 estimates σ under normality, making the z
@@ -86,14 +87,15 @@ def anomaly_flags(profile: DataFrame, z_max: float = 3.5) -> DataFrame:
 
 def anomaly_verdicts(flags: DataFrame) -> DataFrame:
     """Flagged partitions in the engine verdict schema."""
+    path = column_pointer(F.col("column"))
     return (
         flags.filter(F.col("is_anomaly"))
         .select(
             "part_id",
-            F.concat(F.lit("anomaly@/"), F.col("column"), F.lit(":"), F.col("metric"))
+            F.concat(F.lit("anomaly@"), path, F.lit(":"), F.col("metric"))
             .alias("check_id"),
             F.lit("anomaly").alias("keyword"),
-            F.concat(F.lit("/"), F.col("column")).alias("path"),
+            path.alias("path"),
             F.lit(False).alias("passed"),
             F.lit(1).cast("long").alias("n_violations"),
         )

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..compile_spark import column_pointer
 from ..spec import DriftColumn  # re-exported; spec.parse resolves the columns
 
 EPS = 1e-6  # PSI smoothing for empty buckets
@@ -281,11 +282,12 @@ def drift_verdicts(
     metrics: DataFrame, ks_alpha: float = 0.01, psi_max: float = 0.2
 ) -> DataFrame:
     """Per-(partition, column) drift verdicts in the engine verdict schema."""
+    path = column_pointer(F.col("col"))
     return metrics.select(
         "part_id",
-        F.concat(F.lit("drift@/"), F.col("col")).alias("check_id"),
+        F.concat(F.lit("drift@"), path).alias("check_id"),
         F.lit("drift").alias("keyword"),
-        F.concat(F.lit("/"), F.col("col")).alias("path"),
+        path.alias("path"),
         ((F.col("ks_p") >= F.lit(ks_alpha)) & (F.col("psi") <= F.lit(psi_max))).alias("passed"),
         F.when(
             (F.col("ks_p") < F.lit(ks_alpha)) | (F.col("psi") > F.lit(psi_max)), F.lit(1)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..spec import pointer_token
+
 from ..spec import JOIN_STRATEGIES
 
 
@@ -36,6 +38,11 @@ def orphan_rows(
     d = dim.select(F.col(dim_key).alias(fact_key)).dropDuplicates([fact_key])
     d = F.broadcast(d) if strategy == "broadcast" else d.hint(strategy)
     return fact.join(d, on=fact_key, how="left_anti").where(F.col(fact_key).isNotNull())
+
+
+def ref_path(fact_key: str, dim_name: str, dim_key: str) -> str:
+    """The check path of a reference: the fact column as an escaped token."""
+    return f"/{pointer_token(fact_key)}->{dim_name}.{dim_key}"
 
 
 def referential_violations(
@@ -56,6 +63,6 @@ def referential_violations(
         F.col(part_col).alias("part_id"),
         F.col(key_col).cast("string").alias("row_key"),
         F.lit("references").alias("keyword"),
-        F.lit(f"/{fact_key}->{dim_name}.{dim_key}").alias("path"),
+        F.lit(ref_path(fact_key, dim_name, dim_key)).alias("path"),
         F.col(fact_key).cast("string").alias("value"),
     )

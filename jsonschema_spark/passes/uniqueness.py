@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..spec import pointer_token
+
 DEFAULT_SALT_BUCKETS = 64
 
 
@@ -56,6 +58,11 @@ def duplicate_keys(
     return totals.where(F.col("n_dups") > 1)
 
 
+def unique_path(key_cols: list[str]) -> str:
+    """The check path of a uniqueness key: its columns as escaped tokens."""
+    return "/" + ",".join(pointer_token(c) for c in key_cols)
+
+
 def uniqueness_violations(
     df: DataFrame,
     key_cols: list[str],
@@ -69,7 +76,7 @@ def uniqueness_violations(
     """
     dups = duplicate_keys(df, key_cols, salt_buckets)
 
-    path = "/" + ",".join(key_cols)
+    path = unique_path(key_cols)
     # Join duplicate keys back to recover example rows. The dup-key set is
     # USUALLY tiny, but not by contract — a pathological table where half
     # the keys are duplicated makes it fact-scale, and a forced

@@ -251,6 +251,43 @@ def test_distinct_and_nullrate_checks_verdicts(spark):
         parse({"x-table-checks": {"null-rates": [{"column": "v", "max_rate": 2}]}})
 
 
+def test_table_wide_check_paths_are_escaped_pointer_tokens(spark):
+    """A column ``a/b`` is the one path segment ``a~1b`` in every check that
+    names it, table-wide ones included, as in the row checks: its null-rate
+    verdict and its ``minimum`` verdict share the path ``/a~1b``."""
+    from jsonschema_spark.passes.anomaly import anomaly_verdicts
+    from jsonschema_spark.passes.drift import drift_verdicts
+
+    df = spark.createDataFrame(
+        [("img-0", 0, 1), ("img-1", 0, 1), ("img-2", 1, None)],
+        "image_id string, part_id int, `a/b` int")
+    dim = spark.createDataFrame([(1,)], "k int")
+    spec = {"properties": {"a/b": {"minimum": 5}},
+            "x-table-checks": {
+                "unique": [["a/b"]],
+                "references": [{"column": "a/b", "dim": "d", "key": "k"}],
+                "quantiles": [{"column": "a/b", "q": 0.5, "max": 0}],
+                "distinct": [{"column": "a/b", "min": 5}],
+                "null-rates": [{"column": "a/b", "max_rate": 0.0}]}}
+    res = validate_table(df, spec, dims={"d": dim})
+    got = {(r["check_id"], r["path"])
+           for r in res.verdicts.select("check_id", "path").collect()}
+    res.cleanup()
+    assert got == {("minimum@/a~1b", "/a~1b"), ("uniqueItems@/a~1b", "/a~1b"),
+                   ("references@/a~1b->d.k", "/a~1b->d.k"),
+                   ("quantile@/a~1b@q0.5", "/a~1b"), ("distinct@/a~1b", "/a~1b"),
+                   ("null-rate@/a~1b", "/a~1b")}
+
+    drift = spark.createDataFrame([(0, "a/b~", 0.0, 1.0)],
+                                  "part_id int, col string, ks_p double, psi double")
+    assert [tuple(r) for r in drift_verdicts(drift).select("check_id", "path").collect()] \
+        == [("drift@/a~1b~0", "/a~1b~0")]
+    flags = spark.createDataFrame([(0, "a/b", "mean", True)],
+                                  "part_id int, column string, metric string, is_anomaly boolean")
+    assert [tuple(r) for r in anomaly_verdicts(flags).select("check_id", "path").collect()] \
+        == [("anomaly@/a~1b:mean", "/a~1b")]
+
+
 def test_quantile_check_on_non_numeric_column_rejected(spark):
     """ADVICE r3 low: a quantile bound on a string column must be a config
     error, not a silently-failing data verdict."""
